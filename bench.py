@@ -228,10 +228,12 @@ def main() -> None:
     # pays the cold train+add (visible in the per-run stderr line),
     # run 2 measures the serve-from-persisted-index steady state the
     # operator declares. Measurement-side only — no query logic moves.
+    import atexit
     import shutil as _shutil
     import tempfile as _tempfile
 
     ann_cache = _tempfile.mkdtemp(prefix="bench_ann_")
+    atexit.register(_shutil.rmtree, ann_cache, True)  # on failure too
     os.environ["SPARK_GRAFT_ANN_CACHE"] = ann_cache
     print(f"# ann cache: fresh {ann_cache} (cold build in run 1 of the "
           "first *_ann query)", file=sys.stderr)
@@ -319,7 +321,6 @@ def main() -> None:
     total = sum(v for v in timings.values() if v > 0)
 
     spark.stop()
-    _shutil.rmtree(ann_cache, ignore_errors=True)
 
     # The driver's stdout capture keeps only the LAST ~2000 characters;
     # a full 74-query dict (~2.2 KB) gets its head truncated and fails

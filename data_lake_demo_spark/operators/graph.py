@@ -48,6 +48,17 @@ def _checkpoint_blocks(df: DataFrame):
     return None
 
 
+def _by_src(edges: DataFrame) -> DataFrame:
+    """Hash-partition edges by ``src`` into ``spark.sql.shuffle.
+    partitions`` partitions; a non-numeric setting (``auto``) has no
+    count to give, so the count-less repartition is used."""
+    try:
+        n = int(edges.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    except ValueError:
+        return edges.repartition("src")
+    return edges.repartition(n, "src")
+
+
 def pagerank_fixed_point(
     edges: DataFrame,
     *,
@@ -88,10 +99,7 @@ def pagerank_fixed_point(
         # Sort directly). The count follows spark.sql.shuffle.
         # partitions, i.e. the join's own width — scale-adaptive, not
         # a local constant.
-        n = int(edges.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-        edges = edges.repartition(n, "src").persist(
-            StorageLevel.MEMORY_AND_DISK
-        )
+        edges = _by_src(edges).persist(StorageLevel.MEMORY_AND_DISK)
     nodes = (
         edges.select(F.col("src").alias("node"))
         .union(edges.select(F.col("dst").alias("node")))
@@ -252,10 +260,7 @@ def label_propagation(edges: DataFrame, *, rounds: int = 3) -> DataFrame:
     # r12: explicit partition count, same rationale as
     # pagerank_fixed_point above (AQE-coalesced cache partitioning
     # defeats the join-side reuse; see plans/r12/graph_smj_*.txt).
-    n_part = int(edges.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    edges = edges.repartition(n_part, "src").persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
+    edges = _by_src(edges).persist(StorageLevel.MEMORY_AND_DISK)
     nodes = (
         edges.select(F.col("src").alias("node"))
         .union(edges.select(F.col("dst").alias("node")))

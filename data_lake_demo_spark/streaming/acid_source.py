@@ -126,7 +126,7 @@ from pyspark.sql.datasource import (
     WriterCommitMessage,
 )
 
-from data_lake_demo_spark.tableformat import CommitConflict, _dv_abs
+from data_lake_demo_spark.tableformat import CommitConflict, _dv_abs, _rel_by_abs
 
 _CHANGE_OPS = {"merge", "merge_delete", "delete", "overwrite", "scd2",
                "compact", "optimize_zorder", "optimize_cluster", "restore"}
@@ -289,8 +289,8 @@ def _read_change_rows(
         # mapped to a sentinel: tuple keys use Python equality where
         # NaN != NaN, so NaN-bearing rows would never cancel between
         # the removed/added multisets and a pure-layout compaction
-        # would emit spurious delete+insert pairs — AcidTable.changes
-        # (exceptAll) treats NaN as equal, and so must we.
+        # would emit spurious delete+insert pairs (Spark's set
+        # operations treat NaN as equal, and so must we).
         if isinstance(v, float) and v != v:
             return ("__nan",)
         if isinstance(v, list):
@@ -457,6 +457,81 @@ def _rid_range_read(path: str, base, rng: tuple):
     return tbl, np.concatenate(pos_parts), md.num_rows
 
 
+def _kernel_columns(tbl, fields: list[str], types_seen: dict):
+    """``tbl``'s columns for ``fields`` (a column the file predates
+    reads as nulls), recording each one's arrow type in
+    ``types_seen``; None when a type is outside ``_vec_comparable``."""
+    import pyarrow as pa
+
+    cols = []
+    for f in fields:
+        if f not in tbl.column_names:
+            cols.append(pa.nulls(tbl.num_rows))
+            continue
+        c = tbl.column(f)
+        if not pa.types.is_null(c.type):
+            types_seen.setdefault(f, set()).add(c.type)
+            if not _vec_comparable(c.type):
+                return None
+        cols.append(c)
+    return cols
+
+
+def _dv_keep(dv: str, n: int):
+    """Keep-mask over a file's ``n`` physical rows under vector ``dv``."""
+    import numpy as np
+
+    from data_lake_demo_spark.tableformat import _unpack_dv
+
+    keep = np.ones(n, dtype=bool)
+    skip = np.asarray(_unpack_dv(dv), dtype=np.int64)
+    keep[skip[skip < n]] = False
+    return keep
+
+
+def _cast_table(arrays: list, target, strict: bool = False):
+    """``arrays`` as a table of ``target``'s types. A cast that would
+    reinterpret naive↔aware timestamps (the Python converter's
+    session-tz semantics differ: the reference path must serve)
+    returns None, or raises when ``strict`` so the fallback is
+    reported by ``_warn_fallback``."""
+    import pyarrow as pa
+
+    casted = []
+    for arr, fld in zip(arrays, target):
+        if arr.type != fld.type:
+            if pa.types.is_timestamp(arr.type) and pa.types.is_timestamp(
+                fld.type
+            ) and (arr.type.tz is None) != (fld.type.tz is None):
+                if strict:
+                    raise ValueError("timestamp tz mismatch")
+                return None
+            arr = arr.cast(fld.type)
+        casted.append(arr)
+    return pa.Table.from_arrays(casted, schema=target)
+
+
+def _change_table(src, idx, labels, fields, part, target, rids=None):
+    """Rows ``idx`` of ``src`` labelled with their change types, plus
+    the commit's version and timestamp and (``rids`` given) the row id
+    — the CDF output row — cast to ``target`` (strictly: see
+    ``_cast_table``)."""
+    import numpy as np
+    import pyarrow as pa
+
+    take = pa.array(idx)
+    n = idx.size
+    arrays = [src.column(f).combine_chunks().take(take) for f in fields]
+    arrays.append(pa.array(labels, type=pa.string()))
+    arrays.append(pa.array(np.full(n, part.version, dtype=np.int64)))
+    commit_ts = datetime.fromtimestamp(part.ts, tz=timezone.utc)
+    ts_one = pa.array([commit_ts], type=target.field(len(fields) + 2).type)
+    arrays.append(ts_one.take(pa.array(np.zeros(n, dtype=np.int32))))
+    if rids is not None:
+        arrays.append(pa.array(rids))
+    return _cast_table(arrays, target, strict=True)
+
+
 def _rid_change_batches(
     part: _ChangePartition,
     fields: list[str],
@@ -502,10 +577,7 @@ def _rid_change_batches(
     import pyarrow.parquet as pq
     from pyspark.sql.pandas.types import to_arrow_schema
 
-    from data_lake_demo_spark.tableformat import _unpack_dv
-
     target = to_arrow_schema(spark_schema)
-
     rng = part.rid_range
 
     def load_side(entries):
@@ -546,28 +618,16 @@ def _rid_change_batches(
                 rids = base + pos
             else:
                 return None
-            cols = []
-            for f in fields:
-                if f in names:
-                    c = tbl.column(f)
-                    t = c.type
-                    if not pa.types.is_null(t):
-                        types_seen.setdefault(f, set()).add(t)
-                        if not _vec_comparable(t):
-                            return None
-                    cols.append(c)
-                else:
-                    cols.append(pa.nulls(n))
+            cols = _kernel_columns(tbl, fields, types_seen)
+            if cols is None:
+                return None
             side = pa.table(dict(zip(fields, cols))) if fields else (
                 pa.table({"__dummy": pa.nulls(n)})
             )
             if dv:
                 # the vector indexes physical positions in the FULL
                 # file; map through `pos` for a row-group-scoped read
-                keep_full = np.ones(total, dtype=bool)
-                skip = np.asarray(_unpack_dv(dv), dtype=np.int64)
-                keep_full[skip[skip < total]] = False
-                keep = keep_full[pos]
+                keep = _dv_keep(dv, total)[pos]
                 side = side.filter(pa.array(keep))
                 rids = rids[keep]
             if rng is not None:
@@ -584,15 +644,9 @@ def _rid_change_batches(
             tables.append(side)
             rid_parts.append(rids)
         if not tables:
-            empty = pa.table(
-                {f: pa.nulls(0) for f in fields}
-            ) if fields else pa.table({"__dummy": pa.nulls(0)})
+            empty = pa.table({f: pa.nulls(0) for f in fields or ["__dummy"]})
             return empty, np.empty(0, dtype=np.int64), {}
-        tbl = (
-            tables[0]
-            if len(tables) == 1
-            else pa.concat_tables(tables, promote_options="permissive")
-        )
+        tbl = pa.concat_tables(tables, promote_options="permissive")
         return tbl, np.concatenate(rid_parts), types_seen
 
     after = load_side(part.adds)
@@ -683,36 +737,13 @@ def _rid_change_batches(
             out[n_plain:] = image
         return out
 
-    commit_ts = datetime.fromtimestamp(part.ts, tz=timezone.utc)
-
     def side_table(src, rids, idx, lbls):
         order = np.argsort(rids[idx], kind="stable")
         idx = idx[order]
-        lbls = np.asarray(lbls, dtype=object)[order]
-        take = pa.array(idx)
-        n = idx.size
-        arrays = [
-            src.column(f).combine_chunks().take(take) for f in fields
-        ]
-        arrays.append(pa.array(lbls, type=pa.string()))
-        arrays.append(pa.array(np.full(n, part.version, dtype=np.int64)))
-        ts_tt = target.field(len(fields) + 2).type
-        ts_one = pa.array([commit_ts], type=ts_tt)
-        arrays.append(ts_one.take(pa.array(np.zeros(n, dtype=np.int32))))
-        if with_rid:
-            arrays.append(pa.array(rids[idx]))
-        casted = []
-        for arr, fld in zip(arrays, target):
-            if arr.type != fld.type:
-                if pa.types.is_timestamp(arr.type) and pa.types.is_timestamp(
-                    fld.type
-                ) and (arr.type.tz is None) != (fld.type.tz is None):
-                    # naive↔aware reinterpretation differs from the
-                    # Python converter's session-tz semantics
-                    raise ValueError("timestamp tz mismatch")
-                arr = arr.cast(fld.type)
-            casted.append(arr)
-        return pa.Table.from_arrays(casted, schema=target)
+        return _change_table(
+            src, idx, np.asarray(lbls, dtype=object)[order], fields, part,
+            target, rids[idx] if with_rid else None,
+        )
 
     ins = side_table(
         tbl_a, rids_a, ins_idx,
@@ -722,8 +753,7 @@ def _rid_change_batches(
         tbl_b, rids_b, del_idx,
         labels(del_idx.size, n_gone, "delete", "update_preimage"),
     )
-    out = pa.concat_tables([ins, dels])
-    return out.to_batches(max_chunksize=1 << 16)
+    return pa.concat_tables([ins, dels]).to_batches(max_chunksize=1 << 16)
 
 
 #: once-per-process marker for vectorized-kernel fallbacks caused by an
@@ -789,8 +819,6 @@ def _plain_change_batches(part: _ChangePartition, fields: list[str], spark_schem
     import pyarrow.parquet as pq
     from pyspark.sql.pandas.types import to_arrow_schema
 
-    from data_lake_demo_spark.tableformat import _unpack_dv
-
     if part.bucket is not None or part.rid_range is not None or not fields:
         # rid_range partitions are planned only in rid-reading modes,
         # which dispatch to _rid_change_batches; guard anyway — the
@@ -802,35 +830,16 @@ def _plain_change_batches(part: _ChangePartition, fields: list[str], spark_schem
         tables, types_seen = [], {}
         for path, dv, _base in entries:
             tbl = pq.read_table(path)
-            n = tbl.num_rows
-            names = set(tbl.column_names)
-            cols = []
-            for f in fields:
-                if f in names:
-                    c = tbl.column(f)
-                    t = c.type
-                    if not pa.types.is_null(t):
-                        types_seen.setdefault(f, set()).add(t)
-                        if not _vec_comparable(t):
-                            return None
-                    cols.append(c)
-                else:
-                    cols.append(pa.nulls(n))
+            cols = _kernel_columns(tbl, fields, types_seen)
+            if cols is None:
+                return None
             side = pa.table(dict(zip(fields, cols)))
             if dv:
-                keep = np.ones(n, dtype=bool)
-                skip = np.asarray(_unpack_dv(dv), dtype=np.int64)
-                keep[skip[skip < n]] = False
-                side = side.filter(pa.array(keep))
+                side = side.filter(pa.array(_dv_keep(dv, tbl.num_rows)))
             tables.append(side)
         if not tables:
             return pa.table({f: pa.nulls(0) for f in fields}), {}
-        tbl = (
-            tables[0]
-            if len(tables) == 1
-            else pa.concat_tables(tables, promote_options="permissive")
-        )
-        return tbl, types_seen
+        return pa.concat_tables(tables, promote_options="permissive"), types_seen
 
     after = load_side(part.adds)
     if after is None:
@@ -933,42 +942,17 @@ def _plain_change_batches(part: _ChangePartition, fields: list[str], spark_schem
     del_idx = np.repeat(pb_last[del_mask], -cnt[del_mask])
 
     is_update = part.op == "update"
-    ins_label = "update_postimage" if is_update else "insert"
-    del_label = "update_preimage" if is_update else "delete"
-    commit_ts = datetime.fromtimestamp(part.ts, tz=timezone.utc)
-
-    def side_table(src, idx, label):
-        take = pa.array(idx)
-        n = idx.size
-        arrays = [
-            src.column(f).combine_chunks().take(take) for f in fields
-        ]
-        zeros = pa.array(np.zeros(n, dtype=np.int32))
-        arrays.append(pa.array([label], type=pa.string()).take(zeros))
-        arrays.append(pa.array(np.full(n, part.version, dtype=np.int64)))
-        ts_tt = target.field(len(fields) + 2).type
-        ts_one = pa.array([commit_ts], type=ts_tt)
-        arrays.append(ts_one.take(pa.array(np.zeros(n, dtype=np.int32))))
-        casted = []
-        for arr, fld in zip(arrays, target):
-            if arr.type != fld.type:
-                if pa.types.is_timestamp(arr.type) and pa.types.is_timestamp(
-                    fld.type
-                ) and (arr.type.tz is None) != (fld.type.tz is None):
-                    # naive↔aware reinterpretation differs from the
-                    # Python converter's session-tz semantics
-                    raise ValueError("timestamp tz mismatch")
-                arr = arr.cast(fld.type)
-            casted.append(arr)
-        return pa.Table.from_arrays(casted, schema=target)
-
-    out = pa.concat_tables(
-        [
-            side_table(tbl_a, ins_idx, ins_label),
-            side_table(tbl_b, del_idx, del_label),
-        ]
+    ins = _change_table(
+        tbl_a, ins_idx,
+        np.full(ins_idx.size, "update_postimage" if is_update else "insert"),
+        fields, part, target,
     )
-    return out.to_batches(max_chunksize=1 << 16)
+    dels = _change_table(
+        tbl_b, del_idx,
+        np.full(del_idx.size, "update_preimage" if is_update else "delete"),
+        fields, part, target,
+    )
+    return pa.concat_tables([ins, dels]).to_batches(max_chunksize=1 << 16)
 
 
 def _change_batches_or_rows(
@@ -1004,6 +988,55 @@ def _change_batches_or_rows(
     return _read_change_rows(part, fields, with_rid, as_images)
 
 
+def _change_frame(
+    spark: SparkSession,
+    parts: list,
+    fields: T.StructType,
+    with_rid: bool,
+    as_images: bool,
+) -> DataFrame:
+    """Change partitions run as one Python task each (``mapInArrow``
+    over a one-row-per-slice range) through ``_change_batches_or_rows``;
+    columns are ``fields`` (physical), ``_row_id`` (``with_rid``), then
+    ``_change_type``. Reference-path rows convert to Arrow in chunks."""
+    import itertools
+
+    names = [f.name for f in fields.fields]
+    kernel = T.StructType(
+        [*fields.fields,
+         T.StructField("_change_type", T.StringType()),
+         T.StructField("_commit_version", T.LongType()),
+         T.StructField("_commit_timestamp", T.TimestampType())]
+        + ([T.StructField("_row_id", T.LongType())] if with_rid else [])
+    )
+    out = [*names, *(["_row_id"] if with_rid else []), "_change_type"]
+
+    def run(batches):
+        import pyarrow as pa
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        target = to_arrow_schema(kernel)
+        for b in batches:
+            for i in b.column(0).to_pylist():
+                items = iter(_change_batches_or_rows(
+                    parts[i], names, with_rid, as_images, kernel
+                ))
+                while chunk := list(itertools.islice(items, 1 << 14)):
+                    if not isinstance(chunk[0], pa.RecordBatch):
+                        cols = list(zip(*chunk))
+                        chunk = [pa.RecordBatch.from_arrays(
+                            [pa.array(c, type=f.type)
+                             for c, f in zip(cols, target)],
+                            schema=target,
+                        )]
+                    for rb in chunk:
+                        yield rb.select(out)
+
+    return spark.range(0, len(parts), 1, len(parts)).mapInArrow(
+        run, T.StructType([kernel[c] for c in out])
+    )
+
+
 def _file_record_batches(
     path: str,
     fields: list[str],
@@ -1028,21 +1061,13 @@ def _file_record_batches(
     import pyarrow.parquet as pq
     from pyspark.sql.pandas.types import to_arrow_schema
 
-    from data_lake_demo_spark.tableformat import _unpack_dv
-
     target = to_arrow_schema(spark_schema)
     tbl = pq.read_table(path)
     n = tbl.num_rows
     names = set(tbl.column_names)
-    arrays = []
-    for f in fields:
-        if f in names:
-            c = tbl.column(f)
-            if not pa.types.is_null(c.type) and not _vec_comparable(c.type):
-                return None
-            arrays.append(c)
-        else:
-            arrays.append(pa.nulls(n))
+    arrays = _kernel_columns(tbl, fields, {})
+    if arrays is None:
+        return None
     if with_rid:
         # the _read_parquet_rows coalesce: materialized __row_id,
         # else manifest base + physical position, else null
@@ -1059,27 +1084,14 @@ def _file_record_batches(
             rid = pa.nulls(n, type=pa.int64())
         arrays.append(rid)
     if dv:
-        keep = np.ones(n, dtype=bool)
-        skip = np.asarray(_unpack_dv(dv), dtype=np.int64)
-        keep[skip[skip < n]] = False
-        mask = pa.array(keep)
+        mask = pa.array(_dv_keep(dv, n))
         arrays = [
             a.filter(mask) if not isinstance(a, pa.ChunkedArray)
             else a.combine_chunks().filter(mask)
             for a in arrays
         ]
-    casted = []
-    for arr, fld in zip(arrays, target):
-        if arr.type != fld.type:
-            if pa.types.is_timestamp(arr.type) and pa.types.is_timestamp(
-                fld.type
-            ) and (arr.type.tz is None) != (fld.type.tz is None):
-                return None  # converter semantics differ: fall back
-            arr = arr.cast(fld.type)
-        casted.append(arr)
-    return pa.Table.from_arrays(casted, schema=target).to_batches(
-        max_chunksize=1 << 16
-    )
+    out = _cast_table(arrays, target)
+    return None if out is None else out.to_batches(max_chunksize=1 << 16)
 
 
 def _file_batches_or_rows(
@@ -1199,6 +1211,52 @@ def _rid_range_bounds(adds, removes, m: int) -> list | None:
     return [(edges[i], edges[i + 1]) for i in range(len(edges) - 1)]
 
 
+def _diff_partitions(
+    root: str, new: tuple, old: tuple, version: int, ts: float, op: str,
+    buckets: int, rid_mode: bool,
+) -> list:
+    """Change partitions for ONE diff (a commit, or a version range's
+    net file sets). ``new``/``old`` are the insert/delete sides as
+    ``(table-relative paths, deletion vectors, manifest stats)``, each
+    path looked up under the vector and stats of ITS side. A pure
+    append fans out per file; otherwise m = ``buckets`` tasks (0 =
+    ``auto``: sized from the sides' manifest ``#rows``, a file missing
+    the stat counting 0), each owning a contiguous rid RANGE when ids
+    are read and every file's rid span is provable (row-group
+    skipping), else a deterministic row-hash bucket (m× re-read of
+    the touched files)."""
+    def entries(rels, dvs, stats):
+        return [
+            (ab, _dv_abs(dvs.get(rel), root), _row_id_base(stats.get(rel)))
+            for ab, rel in _rel_by_abs(root, rels).items()
+        ]
+
+    adds, removes = entries(*new), entries(*old)
+    if not removes:
+        return [_ChangePartition([a], [], version, ts, op) for a in adds]
+    touched = sum(
+        int(((stats.get(p) or {}).get("#rows") or [0])[0])
+        for rels, _, stats in (new, old)
+        for p in rels
+    )
+    m = buckets or min(
+        AUTO_DIFF_MAX_BUCKETS,
+        max(1, -(-touched // AUTO_DIFF_ROWS_PER_BUCKET)),
+    )
+    if m == 1:
+        return [_ChangePartition(adds, removes, version, ts, op)]
+    ranges = _rid_range_bounds(adds, removes, m) if rid_mode else None
+    if ranges:
+        return [
+            _ChangePartition(adds, removes, version, ts, op, rid_range=r)
+            for r in ranges
+        ]
+    return [
+        _ChangePartition(adds, removes, version, ts, op, bucket=(i, m))
+        for i in range(m)
+    ]
+
+
 def _cdf_partitions(
     t, start_v: int, end_v: int, buckets: int = 1, rid_mode: bool = False
 ) -> list:
@@ -1216,13 +1274,9 @@ def _cdf_partitions(
 
     Each side's entries carry the file's manifest ``#base_row_id``
     (folded the same way, so the remove side sees the stats the file
-    was LIVE under) — consumed only in withRowIds mode.
-
-    ``rid_mode`` (withRowIds / updateAsImages reads): commits wide
-    enough to decompose split by contiguous rid RANGE instead of row
-    hash when every touched file's rid span is provable at plan time
-    (see ``_rid_range_bounds``) — same output, no m× read
-    amplification.
+    was LIVE under) — consumed only in withRowIds mode. Each commit's
+    split is ``_diff_partitions``' (``rid_mode``: withRowIds /
+    updateAsImages reads may split by rid range).
     """
     live_map, _, _, _, dvs = t._resolve_state(start_v - 1 if start_v > 0 else -1)
     stats = dict(live_map)  # path -> manifest stats while live
@@ -1249,66 +1303,11 @@ def _cdf_partitions(
         changed = sorted(
             p for p in (live & pre_live) if pre_dvs.get(p) != dvs.get(p)
         )
-        adds = [
-            (os.path.join(t.path, p), _dv_abs(dvs.get(p), t.path),
-             _row_id_base(stats.get(p)))
-            for p in added + changed
-        ]
-        removes = [
-            (os.path.join(t.path, p), _dv_abs(pre_dvs.get(p), t.path),
-             _row_id_base(pre_stats.get(p)))
-            for p in removed + changed
-        ]
-        if not removes:
-            # pure append: fan out per file (all-insert rows)
-            parts.extend(
-                _ChangePartition([a], [], v, c.ts, c.op) for a in adds
-            )
-        elif adds or removes:
-            m = buckets
-            if m == 0:
-                # auto (the _diff_buckets sentinel): size m to this
-                # commit's touched rows from the manifest — wide
-                # commits split, pruned CDC commits stay single-task
-                def _rows(st, p):
-                    n = (st.get(p) or {}).get("#rows")
-                    return int(n[0]) if n else 0
-
-                touched = sum(_rows(stats, p) for p in added + changed)
-                touched += sum(_rows(pre_stats, p) for p in removed + changed)
-                m = min(
-                    AUTO_DIFF_MAX_BUCKETS,
-                    max(1, -(-touched // AUTO_DIFF_ROWS_PER_BUCKET)),
-                )
-            if m > 1:
-                # decompose the wide commit's diff: by contiguous rid
-                # RANGE when ids are being read and every touched
-                # file's rid span is provable (row-group skipping, no
-                # read amplification — r12), else by deterministic
-                # row-hash bucket (m× re-read, the r11 shape)
-                ranges = (
-                    _rid_range_bounds(adds, removes, m)
-                    if rid_mode
-                    else None
-                )
-                if ranges:
-                    parts.extend(
-                        _ChangePartition(
-                            adds, removes, v, c.ts, c.op, rid_range=r
-                        )
-                        for r in ranges
-                    )
-                else:
-                    parts.extend(
-                        _ChangePartition(
-                            adds, removes, v, c.ts, c.op, bucket=(i, m)
-                        )
-                        for i in range(m)
-                    )
-            else:
-                parts.append(
-                    _ChangePartition(adds, removes, v, c.ts, c.op)
-                )
+        parts += _diff_partitions(
+            t.path, (added + changed, dvs, stats),
+            (removed + changed, pre_dvs, pre_stats),
+            v, c.ts, c.op, buckets, rid_mode,
+        )
     return parts
 
 
@@ -1361,7 +1360,7 @@ def _diff_buckets(options, cdf: bool) -> int:
     amplification of the commit's touched files.
 
     Default ``auto`` (r11): 0 is returned as a sentinel and
-    ``_cdf_partitions`` derives m PER COMMIT from the manifest row
+    ``_diff_partitions`` derives m PER COMMIT from the manifest row
     counts of the commit's touched files —
     ``ceil(touched_rows / AUTO_DIFF_ROWS_PER_BUCKET)`` capped at
     ``AUTO_DIFF_MAX_BUCKETS`` — so a full-table-touching commit (the

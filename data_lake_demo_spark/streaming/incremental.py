@@ -151,8 +151,9 @@ class MaterializedAggregate:
             delta = delta.filter((F.col("dn") != 0) | (F.col("dvq") != 0))
         # materialize the aggregated delta ONCE — it is re-consumed by
         # the emptiness check, the dirty-group probe, and every action
-        # merge_apply fires; without persist each re-runs the change
-        # feed's exceptAll shuffles. O(churned groups) rows.
+        # merge_apply fires; without persist each re-reads the changed
+        # files and re-runs the change feed's diff. O(churned groups)
+        # rows.
         delta = delta.persist()
         try:
             return self._sync_apply(delta, target)
@@ -356,8 +357,8 @@ class IncrementalDedupIndex:
             return self.index.latest_version()
         # materialize the O(churn) feed ONCE: everything below (the
         # dirty probe, the delta, and every action merge_apply fires)
-        # re-consumes it, and each re-run would repeat the change
-        # feed's exceptAll shuffles.
+        # re-consumes it, and each re-run would re-read the changed
+        # files and repeat the change feed's diff.
         feed = (
             self.base.changes(since, target)
             .select(

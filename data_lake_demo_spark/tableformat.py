@@ -338,6 +338,24 @@ def _dv_abs(val: str | None, root: str) -> str | None:
     return f"{_DV_SIDECAR_PREFIX}{os.path.abspath(os.path.join(root, rel))}:{n}"
 
 
+def _rel_by_abs(root: str, rels: Sequence[str]) -> dict[str, str]:
+    """{absolute path: table-relative path}: the exact map from a
+    file's absolute location (``_uri_path`` of a scan's file column)
+    back to its log entry — a suffix match would map ``x/a.parquet``
+    to ``a.parquet`` when both are listed."""
+    return {os.path.abspath(os.path.join(root, r)): r for r in rels}
+
+
+def _uri_path(uri: str) -> str:
+    """Local path of a file as Spark reports it (``file:/x``,
+    ``file:///x``, percent-encoded) or as a plain path."""
+    if not uri.startswith("file:"):
+        return uri
+    from urllib.parse import unquote, urlparse
+
+    return unquote(urlparse(uri).path)
+
+
 def _commit_name(version: int) -> str:
     return f"{version:020d}.json"
 
@@ -1372,9 +1390,8 @@ class AcidTable:
         import struct
 
         out: dict[str, dict[str, list]] = {f: {} for f in rel_files}
-        df = self.spark.read.parquet(
-            *[os.path.join(self.path, f) for f in rel_files]
-        )
+        by_abs = _rel_by_abs(self.path, rel_files)
+        df = self.spark.read.parquet(*by_abs)
         m, k = self.bloom_bits, _BLOOM_HASHES
         for col in self.bloom_cols:
             if col not in df.columns:
@@ -1419,9 +1436,7 @@ class AcidTable:
             )
             blocks: dict[str, dict[int, int]] = {}
             for r in rows:
-                rel = next(
-                    (f for f in rel_files if r["__f"].endswith(f)), None
-                )
+                rel = by_abs.get(_uri_path(r["__f"]))
                 if rel is not None:
                     blocks.setdefault(rel, {})[r["__block"]] = r["__bits"]
             for rel, bmap in blocks.items():
@@ -2760,11 +2775,11 @@ class AcidTable:
         scan + exchange + Python-worker + collect. Entries are
         byte-identical either way (the encode is sort-unique
         canonical)."""
+        by_abs = _rel_by_abs(self.path, touched)
         exrefs = {
-            "file:" + os.path.abspath(os.path.join(self.path, p)):
-                _dv_abs(dvs[p], self.path)
-            for p in touched
-            if p in dvs and dvs[p]
+            "file:" + ab: _dv_abs(dvs[p], self.path)
+            for ab, p in by_abs.items()
+            if dvs.get(p)
         }
         if (
             row_bound is not None
@@ -2782,7 +2797,7 @@ class AcidTable:
                         [idx, np.asarray(_unpack_dv(ref), dtype=np.int64)]
                     )
                 payload, n = _dv_encode_runs(idx)
-                rel = next((f for f in touched if fp.endswith(f)), None)
+                rel = by_abs.get(_uri_path(fp))
                 if rel is None:  # never expected; fail loud
                     raise RuntimeError(f"unmapped file {fp}")
                 entries.append(self._dv_entry(rel, payload=payload, n=n))
@@ -2801,7 +2816,7 @@ class AcidTable:
         )
         entries = []
         for r in enc:
-            rel = next((f for f in touched if r["__fp"].endswith(f)), None)
+            rel = by_abs.get(_uri_path(r["__fp"]))
             if rel is None:  # never expected; fail loud
                 raise RuntimeError(f"unmapped file {r['__fp']}")
             entries.append(
@@ -3171,14 +3186,23 @@ class AcidTable:
         consumes). Computed from ONLY the files that differ between
         the two versions: a file carried over by both snapshots is
         never read, and rows a rewrite copied unchanged (merge/compact
-        copy-on-write) cancel out via ``exceptAll``, so a pure-layout
-        commit (compact, optimize_zorder) yields an EMPTY feed. Cost
-        scales with churn, not table size — the property that makes
-        incremental downstream consumption (index refresh, dedup
-        deltas, derived-table maintenance) viable at 100 TB.
+        copy-on-write) cancel out in the multiset diff, so a
+        pure-layout commit (compact, optimize_zorder) yields an EMPTY
+        feed. Cost scales with churn, not table size — the property
+        that makes incremental downstream consumption (index refresh,
+        dedup deltas, derived-table maintenance) viable at 100 TB.
 
-        Columns are aligned across schema evolution (a column added
-        after ``since_version`` reads as null on the delete side).
+        The net file sets diff on the change feed's executor kernel:
+        with ids read, split like a DSv2 feed commit
+        (``acid_source._diff_partitions``), else as one task; when
+        one side is empty (first sync, append-only range) the
+        other side is the feed, read by the snapshot's parquet scan.
+
+        Columns are the table's (aligned across schema evolution: a
+        column added after ``since_version`` reads as null on the
+        delete side, and a widened column compares in its new type),
+        then ``_row_id`` (only ``with_row_ids``), then
+        ``_change_type``.
 
         Retention interplay: the delete side reads files the LOG has
         removed, which ``vacuum`` physically deletes once
@@ -3200,8 +3224,10 @@ class AcidTable:
         ``update_preimage``/``update_postimage`` (over a multi-commit
         range the pair is the row's ORIGINAL image and its FINAL one —
         intermediate versions net out, the CDF range contract). Ids
-        are joined for the pairing and dropped again unless
+        are read for the pairing and dropped again unless
         ``with_row_ids``."""
+        from data_lake_demo_spark.streaming import acid_source as src
+
         until = self.latest_version() if until_version is None else until_version
         live_new, schema_new, _, props_new, dv_new = self._resolve_state(until)
         live_old, schema_old, _, _, dv_old = self._resolve_state(since_version)
@@ -3212,13 +3238,11 @@ class AcidTable:
                 "row tracking is not enabled (set_row_tracking())"
                 + (" — as_images pairs on _row_id" if as_images else "")
             )
-        emit_rids = with_row_ids
-        with_row_ids = with_row_ids or as_images  # read ids for pairing
         # diff on (path, deletion vector): a carried-over file whose
-        # vector changed must be read on BOTH sides — each side masked
-        # with its own vector, so exceptAll nets to exactly the
-        # newly-masked rows on the delete side. A file with an
-        # UNCHANGED vector still never gets read.
+        # vector changed is read on BOTH sides — each side masked with
+        # its own vector, so the diff nets to exactly the newly-masked
+        # rows on the delete side. A file with an UNCHANGED vector
+        # still never gets read.
         keys_new = {(p, dv_new.get(p)) for p in live_new}
         keys_old = {(p, dv_old.get(p)) for p in live_old}
         added = sorted(p for p, _ in keys_new - keys_old)
@@ -3226,82 +3250,54 @@ class AcidTable:
         schema_json = schema_new or schema_old
         if schema_json is None:
             raise ValueError(f"table {self.path} has no commits")
-
-        def read(
-            paths: list[str],
-            dvs: dict[str, str],
-            side_schema: str | None,
-            live_stats: dict,
-        ) -> DataFrame:
-            if not paths:
-                empty = self.spark.createDataFrame(
-                    [], T.StructType.fromJson(json.loads(schema_json))
-                )
-                if with_row_ids:
-                    empty = empty.withColumn(
-                        "_row_id", F.lit(None).cast("long")
-                    )
-                return empty
-            # each side reads under ITS OWN committed schema (the old
-            # side may predate an add-column or a type widening)
-            df = self._read_files(paths, side_schema or schema_json)
+        # the new side's type wins (a widening casts the old side up);
+        # old-only columns keep theirs. The hidden row-id column never
+        # feeds the diff: carried rows on the OLD side derive ids from
+        # file bases, not the rewrite's materialized values.
+        types: dict = {}
+        for sj in (schema_json, schema_old or schema_json):
+            for f in T.StructType.fromJson(json.loads(sj)).fields:
+                if f.name != self._ROW_ID_COL:
+                    types.setdefault(f.name, f.dataType)
+        fields = T.StructType([T.StructField(c, t) for c, t in types.items()])
+        keep = ("_row_id", "_change_type") if with_row_ids else ("_change_type",)
+        if added and removed:
+            # plain mode stays one task: its Arrow kernel cannot serve
+            # hash buckets (the bucket function is row-at-a-time)
+            rid_mode = with_row_ids or as_images
+            parts = src._diff_partitions(
+                self.path, (added, dv_new, live_new),
+                (removed, dv_old, live_old),
+                until, 0.0, "", 0 if rid_mode else 1, rid_mode,
+            )
+            out = src._change_frame(
+                self.spark, parts, fields, with_row_ids, as_images
+            )
+            return self._logicalize(out, keep=keep)
+        label, paths, dvs, side_schema, live = (
+            ("insert", added, dv_new, schema_json, live_new)
+            if added
+            else ("delete", removed, dv_old, schema_old or schema_json, live_old)
+        )
+        if not paths:  # both snapshots hold the same files
+            df = self.spark.createDataFrame([], fields)
+            if with_row_ids:
+                df = df.withColumn("_row_id", F.lit(None).cast("long"))
+        else:
+            df = self._read_files(paths, side_schema)
             if with_row_ids:
                 df = self._row_id_coords(df)
-                df = self._apply_dvs(df, paths, dvs)
-                return self._attach_row_ids(df, paths, live_stats)
-            return self._apply_dvs(df, paths, dvs)
-
-        a = read(added, dv_new, schema_new, live_new)
-        r = read(removed, dv_old, schema_old, live_old)
-        # the hidden row-id column never feeds the diff: carried rows
-        # on the OLD side derive ids from file bases (not materialized)
-        # and would spuriously fail exceptAll equality against the
-        # rewrite's materialized values, breaking the empty-feed
-        # contract for pure-layout commits
-        a, r = a.drop(self._ROW_ID_COL), r.drop(self._ROW_ID_COL)
-        all_cols = list(dict.fromkeys(a.columns + r.columns))
-        # target type per column is the NEW side's (widenings cast the
-        # old side up, so exceptAll compares in one type)
-        types = {f.name: f.dataType for f in a.schema.fields}
-        types.update({f.name: f.dataType for f in r.schema.fields if f.name not in types})
-
-        def align(df: DataFrame) -> DataFrame:
-            return df.select(
-                *[
-                    F.col(c).cast(types[c]).alias(c) if c in df.columns
-                    else F.lit(None).cast(types[c]).alias(c)
-                    for c in all_cols
-                ]
-            )
-
-        a, r = align(a), align(r)
-        ins = a.exceptAll(r).withColumn("_change_type", F.lit("insert"))
-        dels = r.exceptAll(a).withColumn("_change_type", F.lit("delete"))
-        if as_images:
-            # ids shared between the two sides mark true updates; the
-            # join is churn x churn (the feed's own bound), AQE picks
-            # the strategy. Null ids never pair (SQL join semantics).
-            paired = (
-                ins.select("_row_id")
-                .join(dels.select("_row_id"), "_row_id")
-                .distinct()
-                .withColumn("__paired", F.lit(True))
-            )
-            ins = ins.join(paired, "_row_id", "left").withColumn(
-                "_change_type",
-                F.when(F.col("__paired"), F.lit("update_postimage"))
-                .otherwise(F.col("_change_type")),
-            ).drop("__paired")
-            dels = dels.join(paired, "_row_id", "left").withColumn(
-                "_change_type",
-                F.when(F.col("__paired"), F.lit("update_preimage"))
-                .otherwise(F.col("_change_type")),
-            ).drop("__paired")
-        out = ins.unionByName(dels)
-        if with_row_ids and not emit_rids:
-            out = out.drop("_row_id")
-        keep = (
-            ("_change_type", "_row_id") if emit_rids else ("_change_type",)
+            df = self._apply_dvs(df, paths, dvs)
+            if with_row_ids:
+                df = self._attach_row_ids(df, paths, live)
+        out = df.select(
+            *[
+                (F.col(f.name) if f.name in df.columns else F.lit(None))
+                .cast(f.dataType).alias(f.name)
+                for f in fields
+            ],
+            *(["_row_id"] if with_row_ids else []),
+            F.lit(label).alias("_change_type"),
         )
         return self._logicalize(out, keep=keep)
 

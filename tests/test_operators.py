@@ -1819,6 +1819,40 @@ def test_pagerank_fixed_point_hand_computed(spark):
     }
 
 
+def test_graph_ops_accept_non_numeric_shuffle_partitions(spark, monkeypatch):
+    """A deployment may set spark.sql.shuffle.partitions to ``auto``
+    (OSS Spark refuses the value on set, so the read is faked): the
+    edge cache falls back to a count-less repartition and results are
+    unchanged."""
+    from pyspark.sql.conf import RuntimeConfig
+
+    from data_lake_demo_spark.operators.graph import (
+        label_propagation,
+        pagerank_fixed_point,
+    )
+
+    edges = spark.createDataFrame(
+        [(1, 2), (2, 1), (3, 1), (4, 3)], "src long, dst long"
+    )
+
+    def run():
+        return (
+            sorted(pagerank_fixed_point(edges).collect()),
+            sorted(label_propagation(edges).collect()),
+        )
+
+    want = run()
+    real_get = RuntimeConfig.get
+
+    def get(self, key, *args, **kwargs):
+        if key == "spark.sql.shuffle.partitions":
+            return "auto"
+        return real_get(self, key, *args, **kwargs)
+
+    monkeypatch.setattr(RuntimeConfig, "get", get)
+    assert run() == want
+
+
 def test_lttb_downsample_keeps_ends_and_spike(spark):
     """Parallel LTTB: first/last points fixed, the interior bucket
     elects its spike (largest triangle vs neighbor centroids)."""

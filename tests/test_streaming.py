@@ -1201,7 +1201,7 @@ def test_acid_change_feed_nan_rows_cancel(spark, tmp_path):
     """Python tuple keys use NaN != NaN, so without NaN normalization
     a pure-layout compaction of NaN-bearing rows would emit spurious
     delete+insert pairs — the feed must stay EMPTY, matching
-    AcidTable.changes (whose exceptAll treats NaN as equal)."""
+    AcidTable.changes (which treats NaN as equal)."""
     from data_lake_demo_spark.streaming.acid_source import register
     from data_lake_demo_spark.tableformat import AcidTable
 
