@@ -2651,7 +2651,7 @@ def orders_cdf_update_images(spark: SparkSession, sf_dir: str) -> DataFrame:
     (count, quantized sum) aggregate value-hashes against SQL
     replaying the merge: pairs are exactly the k % 6 == 0 keys whose
     bump is non-zero (unchanged rows net out of the feed), inserts
-    the odd multiples of 3. Certifies acid_source._read_change_rows'
+    the odd multiples of 3. Certifies acid_source._change_batches'
     image pairing under the driver hash."""
     import shutil
     import tempfile

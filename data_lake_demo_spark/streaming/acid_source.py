@@ -48,14 +48,16 @@ source shape, expressed through Spark 4's Python Data Source API
   ``.option('updateAsImages', 'true')`` (row-tracking tables, batch
   and stream), which folds id-paired delete+insert rows into
   ``update_preimage``/``update_postimage`` executor-side for EVERY
-  change commit, yielding Delta's full 4-value enum. Memory is
-  bounded by the files one commit touched, which the MERGE/DELETE
-  file skipping already minimizes; for WIDE commits (a full-table
-  rewrite), ``.option('changeDiffBuckets', m)`` decomposes each
-  commit's diff into m deterministic row-hash buckets — m-way
-  parallelism and 1/m per-task memory at m× read amplification
-  (rid-keyed buckets when ids are read, so image pairing survives). The same option on a BATCH read
-  returns a commit range's change rows
+  change commit, yielding Delta's full 4-value enum. Every diff runs
+  on ONE Arrow kernel (``_change_batches``): both sides' columns are
+  cast to the output types, then a multiset group-by nets them (the
+  row id is one more key when ids are read). Memory is bounded by the
+  files one commit touched, which the MERGE/DELETE file skipping
+  already minimizes; a WIDE commit read with row ids splits into
+  contiguous row-id ranges, one task each (sized from the manifest's
+  touched rows, each task reading only the row groups its range can
+  hit), and any other diff is one task. ``readChangeFeed`` on a BATCH
+  read returns a commit range's change rows
   (``startingVersion``/``endingVersion`` — Delta's ``table_changes``).
 - **Row ids.** ``withRowIds=true`` (row-tracking tables,
   ``AcidTable.set_row_tracking()``) appends the stable ``_row_id``
@@ -158,14 +160,13 @@ class _ChangePartition(InputPartition):
     sides, each masked with its own vector, so the diff nets to the
     newly-masked rows.
 
-    ``bucket=(i, m)`` scopes the partition to the i-th of m
-    deterministic row-hash buckets (the ``changeDiffBuckets`` option):
-    a commit that touched MANY files — a full-table rewrite, a wide
-    merge — decomposes into m independent diffs instead of one
-    Python task holding the whole commit. The multiset diff
-    distributes perfectly by row hash (a cancelling pair lands in one
-    bucket by construction); the trade is m× read amplification of
-    the touched files, bought back as m× parallelism and 1/m memory."""
+    ``rid_range=(lo, hi)`` (planned only when row ids are read) scopes
+    the partition to rows whose stable id falls in ``[lo, hi)`` (None =
+    open end; the ``lo=None`` range also owns null ids): a commit that
+    touched MANY rows decomposes into independent diffs whose tasks
+    each skip the row groups outside their range (footer min/max). An
+    update's delete+insert pair shares its id, so pairing and
+    cancellation survive the split. Without ids a diff is one task."""
 
     def __init__(
         self,
@@ -174,7 +175,6 @@ class _ChangePartition(InputPartition):
         version: int,
         ts: float,
         op: str = "",
-        bucket: tuple[int, int] | None = None,
         rid_range: tuple | None = None,
     ):
         self.adds = adds
@@ -182,249 +182,39 @@ class _ChangePartition(InputPartition):
         self.version = version
         self.ts = ts
         self.op = op  # commit operation; "update" relabels the diff
-        self.bucket = bucket
-        # rid-RANGE scoping (r12, rid-reading modes only): this task
-        # owns rows whose stable id falls in [lo, hi) (None = open
-        # end; the lo=None partition also owns null ids). Unlike the
-        # crc32 hash buckets, contiguous ranges let the executor skip
-        # whole parquet ROW GROUPS via footer min/max — the m× read
-        # amplification the hash decomposition paid disappears. An
-        # update's delete+insert pair shares its id, so pairing and
-        # cancellation survive the decomposition exactly as before.
         self.rid_range = rid_range
 
 
-def _read_parquet_rows(
-    path: str,
-    fields: list[str],
-    dv: str | None = None,
-    rid_base: int | None = None,
-    with_rid: bool = False,
-):
-    """Executor-side file read: yield tuples in schema field order,
-    padding columns the file predates (additive evolution) with None.
-    ``dv`` masks merge-on-read-deleted rows by position.
-
-    ``with_rid=True`` appends the stable row id as the LAST element of
-    each tuple — the materialized hidden ``__row_id`` column when the
-    file carries one (rewrites), else ``rid_base`` + the PHYSICAL row
-    position (pre-mask, matching tableformat's base + _metadata.
-    row_index derivation), else None (file predates tracking)."""
+def _read_parquet(path: str):
+    """The whole file as Arrow. INT96 timestamps (Spark's default
+    timestamp encoding) read at microseconds, Spark's own precision,
+    so no in-range value overflows pyarrow's nanosecond default."""
     import pyarrow.parquet as pq
 
-    tbl = pq.read_table(path)
-    cols = []
-    n = tbl.num_rows
-    for f in fields:
-        if f in tbl.column_names:
-            cols.append(tbl.column(f).to_pylist())
-        else:
-            cols.append([None] * n)
-    if not n:
-        return
-    if with_rid:
-        # mirror AcidTable._attach_row_ids: coalesce(materialized,
-        # base + physical position)
-        if "__row_id" in tbl.column_names:
-            mat = tbl.column("__row_id").to_pylist()
-            if rid_base is None:
-                cols.append(mat)
-            else:
-                cols.append(
-                    [m if m is not None else rid_base + i
-                     for i, m in enumerate(mat)]
-                )
-        elif rid_base is not None:
-            cols.append(list(range(rid_base, rid_base + n)))
-        else:
-            cols.append([None] * n)
-    if dv:
-        from data_lake_demo_spark.tableformat import _unpack_dv
-
-        skip = set(_unpack_dv(dv))
-        for i, row in enumerate(zip(*cols)):
-            if i not in skip:
-                yield row
-        return
-    yield from zip(*cols)
-
-
-def _read_change_rows(
-    part: _ChangePartition,
-    fields: list[str],
-    with_rid: bool = False,
-    as_images: bool = False,
-):
-    """Executor-side net row diff for one commit (CDF mode): rows
-    present after-but-not-before are inserts, before-but-not-after
-    are deletes — multiset semantics (Counter), so duplicate rows
-    diff correctly. A pure-layout commit (compact / zorder) has
-    identical multisets and yields an EMPTY feed, matching
-    ``AcidTable.changes``. Memory is O(files this commit touched) —
-    bounded by the same file skipping that produced the commit.
-
-    ``with_rid=True`` (row-tracking tables) includes the stable row id
-    in the diff KEY and appends it as the row's last column: because
-    rewrites PRESERVE ids, carried rows still cancel (the old side
-    derives base+position, the new side reads the materialized column
-    — same value), layout commits still diff to empty, and an update's
-    delete+insert pair SHARES its id — the pairing contract that lets
-    a downstream consumer reconstruct row-level updates without a
-    natural key.
-
-    ``as_images=True`` (the ``updateAsImages`` reader option) FOLDS
-    that pairing into Delta's 4-value change-type enum executor-side:
-    a delete and an insert sharing a row id within one commit relabel
-    to ``update_preimage``/``update_postimage`` (MERGE and MOR verbs
-    included); unpaired rows keep insert/delete. Requires row
-    tracking — ids are read for the pairing even when the consumer
-    didn't ask for the ``_row_id`` column (they're dropped again at
-    emission unless ``with_rid``)."""
-    from collections import Counter
-
-    def key(v):
-        # nested parquet values (array/map columns) arrive as Python
-        # lists/dicts — unhashable; build a canonical hashable key
-        # while keeping the ORIGINAL row for emission. Float NaN is
-        # mapped to a sentinel: tuple keys use Python equality where
-        # NaN != NaN, so NaN-bearing rows would never cancel between
-        # the removed/added multisets and a pure-layout compaction
-        # would emit spurious delete+insert pairs (Spark's set
-        # operations treat NaN as equal, and so must we).
-        if isinstance(v, float) and v != v:
-            return ("__nan",)
-        if isinstance(v, list):
-            return ("__l", tuple(key(x) for x in v))
-        if isinstance(v, dict):
-            return ("__d", tuple(sorted((k, key(x)) for k, x in v.items())))
-        return v
-
-    read_rid = with_rid or as_images
-    bucket = part.bucket
-    rid_range = part.rid_range
-
-    def in_range(k) -> bool:
-        # rid-RANGE partition ownership (reference twin of the kernel's
-        # range mask): rid in [lo, hi), open ends unbounded; a null rid
-        # (file predating tracking) belongs to the FIRST range (lo None)
-        lo, hi = rid_range
-        rid = k[-1]
-        if rid is None:
-            return lo is None
-        return (lo is None or rid >= lo) and (hi is None or rid < hi)
-
-    def bucket_of(k) -> int:
-        # deterministic across processes (no reliance on
-        # PYTHONHASHSEED): crc32 of the canonical key's repr. In rid
-        # mode the row id alone is the bucket key, so an update's
-        # delete+insert pair — different content, same id — stays
-        # co-bucketed and image pairing survives the decomposition.
-        import zlib
-
-        kk = k[-1] if read_rid and k[-1] is not None else k
-        return zlib.crc32(repr(kk).encode()) % bucket[1]
-
-    def load(entries):
-        counts: Counter = Counter()
-        originals: dict = {}
-        for p, dv, base in entries:
-            for row in _read_parquet_rows(p, fields, dv, base, read_rid):
-                k = tuple(key(v) for v in row)
-                if bucket is not None and bucket_of(k) != bucket[0]:
-                    continue  # another bucket's task owns this row
-                if rid_range is not None and not in_range(k):
-                    continue  # another range's task owns this row
-                counts[k] += 1
-                originals[k] = row
-        return counts, originals
-
-    after, rows_a = load(part.adds)
-    before, rows_b = load(part.removes)
-    commit_ts = datetime.fromtimestamp(part.ts, tz=timezone.utc)
-    # Delta's 4-value change-type enum: an UPDATE commit's net diff is
-    # exactly the updated rows (copied-unchanged rows cancel in the
-    # multiset diff), so its deletes ARE preimages and its inserts ARE
-    # postimages — labeling rides the commit operation, matching how
-    # Delta derives CDF types from the command, not from row pairing.
-    # (MERGE stays insert/delete: its commits mix updates with true
-    # inserts/deletes and the log has no row-level provenance.)
-    is_update = part.op == "update"
-    ins_label = "update_postimage" if is_update else "insert"
-    del_label = "update_preimage" if is_update else "delete"
-    def emit(row, label):
-        if with_rid:  # rid rides LAST in the output schema, after the
-            # CDF metadata columns — the read tuples carry it last too
-            return (*row[:-1], label, part.version, commit_ts, row[-1])
-        if read_rid:  # rid was read only for image pairing: drop it
-            return (*row[:-1], label, part.version, commit_ts)
-        return (*row, label, part.version, commit_ts)
-
-    # repr-keyed sort: deterministic output order even when column
-    # types are mixed/nested (raw tuple comparison would TypeError)
-    ins_items = sorted((after - before).items(), key=lambda kv: repr(kv[0]))
-    del_items = sorted((before - after).items(), key=lambda kv: repr(kv[0]))
-    paired: set = set()
-    if as_images and not is_update:
-        # id-paired delete+insert within ONE commit = a row UPDATE
-        # (rewrites preserve ids; MERGE/MOR matched rows inherit them)
-        del_rids = {k[-1] for k, _ in del_items if k[-1] is not None}
-        ins_rids = {k[-1] for k, _ in ins_items if k[-1] is not None}
-        paired = del_rids & ins_rids
-    for k, n in ins_items:
-        lbl = "update_postimage" if paired and k[-1] in paired else ins_label
-        for _ in range(n):
-            yield emit(rows_a[k], lbl)
-    for k, n in del_items:
-        lbl = "update_preimage" if paired and k[-1] in paired else del_label
-        for _ in range(n):
-            yield emit(rows_b[k], lbl)
-
-
-#: arrow types the vectorized diff compares with pyarrow.compute —
-#: everything else (nested, dictionary, mixed-per-file) falls back to
-#: the row-at-a-time reference path for that PARTITION
-def _vec_comparable(t) -> bool:
-    import pyarrow.types as pt
-
-    return (
-        pt.is_integer(t)
-        or pt.is_floating(t)
-        or pt.is_boolean(t)
-        or pt.is_string(t)
-        or pt.is_large_string(t)
-        or pt.is_binary(t)
-        or pt.is_large_binary(t)
-        or pt.is_date(t)
-        or pt.is_timestamp(t)
-        or pt.is_decimal(t)
-    )
+    return pq.read_table(path, coerce_int96_timestamp_unit="us")
 
 
 def _rid_range_read(path: str, base, rng: tuple):
-    """Row-group-scoped file read for a rid-RANGE partition (r12
-    verdict item 6): select only the row groups whose rid span —
-    footer ``__row_id`` min/max statistics when the file carries the
-    materialized column, else ``base`` + the group's position window —
-    can intersect ``[lo, hi)``. Each of a commit's m range tasks then
-    reads ~1/m of the touched bytes instead of re-reading every file,
-    which is the m× amplification the crc32 hash-bucket decomposition
-    paid (a hash bucket's rows are scattered uniformly through every
-    row group, so nothing could be skipped).
+    """Row-group-scoped file read for a rid-RANGE partition: select
+    only the row groups whose rid span — footer ``__row_id`` min/max
+    statistics when the file carries the materialized column, else
+    ``base`` + the group's position window — can intersect
+    ``[lo, hi)``. Each of a commit's m range tasks then reads ~1/m of
+    the touched bytes instead of re-reading every file.
 
     Returns ``(arrow_table, positions, total_rows)`` where
     ``positions`` are the FILE-ABSOLUTE row indices of the rows read
     (the deletion-vector mask and ``base``-derived rids are keyed on
     physical position), or ``None`` when any row group's rid span is
     unknowable (stats missing, or possible nulls with no manifest
-    base) — the caller falls back exactly as for any other
-    precondition miss. A group whose ``__row_id`` column may contain
-    nulls widens its span with the ``base + position`` window the
-    null coalesce would produce."""
+    base) — the caller then reads the whole file. A group whose
+    ``__row_id`` column may contain nulls widens its span with the
+    ``base + position`` window the null coalesce would produce."""
     import numpy as np
     import pyarrow.parquet as pq
 
     lo, hi = rng
-    f = pq.ParquetFile(path)
+    f = pq.ParquetFile(path, coerce_int96_timestamp_unit="us")
     md = f.metadata
     names = [md.schema.column(i).name for i in range(md.num_columns)]
     rid_idx = names.index("__row_id") if "__row_id" in names else None
@@ -440,7 +230,7 @@ def _rid_range_read(path: str, base, rng: tuple):
             nulls = st.null_count if st.has_null_count else None
             if nulls is None or nulls:
                 if base is None:
-                    return None  # null rids, no base: kernel bails anyway
+                    return None  # null rids, no base: unbounded span
                 glo = min(glo, base + off)
                 ghi = max(ghi, base + off + nrows)
         elif base is not None:
@@ -457,26 +247,6 @@ def _rid_range_read(path: str, base, rng: tuple):
     return tbl, np.concatenate(pos_parts), md.num_rows
 
 
-def _kernel_columns(tbl, fields: list[str], types_seen: dict):
-    """``tbl``'s columns for ``fields`` (a column the file predates
-    reads as nulls), recording each one's arrow type in
-    ``types_seen``; None when a type is outside ``_vec_comparable``."""
-    import pyarrow as pa
-
-    cols = []
-    for f in fields:
-        if f not in tbl.column_names:
-            cols.append(pa.nulls(tbl.num_rows))
-            continue
-        c = tbl.column(f)
-        if not pa.types.is_null(c.type):
-            types_seen.setdefault(f, set()).add(c.type)
-            if not _vec_comparable(c.type):
-                return None
-        cols.append(c)
-    return cols
-
-
 def _dv_keep(dv: str, n: int):
     """Keep-mask over a file's ``n`` physical rows under vector ``dv``."""
     import numpy as np
@@ -489,503 +259,251 @@ def _dv_keep(dv: str, n: int):
     return keep
 
 
-def _cast_table(arrays: list, target, strict: bool = False):
-    """``arrays`` as a table of ``target``'s types. A cast that would
-    reinterpret naive↔aware timestamps (the Python converter's
-    session-tz semantics differ: the reference path must serve)
-    returns None, or raises when ``strict`` so the fallback is
-    reported by ``_warn_fallback``."""
+def _file_columns(tbl, fields: list[str], target) -> list:
+    """``tbl``'s columns for ``fields`` cast to ``target``'s leading
+    types; a column the file predates reads as nulls. Exact: a file
+    holds the type a column had when it was written, and the widening
+    lattice (``AcidTable._WIDEN``) only admits value-preserving
+    promotions. A naive timestamp (INT96) reads as a UTC instant,
+    matching the engine's UTC session."""
     import pyarrow as pa
 
-    casted = []
-    for arr, fld in zip(arrays, target):
-        if arr.type != fld.type:
-            if pa.types.is_timestamp(arr.type) and pa.types.is_timestamp(
-                fld.type
-            ) and (arr.type.tz is None) != (fld.type.tz is None):
-                if strict:
-                    raise ValueError("timestamp tz mismatch")
-                return None
-            arr = arr.cast(fld.type)
-        casted.append(arr)
-    return pa.Table.from_arrays(casted, schema=target)
+    cols = []
+    for f, fld in zip(fields, target):
+        if f not in tbl.column_names:
+            cols.append(pa.nulls(tbl.num_rows, fld.type))
+            continue
+        c = tbl.column(f).combine_chunks()
+        cols.append(c if c.type == fld.type else c.cast(fld.type))
+    return cols
 
 
-def _change_table(src, idx, labels, fields, part, target, rids=None):
-    """Rows ``idx`` of ``src`` labelled with their change types, plus
-    the commit's version and timestamp and (``rids`` given) the row id
-    — the CDF output row — cast to ``target`` (strictly: see
-    ``_cast_table``)."""
+def _file_rids(tbl, base, pos):
+    """Stable row id per read row (``pos``: physical positions) —
+    mirrors ``AcidTable._attach_row_ids``: the materialized
+    ``__row_id`` where a rewrite wrote one, else manifest ``base`` +
+    physical position, else null (the file predates tracking)."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    derived = (
+        pa.array(base + pos) if base is not None
+        else pa.nulls(len(pos), pa.int64())
+    )
+    if "__row_id" not in tbl.column_names:
+        return derived
+    mat = tbl.column("__row_id").combine_chunks()
+    return pc.coalesce(mat, derived) if mat.null_count else mat
+
+
+def _load_side(entries, fields, target, read_rid: bool, rng):
+    """One diff side as arrays of ``fields`` (cast, deletion vectors
+    applied) plus the row id as the last one (null unless
+    ``read_rid``). ``rng`` keeps only the rows a rid-range partition
+    owns: ids in ``[lo, hi)``, and null ids in the first range."""
     import numpy as np
     import pyarrow as pa
+    import pyarrow.compute as pc
 
-    take = pa.array(idx)
-    n = idx.size
-    arrays = [src.column(f).combine_chunks().take(take) for f in fields]
-    arrays.append(pa.array(labels, type=pa.string()))
-    arrays.append(pa.array(np.full(n, part.version, dtype=np.int64)))
-    commit_ts = datetime.fromtimestamp(part.ts, tz=timezone.utc)
-    ts_one = pa.array([commit_ts], type=target.field(len(fields) + 2).type)
-    arrays.append(ts_one.take(pa.array(np.zeros(n, dtype=np.int32))))
-    if rids is not None:
-        arrays.append(pa.array(rids))
-    return _cast_table(arrays, target, strict=True)
+    names = [f"c{i}" for i in range(len(fields) + 1)]
+    types = [fld.type for fld in target][: len(fields)] + [pa.int64()]
+    tables = [pa.table([pa.array([], t) for t in types], names)]
+    for path, dv, base in entries:
+        scoped = _rid_range_read(path, base, rng) if rng else None
+        if scoped is None:
+            tbl = _read_parquet(path)
+            total = tbl.num_rows
+            pos = np.arange(total, dtype=np.int64)
+        else:
+            tbl, pos, total = scoped
+            if tbl is None:
+                continue  # every row group provably outside the range
+        cols = _file_columns(tbl, fields, target)
+        keep = _dv_keep(dv, total)[pos] if dv else np.ones(pos.size, bool)
+        rid = (
+            _file_rids(tbl, base, pos) if read_rid
+            else pa.nulls(pos.size, pa.int64())
+        )
+        cols.append(rid)
+        if rng:
+            lo, hi = rng
+            ids = pc.fill_null(rid, 0).to_numpy()
+            own = np.ones(ids.size, bool)
+            if lo is not None:
+                own &= ids >= lo
+            if hi is not None:
+                own &= ids < hi
+            null = pc.is_null(rid).to_numpy(zero_copy_only=False)
+            keep &= np.where(null, lo is None, own)
+        side = pa.table(cols, names)
+        tables.append(side if keep.all() else side.filter(pa.array(keep)))
+    return [c.combine_chunks() for c in pa.concat_tables(tables).columns]
 
 
-def _rid_change_batches(
+def _canon(v):
+    """Hashable canonical form of a nested value, equal exactly where
+    the row-at-a-time oracle's keys are: NaN equals NaN, −0.0 equals
+    +0.0, list and map entries keep their order, and dict (struct)
+    items are sorted. Its ``repr`` is the group-by key."""
+    if isinstance(v, float):
+        return ("__nan",) if v != v else v + 0.0  # -0.0 + 0.0 = +0.0
+    if isinstance(v, (list, tuple)):
+        return ("__l", tuple(_canon(x) for x in v))
+    if isinstance(v, dict):
+        return ("__d", tuple(sorted((k, _canon(x)) for k, x in v.items())))
+    return v
+
+
+def _key_columns(c) -> list:
+    """NULL-FREE group-by columns whose equality is the oracle's key
+    equality for column ``c``. pyarrow's hash grouper mis-splits
+    groups on NULLABLE key columns once the key row gets wide, so
+    validity is explicit: a uint8 flag (0 value, 1 null, 2 NaN) plus
+    the value with null/NaN filled by a constant the flag
+    disambiguates; floats also fold −0.0 into +0.0. Nested columns
+    key on ``_canon``'s repr."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    t = c.type
+    if pa.types.is_null(t):
+        return []  # constant: every row null
+    if pa.types.is_nested(t):
+        return [pa.array(
+            [repr(_canon(v)).encode() for v in c.to_pylist()], pa.binary()
+        )]
+    flag = pc.cast(pc.is_null(c), pa.uint8())
+    if pa.types.is_floating(t):
+        nan = pc.fill_null(pc.is_nan(c), False)
+        zero = pa.scalar(0.0, t)
+        two = pc.multiply(pc.cast(nan, pa.uint8()), pa.scalar(2, pa.uint8()))
+        val = pc.fill_null(pc.if_else(nan, zero, c), zero)
+        return [pc.add(flag, two), pc.add(val, zero)]
+    if pa.types.is_string(t) or pa.types.is_large_string(t):
+        zero = ""
+    elif pa.types.is_binary(t) or pa.types.is_large_binary(t):
+        zero = b""
+    else:
+        zero = False if pa.types.is_boolean(t) else 0
+    return [flag, pc.fill_null(c, pa.scalar(zero, t))]
+
+
+def _change_batches(
     part: _ChangePartition,
     fields: list[str],
     with_rid: bool,
     as_images: bool,
     spark_schema,
 ):
-    """Vectorized (Arrow + numpy) twin of ``_read_change_rows`` for the
-    rid-reading modes (``withRowIds`` / ``updateAsImages``): returns a
-    list of ``pyarrow.RecordBatch`` in the source's output schema, or
-    ``None`` when any precondition fails — the caller then runs the
-    row-at-a-time reference path, so the failure mode is exactly the
-    old behavior.
+    """The net row diff of one change partition, as Arrow batches in
+    the source's output schema: ``fields``, ``_change_type``,
+    ``_commit_version``, ``_commit_timestamp``, then ``_row_id`` when
+    ``with_rid``. Rows present after-but-not-before are inserts,
+    before-but-not-after deletes, with multiset semantics: one
+    hash-aggregation over both sides nets a ±1 count per row under a
+    canonical key (``_key_columns``), so duplicate rows diff by count
+    and a pure-layout commit (compact / zorder) yields an EMPTY feed.
+    A net count k > 0 emits the AFTER side's last occurrence k times,
+    k < 0 the BEFORE side's.
 
-    Why this is EXACTLY the reference diff in rid mode: the multiset
-    key there is ``(row content…, _row_id)`` and stable row ids are
-    unique among the live rows of a snapshot (verified per side below;
-    violated → fall back), so every multiset count is 1 and the
-    Counter diff degenerates to a map diff keyed by rid:
-
-    * rid in both sides, content equal          → cancels (not emitted)
-    * rid in both sides, content differs        → delete + insert pair
-      (= the ``paired`` set: rids in both net sides)
-    * rid only after / only before              → insert / delete
-
-    Content equality replicates the reference ``key()`` semantics
-    column-wise with arrow kernels: ``pc.equal`` + both-null +
-    (floats) both-NaN — None ≠ NaN exactly as the sentinel encodes it.
-    Columns whose per-file arrow types disagree across the two sides
-    (mid-evolution commits) abort to the reference path rather than
-    compare under arrow's promoted type (int64→float64 promotion is
-    lossy above 2^53 where Python's int==float is exact).
-
-    Two deliberate differences, both invisible to any declared result:
-    rows are emitted ordered by row id instead of by ``repr`` of the
-    canonical key (deterministic either way; every consumer aggregates
-    or sorts), and rows reach the JVM as Arrow batches cast to the
-    source's ``to_arrow_schema`` types instead of per-row Python
-    converter calls — the guide-§4 point of the kernel."""
+    With ids read (``with_rid`` or ``as_images``) the stable row id is
+    one more key: rewrites PRESERVE ids, so carried rows still cancel,
+    and an update's delete+insert pair SHARES its id. ``as_images``
+    folds that pairing into Delta's 4-value enum: a delete and an
+    insert sharing a non-null row id relabel to
+    ``update_preimage``/``update_postimage``. An ``update()`` commit's
+    net diff is exactly the updated rows, so its deletes ARE
+    preimages and its inserts ARE postimages (labeling rides the
+    commit operation, as Delta derives CDF types from the command).
+    Rows come out sorted by row id first, then by the canonical key."""
     import numpy as np
     import pyarrow as pa
     import pyarrow.compute as pc
-    import pyarrow.parquet as pq
     from pyspark.sql.pandas.types import to_arrow_schema
 
     target = to_arrow_schema(spark_schema)
+    read_rid = with_rid or as_images
     rng = part.rid_range
-
-    def load_side(entries):
-        # -> (pa.Table over `fields`, np.int64 rids) | None (fallback)
-        tables, rid_parts, types_seen = [], [], {}
-        for path, dv, base in entries:
-            if rng is not None:
-                # rid-RANGE partition: read only the row groups whose
-                # rid span can intersect [lo, hi) — the whole point of
-                # the range decomposition (see _rid_range_read)
-                scoped = _rid_range_read(path, base, rng)
-                if scoped is None:
-                    return None
-                tbl, pos, total = scoped
-                if tbl is None:
-                    continue  # every row group provably outside range
-            else:
-                tbl = pq.read_table(path)
-                total = tbl.num_rows
-                pos = np.arange(total, dtype=np.int64)
-            n = tbl.num_rows
-            names = set(tbl.column_names)
-            # stable id per PHYSICAL position (pre-mask) — the
-            # _read_parquet_rows coalesce: materialized __row_id,
-            # else manifest base + position; any null id → fallback
-            if "__row_id" in names:
-                mat = tbl.column("__row_id").combine_chunks()
-                if mat.null_count:
-                    if base is None:
-                        return None
-                    mat = pc.coalesce(mat, pa.array(base + pos))
-                    if mat.null_count:
-                        return None
-                rids = mat.to_numpy(zero_copy_only=False).astype(
-                    np.int64, copy=False
-                )
-            elif base is not None:
-                rids = base + pos
-            else:
-                return None
-            cols = _kernel_columns(tbl, fields, types_seen)
-            if cols is None:
-                return None
-            side = pa.table(dict(zip(fields, cols))) if fields else (
-                pa.table({"__dummy": pa.nulls(n)})
-            )
-            if dv:
-                # the vector indexes physical positions in the FULL
-                # file; map through `pos` for a row-group-scoped read
-                keep = _dv_keep(dv, total)[pos]
-                side = side.filter(pa.array(keep))
-                rids = rids[keep]
-            if rng is not None:
-                # exact ownership: stats only bounded the row groups
-                lo, hi = rng
-                m = np.ones(rids.size, dtype=bool)
-                if lo is not None:
-                    m &= rids >= lo
-                if hi is not None:
-                    m &= rids < hi
-                if not m.all():
-                    side = side.filter(pa.array(m))
-                    rids = rids[m]
-            tables.append(side)
-            rid_parts.append(rids)
-        if not tables:
-            empty = pa.table({f: pa.nulls(0) for f in fields or ["__dummy"]})
-            return empty, np.empty(0, dtype=np.int64), {}
-        tbl = pa.concat_tables(tables, promote_options="permissive")
-        return tbl, np.concatenate(rid_parts), types_seen
-
-    after = load_side(part.adds)
-    if after is None:
-        return None
-    before = load_side(part.removes)
-    if before is None:
-        return None
-    tbl_a, rids_a, types_a = after
-    tbl_b, rids_b, types_b = before
-    # a column read under >1 arrow type across the two sides would
-    # compare under a promoted type — reference path instead
-    for f in fields:
-        if len(types_a.get(f, set()) | types_b.get(f, set())) > 1:
-            return None
-    # bucket scoping (wide commits): in rid mode the reference keys
-    # buckets on the rid alone — replicate its crc32-of-repr exactly
-    if part.bucket is not None:
-        import zlib
-
-        i, m = part.bucket
-
-        def bmask(rids):
-            return np.fromiter(
-                (
-                    zlib.crc32(repr(int(r)).encode()) % m == i
-                    for r in rids
-                ),
-                dtype=bool,
-                count=len(rids),
-            )
-        ka, kb = bmask(rids_a), bmask(rids_b)
-        tbl_a, rids_a = tbl_a.filter(pa.array(ka)), rids_a[ka]
-        tbl_b, rids_b = tbl_b.filter(pa.array(kb)), rids_b[kb]
-    # rid uniqueness per side is the invariant the map-diff rests on
-    if np.unique(rids_a).size != rids_a.size:
-        return None
-    if np.unique(rids_b).size != rids_b.size:
-        return None
-    common, ia, ib = np.intersect1d(
-        rids_a, rids_b, assume_unique=True, return_indices=True
+    after = _load_side(part.adds, fields, target, read_rid, rng)
+    before = _load_side(part.removes, fields, target, read_rid, rng)
+    na, nb = len(after[-1]), len(before[-1])
+    # the row id (last column) keys first, so groups sort by it
+    order = [len(fields)] * read_rid + list(range(len(fields)))
+    combo = {}
+    for i in order:
+        ka, kb = _key_columns(after[i]), _key_columns(before[i])
+        for a, b in zip(ka, kb):
+            combo[f"__k{len(combo)}"] = pa.chunked_array([a, b])
+    keys = list(combo) or ["__k"]
+    if not combo:  # no data fields, or every one is null-typed
+        combo["__k"] = pa.array(np.zeros(na + nb, np.uint8))
+    combo["__cnt"] = np.concatenate(
+        [np.ones(na, np.int64), np.full(nb, -1, np.int64)]
     )
-    changed = np.zeros(common.size, dtype=bool)
-    if common.size:
-        ia_pa, ib_pa = pa.array(ia), pa.array(ib)
-        for f in fields:
-            if changed.all():
-                break
-            a = tbl_a.column(f).combine_chunks().take(ia_pa)
-            b = tbl_b.column(f).combine_chunks().take(ib_pa)
-            a_null, b_null = pc.is_null(a), pc.is_null(b)
-            if pa.types.is_null(a.type) and pa.types.is_null(b.type):
-                continue  # column absent on both sides: all equal
-            if pa.types.is_null(a.type) or pa.types.is_null(b.type):
-                # one side entirely null: equal exactly where the
-                # other side is null too
-                eq = pc.and_(a_null, b_null)
-                changed |= ~eq.to_numpy(zero_copy_only=False)
-                continue
-            eq = pc.fill_null(pc.equal(a, b), False)
-            eq = pc.or_(eq, pc.and_(a_null, b_null))
-            if pa.types.is_floating(a.type):
-                # NaN == NaN (the reference key() sentinel); note
-                # null stays != NaN through the is_null distinction
-                eq = pc.or_(
-                    eq,
-                    pc.and_(
-                        pc.fill_null(pc.is_nan(a), False),
-                        pc.fill_null(pc.is_nan(b), False),
-                    ),
-                )
-            changed |= ~eq.to_numpy(zero_copy_only=False)
-    only_a = np.ones(rids_a.size, dtype=bool)
-    only_a[ia] = False
-    only_b = np.ones(rids_b.size, dtype=bool)
-    only_b[ib] = False
-    ins_idx = np.concatenate([np.flatnonzero(only_a), ia[changed]])
-    del_idx = np.concatenate([np.flatnonzero(only_b), ib[changed]])
-    n_new = int(only_a.sum())  # prefix of ins_idx = true inserts
-    n_gone = int(only_b.sum())
-    is_update = part.op == "update"
-
-    def labels(n_total, n_plain, plain, image):
-        if is_update:
-            return np.full(n_total, image)
-        out = np.full(n_total, plain, dtype=object)
-        if as_images:
-            out[n_plain:] = image
-        return out
-
-    def side_table(src, rids, idx, lbls):
-        order = np.argsort(rids[idx], kind="stable")
-        idx = idx[order]
-        return _change_table(
-            src, idx, np.asarray(lbls, dtype=object)[order], fields, part,
-            target, rids[idx] if with_rid else None,
-        )
-
-    ins = side_table(
-        tbl_a, rids_a, ins_idx,
-        labels(ins_idx.size, n_new, "insert", "update_postimage"),
+    combo["__pa"] = np.concatenate(
+        [np.arange(na, dtype=np.int64), np.full(nb, -1, np.int64)]
     )
-    dels = side_table(
-        tbl_b, rids_b, del_idx,
-        labels(del_idx.size, n_gone, "delete", "update_preimage"),
+    combo["__pb"] = np.concatenate(
+        [np.full(na, -1, np.int64), np.arange(nb, dtype=np.int64)]
     )
-    return pa.concat_tables([ins, dels]).to_batches(max_chunksize=1 << 16)
-
-
-#: once-per-process marker for vectorized-kernel fallbacks caused by an
-#: EXCEPTION (r11 advice: a kernel that starts raising — e.g. a pyarrow
-#: upgrade — must not become an invisible 10x regression; planned
-#: precondition misses returning None stay silent by design)
-_FALLBACK_WARNED = False
-
-
-def _warn_fallback(kind: str, exc: Exception) -> None:
-    global _FALLBACK_WARNED
-    if _FALLBACK_WARNED:
-        return
-    _FALLBACK_WARNED = True
-    import sys
-
-    print(
-        f"acidtable: vectorized {kind} kernel raised "
-        f"{type(exc).__name__}: {exc} — falling back to the "
-        "row-at-a-time reference path (results identical, slower); "
-        "further fallbacks in this worker are not logged",
-        file=sys.stderr,
-    )
-
-
-def _plain_change_batches(part: _ChangePartition, fields: list[str], spark_schema):
-    """Vectorized (Arrow + numpy) twin of ``_read_change_rows`` for
-    PLAIN mode (no row ids read — untracked tables): returns
-    ``pyarrow.RecordBatch`` list, or None to fall back. r11 shipped
-    the rid-keyed kernel; this closes the remaining §4 row loop
-    (r12 verdict item 5).
-
-    The reference multiset diff groups rows by a canonical content
-    key under Python ``==``/``hash`` — replicated here exactly with
-    one Arrow hash-aggregation over both sides at once:
-
-    * float columns split into (is-NaN flag, value with NaN→0.0 and
-      −0.0→+0.0): all NaNs equal each other (the reference sentinel),
-      −0.0 equals +0.0 (Python ``==``), null stays null and equals
-      only null — the `-0.0`/NaN edge cases called out in the r11
-      design note, each pinned by a test;
-    * every other allowlisted type compares exactly under one arrow
-      type per column (a cross-side type mismatch — int file vs
-      widened float file mid-evolution — falls back, same rule as the
-      rid kernel, because promoted compare is lossy above 2^53);
-    * per-side counts and first/last positions ride the same
-      aggregation: net count > 0 emits the AFTER side's LAST
-      occurrence (the reference ``originals`` dict is last-wins) that
-      many times as inserts, net < 0 symmetrically as deletes.
-
-    Two deliberate differences, the same two the rid kernel declared:
-    rows are emitted ordered by the canonical key columns instead of
-    by ``repr`` of the key tuple (deterministic either way — building
-    the repr strings would reintroduce a per-row Python loop), and
-    rows reach the JVM as Arrow batches. Bucketed partitions
-    (``changeDiffBuckets`` on an untracked table) fall back: the
-    bucket function is crc32-of-repr over the whole key, inherently
-    row-at-a-time, and ALL buckets of a commit must bucket
-    identically or rows would be dropped/duplicated across tasks."""
-    import numpy as np
-    import pyarrow as pa
-    import pyarrow.compute as pc
-    import pyarrow.parquet as pq
-    from pyspark.sql.pandas.types import to_arrow_schema
-
-    if part.bucket is not None or part.rid_range is not None or not fields:
-        # rid_range partitions are planned only in rid-reading modes,
-        # which dispatch to _rid_change_batches; guard anyway — the
-        # reference path scopes them correctly
-        return None
-    target = to_arrow_schema(spark_schema)
-
-    def load_side(entries):
-        tables, types_seen = [], {}
-        for path, dv, _base in entries:
-            tbl = pq.read_table(path)
-            cols = _kernel_columns(tbl, fields, types_seen)
-            if cols is None:
-                return None
-            side = pa.table(dict(zip(fields, cols)))
-            if dv:
-                side = side.filter(pa.array(_dv_keep(dv, tbl.num_rows)))
-            tables.append(side)
-        if not tables:
-            return pa.table({f: pa.nulls(0) for f in fields}), {}
-        return pa.concat_tables(tables, promote_options="permissive"), types_seen
-
-    after = load_side(part.adds)
-    if after is None:
-        return None
-    before = load_side(part.removes)
-    if before is None:
-        return None
-    tbl_a, types_a = after
-    tbl_b, types_b = before
-    common = {}
-    for f in fields:
-        ts = types_a.get(f, set()) | types_b.get(f, set())
-        if len(ts) > 1:
-            return None
-        common[f] = next(iter(ts)) if ts else None
-
-    def norm(tbl):
-        # a side whose files all predate a column reads it null-typed;
-        # cast to the other side's type (all-null cast is exact) so
-        # the cross-side grouping and the final take/cast line up
-        cols = []
-        for f in fields:
-            c = tbl.column(f).combine_chunks()
-            if common[f] is not None and pa.types.is_null(c.type):
-                c = c.cast(common[f])
-            cols.append(c)
-        return pa.table(dict(zip(fields, cols)))
-
-    tbl_a, tbl_b = norm(tbl_a), norm(tbl_b)
-
-    def _fill_zero(t):
-        if pa.types.is_string(t) or pa.types.is_large_string(t):
-            return pa.scalar("", t)
-        if pa.types.is_binary(t) or pa.types.is_large_binary(t):
-            return pa.scalar(b"", t)
-        if pa.types.is_boolean(t):
-            return pa.scalar(False, t)
-        return pa.scalar(0, t)
-
-    def canon_columns(tbl):
-        """NULL-FREE key columns whose arrow equality == the reference
-        key()'s Python equality. pyarrow 16's hash grouper mis-splits
-        groups on NULLABLE key columns once the key row gets wide
-        (reproduced: identical printed keys land in several groups),
-        so validity is encoded EXPLICITLY — a uint8 flag per column
-        (0 value, 1 null, 2 NaN) plus the value with null/NaN filled
-        by a type-constant the flag disambiguates. Floats additionally
-        normalize -0.0 → +0.0 (Python == treats them equal)."""
-        out = []
-        for f in fields:
-            c = tbl.column(f).combine_chunks()
-            if pa.types.is_null(c.type):
-                continue  # all-null on BOTH sides: constant key, no-op
-            isnull = pc.cast(pc.is_null(c), pa.uint8())
-            if pa.types.is_floating(c.type):
-                isnan = pc.fill_null(pc.is_nan(c), False)
-                flag = pc.add(
-                    isnull,
-                    pc.multiply(pc.cast(isnan, pa.uint8()), pa.scalar(2, pa.uint8())),
-                )
-                val = pc.if_else(isnan, pa.scalar(0.0, c.type), c)
-                val = pc.fill_null(val, pa.scalar(0.0, c.type))
-                # IEEE: -0.0 + 0.0 = +0.0
-                val = pc.add(val, pa.scalar(0.0, c.type))
-                out += [flag, val]
-            else:
-                out += [isnull, pc.fill_null(c, _fill_zero(c.type))]
-        return out
-
-    na, nb = tbl_a.num_rows, tbl_b.num_rows
-    keys_a, keys_b = canon_columns(tbl_a), canon_columns(tbl_b)
-    if not keys_a:  # every column all-null on both sides: degenerate
-        return None
-    key_names = [f"__k{i}" for i in range(len(keys_a))]
-    combo = {
-        nm: pa.chunked_array([ca, cb])
-        for nm, ca, cb in zip(key_names, keys_a, keys_b)
-    }
-    combo["__cnt"] = pa.chunked_array(
-        [np.ones(na, dtype=np.int64), np.full(nb, -1, dtype=np.int64)]
-    )
-    combo["__pa"] = pa.chunked_array(
-        [np.arange(na, dtype=np.int64), np.full(nb, -1, dtype=np.int64)]
-    )
-    combo["__pb"] = pa.chunked_array(
-        [np.full(na, -1, dtype=np.int64), np.arange(nb, dtype=np.int64)]
-    )
-    g = pa.TableGroupBy(pa.table(combo), key_names).aggregate(
+    g = pa.table(combo).group_by(keys).aggregate(
         [("__cnt", "sum"), ("__pa", "max"), ("__pb", "max")]
     )
-    # deterministic output order: the canonical key columns (the
-    # reference sorts by repr of the key tuple — same determinism,
-    # different collation; documented above)
-    g = g.sort_by([(k, "ascending") for k in key_names])
-    cnt = g.column("__cnt_sum").to_numpy(zero_copy_only=False)
-    pa_last = g.column("__pa_max").to_numpy(zero_copy_only=False)
-    pb_last = g.column("__pb_max").to_numpy(zero_copy_only=False)
-    ins_mask, del_mask = cnt > 0, cnt < 0
-    ins_idx = np.repeat(pa_last[ins_mask], cnt[ins_mask])
-    del_idx = np.repeat(pb_last[del_mask], -cnt[del_mask])
+    g = g.filter(pc.not_equal(g["__cnt_sum"], 0))
+    g = g.sort_by([(k, "ascending") for k in keys])
+    cnt = g["__cnt_sum"].to_numpy()
+    ins_idx = np.repeat(g["__pa_max"].to_numpy()[cnt > 0], cnt[cnt > 0])
+    del_idx = np.repeat(g["__pb_max"].to_numpy()[cnt < 0], -cnt[cnt < 0])
 
     is_update = part.op == "update"
-    ins = _change_table(
-        tbl_a, ins_idx,
-        np.full(ins_idx.size, "update_postimage" if is_update else "insert"),
-        fields, part, target,
+    ins_lbl = np.full(
+        ins_idx.size, "update_postimage" if is_update else "insert", object
     )
-    dels = _change_table(
-        tbl_b, del_idx,
-        np.full(del_idx.size, "update_preimage" if is_update else "delete"),
-        fields, part, target,
+    del_lbl = np.full(
+        del_idx.size, "update_preimage" if is_update else "delete", object
     )
-    return pa.concat_tables([ins, dels]).to_batches(max_chunksize=1 << 16)
+    if as_images and not is_update:
+        ins_rid = after[len(fields)].take(pa.array(ins_idx, pa.int64()))
+        del_rid = before[len(fields)].take(pa.array(del_idx, pa.int64()))
+        paired = pc.is_in(ins_rid, value_set=del_rid.drop_null())
+        ins_lbl[pc.fill_null(paired, False).to_numpy(zero_copy_only=False)] = (
+            "update_postimage"
+        )
+        paired = pc.is_in(del_rid, value_set=ins_rid.drop_null())
+        del_lbl[pc.fill_null(paired, False).to_numpy(zero_copy_only=False)] = (
+            "update_preimage"
+        )
+    commit_ts = datetime.fromtimestamp(part.ts, tz=timezone.utc)
+    ts_type = target.field(len(fields) + 2).type
+
+    def emit(side, idx, labels):
+        take = pa.array(idx, pa.int64())
+        n = idx.size
+        arrays = [side[i].take(take) for i in range(len(fields))]
+        arrays += [
+            pa.array(labels, pa.string()),
+            pa.repeat(pa.scalar(part.version, pa.int64()), n),
+            pa.repeat(pa.scalar(commit_ts, ts_type), n),
+        ]
+        if with_rid:
+            arrays.append(side[len(fields)].take(take))
+        return pa.Table.from_arrays(arrays, schema=target)
+
+    out = pa.concat_tables(
+        [emit(after, ins_idx, ins_lbl), emit(before, del_idx, del_lbl)]
+    )
+    return out.to_batches(max_chunksize=1 << 16)
 
 
-def _change_batches_or_rows(
-    part: _ChangePartition,
-    fields: list[str],
-    with_rid: bool,
-    as_images: bool,
-    spark_schema,
-    vectorized: bool = True,
-):
-    """Dispatch: the vectorized diff — rid-keyed in the rid-reading
-    modes, content-keyed in plain mode — when its preconditions hold,
-    else the row-at-a-time reference path (identical output rows
-    either way; order and transport differ as documented).
-    ``vectorized`` is the reader's ``vectorizedRead`` option — a
-    per-read kill switch that travels WITH the pickled reader into
-    the Python worker (a module flag would not: workers import this
-    module fresh), which is also what lets tests compare both paths
-    through a real Spark plan."""
-    if vectorized and spark_schema is not None:
-        try:
-            if with_rid or as_images:
-                batches = _rid_change_batches(
-                    part, fields, with_rid, as_images, spark_schema
-                )
-            else:
-                batches = _plain_change_batches(part, fields, spark_schema)
-        except Exception as e:  # any arrow surprise → reference path
-            _warn_fallback("CDF diff", e)
-            batches = None
-        if batches is not None:
-            return iter(batches)
-    return _read_change_rows(part, fields, with_rid, as_images)
+def _change_schema(fields: T.StructType, with_rid: bool) -> T.StructType:
+    """``_change_batches``' output schema for data ``fields``."""
+    return T.StructType(
+        [*fields.fields,
+         T.StructField("_change_type", T.StringType()),
+         T.StructField("_commit_version", T.LongType()),
+         T.StructField("_commit_timestamp", T.TimestampType())]
+        + ([T.StructField("_row_id", T.LongType())] if with_rid else [])
+    )
 
 
 def _change_frame(
@@ -996,41 +514,20 @@ def _change_frame(
     as_images: bool,
 ) -> DataFrame:
     """Change partitions run as one Python task each (``mapInArrow``
-    over a one-row-per-slice range) through ``_change_batches_or_rows``;
+    over a one-row-per-slice range) through ``_change_batches``;
     columns are ``fields`` (physical), ``_row_id`` (``with_rid``), then
-    ``_change_type``. Reference-path rows convert to Arrow in chunks."""
-    import itertools
-
+    ``_change_type``."""
     names = [f.name for f in fields.fields]
-    kernel = T.StructType(
-        [*fields.fields,
-         T.StructField("_change_type", T.StringType()),
-         T.StructField("_commit_version", T.LongType()),
-         T.StructField("_commit_timestamp", T.TimestampType())]
-        + ([T.StructField("_row_id", T.LongType())] if with_rid else [])
-    )
+    kernel = _change_schema(fields, with_rid)
     out = [*names, *(["_row_id"] if with_rid else []), "_change_type"]
 
     def run(batches):
-        import pyarrow as pa
-        from pyspark.sql.pandas.types import to_arrow_schema
-
-        target = to_arrow_schema(kernel)
         for b in batches:
             for i in b.column(0).to_pylist():
-                items = iter(_change_batches_or_rows(
+                for rb in _change_batches(
                     parts[i], names, with_rid, as_images, kernel
-                ))
-                while chunk := list(itertools.islice(items, 1 << 14)):
-                    if not isinstance(chunk[0], pa.RecordBatch):
-                        cols = list(zip(*chunk))
-                        chunk = [pa.RecordBatch.from_arrays(
-                            [pa.array(c, type=f.type)
-                             for c, f in zip(cols, target)],
-                            schema=target,
-                        )]
-                    for rb in chunk:
-                        yield rb.select(out)
+                ):
+                    yield rb.select(out)
 
     return spark.range(0, len(parts), 1, len(parts)).mapInArrow(
         run, T.StructType([kernel[c] for c in out])
@@ -1045,77 +542,24 @@ def _file_record_batches(
     with_rid: bool,
     spark_schema,
 ):
-    """Vectorized twin of ``_read_parquet_rows`` for snapshot /
-    append-stream partitions: the whole file becomes Arrow
-    RecordBatches cast to the source's output schema — zero per-row
-    Python. Unlike the diff kernel this path never reorders (file
-    order in = file order out, exactly the reference), and a null row
-    id is simply emitted as null (no uniqueness requirement). Returns
-    None to fall back when a column's type is outside the scalar
-    allowlist or a cast would reinterpret (naive↔aware timestamps) —
-    value semantics through arrow are only certified for the scalar
-    types the diff kernel already vets."""
+    """Snapshot / append-stream partitions: the whole file as Arrow
+    RecordBatches in the source's output schema (``fields`` cast as in
+    the diff kernel, then ``_row_id`` when ``with_rid``, null where the
+    file predates tracking), file order preserved."""
     import numpy as np
     import pyarrow as pa
-    import pyarrow.compute as pc
-    import pyarrow.parquet as pq
     from pyspark.sql.pandas.types import to_arrow_schema
 
     target = to_arrow_schema(spark_schema)
-    tbl = pq.read_table(path)
+    tbl = _read_parquet(path)
     n = tbl.num_rows
-    names = set(tbl.column_names)
-    arrays = _kernel_columns(tbl, fields, {})
-    if arrays is None:
-        return None
+    arrays = _file_columns(tbl, fields, target)
     if with_rid:
-        # the _read_parquet_rows coalesce: materialized __row_id,
-        # else manifest base + physical position, else null
-        if "__row_id" in names:
-            rid = tbl.column("__row_id").combine_chunks()
-            if rid.null_count and rid_base is not None:
-                rid = pc.coalesce(
-                    rid,
-                    pa.array(np.arange(rid_base, rid_base + n, dtype=np.int64)),
-                )
-        elif rid_base is not None:
-            rid = pa.array(np.arange(rid_base, rid_base + n, dtype=np.int64))
-        else:
-            rid = pa.nulls(n, type=pa.int64())
-        arrays.append(rid)
+        arrays.append(_file_rids(tbl, rid_base, np.arange(n, dtype=np.int64)))
+    out = pa.Table.from_arrays(arrays, schema=target)
     if dv:
-        mask = pa.array(_dv_keep(dv, n))
-        arrays = [
-            a.filter(mask) if not isinstance(a, pa.ChunkedArray)
-            else a.combine_chunks().filter(mask)
-            for a in arrays
-        ]
-    out = _cast_table(arrays, target)
-    return None if out is None else out.to_batches(max_chunksize=1 << 16)
-
-
-def _file_batches_or_rows(
-    path: str,
-    fields: list[str],
-    dv: str | None,
-    rid_base: int | None,
-    with_rid: bool,
-    spark_schema,
-    vectorized: bool = True,
-):
-    """Dispatch for file partitions: Arrow batches when possible, the
-    row-at-a-time reference path otherwise (same rows, same order)."""
-    if vectorized and spark_schema is not None:
-        try:
-            batches = _file_record_batches(
-                path, fields, dv, rid_base, with_rid, spark_schema
-            )
-        except Exception as e:
-            _warn_fallback("file read", e)
-            batches = None
-        if batches is not None:
-            return iter(batches)
-    return _read_parquet_rows(path, fields, dv, rid_base, with_rid)
+        out = out.filter(pa.array(_dv_keep(dv, n)))
+    return out.to_batches(max_chunksize=1 << 16)
 
 
 def _row_id_base(stats: dict | None) -> int | None:
@@ -1175,15 +619,13 @@ def _rid_file_intervals(entries) -> list | None:
 
 def _rid_range_bounds(adds, removes, m: int) -> list | None:
     """m contiguous rid ranges ``[(None, b1), (b1, b2), …, (b, None)]``
-    splitting a wide commit's diff by STABLE ROW ID instead of by row
-    hash (r12 verdict item 6): an update's delete+insert pair shares
-    its id, so pairing and cancellation survive exactly as with hash
-    buckets, but contiguous ranges let each task skip whole row groups
-    via footer min/max — no m× re-read of the touched files.
-    Boundaries are row-weighted quantiles over the files' rid
-    intervals (uniform density within each interval — balance is
-    best-effort; correctness only needs disjoint cover, which any
-    increasing boundary list gives). None → caller uses hash buckets."""
+    splitting a wide commit's diff by STABLE ROW ID: an update's
+    delete+insert pair shares its id, so pairing and cancellation
+    survive, and contiguous ranges let each task skip whole row groups
+    via footer min/max. Boundaries are row-weighted quantiles over the
+    files' rid intervals (uniform density within each interval —
+    balance is best-effort; correctness only needs disjoint cover,
+    which any increasing boundary list gives). None → one task."""
     ia = _rid_file_intervals(adds)
     if ia is None:
         return None
@@ -1213,18 +655,18 @@ def _rid_range_bounds(adds, removes, m: int) -> list | None:
 
 def _diff_partitions(
     root: str, new: tuple, old: tuple, version: int, ts: float, op: str,
-    buckets: int, rid_mode: bool,
+    rid_mode: bool,
 ) -> list:
     """Change partitions for ONE diff (a commit, or a version range's
     net file sets). ``new``/``old`` are the insert/delete sides as
     ``(table-relative paths, deletion vectors, manifest stats)``, each
     path looked up under the vector and stats of ITS side. A pure
-    append fans out per file; otherwise m = ``buckets`` tasks (0 =
-    ``auto``: sized from the sides' manifest ``#rows``, a file missing
-    the stat counting 0), each owning a contiguous rid RANGE when ids
-    are read and every file's rid span is provable (row-group
-    skipping), else a deterministic row-hash bucket (m× re-read of
-    the touched files)."""
+    append fans out per file. Otherwise, when ids are read
+    (``rid_mode``) and every file's rid span is provable, the diff
+    splits into m contiguous rid RANGES, m sized from the sides'
+    manifest ``#rows`` (a file missing the stat counts 0): one task
+    per ``AUTO_DIFF_ROWS_PER_BUCKET`` touched rows, at most
+    ``AUTO_DIFF_MAX_BUCKETS``. Any other diff is one task."""
     def entries(rels, dvs, stats):
         return [
             (ab, _dv_abs(dvs.get(rel), root), _row_id_base(stats.get(rel)))
@@ -1239,27 +681,18 @@ def _diff_partitions(
         for rels, _, stats in (new, old)
         for p in rels
     )
-    m = buckets or min(
+    m = min(
         AUTO_DIFF_MAX_BUCKETS,
         max(1, -(-touched // AUTO_DIFF_ROWS_PER_BUCKET)),
     )
-    if m == 1:
-        return [_ChangePartition(adds, removes, version, ts, op)]
-    ranges = _rid_range_bounds(adds, removes, m) if rid_mode else None
-    if ranges:
-        return [
-            _ChangePartition(adds, removes, version, ts, op, rid_range=r)
-            for r in ranges
-        ]
+    ranges = _rid_range_bounds(adds, removes, m) if rid_mode and m > 1 else None
     return [
-        _ChangePartition(adds, removes, version, ts, op, bucket=(i, m))
-        for i in range(m)
+        _ChangePartition(adds, removes, version, ts, op, rid_range=r)
+        for r in ranges or [None]
     ]
 
 
-def _cdf_partitions(
-    t, start_v: int, end_v: int, buckets: int = 1, rid_mode: bool = False
-) -> list:
+def _cdf_partitions(t, start_v: int, end_v: int, rid_mode: bool = False) -> list:
     """Change partitions for commits in ``[start_v, end_v)``, with
     live-set and deletion-vector state FOLDED commit by commit from a
     single resolve at ``start_v - 1``:
@@ -1306,7 +739,7 @@ def _cdf_partitions(
         parts += _diff_partitions(
             t.path, (added + changed, dvs, stats),
             (removed + changed, pre_dvs, pre_stats),
-            v, c.ts, c.op, buckets, rid_mode,
+            v, c.ts, c.op, rid_mode,
         )
     return parts
 
@@ -1323,17 +756,6 @@ def _rid_enabled(options) -> bool:
     return str(options.get("withrowids", "false")).lower() in ("true", "1")
 
 
-def _vectorized_read(options) -> bool:
-    """``vectorizedRead=false``: per-read kill switch forcing the
-    row-at-a-time reference paths (identical rows, slower) for both
-    executor kernels — the CDF diff and the file/snapshot read. The
-    knob equivalence tests and A/B measurements flip."""
-    return str(options.get("vectorizedread", "true")).lower() in (
-        "true",
-        "1",
-    )
-
-
 def _images_enabled(options) -> bool:
     """``updateAsImages=true`` (CDF mode, row-tracking tables): fold
     id-paired delete+insert rows into Delta's 4-value enum —
@@ -1345,43 +767,12 @@ def _images_enabled(options) -> bool:
     return str(options.get("updateasimages", "false")).lower() in ("true", "1")
 
 
-# auto changeDiffBuckets sizing: one diff task per this many touched
-# rows (adds + removes, manifest #rows), capped. 1M rows keeps a task
-# in the low seconds and bounds its memory; the cap bounds the m×
-# read amplification a bucketed diff pays on the commit's files.
+# auto diff split sizing: one diff task per this many touched rows
+# (adds + removes, manifest #rows), capped. 1M rows keeps a task in
+# the low seconds and bounds its memory; the cap bounds the planning
+# work and the per-file footer reads of the split tasks.
 AUTO_DIFF_ROWS_PER_BUCKET = 1_000_000
 AUTO_DIFF_MAX_BUCKETS = 32
-
-
-def _diff_buckets(options, cdf: bool) -> int:
-    """``changeDiffBuckets=m`` (CDF mode): decompose each change
-    commit's diff into m deterministic row-hash buckets — m-way task
-    parallelism and 1/m per-task memory for wide commits, at m× read
-    amplification of the commit's touched files.
-
-    Default ``auto`` (r11): 0 is returned as a sentinel and
-    ``_diff_partitions`` derives m PER COMMIT from the manifest row
-    counts of the commit's touched files —
-    ``ceil(touched_rows / AUTO_DIFF_ROWS_PER_BUCKET)`` capped at
-    ``AUTO_DIFF_MAX_BUCKETS`` — so a full-table-touching commit (the
-    one scale cliff the sf1 run surfaced: 22.5 s as ONE Python task)
-    splits, while ordinary manifest-pruned CDC commits keep the
-    single-task bounded diff and pay zero read amplification. Files
-    missing ``#rows`` stats count 0 rows, so the failure mode is the
-    old single-task behavior. The decomposition is row-hash
-    deterministic and equality-tested against the single-task diff
-    across plain/images/row-id modes (test_streaming)."""
-    raw = str(options.get("changediffbuckets", "auto")).lower()
-    if raw == "auto":
-        return 0 if cdf else 1
-    m = int(raw)
-    if m < 1:
-        raise ValueError("changeDiffBuckets must be >= 1")
-    if m > 1 and not cdf:
-        raise ValueError(
-            "changeDiffBuckets requires .option('readChangeFeed', 'true')"
-        )
-    return m
 
 
 def _check_images_options(options, cdf: bool) -> bool:
@@ -1528,12 +919,9 @@ def _reverse_colmap(options, pinned: bool = False) -> dict:
 
 class _AcidBatchReader(DataSourceReader):
     def __init__(self, options, schema_fields: list[str], spark_schema=None):
-        # full Spark StructType (when constructed via the DataSource):
-        # the vectorized CDF diff needs the output arrow schema
+        # full Spark StructType: the executor kernels emit Arrow in it
         self._spark_schema = spark_schema
-        self._vec = _vectorized_read(options)
         self._images = _check_images_options(options, _cdf_enabled(options))
-        self._diff_buckets = _diff_buckets(options, _cdf_enabled(options))
         self._options = options
         self._cdf = _cdf_enabled(options)
         self._rid = _rid_enabled(options)
@@ -1586,8 +974,7 @@ class _AcidBatchReader(DataSourceReader):
                 int(end_opt) if end_opt is not None else t.latest_version()
             )
             return _cdf_partitions(
-                t, start, end + 1, buckets=self._diff_buckets,
-                rid_mode=self._rid or self._images,
+                t, start, end + 1, rid_mode=self._rid or self._images
             ) or [_FilePartition("")]
         as_of = _as_of_version(t, self._options)
         if self._pushed:
@@ -1612,27 +999,25 @@ class _AcidBatchReader(DataSourceReader):
 
     def read(self, partition):
         if isinstance(partition, _ChangePartition):
-            return _change_batches_or_rows(
+            return iter(_change_batches(
                 partition, self._fields, self._rid, self._images,
-                self._spark_schema, self._vec,
-            )
+                self._spark_schema,
+            ))
         if not partition.path:
             return iter(())
-        return _file_batches_or_rows(
+        return iter(_file_record_batches(
             partition.path, self._fields, partition.dv,
-            partition.base, self._rid, self._spark_schema, self._vec,
-        )
+            partition.base, self._rid, self._spark_schema,
+        ))
 
 
 class _AcidStreamReader(DataSourceStreamReader):
     def __init__(self, options, schema_fields: list[str], spark_schema=None):
         self._spark_schema = spark_schema
-        self._vec = _vectorized_read(options)
         self._options = options
         self._cdf = _cdf_enabled(options)
         self._rid = _rid_enabled(options)
         self._images = _check_images_options(options, self._cdf)
-        self._diff_buckets = _diff_buckets(options, self._cdf)
         # CDF rows append (_change_type, _commit_version,
         # _commit_timestamp), withRowIds appends _row_id last; data
         # fields are everything before them
@@ -1749,8 +1134,7 @@ class _AcidStreamReader(DataSourceStreamReader):
             # their touched pair sets; MOR delete commits emit the
             # newly-masked rows; pure-layout rewrites diff to empty)
             return _cdf_partitions(
-                t, v0, v1, buckets=self._diff_buckets,
-                rid_mode=self._rid or self._images,
+                t, v0, v1, rid_mode=self._rid or self._images
             ) or [_FilePartition("")]
         parts = []
         # (v, file) offset semantics: commits < v fully consumed, plus
@@ -1788,16 +1172,16 @@ class _AcidStreamReader(DataSourceStreamReader):
 
     def read(self, partition):
         if isinstance(partition, _ChangePartition):
-            return _change_batches_or_rows(
+            return iter(_change_batches(
                 partition, self._fields, self._rid, self._images,
-                self._spark_schema, self._vec,
-            )
+                self._spark_schema,
+            ))
         if not partition.path:
             return iter(())
-        return _file_batches_or_rows(
+        return iter(_file_record_batches(
             partition.path, self._fields, None, partition.base,
-            self._rid, self._spark_schema, self._vec,
-        )
+            self._rid, self._spark_schema,
+        ))
 
     def commit(self, end: dict) -> None:
         pass  # offsets live in Spark's checkpoint; the log is immutable

@@ -3262,13 +3262,10 @@ class AcidTable:
         fields = T.StructType([T.StructField(c, t) for c, t in types.items()])
         keep = ("_row_id", "_change_type") if with_row_ids else ("_change_type",)
         if added and removed:
-            # plain mode stays one task: its Arrow kernel cannot serve
-            # hash buckets (the bucket function is row-at-a-time)
-            rid_mode = with_row_ids or as_images
             parts = src._diff_partitions(
                 self.path, (added, dv_new, live_new),
                 (removed, dv_old, live_old),
-                until, 0.0, "", 0 if rid_mode else 1, rid_mode,
+                until, 0.0, "", with_row_ids or as_images,
             )
             out = src._change_frame(
                 self.spark, parts, fields, with_row_ids, as_images
@@ -3583,7 +3580,7 @@ class AcidTable:
         nulls. Both readers already resolve additive evolution at
         read time — ``snapshot`` widens the merged scan from the
         committed schema, and the DSv2 executor read pads columns a
-        file predates (acid_source._read_parquet_rows) — so the new
+        file predates (acid_source._file_columns) — so the new
         column is immediately visible at every surface, and the next
         write may populate it. ``columns`` maps name -> Spark DDL
         type string (``{"note": "string"}``)."""

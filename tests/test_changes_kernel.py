@@ -15,6 +15,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from cdf_oracle import bag, kernel_table, oracle_table
+
 from data_lake_demo_spark.streaming import acid_source
 from data_lake_demo_spark.tableformat import AcidTable, _rel_by_abs, _uri_path
 
@@ -220,8 +222,8 @@ def test_changes_kernel_matches_oracle_across_verbs(spark, tmp_path):
 
 def test_changes_kernel_plain_duplicates_and_nested(spark, tmp_path):
     """Untracked table: duplicate rows diff as a multiset, an array
-    column (rejected by the Arrow kernel) takes the reference row path,
-    and a compaction nets to an empty feed."""
+    column groups on its canonical key, and a compaction nets to an
+    empty feed."""
     t = AcidTable(spark, str(tmp_path / "t"))
     schema = "k int, v string, x double, tags array<int>"
     t.append(
@@ -258,39 +260,25 @@ def test_changes_kernel_plain_duplicates_and_nested(spark, tmp_path):
 
 
 def _replay(t, monkeypatch, since, until, with_ids, images):
-    """The partitions ``changes()`` plans, and the calls their replay
-    here through ``_change_batches_or_rows`` makes to the fallback
-    report and the row-at-a-time reference path (an empty list: the
-    Arrow kernel served them all)."""
-    planned, calls = [], []
+    """The partitions ``changes()`` plans, replayed here through the
+    Arrow kernel (which raises rather than fall back) and checked
+    against the row-at-a-time oracle."""
+    planned = []
     real = acid_source._change_frame
 
     def spy(spark, parts, fields, with_rid, as_images):
         planned.append((parts, fields))
         return real(spark, parts, fields, with_rid, as_images)
 
-    monkeypatch.setattr(acid_source, "_change_frame", spy)
-    t.changes(since, until, with_row_ids=with_ids, as_images=images)
-    monkeypatch.undo()
-    (parts, fields), = planned
-    kernel = T.StructType(
-        [*fields.fields,
-         T.StructField("_change_type", T.StringType()),
-         T.StructField("_commit_version", T.LongType()),
-         T.StructField("_commit_timestamp", T.TimestampType())]
-        + ([T.StructField("_row_id", T.LongType())] if with_ids else [])
-    )
     with monkeypatch.context() as m:
-        m.setattr(acid_source, "_warn_fallback", lambda *a: calls.append(a))
-        m.setattr(
-            acid_source, "_read_change_rows",
-            lambda *a: calls.append("_read_change_rows") or iter(()),
-        )
-        for part in parts:
-            list(acid_source._change_batches_or_rows(
-                part, fields.names, with_ids, images, kernel
-            ))
-    return parts, calls
+        m.setattr(acid_source, "_change_frame", spy)
+        t.changes(since, until, with_row_ids=with_ids, as_images=images)
+    (parts, fields), = planned
+    kernel = acid_source._change_schema(fields, with_ids)
+    assert bag(kernel_table(parts, kernel, with_ids, images)) == bag(
+        oracle_table(parts, kernel, with_ids, images)
+    )
+    return parts
 
 
 def test_changes_kernel_split_diff_matches_oracle(spark, tmp_path, monkeypatch):
@@ -307,25 +295,25 @@ def test_changes_kernel_split_diff_matches_oracle(spark, tmp_path, monkeypatch):
         ),
         ["k"],
     )
+    monkeypatch.setattr(acid_source, "AUTO_DIFF_ROWS_PER_BUCKET", 4)
     for with_ids, images in FLAGS:
-        monkeypatch.setattr(acid_source, "AUTO_DIFF_ROWS_PER_BUCKET", 4)
-        parts, calls = _replay(t, monkeypatch, v, None, with_ids, images)
-        assert calls == [], (with_ids, images)
+        parts = _replay(t, monkeypatch, v, None, with_ids, images)
         if with_ids or images:
             assert len(parts) > 1, (with_ids, images)
         else:
-            assert len(parts) == 1 and parts[0].bucket is None
-    monkeypatch.setattr(acid_source, "AUTO_DIFF_ROWS_PER_BUCKET", 4)
+            assert len(parts) == 1 and parts[0].rid_range is None
     _assert_matches(t, v, None)
 
 
-def test_changes_timestamp_columns_report_fallback(spark, tmp_path, monkeypatch):
+def test_changes_timestamp_columns_reach_kernel(spark, tmp_path, monkeypatch):
     """A timestamp data column is written as INT96, which pyarrow reads
-    as naive: the diff kernels' cast to Spark's UTC type raises, the
-    fallback is reported (not silent), and the reference path's rows
-    match the oracle, tracked and untracked."""
+    as naive: the kernel reads it as a UTC instant and serves every
+    partition, tracked and untracked, in every flag combination; the
+    rows match the oracle, and a DSv2 snapshot read matches
+    ``snapshot()``."""
     from datetime import datetime
 
+    acid_source.register(spark)
     schema = "k int, ts timestamp"
     rows = [(i, datetime(2024, 1, 1 + i, 12, 30)) for i in range(6)]
     for tracked in (False, True):
@@ -340,11 +328,10 @@ def test_changes_timestamp_columns_report_fallback(spark, tmp_path, monkeypatch)
         )
         flags = FLAGS if tracked else FLAGS[:1]
         for with_ids, images in flags:
-            _, calls = _replay(t, monkeypatch, v, None, with_ids, images)
-            (kind, exc), ref = calls
-            assert kind == "CDF diff" and "tz mismatch" in str(exc)
-            assert ref == "_read_change_rows"
+            assert _replay(t, monkeypatch, v, None, with_ids, images)
         _assert_matches(t, v, None, flags)
+        dsv2 = spark.read.format("acidtable").load(t.path)
+        assert _bag(dsv2) == _bag(t.snapshot())
 
 
 def test_rel_by_abs_maps_suffix_colliding_paths_exactly(tmp_path):

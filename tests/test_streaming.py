@@ -9,6 +9,7 @@ import json
 import os
 
 import pytest
+from cdf_oracle import feed_vs_oracle
 from pyspark.sql import functions as F
 
 from data_lake_demo_spark.sources.testdata import load_table
@@ -2360,73 +2361,13 @@ def test_update_as_images_feeds_ann_apply_changes(spark, tmp_path):
     assert build("a", feed(updateAsImages="true")) == build("b", feed())
 
 
-def test_change_diff_buckets_batch_equals_unbucketed(spark, tmp_path):
-    """changeDiffBuckets=m: a wide commit's CDF diff decomposed into
-    m row-hash buckets equals the single-task diff exactly — plain,
-    with updateAsImages (rid-keyed buckets keep pairs co-located),
-    and with row ids; partition count fans out m per change commit."""
-    from data_lake_demo_spark.streaming.acid_source import (
-        _cdf_partitions,
-        register,
-    )
-    from data_lake_demo_spark.tableformat import AcidTable
-
-    register(spark)
-    p = str(tmp_path / "t")
-    t = AcidTable(spark, p)
-    t.append(
-        spark.createDataFrame(
-            [(k, f"v{k}") for k in range(50)], "k long, v string"
-        ).repartition(4)
-    )
-    t.set_row_tracking()
-    v0 = t.latest_version()
-    # a wide merge: touches every file (scattered keys) + inserts
-    t.merge(
-        spark.createDataFrame(
-            [(k, f"u{k}") for k in range(0, 60, 7)], "k long, v string"
-        ),
-        ["k"],
-    )
-    t.delete([("k", "=", 1)], mode="merge_on_read")
-
-    def read(**opts):
-        r = (
-            spark.read.format("acidtable")
-            .option("path", p)
-            .option("readChangeFeed", "true")
-            .option("startingVersion", v0)
-        )
-        for key, val in opts.items():
-            r = r.option(key, val)
-        return sorted(map(tuple, r.load().collect()))
-
-    for extra in (
-        {},
-        {"updateAsImages": "true"},
-        {"updateAsImages": "true", "withRowIds": "true"},
-    ):
-        assert read(**extra) == read(changeDiffBuckets="4", **extra), extra
-
-    parts = _cdf_partitions(t, v0 + 1, t.latest_version() + 1, buckets=4)
-    assert len(parts) == 8  # 2 change commits x 4 buckets
-    with pytest.raises(Exception, match="readChangeFeed"):
-        (
-            spark.read.format("acidtable")
-            .option("path", p)
-            .option("changeDiffBuckets", "4")
-            .load()
-            .collect()
-        )
-
-
-def test_change_diff_buckets_auto_sizes_per_commit(spark, tmp_path):
-    """The r11 'auto' default derives m PER COMMIT from manifest
-    #rows: commits under AUTO_DIFF_ROWS_PER_BUCKET touched rows keep
-    ONE diff task (the pre-r11 behavior — pruned CDC commits pay no
-    read amplification), a commit whose touched rows cross the
-    threshold fans out ceil(touched/threshold) capped buckets, and
-    the emitted rows equal an explicit-m read exactly."""
+def test_change_diff_buckets_auto_sizes_per_commit(spark, tmp_path, monkeypatch):
+    """Auto sizing derives the split PER COMMIT from manifest #rows:
+    commits under AUTO_DIFF_ROWS_PER_BUCKET touched rows keep ONE diff
+    task (pruned CDC commits pay nothing), a row-id read of a commit
+    whose touched rows cross the threshold splits into
+    ceil(touched/threshold) rid ranges, a plain read stays one task,
+    and the split rows equal the single-task diff exactly."""
     from data_lake_demo_spark.streaming import acid_source
     from data_lake_demo_spark.streaming.acid_source import (
         _cdf_partitions,
@@ -2442,53 +2383,41 @@ def test_change_diff_buckets_auto_sizes_per_commit(spark, tmp_path):
             [(k, f"v{k}") for k in range(50)], "k long, v string"
         ).repartition(4)
     )
+    v_append = t.latest_version()
+    t.set_row_tracking()
     v0 = t.latest_version()
     # small full-table update: touched rows ≈ 100 « threshold → m=1
     t.update({"v": "'w'"})
+    end = t.latest_version() + 1
 
-    auto = _cdf_partitions(t, v0 + 1, t.latest_version() + 1, buckets=0)
-    assert len(auto) == 1  # small commit keeps the single-task diff
-
-    # same commit under a 60-row/bucket threshold: 50 removed + 50
-    # added = 100 touched rows → ceil(100/60) = 2 buckets
-    orig = acid_source.AUTO_DIFF_ROWS_PER_BUCKET
-    acid_source.AUTO_DIFF_ROWS_PER_BUCKET = 60
-    try:
-        auto2 = _cdf_partitions(t, v0 + 1, t.latest_version() + 1, buckets=0)
-        assert len(auto2) == 2
-        base = (
-            spark.read.format("acidtable")
-            .option("path", p)
-            .option("readChangeFeed", "true")
-            .option("startingVersion", v0)
-        )
-        got_auto = sorted(map(tuple, base.load().collect()))
-        got_m2 = sorted(
-            map(
-                tuple,
-                base.option("changeDiffBuckets", "2").load().collect(),
-            )
-        )
-    finally:
-        acid_source.AUTO_DIFF_ROWS_PER_BUCKET = orig
+    assert len(_cdf_partitions(t, v0 + 1, end, rid_mode=True)) == 1
+    # same commit under a 60-row/task threshold: 50 removed + 50
+    # added = 100 touched rows → ceil(100/60) = 2 rid ranges
+    with monkeypatch.context() as m:
+        m.setattr(acid_source, "AUTO_DIFF_ROWS_PER_BUCKET", 60)
+        split = _cdf_partitions(t, v0 + 1, end, rid_mode=True)
+        assert len(_cdf_partitions(t, v0 + 1, end)) == 1
+    assert [q.rid_range is not None for q in split] == [True, True]
+    want = feed_vs_oracle(
+        spark, t, v_append, end, monkeypatch, withRowIds="true"
+    )
     # 50 inserts (startingVersion is inclusive of the append) + the
     # update's 50 preimage + 50 postimage rows
-    assert got_auto == got_m2 and len(got_auto) == 150
+    assert sum(want.values()) == 150
 
 
-def test_vectorized_cdf_diff_matches_reference(spark, tmp_path):
-    """The arrow rid-keyed CDF diff (r11, guide §4: the executor diff
-    task was a pure-Python row loop) emits EXACTLY the reference
-    path's rows through a real Spark plan. The range covers a merge
-    (update pairs + true inserts), a MOR delete (dv-changed carried
-    file), the update() verb (op-labeled images), and float columns
-    with NaN and null on BOTH sides (NaN==NaN must cancel; null vs
-    NaN must NOT) — compared across plain/images/row-id modes, with
-    and without bucket decomposition. ``vectorizedRead=false`` forces
-    the reference path; it travels with the pickled reader, so the
-    comparison exercises the worker-side kernel, not a driver flag."""
+def test_vectorized_cdf_diff_matches_reference(spark, tmp_path, monkeypatch):
+    """The arrow CDF diff emits EXACTLY the row-at-a-time oracle's rows
+    (tests/cdf_oracle.py) through a real Spark plan. The range covers
+    a merge (update pairs + true inserts), a MOR delete (dv-changed
+    carried file), the update() verb (op-labeled images), and float
+    columns with NaN and null on BOTH sides (NaN==NaN must cancel;
+    null vs NaN must NOT) — compared across plain/images/row-id modes,
+    with and without a rid-range split."""
+    from cdf_oracle import bag, kernel_table, oracle_table
+
     from data_lake_demo_spark.streaming.acid_source import (
-        _rid_change_batches,
+        _ChangePartition,
         register,
     )
     from data_lake_demo_spark.tableformat import AcidTable
@@ -2519,63 +2448,50 @@ def test_vectorized_cdf_diff_matches_reference(spark, tmp_path):
     )
     t.delete([("k", ">", 50)], mode="merge_on_read")
     t.update({"v": "concat(v, '!')"}, [("k", "<", 5)])
-
-    def canon(row):
-        # tuple equality would never match NaN against NaN
-        return tuple(
-            "__nan" if isinstance(v, float) and v != v else v for v in row
-        )
-
-    def read(**opts):
-        r = (
-            spark.read.format("acidtable")
-            .option("path", p)
-            .option("readChangeFeed", "true")
-            .option("startingVersion", v0 + 1)
-        )
-        for key, val in opts.items():
-            r = r.option(key, val)
-        return sorted((canon(row) for row in r.load().collect()), key=repr)
+    end = t.latest_version() + 1
 
     for extra in (
         {"updateAsImages": "true"},
         {"withRowIds": "true"},
         {"updateAsImages": "true", "withRowIds": "true"},
-        {"updateAsImages": "true", "changeDiffBuckets": "3"},
-        {},  # plain mode: both reads take the reference path
+        {},
     ):
-        got = read(**extra)
-        ref = read(vectorizedRead="false", **extra)
-        assert got == ref and got, extra
+        assert feed_vs_oracle(spark, t, v0 + 1, end, monkeypatch, **extra)
 
-    # fallback unit check: a partition whose files carry no row-id
-    # info returns None (the dispatcher then runs the reference path)
+    # a partition whose files carry no row-id info diffs with null ids
     import pyarrow as pa
     import pyarrow.parquet as pq
 
     plain = str(tmp_path / "plain.parquet")
     pq.write_table(pa.table({"k": [1, 2]}), plain)
-    from data_lake_demo_spark.streaming.acid_source import _ChangePartition
-
     part = _ChangePartition([(plain, None, None)], [], 1, 0.0)
     schema = (
         spark.read.format("acidtable")
         .option("path", p)
         .option("readChangeFeed", "true")
-        .option("updateAsImages", "true")
+        .option("withRowIds", "true")
         .load()
+        .select("k", "_change_type", "_commit_version", "_commit_timestamp",
+                "_row_id")
         .schema
     )
-    assert _rid_change_batches(part, ["k"], False, True, schema) is None
+    got = kernel_table([part], schema, True, True)
+    assert got.column("_row_id").null_count == 2
+    assert bag(got) == bag(oracle_table([part], schema, True, True))
 
 
 def test_vectorized_snapshot_read_matches_reference(spark, tmp_path):
     """The arrow file-read kernel (snapshot / append-stream
-    partitions) emits the reference path's rows in the SAME order —
-    plain and withRowIds, over deletion-vector-masked files, files
-    predating an added column (null padding), and floats with
-    NaN/null. ``vectorizedRead=false`` is the reference path."""
-    from data_lake_demo_spark.streaming.acid_source import register
+    partitions) emits the row-at-a-time oracle's rows in the
+    SAME order — plain and withRowIds, over deletion-vector-masked
+    files, files predating an added column (null padding), and floats
+    with NaN/null."""
+    from cdf_oracle import canon, oracle_file_table
+
+    from data_lake_demo_spark.streaming.acid_source import (
+        _AcidBatchReader,
+        register,
+    )
     from data_lake_demo_spark.tableformat import AcidTable
 
     register(spark)
@@ -2603,34 +2519,26 @@ def test_vectorized_snapshot_read_matches_reference(spark, tmp_path):
     # deletion-vector mask on carried files
     t.delete([("k", ">", 25)], mode="merge_on_read")
 
-    def canon(row):
-        return tuple(
-            "__nan" if isinstance(v, float) and v != v else v for v in row
-        )
-
-    def read(**opts):
-        r = spark.read.format("acidtable").option("path", p)
-        for key, val in opts.items():
-            r = r.option(key, val)
+    for extra in ({}, {"withrowids": "true"}):
+        df = spark.read.format("acidtable").options(**extra).load(p)
+        parts = _AcidBatchReader(
+            {"path": p, **extra}, df.columns, df.schema
+        ).partitions()
+        want = oracle_file_table(parts, df.schema, bool(extra))
         # UNSORTED: the file kernel must preserve row order exactly
-        return [canon(row) for row in r.load().collect()]
-
-    for extra in ({}, {"withRowIds": "true"}):
-        got = read(**extra)
-        ref = read(vectorizedRead="false", **extra)
-        assert got == ref and len(got) == 26, extra
+        got = [canon(tuple(r.values())) for r in df.toArrow().to_pylist()]
+        assert got == [canon(tuple(r.values())) for r in want.to_pylist()]
+        assert len(got) == 26, extra
 
 
-def test_vectorized_plain_cdf_diff_matches_reference(spark, tmp_path):
-    """The PLAIN-mode (no row tracking) arrow CDF diff (r12, guide §4:
-    the last row-at-a-time executor loop) emits exactly the reference
-    path's rows through a real Spark plan. The table carries TRUE
-    duplicate content rows (multiset counts > 1), floats with NaN,
-    null and NEGATIVE ZERO on both sides — the canonical-key edge
-    cases the r11 design note deferred: all NaNs must compare equal,
-    -0.0 must equal +0.0 (Python ==), null must equal only null. Rows
-    are compared by repr so a representative-row divergence on signed
-    zeros (−0.0 == 0.0 under tuple equality) cannot hide."""
+def test_vectorized_plain_cdf_diff_matches_reference(spark, tmp_path, monkeypatch):
+    """The PLAIN-mode (no row tracking) arrow CDF diff emits exactly
+    the oracle's rows through a real Spark plan. The table carries
+    TRUE duplicate content rows (multiset counts > 1), floats with
+    NaN, null and NEGATIVE ZERO on both sides: all NaNs must compare
+    equal, -0.0 must equal +0.0 (Python ==), null must equal only
+    null. Rows compare with the sign of zero kept, so a
+    representative-row divergence on signed zeros cannot hide."""
     from data_lake_demo_spark.streaming.acid_source import register
     from data_lake_demo_spark.tableformat import AcidTable
 
@@ -2661,73 +2569,19 @@ def test_vectorized_plain_cdf_diff_matches_reference(spark, tmp_path):
     )
     t.update({"v": "concat(v, '!')"}, [("k", "=", 4)])  # op-labeled images
 
-    def read(**opts):
-        r = (
-            spark.read.format("acidtable")
-            .option("path", p)
-            .option("readChangeFeed", "true")
-            .option("startingVersion", v0 + 1)
-        )
-        for key, val in opts.items():
-            r = r.option(key, val)
-        return sorted(repr(row) for row in r.load().collect())
-
-    got = read()
-    ref = read(vectorizedRead="false")
-    assert got == ref and got
+    got = feed_vs_oracle(spark, t, v0 + 1, t.latest_version() + 1, monkeypatch)
     # sanity: the scenario actually exercised a multiset count > 1
-    assert any("v1" in r for r in got)
-
-    # bucketed plain partitions fall back by design (crc32-of-repr
-    # bucketing is row-at-a-time; all buckets of a commit must agree)
-    from data_lake_demo_spark.streaming.acid_source import (
-        _ChangePartition,
-        _plain_change_batches,
-    )
-
-    schema = (
-        spark.read.format("acidtable")
-        .option("path", p)
-        .option("readChangeFeed", "true")
-        .load()
-        .schema
-    )
-    part = _ChangePartition([], [], 1, 0.0, bucket=(0, 2))
-    assert _plain_change_batches(part, ["k"], schema) is None
-    # explicit buckets on an untracked table still agree end-to-end
-    got_b = read(changeDiffBuckets="2")
-    assert got_b == ref
-
-    # the kernel must actually fire on these partitions (no silent
-    # both-sides-reference comparison): every unbucketed change
-    # partition of the range returns arrow batches, and their rows
-    # are exactly the whole read
-    from data_lake_demo_spark.streaming.acid_source import _cdf_partitions
-
-    fields = [f for f in schema.fieldNames()
-              if f not in ("_change_type", "_commit_version",
-                           "_commit_timestamp")]
-    parts = _cdf_partitions(t, v0 + 1, t.latest_version() + 1)
-    diff_parts = [q for q in parts if q.removes]
-    assert diff_parts
-    n_rows = 0
-    for q in diff_parts:
-        batches = _plain_change_batches(q, fields, schema)
-        assert batches is not None, (q.version, q.op)
-        n_rows += sum(b.num_rows for b in batches)
-    # adds-only partitions (pure appends) contribute the rest
-    assert n_rows <= len(got) and n_rows > 0
+    assert any(n > 1 and "v1" in r for r, n in got.items())
 
 
-def test_rid_range_cdf_decomposition_matches_buckets(spark, tmp_path):
-    """r12 item 6: in rid-reading modes a wide commit's diff splits by
-    contiguous RID RANGE (row-group-skippable) instead of row hash.
-    The partitions must carry rid_range (not bucket), the ranges must
-    tile the id space (open ends, strictly increasing boundaries),
-    and the emitted rows must equal the single-task diff and the
-    reference (vectorizedRead=false) read exactly — across plain
-    updates, MERGE rewrites (materialized __row_id files) and MOR
+def test_rid_range_cdf_decomposition_matches_buckets(spark, tmp_path, monkeypatch):
+    """In rid-reading modes a wide commit's diff splits by contiguous
+    RID RANGE (row-group-skippable). The ranges must tile the id space
+    (open ends, strictly increasing boundaries), and the emitted rows
+    must equal the single-task diff and the oracle exactly — across
+    plain updates, MERGE rewrites (materialized __row_id files) and MOR
     deletes (deletion vectors mapped through the scoped positions)."""
+    from data_lake_demo_spark.streaming import acid_source
     from data_lake_demo_spark.streaming.acid_source import (
         _cdf_partitions,
         register,
@@ -2752,13 +2606,13 @@ def test_rid_range_cdf_decomposition_matches_buckets(spark, tmp_path):
     )
     t.delete([("k", "=", 2)], mode="merge_on_read")
     t.update({"v": "concat(v, '!')"}, [("k", ">", 50)])
+    end = t.latest_version() + 1
 
-    parts = _cdf_partitions(
-        t, v0 + 1, t.latest_version() + 1, buckets=3, rid_mode=True
-    )
+    with monkeypatch.context() as m:
+        m.setattr(acid_source, "AUTO_DIFF_ROWS_PER_BUCKET", 40)
+        parts = _cdf_partitions(t, v0 + 1, end, rid_mode=True)
     ranged = [q for q in parts if q.rid_range is not None]
     assert ranged, "no rid-range partitions planned"
-    assert all(q.bucket is None for q in ranged)
     by_commit: dict = {}
     for q in ranged:
         by_commit.setdefault(q.version, []).append(q.rid_range)
@@ -2769,28 +2623,12 @@ def test_rid_range_cdf_decomposition_matches_buckets(spark, tmp_path):
         bs = [r[1] for r in rngs[:-1]]
         assert bs == sorted(set(bs)), (v, rngs)  # strictly increasing
 
-    def read(**opts):
-        r = (
-            spark.read.format("acidtable")
-            .option("path", p)
-            .option("readChangeFeed", "true")
-            .option("startingVersion", v0)
-        )
-        for key, val in opts.items():
-            r = r.option(key, val)
-        return sorted(repr(row) for row in r.load().collect())
-
     for extra in (
         {"withRowIds": "true"},
         {"updateAsImages": "true"},
         {"updateAsImages": "true", "withRowIds": "true"},
     ):
-        base = read(**extra)
-        assert base == read(changeDiffBuckets="3", **extra), extra
-        # reference fallback scopes rid ranges identically
-        assert base == read(
-            changeDiffBuckets="3", vectorizedRead="false", **extra
-        ), extra
+        assert feed_vs_oracle(spark, t, v0, end, monkeypatch, **extra)
 
 
 def test_rid_range_read_skips_row_groups(spark, tmp_path):

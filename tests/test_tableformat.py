@@ -4004,3 +4004,19 @@ def test_drop_branch_requires_existing(spark, tmp_path):
     t.drop_branch("b")
     with pytest.raises(ValueError):
         t.drop_branch("b")  # tombstoned: dropping again raises
+
+
+def test_size_output_keeps_only_a_root_chain_repartition(spark, tmp_path):
+    """``_size_output`` contract: an explicit ``repartition(n)`` under
+    the engine's own Projects keeps its n outputs, while one under any
+    other node (here a Filter) is coalesced to the size estimate like
+    any scan."""
+    t = AcidTable(spark, str(tmp_path / "t"))
+    shaped = spark.range(100).repartition(4).select(
+        "id", (F.col("id") * 2).alias("x")
+    ).withColumn("y", F.lit(1))
+    assert t._size_output(shaped) is shaped
+    assert shaped.rdd.getNumPartitions() == 4
+    filtered = spark.range(100).repartition(4).filter("id > 3")
+    out = t._size_output(filtered)
+    assert out is not filtered and out.rdd.getNumPartitions() == 1

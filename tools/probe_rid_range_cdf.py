@@ -1,14 +1,22 @@
-"""r12 item 6 evidence: sf1 wide-commit CDF read (updateAsImages,
-auto changeDiffBuckets) with rid-RANGE decomposition vs the r11
-crc32 hash buckets, interleaved in one process on the SAME table —
-the hash variant is forced by patching _rid_range_bounds to None
-(plan-time fallback), so both variants run the same vectorized
-kernel and differ ONLY in partition scoping (row-group skipping vs
-m× re-read). Also asserts the two variants' rows are identical.
+"""Wide-commit change feed: rid-RANGE split vs one task, on one table.
 
-Usage: python tools/probe_rid_range_cdf.py [rounds]
+Builds a row-tracked table from ``orders`` (even keys), MERGEs every
+third key, then times ``t.changes(v0, with_row_ids=True,
+as_images=True)`` interleaved in one process, with the planner's
+rid-range split on and off (``_rid_range_bounds`` patched to None, so
+``_diff_partitions`` plans one task). ``changes()`` plans on the driver,
+so the patch takes effect; a DSv2 feed read would not see it, because
+Spark plans a Python data source in a separate planner process. Also
+asserts both variants emit the same rows. The question it answers is
+whether the split over-decomposes on a many-core host (compare the
+one-task and range medians there).
+
+Usage: SPARK_GRAFT_SF_DIR=<dir with orders.parquet> \
+    python tools/probe_rid_range_cdf.py [rounds]
 """
+import json
 import os
+import statistics
 import sys
 import tempfile
 import time
@@ -24,8 +32,6 @@ sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/tmp/spark-graft-testdata/sf1")
 
 from data_lake_demo_spark.tableformat import AcidTable  # noqa: E402
 from data_lake_demo_spark.streaming import acid_source as asrc  # noqa: E402
-
-asrc.register(spark)
 
 orders = spark.read.parquet(os.path.join(sf_dir, "orders.parquet"))
 print("orders rows:", orders.count(), file=sys.stderr)
@@ -51,9 +57,7 @@ t.merge(
     ["k"],
 )
 
-parts = asrc._cdf_partitions(
-    t, v0 + 1, t.latest_version() + 1, buckets=0, rid_mode=True
-)
+parts = asrc._cdf_partitions(t, v0 + 1, t.latest_version() + 1, rid_mode=True)
 print(
     "auto partitions:",
     len(parts),
@@ -63,52 +67,51 @@ print(
 )
 assert any(p.rid_range is not None for p in parts), "rid ranges did not plan"
 
+orig = asrc._rid_range_bounds
+variants = {"range": orig, "one_task": lambda *a: None}
 
-def read_df():
-    return (
-        spark.read.format("acidtable")
-        .option("path", root + "/t")
-        .option("readChangeFeed", "true")
-        .option("updateAsImages", "true")
-        .option("startingVersion", v0 + 1)
-        .load()
+
+def feed():
+    return t.changes(v0, with_row_ids=True, as_images=True)
+
+
+def agg():
+    return sorted(
+        map(
+            tuple,
+            feed().groupBy("_change_type")
+            .agg(F.count("*"), F.sum(F.round(F.col("total") * 100).cast("long")))
+            .collect(),
+        )
     )
 
 
 def timed():
     t0 = time.perf_counter()
-    read_df().write.format("noop").mode("overwrite").save()
+    feed().write.format("noop").mode("overwrite").save()
     return time.perf_counter() - t0
 
 
-orig = asrc._rid_range_bounds
-agg_rng = read_df().groupBy("_change_type").agg(
-    F.count("*"), F.sum("total")
-).collect()
-asrc._rid_range_bounds = lambda *a: None
-agg_hash = read_df().groupBy("_change_type").agg(
-    F.count("*"), F.sum("total")
-).collect()
-asrc._rid_range_bounds = orig
-assert sorted(map(tuple, agg_rng)) == sorted(map(tuple, agg_hash)), (
-    agg_rng,
-    agg_hash,
-)
-print("outputs identical across decompositions", file=sys.stderr)
-
-res = {"range": [], "hash": []}
-for r in range(rounds):
-    order = [("range", orig), ("hash", lambda *a: None)]
-    if r % 2:
-        order.reverse()
-    for tag, fn in order:
+try:
+    outputs = {}
+    for tag, fn in variants.items():
         asrc._rid_range_bounds = fn
-        w = timed()
-        res[tag].append(round(w, 3))
-        print(f"# round {r} {tag}: {w:.3f}s", file=sys.stderr)
-asrc._rid_range_bounds = orig
-import json
-import statistics
+        outputs[tag] = agg()
+    assert outputs["range"] == outputs["one_task"], outputs
+    print("outputs identical across decompositions", file=sys.stderr)
+
+    res = {tag: [] for tag in variants}
+    for r in range(rounds):
+        order = list(variants.items())
+        if r % 2:
+            order.reverse()
+        for tag, fn in order:
+            asrc._rid_range_bounds = fn
+            w = timed()
+            res[tag].append(round(w, 3))
+            print(f"# round {r} {tag}: {w:.3f}s", file=sys.stderr)
+finally:
+    asrc._rid_range_bounds = orig
 
 print(
     json.dumps(
