@@ -21,15 +21,18 @@ Why this shape survives 100 TB
 * MIN/MAX are NOT retraction-safe (deleting the current minimum needs
   the runner-up, which folded state can't know). With
   ``minmax=True`` the standard two-tier algorithm applies: groups
-  whose feed slice is insert-only FOLD (least/greatest against
-  stored state); groups that saw any delete are DIRTY and recompute
+  whose feed slice is insert-only FOLD (min/max of stored state and
+  inserts); groups that saw any delete are DIRTY and take min/max
   from the base snapshot PINNED at the synced version — restricted
-  to just the dirty keys via a broadcast semi join, so the recompute
-  cost is O(rows of dirty groups) (manifest-pruned further when the
-  base is partitioned/clustered by the group key), never O(table).
-* Applying a delta touches only MV files whose stats ranges overlap
-  the delta's keys (``merge_apply``'s manifest pruning) — one atomic
-  commit carrying both upserts and group retirements.
+  to just the dirty keys via a broadcast null-safe semi join, so the
+  recompute cost is O(rows of dirty groups) (manifest-pruned further
+  when the base is partitioned/clustered by the group key), never
+  O(table).
+* Applying a delta is ONE null-safe ``groupBy`` over the touched MV
+  rows ∪ delta rows (∪ the dirty recompute): count and sum add up,
+  and a group whose count reaches 0 retires. ``merge_apply(fold=)``
+  reads and rewrites only MV files whose stats may hold a delta key,
+  in one atomic commit.
 * Exactly-once: each sync commits with ``txn=(app, base_version)``.
   The MV's own transaction ledger is the watermark — a replayed or
   concurrent sync of the same base version is a no-op, and the
@@ -88,23 +91,19 @@ class MaterializedAggregate:
         return cols
 
     def _current(self) -> DataFrame:
-        if self.mv.latest_version() < 0:
-            fields = [
-                f
-                for f in self.base.snapshot().schema.fields
-                if f.name in self.group_cols
-            ]
-            fields += [
-                T.StructField("n", T.LongType()),
-                T.StructField("value_q", T.LongType()),
-            ]
-            if self.minmax:
-                fields += [
-                    T.StructField("value_min", T.DoubleType()),
-                    T.StructField("value_max", T.DoubleType()),
-                ]
-            return self.spark.createDataFrame([], T.StructType(fields))
-        return self.mv.snapshot()
+        if self.mv.latest_version() >= 0:
+            return self.mv.snapshot()
+        fields = [
+            f
+            for f in self.base.snapshot().schema.fields
+            if f.name in self.group_cols
+        ]
+        typ = {"n": T.LongType(), "value_q": T.LongType()}
+        fields += [
+            T.StructField(c, typ.get(c, T.DoubleType()))
+            for c in self._state_cols()
+        ]
+        return self.spark.createDataFrame([], T.StructType(fields))
 
     # -- maintenance ---------------------------------------------------
     def _full_agg(self, rows: DataFrame) -> DataFrame:
@@ -135,111 +134,86 @@ class MaterializedAggregate:
         is_ins = F.col("_change_type") == "insert"
         sign = F.when(is_ins, F.lit(1)).otherwise(F.lit(-1))
         q = F.floor(F.col(self.value_col) * SCALE + F.lit(0.5))
-        aggs = [
-            F.sum(sign).alias("dn"),
-            F.sum(sign * q).alias("dvq"),
-            F.max((~is_ins).cast("int")).alias("saw_delete"),
-        ]
+        # the delta is named in MV terms: its rows fold like MV rows
+        aggs = [F.sum(sign).alias("n"), F.sum(sign * q).alias("value_q")]
         if self.minmax:
+            ins = F.when(is_ins, F.col(self.value_col))
             aggs += [
-                F.min(F.when(is_ins, F.col(self.value_col))).alias("ins_min"),
-                F.max(F.when(is_ins, F.col(self.value_col))).alias("ins_max"),
+                F.min(ins).alias("value_min"),
+                F.max(ins).alias("value_max"),
+                F.max((~is_ins).cast("int")).alias("_dirty"),
             ]
         delta = feed.groupBy(*self.group_cols).agg(*aggs)
         if not self.minmax:
             # value-identical churn can't move count/sum state
-            delta = delta.filter((F.col("dn") != 0) | (F.col("dvq") != 0))
+            delta = delta.filter((F.col("n") != 0) | (F.col("value_q") != 0))
         # materialize the aggregated delta ONCE — it is re-consumed by
-        # the emptiness check, the dirty-group probe, and every action
-        # merge_apply fires; without persist each re-reads the changed
-        # files and re-runs the change feed's diff. O(churned groups)
-        # rows.
+        # the emptiness probe, the dirty-key semi join, merge_apply's
+        # key ranges and the fold; without persist each re-reads the
+        # changed files and re-runs the change feed's diff. O(churned
+        # groups) rows.
         delta = delta.persist()
         try:
-            return self._sync_apply(delta, target)
+            dirty = F.max("_dirty") if self.minmax else F.lit(0)
+            rows, any_dirty = delta.agg(F.count(F.lit(1)), dirty).first()
+            if rows == 0:
+                # Pure-layout churn (compact/Z-order) or a net-zero
+                # feed: advance the watermark with a data-free commit
+                # instead of rewriting MV files — commit_staged with no
+                # actions records only the txn ledger entry.
+                return self.mv.commit_staged(
+                    [], self._current().schema.json(), txn=(self.app, target)
+                )
+            extra = []
+            if any_dirty:
+                # groups that saw a delete take min/max from the base
+                # pinned at ``target``, semi-joined (null-safe) on keys
+                keys = delta.filter("_dirty = 1").select(*self.group_cols)
+                on = [
+                    F.col(f"b.{c}").eqNullSafe(F.col(f"d.{c}"))
+                    for c in self.group_cols
+                ]
+                pinned = (
+                    self.base.snapshot(as_of=target)
+                    .alias("b")
+                    .join(F.broadcast(keys).alias("d"), on, "left_semi")
+                )
+                extra.append(
+                    self._full_agg(pinned)
+                    .drop("n", "value_q")
+                    .withColumn("_dirty", F.lit(2))
+                )
+            return self.mv.merge_apply(
+                delta,
+                self.group_cols,
+                None,
+                txn=(self.app, target),
+                fold=lambda rows, delta: self._fold(rows, delta, *extra),
+            )
         finally:
             delta.unpersist()
 
-    def _sync_apply(self, delta: DataFrame, target: int) -> int:
-        if delta.limit(1).count() == 0:
-            # Pure-layout churn (compact/Z-order) or a net-zero feed:
-            # advance the watermark with a data-free commit instead of
-            # rewriting MV files — commit_staged with no actions
-            # records only the txn ledger entry.
-            return self.mv.commit_staged(
-                [],
-                self._current().schema.json(),
-                txn=(self.app, target),
-            )
-        current = self._current()
-        clean = delta.filter(F.col("saw_delete") == 0)
-        folded_cols = [
-            (F.coalesce(F.col("n"), F.lit(0)) + F.col("dn")).alias("n"),
-            (F.coalesce(F.col("value_q"), F.lit(0)) + F.col("dvq")).alias(
-                "value_q"
-            ),
-        ]
+    def _fold(self, rows: DataFrame, *deltas: DataFrame) -> DataFrame:
+        """The touched MV ``rows`` with the ``deltas`` folded in: one
+        ``groupBy`` (NULL keys group together) over their union, where
+        count and sum add up and a group whose count reaches 0 retires.
+        Min/max fold too, except in a group that saw a delete
+        (``_dirty``): it takes the pinned recompute's (``_dirty`` 2)."""
+        union = rows.select(*self.group_cols, *self._state_cols())
+        for d in deltas:
+            union = union.unionByName(d, allowMissingColumns=True)
+        aggs = [F.sum("n").alias("n"), F.sum("value_q").alias("value_q")]
         if self.minmax:
-            # least/greatest skip nulls, so a brand-new group folds
-            # from the insert side alone
-            folded_cols += [
-                F.least(F.col("value_min"), F.col("ins_min")).alias(
-                    "value_min"
-                ),
-                F.greatest(F.col("value_max"), F.col("ins_max")).alias(
-                    "value_max"
-                ),
-            ]
-        folded = (
-            clean.join(current, self.group_cols, "left")
-            .select(*self.group_cols, *folded_cols)
-            .withColumn("_retire", F.col("n") == 0)
-        )
-        dirty = delta.filter(F.col("saw_delete") == 1)
-        if self.minmax and dirty.limit(1).count() > 0:
-            dirty_keys = dirty.select(*self.group_cols)
-            recomputed = self._full_agg(
-                self.base.snapshot(as_of=target).join(
-                    F.broadcast(dirty_keys), self.group_cols, "left_semi"
+            saw_delete = F.max("_dirty") > 0
+            pinned = F.col("_dirty") == 2
+            for c, agg in (("value_min", F.min), ("value_max", F.max)):
+                aggs.append(
+                    F.when(saw_delete, agg(F.when(pinned, F.col(c))))
+                    .otherwise(agg(c))
+                    .cast("double")
+                    .alias(c)
                 )
-            ).withColumn("_retire", F.lit(False))
-            # dirty groups with no surviving base rows retire
-            retired = (
-                dirty_keys.join(
-                    recomputed.select(*self.group_cols),
-                    self.group_cols,
-                    "left_anti",
-                )
-                .withColumn("n", F.lit(0).cast("long"))
-                .withColumn("value_q", F.lit(0).cast("long"))
-                .withColumn("value_min", F.lit(None).cast("double"))
-                .withColumn("value_max", F.lit(None).cast("double"))
-                .withColumn("_retire", F.lit(True))
-            )
-            updates = folded.unionByName(recomputed).unionByName(retired)
-        else:
-            # without minmax, dirty groups fold too (count/sum are
-            # retraction-safe)
-            dirty_folded = (
-                dirty.join(current, self.group_cols, "left")
-                .select(*self.group_cols, *folded_cols)
-                .withColumn("_retire", F.col("n") == 0)
-            )
-            updates = (
-                folded
-                if self.minmax
-                else folded.unionByName(dirty_folded)
-            )
-        return self.mv.merge_apply(
-            updates,
-            self.group_cols,
-            "_retire",
-            txn=(self.app, target),
-            # delta branches are each grouped on the MV key and
-            # key-disjoint by construction — skip the multiple-match
-            # count job per sync
-            unique_keys=True,
-        )
+        return union.groupBy(*self.group_cols).agg(*aggs).filter("n != 0")
 
     def foreach_batch_sink(self):
         """``writeStream.foreachBatch`` adapter for driving syncs from

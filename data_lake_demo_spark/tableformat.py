@@ -69,7 +69,7 @@ import os
 import re
 import time
 import uuid
-from collections.abc import Sequence
+from collections.abc import Callable, Sequence
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
@@ -4368,13 +4368,14 @@ class AcidTable:
         )
 
     def _batch_key_ranges(self, updates: DataFrame, keys: Sequence[str]):
-        """One tiny driver agg: the update batch's [min, max] per merge
-        key — shared by manifest pruning (_touched_files) and by the
-        rebase-time ConcurrentAppend check (a winner append is a merge
-        conflict only if its stats may intersect these ranges)."""
+        """One tiny driver agg: the update batch's [min, max] and NULL
+        flag per merge key — shared by manifest pruning (_touched_files)
+        and by the rebase-time ConcurrentAppend check (a winner append
+        is a merge conflict only if its stats may intersect these)."""
         aggs = []
         for k in keys:
             aggs += [F.min(k).alias(f"__lo_{k}"), F.max(k).alias(f"__hi_{k}")]
+            aggs.append(F.max(F.col(k).isNull()).alias(f"__null_{k}"))
         return updates.agg(*aggs).first()
 
     def _batch_key_ranges_checked(
@@ -4408,6 +4409,7 @@ class AcidTable:
         updates: DataFrame,
         keys: Sequence[str],
         ranges=None,
+        null_safe: bool = False,
     ) -> list[str]:
         """Manifest-level pruning: a live file can be SKIPPED by the
         merge when its footer [min, max] range on ANY merge-key column
@@ -4415,6 +4417,9 @@ class AcidTable:
         provably contains no matchable row. Files without stats for a
         key column are conservatively touched. One tiny driver agg on
         the update side; no data file is opened.
+
+        ``null_safe=True``: a NULL batch key matches NULL keys, so on
+        that key only files whose null counts are 0 can be pruned.
 
         When a key column carries per-file BLOOM stats (``bloom_cols``
         at table construction) and the batch's distinct key set is
@@ -4446,6 +4451,9 @@ class AcidTable:
         for path, stats in live.items():
             skip = False
             for k in keys:
+                nc = stats.get(f"#null:{k}")
+                if null_safe and row[f"__null_{k}"] and (nc is None or nc[0]):
+                    continue  # may hold the batch's NULL key
                 rng = stats.get(k)
                 ulo = _norm_stat_value(row[f"__lo_{k}"])
                 uhi = _norm_stat_value(row[f"__hi_{k}"])
@@ -4765,7 +4773,7 @@ class AcidTable:
         self,
         updates: DataFrame,
         keys: Sequence[str],
-        delete_col: str,
+        delete_col: str | None,
         *,
         mode: str | None = None,
         dedupe_order: str | None = None,
@@ -4773,6 +4781,7 @@ class AcidTable:
         partition_by: Sequence[str] | None = None,
         auto_evolve: bool = False,
         unique_keys: bool = False,
+        fold: Callable[[DataFrame, DataFrame], DataFrame] | None = None,
         max_retries: int = 5,
     ) -> int:
         """Full MERGE (WHEN MATCHED AND <delete_col> THEN DELETE /
@@ -4793,7 +4802,13 @@ class AcidTable:
         retraction is a pure mask) and only the surviving upserts
         land as new files — the cheapest possible CDC apply on a
         wide table. Falls back to copy-on-write for the seeding
-        commit of an empty table."""
+        commit of an empty table.
+
+        ``fold(rows, updates) -> rows that land`` replaces the anti-join
+        + union for a delta ``updates`` keyed like the table (``delete_col``
+        may be None); ``rows`` are the touched files' logical rows (empty,
+        shaped like ``updates``, on a new table). NULL keys match when
+        pruning; the commit is copy-on-write; checks run on what lands."""
         from data_lake_demo_spark.operators.upsert import merge_apply
 
         if mode is None:
@@ -4801,12 +4816,14 @@ class AcidTable:
         if mode not in ("copy_on_write", "merge_on_read"):
             raise ValueError(f"unknown merge mode {mode!r}")
         self._reject_reserved_row_id(updates)
-        # delete rows never land; only surviving upserts are validated
-        updates = self._apply_generated(
-            updates, check_df=updates.filter(~F.col(delete_col))
-        )
-        self._enforce_constraints(updates.filter(~F.col(delete_col)))
+        if fold is None:
+            # delete rows never land; only surviving upserts are validated
+            updates = self._apply_generated(
+                updates, check_df=updates.filter(~F.col(delete_col))
+            )
+            self._enforce_constraints(updates.filter(~F.col(delete_col)))
         colmap = self._colmap()
+        delta = updates
         updates = self._physicalize(updates, colmap)
         keys = self._phys_names(keys, colmap)
         partition_by = self._phys_partition_by(partition_by, colmap)
@@ -4819,7 +4836,7 @@ class AcidTable:
                     return base
             live, schema_json, _, props, dvs = self._resolve_state(base)
             rt_on = self._row_tracking_on(props)
-            if dedupe_order is None and not unique_keys:
+            if fold is None and dedupe_order is None and not unique_keys:
                 # ranges + the unique-source-key check in ONE job;
                 # _touched_files reuses the ranges instead of re-agg'ing
                 ranges = self._batch_key_ranges_checked(
@@ -4829,9 +4846,9 @@ class AcidTable:
             else:
                 ranges = self._batch_key_ranges(updates, keys)
             touched = self._touched_files(
-                live, updates, keys, ranges=ranges
+                live, updates, keys, ranges=ranges, null_safe=fold is not None
             )
-            if mode == "merge_on_read" and schema_json is not None:
+            if mode == "merge_on_read" and schema_json and not fold:
                 v = self._merge_mor_attempt(
                     base, updates, keys, touched, schema_json, dvs, props,
                     dedupe_order=dedupe_order, txn=txn,
@@ -4850,26 +4867,35 @@ class AcidTable:
                 )
             else:  # first commit: surviving upserts seed the table
                 target = self.spark.createDataFrame(
-                    [], updates.drop(delete_col).schema
+                    [],
+                    (updates if fold else updates.drop(delete_col)).schema,
                 )
             if dropped:  # the rewrite materializes column drops
                 target = target.drop(*dropped)
-            ups = updates
-            if rt_on:
-                if self._ROW_ID_COL not in target.columns:
-                    target = target.withColumn(
-                        self._ROW_ID_COL, F.lit(None).cast("long")
-                    )
-                ups = self._inherit_row_ids(updates, target, keys)
-            merged = merge_apply(
-                target,
-                ups,
-                keys,
-                delete_col,
-                dedupe_order=dedupe_order,
-                allow_missing_columns=auto_evolve,
-                unique_keys=unique_keys,
-            )
+            if rt_on and self._ROW_ID_COL not in target.columns:
+                target = target.withColumn(
+                    self._ROW_ID_COL, F.lit(None).cast("long")
+                )
+            if fold is not None:
+                rows = self._logicalize(target.drop(self._ROW_ID_COL), colmap)
+                merged = self._apply_generated(fold(rows, delta))
+                self._enforce_constraints(merged)
+                merged = self._physicalize(merged, colmap)
+                if rt_on:  # a folded row keeps its key's row id
+                    merged = self._inherit_row_ids(merged, target, keys)
+            else:
+                ups = updates
+                if rt_on:
+                    ups = self._inherit_row_ids(updates, target, keys)
+                merged = merge_apply(
+                    target,
+                    ups,
+                    keys,
+                    delete_col,
+                    dedupe_order=dedupe_order,
+                    allow_missing_columns=auto_evolve,
+                    unique_keys=unique_keys,
+                )
             if rt_on:
                 merged = self._assign_fresh_row_ids(merged, props)
             add, schema = self._stage_actions(merged, partition_by=partition_by)

@@ -10,6 +10,7 @@ preserve it.
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from data_lake_demo_spark.streaming.incremental import MaterializedAggregate
@@ -17,7 +18,11 @@ from data_lake_demo_spark.tableformat import AcidTable
 
 
 def _rows(df):
-    return sorted(tuple(r) for r in df.collect())
+    # NULL keys sort first (None doesn't compare with str)
+    return sorted(
+        (tuple(r) for r in df.collect()),
+        key=lambda t: tuple((x is not None, x) for x in t),
+    )
 
 
 def _recompute(base):
@@ -302,3 +307,90 @@ def test_streaming_cdf_drives_syncs_exactly_once(spark, tmp_path):
     q.awaitTermination(120)
     _assert_converged(mv, base)
     assert mv.synced_version() == base.latest_version()
+
+
+def _mk_mode(spark, tmp_path, minmax):
+    base = AcidTable(spark, str(tmp_path / "base"))
+    mv = MaterializedAggregate(
+        spark, base, str(tmp_path / "mv"), ["k"], "v", minmax=minmax,
+        app="mv-test",
+    )
+    return base, mv, (_recompute_minmax if minmax else _recompute)
+
+
+def _seed_two_files(spark, base, mv, first):
+    """Lay the MV out as two files, ``first`` (a filter on the groups)
+    and the rest, each written from the from-scratch aggregate, and
+    mark it synced to the base head."""
+    full = mv._full_agg(base.snapshot())
+    mv.mv.append(full.filter(first).coalesce(1))
+    mv.mv.append(
+        full.filter(~first).coalesce(1),
+        txn=(mv.app, base.latest_version()),
+    )
+    assert len(mv.mv.files().collect()) == 2
+
+
+@pytest.mark.parametrize("minmax", [False, True])
+def test_null_group_key_folds_like_any_group(spark, tmp_path, minmax):
+    """GROUP BY puts NULL keys in one group; the fold must too, across
+    inserts, a retraction inside the NULL group and a delete of one of
+    its extremes."""
+    base, mv, recompute = _mk_mode(spark, tmp_path, minmax)
+    schema = "k string, v double"
+    base.append(
+        spark.createDataFrame([("a", 1.0), (None, 2.0), (None, 3.0)], schema)
+    )
+    mv.sync()
+    base.append(spark.createDataFrame([(None, 5.0)], schema))
+    mv.sync()
+    base.delete([("v", "=", 2.0)])
+    mv.sync()
+    assert _rows(mv._current()) == _rows(recompute(base))
+    assert [r["n"] for r in mv._current().collect() if r["k"] is None] == [2]
+
+
+@pytest.mark.parametrize("minmax", [False, True])
+def test_null_group_outside_delta_range_is_not_pruned(
+    spark, tmp_path, minmax
+):
+    """The NULL group sits in the MV file whose key range ["a", "a"]
+    is disjoint from the delta's non-null keys ["z", "z"]: pruning on
+    ranges alone would skip that file and land a second NULL row."""
+    base, mv, recompute = _mk_mode(spark, tmp_path, minmax)
+    schema = "k string, v double"
+    base.append(
+        spark.createDataFrame(
+            [("a", 1.0), (None, 2.0), (None, 4.0), ("y", 3.0), ("z", 6.0)],
+            schema,
+        )
+    )
+    _seed_two_files(spark, base, mv, F.col("k").isNull() | (F.col("k") == "a"))
+    base.append(spark.createDataFrame([(None, 5.0), ("z", 1.0)], schema))
+    base.delete([("v", "=", 4.0)])
+    mv.sync()
+    assert _rows(mv._current()) == _rows(recompute(base))
+
+
+@pytest.mark.parametrize("minmax", [False, True])
+def test_sync_rewrites_only_the_file_the_delta_touches(
+    spark, tmp_path, minmax
+):
+    """Two key-disjoint MV files; a base change inside one file's
+    range folds into that file alone, and the MV stays exact."""
+    base, mv, recompute = _mk_mode(spark, tmp_path, minmax)
+    schema = "k string, v double"
+    base.append(
+        spark.createDataFrame(
+            [("a", 1.0), ("b", 2.0), ("b", 7.0), ("y", 3.0), ("z", 4.0)],
+            schema,
+        )
+    )
+    _seed_two_files(spark, base, mv, F.col("k") <= "m")
+    base.append(spark.createDataFrame([("b", 9.0), ("c", 5.0)], schema))
+    base.delete([("v", "=", 7.0)])
+    mv.sync()
+    last = mv.mv.history()[-1]
+    assert len(last.remove) == 1 and len(last.add) == 1
+    assert mv.synced_version() == base.latest_version()
+    assert _rows(mv._current()) == _rows(recompute(base))
