@@ -139,7 +139,7 @@ def lttb_downsample(
         F.col(y_col).cast("bigint").alias("__y"),
         # BIGINT rank: row_number() is 32-bit and the bucket index
         # multiplies it by n_out — at 10M points x 1000 buckets the
-        # product overflows INT (found by tools/probe_single_key_window)
+        # product overflows INT (found by a one-key 10M-bucket probe)
         F.row_number().over(w).cast("bigint").alias("__rn"),
         F.count(F.lit(1)).over(wk).alias("__n"),
         # floor(diff/unit), NOT a bare cast: Spark casts double->long by

@@ -92,7 +92,6 @@ def merge_apply(
     *,
     dedupe_order: str | None = None,
     allow_missing_columns: bool = False,
-    unique_keys: bool = False,
 ) -> DataFrame:
     """The full SQL MERGE shape in one rewrite: rows of ``updates``
     with ``delete_col`` true DELETE their matched target rows (WHEN
@@ -102,16 +101,13 @@ def merge_apply(
     the ``delete_col`` never lands in the output.
     ``allow_missing_columns`` as in :func:`merge_upsert`.
 
-    ``unique_keys=True`` is the caller's CONTRACT that ``updates`` is
-    already unique per key (e.g. it came out of a groupBy on the key)
-    — skips the multiple-match check's count job, which on a CDC
-    applier path is a whole avoidable Spark job per micro-batch.
+    ``updates`` must be unique per key unless ``dedupe_order`` picks
+    the winner per key: the caller proves it (AcidTable.merge_apply
+    folds the multiple-match check into its key-ranges job).
     """
     keys = list(keys)
     if dedupe_order is not None:
         updates = _latest_per_key(updates, keys, dedupe_order)
-    elif not unique_keys:
-        _assert_unique_keys(updates, keys, "update")
     untouched = target.join(updates.select(*keys).distinct(), keys, "left_anti")
     survivors = updates.filter(~F.col(delete_col)).drop(delete_col)
     return untouched.unionByName(

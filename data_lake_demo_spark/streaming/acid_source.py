@@ -711,36 +711,23 @@ def _cdf_partitions(t, start_v: int, end_v: int, rid_mode: bool = False) -> list
     split is ``_diff_partitions``' (``rid_mode``: withRowIds /
     updateAsImages reads may split by rid range).
     """
-    live_map, _, _, _, dvs = t._resolve_state(start_v - 1 if start_v > 0 else -1)
-    stats = dict(live_map)  # path -> manifest stats while live
-    live = set(live_map)
-    dvs = dict(dvs)
+    pre = t._state(start_v - 1)
     parts = []
     for v in range(start_v, end_v):
         c = t._read_commit(v)
-        pre_live, pre_dvs, pre_stats = set(live), dict(dvs), dict(stats)
-        for p in c.remove:
-            live.discard(p)
-            dvs.pop(p, None)
-            stats.pop(p, None)
-        for a in c.add:
-            live.add(a["path"])
-            stats[a["path"]] = a.get("stats", {})
-        for e in c.dv or ():
-            if e["del"]:
-                dvs[e["path"]] = e["del"]
-            else:
-                dvs.pop(e["path"], None)
+        post = pre.advance([c])
+        live, pre_live = set(post.files), set(pre.files)
         added = sorted(live - pre_live)
         removed = sorted(pre_live - live)
         changed = sorted(
-            p for p in (live & pre_live) if pre_dvs.get(p) != dvs.get(p)
+            p for p in (live & pre_live) if pre.dvs.get(p) != post.dvs.get(p)
         )
         parts += _diff_partitions(
-            t.path, (added + changed, dvs, stats),
-            (removed + changed, pre_dvs, pre_stats),
+            t.path, (added + changed, post.dvs, post.files),
+            (removed + changed, pre.dvs, pre.files),
             v, c.ts, c.op, rid_mode,
         )
+        pre = post
     return parts
 
 
@@ -785,7 +772,7 @@ def _check_images_options(options, cdf: bool) -> bool:
             "updateAsImages requires .option('readChangeFeed', 'true')"
         )
     t = _table(options)
-    if not t._row_tracking_on():
+    if not t._row_tracking_on(t._state()):
         raise ValueError(
             "updateAsImages requires row tracking "
             "(AcidTable.set_row_tracking() / ALTER TABLE ... ENABLE ROW "
@@ -816,8 +803,7 @@ def _catalog_lookup(root: str, name: str) -> str:
     from data_lake_demo_spark.tableformat import AcidTable
 
     store = AcidTable(None, os.path.join(_local_path(root), "_catalog"))
-    files, _ = store._resolve()
-    for f in files:
+    for f in sorted(store._state().files):
         tbl = pq.read_table(
             os.path.join(store.path, f), columns=["table_name", "path"]
         )
@@ -911,7 +897,7 @@ def _reverse_colmap(options, pinned: bool = False) -> dict:
     try:
         t = _table(options)
         as_of = _as_of_version(t, options) if pinned else None
-        colmap = t._colmap(as_of)
+        colmap = t._state(as_of).colmap
     except Exception:
         return {}
     return {lg: ph for ph, lg in colmap.items() if lg}
@@ -976,13 +962,9 @@ class _AcidBatchReader(DataSourceReader):
             return _cdf_partitions(
                 t, start, end + 1, rid_mode=self._rid or self._images
             ) or [_FilePartition("")]
-        as_of = _as_of_version(t, self._options)
-        if self._pushed:
-            files, _, _ = t._pruned_live(self._pushed, as_of=as_of)
-        else:
-            files, _ = t._resolve(as_of)
-        state = t._resolve_state(as_of)
-        dvs, live_stats = state[4], state[0]
+        snap = t._state(_as_of_version(t, self._options))
+        files = t._pruned_live(snap, self._pushed)
+        dvs, live_stats = snap.dvs, snap.files
         parts = [
             _FilePartition(
                 os.path.join(t.path, f),
@@ -1321,7 +1303,8 @@ def _enforce_write_rules(t, actions) -> None:
     made of). Omitted generated columns are rejected (the staged
     parquet already exists, so compute-if-omitted isn't possible on
     this path — supply the column, or write via AcidTable.append)."""
-    props = t.properties()
+    snap = t._state()
+    props = snap.props
     cons = {
         k: v for k, v in props.items() if k.startswith(t._CONSTRAINT_PREFIX)
     }
@@ -1332,7 +1315,7 @@ def _enforce_write_rules(t, actions) -> None:
         return
     import duckdb
 
-    colmap = t._colmap()
+    colmap = snap.colmap
     paths = [os.path.join(t.path, a["path"]) for a in actions]
     files_sql = "read_parquet([{}], union_by_name=true)".format(
         ",".join("'" + p.replace("'", "''") + "'" for p in paths)
@@ -1389,7 +1372,7 @@ def _writer_physical(options, schema: T.StructType) -> tuple[str, dict | None]:
     a column whose name is reserved by a renamed/dropped physical
     column — same restriction as AcidTable._physicalize."""
     try:
-        colmap = _table(options)._colmap()
+        colmap = _table(options)._state().colmap
     except Exception:
         colmap = {}
     if any(f.name == "__row_id" for f in schema.fields):
@@ -1444,10 +1427,10 @@ def _writer_defaults(
     SparkSession exists on this path, same constraint as
     _enforce_write_rules), cast to the column's committed type, and
     each task replicates the constant into its staged batches."""
-    props = t.properties()
+    snap = t._state()
     defaults = {
         k[len(t._DEFAULT_PREFIX):]: v
-        for k, v in props.items()
+        for k, v in snap.props.items()
         if k.startswith(t._DEFAULT_PREFIX)
     }
     missing = {
@@ -1457,9 +1440,9 @@ def _writer_defaults(
         return {}, schema_json
     import duckdb
 
-    committed = json.loads(t._resolve_state(None)[1])
+    committed = json.loads(snap.schema_json)
     types = {f["name"]: f["type"] for f in committed["fields"]}
-    colmap = t._colmap()
+    colmap = snap.colmap
     out = {}
     d = json.loads(schema_json)
     con = duckdb.connect()
@@ -1504,7 +1487,8 @@ def _writer_identity(
     id columns) for a write into an identity table. GENERATED ALWAYS:
     a frame supplying the column is rejected, matching
     AcidTable._append_with_identity."""
-    props = t.properties()
+    snap = t._state()
+    props = snap.props
     idcols = sorted(
         k[len(t._IDENTITY_PREFIX):]
         for k in props
@@ -1523,7 +1507,7 @@ def _writer_identity(
             raise ValueError(
                 f"identity column {c!r} is GENERATED ALWAYS — omit it"
             )
-    colmap = t._colmap()
+    colmap = snap.colmap
     identity = {
         c: {
             "phys": t._phys_names([c], colmap)[0],
@@ -1568,12 +1552,10 @@ def _commit_staged_identity(
 
     bases = {c: dict(v) for c, v in identity.items()}
     for _ in range(max_retries):
-        base_v = t.latest_version()
-        props = t.properties(base_v if base_v >= 0 else None)
-        if txn is not None:
-            last = t.last_txn_batch(txn[0], as_of=base_v)
-            if last is not None and txn[1] <= last:
-                return base_v
+        snap = t._state()
+        props = snap.props
+        if snap.holds(txn):
+            return snap.version
         shifts = {}
         for c, v in bases.items():
             cur = int(props[t._IDENTITY_PREFIX + c]["next"])
@@ -1617,7 +1599,7 @@ def _commit_staged_identity(
                 new_props[t._IDENTITY_PREFIX + c] = {"next": int(top) + 1}
         try:
             return t._try_commit(
-                base_v + 1, "append", actions, [], schema_json, txn,
+                snap, "append", actions, [], schema_json, txn,
                 props=new_props,
             )
         except CommitConflict:
@@ -1771,8 +1753,8 @@ class AcidTableDataSource(DataSource):
 
     def schema(self):
         t = _table(self.options)
-        as_of = _as_of_version(t, self.options)
-        _, schema_json = t._resolve(as_of)
+        snap = t._state(_as_of_version(t, self.options))
+        schema_json = snap.schema_json
         if schema_json is None:
             raise ValueError(f"table {t.path} has no commits")
         st = T.StructType.fromJson(json.loads(schema_json))
@@ -1781,7 +1763,7 @@ class AcidTableDataSource(DataSource):
             st = T.StructType(
                 [f for f in st.fields if f.name != t._ROW_ID_COL]
             )
-        colmap = t._colmap(as_of)
+        colmap = snap.colmap
         if colmap:  # column mapping: expose logical names, hide drops
             st = T.StructType(
                 [
@@ -1799,8 +1781,7 @@ class AcidTableDataSource(DataSource):
                 .add("_commit_timestamp", T.TimestampType())
             )
         if _rid_enabled(self.options):
-            props = t._resolve_state(as_of)[3]
-            if not t._row_tracking_on(props):
+            if not t._row_tracking_on(snap):
                 raise ValueError(
                     "withRowIds requires row tracking on the table "
                     "(AcidTable.set_row_tracking())"

@@ -22,6 +22,22 @@ protocol those formats use, reduced to its essentials:
   change a running query's inputs. ``snapshot(as_of=N)`` replays the
   log up to version N — time travel is free because data files are
   never mutated, only added/removed by later commits.
+- **One immutable Snapshot per verb attempt.** ``_state(as_of)``
+  resolves a version into a frozen ``Snapshot`` (version, live files
+  with their stats, schema, txn watermarks, properties, deletion
+  vectors) from ONE log listing plus the newest checkpoint and the
+  commits after it. A write verb resolves one snapshot at the start of
+  each attempt and derives everything from it — column map, write
+  mode, isolation level, constraints, row-id watermark, the files it
+  rewrites — so a re-plan after a lost race sees exactly the base it
+  commits on. Helpers never mutate a snapshot's maps; commit bodies
+  and new property dicts are built from ``dict(...)`` copies.
+- **Rebase rule.** A commit lands at ``base.version + 1``;
+  ``_try_commit`` stamps row ids and protocol features against the
+  props of that actual predecessor. When ``_commit_or_rebase`` loses
+  the race it reads the winner commits once, checks each against the
+  props its own predecessor carried, and advances the old base by
+  them — the new base costs one listing and no replay.
 - **MERGE is copy-on-write.** ``merge`` rewrites the table through
   operators/upsert.merge_upsert (the anti-join + union plan a
   format's MERGE INTO lowers to) into NEW files and commits
@@ -102,6 +118,67 @@ class Commit:
     # deletion-vector actions: [{"path", "del" (packed b64), "n"}] —
     # each entry REPLACES the file's whole vector (merge-on-read)
     dv: list[dict] | None = None
+
+
+@dataclass(frozen=True)
+class Snapshot:
+    """One resolved table version: what a verb attempt reads and
+    commits against. ``files`` maps each live file to its manifest
+    stats, ``txns`` holds the per-app batch watermarks, ``dvs`` the
+    packed deletion vector per file, and ``ts`` the commit timestamp
+    of ``version`` (None when the state came straight from a
+    checkpoint). The maps are shared, never mutated: a helper that
+    builds a commit body or a new props dict copies with ``dict(...)``
+    first. Version -1 is the table with no commits."""
+
+    version: int
+    files: dict[str, dict]
+    schema_json: str | None
+    txns: dict[str, int]
+    props: dict
+    dvs: dict[str, str]
+    ts: float | None = None
+
+    @property
+    def colmap(self) -> dict[str, str]:
+        """physical -> logical name map ("" marks a dropped column)."""
+        return dict(self.props.get("colmap") or {})
+
+    def holds(self, txn: tuple[str, int] | None) -> bool:
+        """Has ``txn`` = (app, batch_id) already landed at this version
+        (the idempotent-replay watermark check)?"""
+        last = self.txns.get(txn[0]) if txn is not None else None
+        return last is not None and txn[1] <= last
+
+    def advance(self, commits) -> "Snapshot":
+        """This snapshot with ``commits`` (consecutive, starting at
+        ``version + 1``) applied — a new Snapshot; ``self`` is left
+        as it is."""
+        files, dvs, txns = dict(self.files), dict(self.dvs), dict(self.txns)
+        schema, props = self.schema_json, self.props
+        version, ts = self.version, self.ts
+        for c in commits:
+            for p in c.remove:
+                files.pop(p, None)
+                dvs.pop(p, None)  # a rewrite materializes the vector
+            for a in c.add:
+                files[a["path"]] = a.get("stats", {})
+            for e in c.dv or ():
+                if e["del"]:
+                    dvs[e["path"]] = e["del"]
+                else:  # empty vector = explicit clear (restore)
+                    dvs.pop(e["path"], None)
+            schema = c.schema_json
+            if c.txn:
+                app, b = c.txn["app"], c.txn["batch_id"]
+                txns[app] = max(txns.get(app, b), b)
+            if c.props is not None:
+                props = dict(c.props)
+            version, ts = c.version, c.ts
+        return Snapshot(version, files, schema, txns, props, dvs, ts)
+
+
+_NO_COMMITS = Snapshot(-1, {}, None, {}, {}, {})
 
 
 # ---- deletion-vector codec -----------------------------------------------
@@ -671,65 +748,43 @@ class AcidTable:
 
     def history(self) -> list[Commit]:
         """Full commit list, oldest first (audit/display surface —
-        resolution hot paths use the checkpointed ``_resolve_state``)."""
+        resolution hot paths use the checkpointed ``_state``)."""
         return [self._read_commit(v) for v in range(self.latest_version() + 1)]
 
-    def _latest_checkpoint_version(self, le: int) -> int | None:
-        """Newest checkpoint at-or-before version ``le`` (None if no
-        checkpoint qualifies)."""
-        best = None
-        for n in self.log.list_names():
-            if self._is_checkpoint(n):
-                v = int(n[: -len(_CKPT_SUFFIX)])
-                if v <= le and (best is None or v > best):
-                    best = v
-        return best
-
-    def _resolve_state(
-        self, as_of: int | None = None
-    ) -> tuple[dict[str, dict], str | None, dict[str, int], dict, dict]:
-        """({live file: stats}, schema, {app: txn watermark}, props,
-        {file: packed deletion vector}) as of a version. Starts from
-        the newest checkpoint ≤ target and replays only the commits
-        after it — O(checkpoint_interval) log reads regardless of
-        table age (the Delta checkpoint contract)."""
-        target = self.latest_version() if as_of is None else as_of
-        live: dict[str, dict] = {}
-        schema: str | None = None
-        txns: dict[str, int] = {}
-        props: dict = {}
-        dvs: dict[str, str] = {}
-        start = 0
-        if target >= 0:
-            ckpt_v = self._latest_checkpoint_version(target)
-            if ckpt_v is not None:
-                d = json.loads(self.log.read(_ckpt_name(ckpt_v)))
-                live = {a["path"]: a.get("stats", {}) for a in d["live"]}
-                schema = d["schema"]
-                txns = dict(d["txns"])
-                props = dict(d.get("props") or {})
-                dvs = dict(d.get("dvs") or {})
-                start = ckpt_v + 1
-        for v in range(start, target + 1):
-            c = self._read_commit(v)
-            for p in c.remove:
-                live.pop(p, None)
-                dvs.pop(p, None)  # a rewrite materializes the vector
-            for a in c.add:
-                live[a["path"]] = a.get("stats", {})
-            for e in c.dv or ():
-                if e["del"]:
-                    dvs[e["path"]] = e["del"]
-                else:  # empty vector = explicit clear (restore)
-                    dvs.pop(e["path"], None)
-            schema = c.schema_json
-            if c.txn:
-                app, b = c.txn["app"], c.txn["batch_id"]
-                txns[app] = max(txns.get(app, b), b)
-            if c.props is not None:
-                props = dict(c.props)
-        self._check_protocol(props)
-        return live, schema, txns, props, dvs
+    def _state(self, as_of: int | None = None) -> Snapshot:
+        """The table as of a version (default: latest). ONE log
+        listing yields both the head version and the newest checkpoint
+        ≤ target; resolution starts from that checkpoint and replays
+        only the commits after it — O(checkpoint_interval) log reads
+        regardless of table age (the Delta checkpoint contract)."""
+        if as_of is not None and as_of < 0:
+            return _NO_COMMITS
+        names = self.log.list_names()
+        target = as_of
+        if target is None:
+            target = max(
+                (int(n[:-5]) for n in names if self._is_commit(n)), default=-1
+            )
+        ckpts = [
+            int(n[: -len(_CKPT_SUFFIX)]) for n in names if self._is_checkpoint(n)
+        ]
+        ckpt_v = max((v for v in ckpts if v <= target), default=None)
+        snap = _NO_COMMITS
+        if ckpt_v is not None:
+            d = json.loads(self.log.read(_ckpt_name(ckpt_v)))
+            snap = Snapshot(
+                ckpt_v,
+                {a["path"]: a.get("stats", {}) for a in d["live"]},
+                d["schema"],
+                dict(d["txns"]),
+                dict(d.get("props") or {}),
+                dict(d.get("dvs") or {}),
+            )
+        snap = snap.advance(
+            self._read_commit(v) for v in range(snap.version + 1, target + 1)
+        )
+        self._check_protocol(snap.props)
+        return snap
 
     # ---- protocol / feature flags ---------------------------------------
     #
@@ -798,14 +853,13 @@ class AcidTable:
         }
 
     def _stamp_protocol(
-        self, props: dict | None, dv: list[dict] | None, version: int
+        self, props: dict | None, dv: list[dict] | None, base: Snapshot
     ) -> dict | None:
         """Auto-stamp the features THIS commit's post-state uses;
         returns the (possibly materialized) props for the commit.
-        Also enforces the writer gate against the post-commit state."""
-        post = props
-        if post is None:
-            post = self._resolve_state(version - 1)[3] if version > 0 else {}
+        Also enforces the writer gate against the post-commit state.
+        ``base`` is the commit's actual predecessor."""
+        post = base.props if props is None else props
         needed_r, needed_w = set(), set()
         if dv and any(e.get("del") for e in dv):
             needed_r.add("deletionVectors")
@@ -851,18 +905,18 @@ class AcidTable:
         ``as_of`` (None if it never has) — the idempotent-replay
         watermark. Callers on the commit path MUST evaluate this as-of
         the same base version they commit against (see ``append``)."""
-        return self._resolve_state(as_of)[2].get(app)
+        return self._state(as_of).txns.get(app)
 
     def properties(self, as_of: int | None = None) -> dict:
         """Resolved table properties (constraints etc.) at a version."""
-        return self._resolve_state(as_of)[3]
+        return dict(self._state(as_of).props)
 
     def deletion_vectors(self, as_of: int | None = None) -> dict[str, list[int]]:
         """{live file: sorted masked row indices} at a version
         (merge-on-read state; empty when fully materialized)."""
         return {
             p: _unpack_dv(b, self.path)
-            for p, b in self._resolve_state(as_of)[4].items()
+            for p, b in self._state(as_of).dvs.items()
         }
 
     def row_count(self, as_of: int | None = None) -> int:
@@ -871,9 +925,9 @@ class AcidTable:
         masks, so the answer costs one log resolution and ZERO data
         reads. Files committed before the counts existed fall back to
         a driver-side parquet FOOTER read (still metadata-only)."""
-        live, _, _, _, dvs = self._resolve_state(as_of)
+        snap = self._state(as_of)
         total = 0
-        for p, stats in live.items():
+        for p, stats in snap.files.items():
             n = stats.get("#rows")
             if n is not None:
                 total += n[0]
@@ -881,8 +935,8 @@ class AcidTable:
                 import pyarrow.parquet as pq
 
                 total += pq.read_metadata(os.path.join(self.path, p)).num_rows
-            if p in dvs:
-                total -= _dv_count(dvs[p])
+            if p in snap.dvs:
+                total -= _dv_count(snap.dvs[p])
         return total
 
     def column_min_max(
@@ -900,22 +954,21 @@ class AcidTable:
         semantics); returns (None, None) when no rows carry a value.
         DATE stats ride as ISO strings; the scan fallback normalizes
         through the same encoding so the two sources compare."""
-        live, schema_json, _, _, dvs = self._resolve_state(as_of)
-        colmap = self._colmap(as_of)
-        phys = {lg: ph for ph, lg in colmap.items() if lg}.get(col, col)
+        snap = self._state(as_of)
+        phys = self._phys_names([col], snap.colmap)[0]
         vals: list = []
         rescan: list[str] = []
-        for p, stats in live.items():
+        for p, stats in snap.files.items():
             rng = stats.get(phys)
-            if p in dvs or rng is None:
+            if p in snap.dvs or rng is None:
                 rescan.append(p)
             else:
                 vals.extend(rng)
         if rescan:
-            df = self._read_files(rescan, schema_json)
+            df = self._read_files(rescan, snap.schema_json)
             if phys in df.columns:
                 row = (
-                    self._apply_dvs(df, rescan, dvs)
+                    self._apply_dvs(df, rescan, snap.dvs)
                     .agg(F.min(phys), F.max(phys))
                     .first()
                 )
@@ -926,42 +979,32 @@ class AcidTable:
             return None, None
         return min(vals), max(vals)
 
-    def _resolve_actions(
-        self, as_of: int | None = None
-    ) -> tuple[dict[str, dict], str | None]:
-        live, schema, _, _, _ = self._resolve_state(as_of)
-        return live, schema
-
-    def _resolve(self, as_of: int | None = None) -> tuple[list[str], str | None]:
-        live, schema = self._resolve_actions(as_of)
-        return sorted(live), schema
-
-    def _maybe_checkpoint(self, version: int) -> None:
-        """Materialize the resolved state every ``checkpoint_interval``
-        commits. Best-effort and racy-by-design: checkpoints are pure
-        derived state, put-if-absent dedups concurrent writers, and a
-        missing checkpoint only means a longer replay."""
-        if version < 0 or (version + 1) % self.checkpoint_interval != 0:
-            return
-        live, schema, txns, props, dvs = self._resolve_state(version)
+    def _write_checkpoint(self, snap: Snapshot) -> None:
+        """Materialize the just-committed state ``snap`` (_try_commit
+        calls this every ``checkpoint_interval`` commits). Best-effort
+        and racy-by-design: checkpoints are pure derived state,
+        put-if-absent dedups concurrent writers, and a missing
+        checkpoint only means a longer replay."""
         body = {
-            "version": version,
-            "live": [{"path": p, "stats": s} for p, s in sorted(live.items())],
-            "schema": schema,
-            "txns": txns,
-            "props": props,
-            "dvs": dvs,
+            "version": snap.version,
+            "live": [
+                {"path": p, "stats": s} for p, s in sorted(snap.files.items())
+            ],
+            "schema": snap.schema_json,
+            "txns": snap.txns,
+            "props": snap.props,
+            "dvs": snap.dvs,
         }
         try:
             self.log.put_if_absent(
-                _ckpt_name(version), json.dumps(body).encode()
+                _ckpt_name(snap.version), json.dumps(body).encode()
             )
         except FileExistsError:
             pass  # a racing committer of this version already wrote it
 
     def _try_commit(
         self,
-        version: int,
+        base: Snapshot,
         op: str,
         add: list[dict],
         remove: list[str],
@@ -970,23 +1013,30 @@ class AcidTable:
         props: dict | None = None,
         dv: list[dict] | None = None,
     ) -> int:
-        """Put-if-absent commit of the version slot. Exactly one writer
-        wins a version; the whole ACID story rests on this one atomic
-        primitive (os.link on POSIX, conditional PUT on object stores
-        — see storage.LogStore)."""
-        add, props = self._stamp_row_ids(add, props, version)
-        props = self._stamp_protocol(props, dv, version)
+        """Put-if-absent commit of the slot after ``base``. Exactly one
+        writer wins a version; the whole ACID story rests on this one
+        atomic primitive (os.link on POSIX, conditional PUT on object
+        stores — see storage.LogStore). Row ids and protocol features
+        stamp against ``base``, the commit's actual predecessor."""
+        version = base.version + 1
+        add, props = self._stamp_row_ids(add, props, base)
+        props = self._stamp_protocol(props, dv, base)
         ts = time.time()
         if version > 0:
             # in-commit-timestamp monotonicity (Delta's ICT feature):
             # wall clocks skew — especially across writers on different
             # hosts — and a commit stamped EARLIER than its predecessor
             # makes timestampAsOf/RESTORE TIMESTAMP ambiguous. Clamp to
-            # strictly-after-previous; one log read per commit.
-            try:
-                ts = max(ts, self._read_commit(version - 1).ts + 1e-6)
-            except Exception:
-                pass  # predecessor unreadable: wall clock stands
+            # strictly-after-previous (the predecessor's timestamp rides
+            # the snapshot unless it came straight from a checkpoint).
+            prev_ts = base.ts
+            if prev_ts is None:
+                try:
+                    prev_ts = self._read_commit(version - 1).ts
+                except Exception:
+                    pass  # predecessor unreadable: wall clock stands
+            if prev_ts is not None:
+                ts = max(ts, prev_ts + 1e-6)
         body = {
             "version": version,
             "op": op,
@@ -1007,7 +1057,17 @@ class AcidTable:
             )
         except FileExistsError as e:
             raise CommitConflict(f"version {version} already committed") from e
-        self._maybe_checkpoint(version)
+        if (version + 1) % self.checkpoint_interval == 0:
+            self._write_checkpoint(
+                base.advance(
+                    [
+                        Commit(
+                            version, op, ts, add, remove, schema_json,
+                            body.get("txn"), props, dv,
+                        )
+                    ]
+                )
+            )
         return version
 
     # ---- logical conflict detection (Delta's conflict matrix) -----------
@@ -1027,9 +1087,15 @@ class AcidTable:
         }
 
     def _commit_conflicts_logically(
-        self, c: Commit, ours: set[str], read_filters, check_adds: bool
+        self,
+        c: Commit,
+        prev_props: dict,
+        ours: set[str],
+        read_filters,
+        check_adds: bool,
     ) -> bool:
-        """Does the winner commit ``c`` logically invalidate a staged
+        """Does the winner commit ``c`` (whose predecessor carried
+        ``prev_props``) logically invalidate a staged
         transaction that rewrites/deletes ``ours`` (file set read at
         its base) under scan predicate ``read_filters``? Mirrors
         Delta's documented matrix:
@@ -1048,14 +1114,10 @@ class AcidTable:
         touched = set(c.remove) | {e["path"] for e in (c.dv or [])}
         if touched & ours:
             return True
-        if c.props is not None:
-            prev = (
-                self._resolve_state(c.version - 1)[3]
-                if c.version > 0
-                else {}
-            )
-            if self._props_material(c.props) != self._props_material(prev):
-                return True
+        if c.props is not None and self._props_material(
+            c.props
+        ) != self._props_material(prev_props):
+            return True
         if c.add and check_adds:
             if read_filters is None:
                 return True  # unscoped read: any append was readable
@@ -1066,7 +1128,7 @@ class AcidTable:
 
     def _commit_or_rebase(
         self,
-        base: int,
+        base: Snapshot,
         op: str,
         add: list[dict],
         remove: list[str],
@@ -1078,7 +1140,7 @@ class AcidTable:
         check_adds: bool | None = None,
         max_rebases: int = 10,
     ) -> int | None:
-        """Commit the staged actions at ``base + 1``; on losing the
+        """Commit the staged actions after ``base``; on losing the
         race, REBASE onto the winners instead of re-planning when every
         intervening commit is logically disjoint (two DELETEs on
         disjoint file sets, an append racing a compact/cluster of old
@@ -1101,38 +1163,47 @@ class AcidTable:
         transaction into an idempotent no-op, never a double-apply.
 
         The isolation level resolves per-table first (the
-        ``isolationLevel`` table property — Delta's
+        ``isolationLevel`` table property at ``base`` — Delta's
         ``delta.isolationLevel``, settable via ALTER TABLE ... SET
         TBLPROPERTIES so EVERY writer handle honors it), then this
-        handle's ``isolation`` constructor arg."""
+        handle's ``isolation`` constructor arg.
+
+        Each new base is the old one advanced by the winner commits the
+        conflict check reads anyway (one listing, no replay), and the
+        next attempt stamps row ids and features against it."""
         if check_adds is None:
-            level = self.properties().get("isolationLevel") or self.isolation
+            level = base.props.get("isolationLevel") or self.isolation
             check_adds = level == "serializable"
         ours = set(remove) | {e["path"] for e in (dv or [])}
         for _ in range(max_rebases):
             try:
                 return self._try_commit(
-                    base + 1, op, add, remove, schema_json, txn, dv=dv
+                    base, op, add, remove, schema_json, txn, dv=dv
                 )
             except CommitConflict:
                 pass
-            latest = self.latest_version()
-            if txn is not None:
-                last = self.last_txn_batch(txn[0], as_of=latest)
-                if last is not None and txn[1] <= last:
-                    return latest  # a replay landed this batch already
-            for v in range(base + 1, latest + 1):
+            winners = [
+                self._read_commit(v)
+                for v in range(base.version + 1, self.latest_version() + 1)
+            ]
+            head = base.advance(winners)
+            if head.holds(txn):
+                return head.version  # a replay landed this batch already
+            prev_props = base.props
+            for c in winners:
                 if self._commit_conflicts_logically(
-                    self._read_commit(v), ours, read_filters, check_adds
+                    c, prev_props, ours, read_filters, check_adds
                 ):
                     return None
+                if c.props is not None:
+                    prev_props = c.props
+            base = head
             try:
                 # winners may have widened the schema (appends with
                 # additive evolution): re-merge ours against theirs
-                schema_json = self._evolve_schema(schema_json, latest)
+                schema_json = self._evolve_schema(schema_json, base)
             except ValueError:
                 return None  # incompatible evolution: re-plan
-            base = latest
         return None  # pathological contention: fall back to re-plan
 
     # ---- data-file staging ----------------------------------------------
@@ -1457,14 +1528,13 @@ class AcidTable:
         value deletes its key). Properties snapshot-resolve like any
         state: later commits without a props field carry them forward."""
         for _ in range(max_retries):
-            base = self.latest_version()
-            _, schema, _, props, _ = self._resolve_state(base if base >= 0 else None)
-            if schema is None:
+            snap = self._state()
+            if snap.schema_json is None:
                 raise ValueError(
                     f"table {self.path} has no commits (append a first "
                     "snapshot before setting properties)"
                 )
-            new = dict(props)
+            new = dict(snap.props)
             for k, v in updates.items():
                 if v is None:
                     new.pop(k, None)
@@ -1472,7 +1542,7 @@ class AcidTable:
                     new[k] = v
             try:
                 return self._try_commit(
-                    base + 1, "setprops", [], [], schema, props=new
+                    snap, "setprops", [], [], snap.schema_json, props=new
                 )
             except CommitConflict:
                 continue
@@ -1488,7 +1558,9 @@ class AcidTable:
         The DSv2 writers validate too (probing staged files before the
         commit references them — acid_source._enforce_write_rules);
         only a bare ``commit_staged`` call bypasses enforcement."""
-        self._enforce_constraints(self.snapshot(), {f"constraint.{name}": expr})
+        self._enforce_constraints(
+            self.snapshot(), {self._CONSTRAINT_PREFIX + name: expr}
+        )
         return self.set_properties({self._CONSTRAINT_PREFIX + name: expr})
 
     def drop_check_constraint(self, name: str) -> int:
@@ -1507,14 +1579,14 @@ class AcidTable:
         Retrofit rule: on a non-empty table the column must already
         exist and already satisfy the expression (validated here),
         mirroring the constraint shape."""
-        snap = self.snapshot()
-        if snap.take(1):
-            if name not in snap.columns:
+        rows = self.snapshot()
+        if rows.take(1):
+            if name not in rows.columns:
                 raise ValueError(
                     f"generated column {name!r} must exist before it can"
                     " be declared on a non-empty table"
                 )
-            self._check_generated(snap, {self._GENERATED_PREFIX + name: expr})
+            self._check_generated(rows, {self._GENERATED_PREFIX + name: expr})
         return self.set_properties({self._GENERATED_PREFIX + name: expr})
 
     def drop_generated_column(self, name: str) -> int:
@@ -1553,19 +1625,22 @@ class AcidTable:
     def drop_column_default(self, name: str) -> int:
         return self.set_properties({self._DEFAULT_PREFIX + name: None})
 
-    def _apply_defaults(self, df: DataFrame) -> DataFrame:
-        """Materialize declared defaults for columns the batch omits.
-        Zero overhead when the table declares none (one properties()
-        read, no snapshot resolution)."""
+    def _apply_defaults(self, df: DataFrame, snap: Snapshot) -> DataFrame:
+        """Materialize declared defaults for columns the batch omits
+        (zero overhead when the table declares none)."""
         defaults = {
             k[len(self._DEFAULT_PREFIX):]: v
-            for k, v in self.properties().items()
+            for k, v in snap.props.items()
             if k.startswith(self._DEFAULT_PREFIX)
         }
         missing = {c: e for c, e in defaults.items() if c not in df.columns}
         if not missing:
             return df
-        declared = {f.name: f.dataType for f in self.snapshot().schema.fields}
+        colmap = snap.colmap
+        declared = {
+            colmap.get(f.name, f.name): f.dataType
+            for f in T.StructType.fromJson(json.loads(snap.schema_json)).fields
+        }
         for col, expr in missing.items():
             c = F.expr(expr)
             if col in declared:
@@ -1596,17 +1671,13 @@ class AcidTable:
         watermark rides table props and advances in the same commit
         that uses it (commit races retry with the fresh value, exactly
         the identity-column contract)."""
-        props = self.properties()
-        if self._ROWTRACKING_KEY in props:
-            return self.latest_version()
-        base = self.latest_version()
-        live, schema_json, _, _, _ = self._resolve_state(
-            base if base >= 0 else None
-        )
+        snap = self._state()
+        if self._ROWTRACKING_KEY in snap.props:
+            return snap.version
         wm = 0
         add = []
-        for p in sorted(live):
-            stats = dict(live[p] or {})
+        for p in sorted(snap.files):
+            stats = dict(snap.files[p] or {})
             n = stats.get("#rows")
             n = int(n[0]) if n else None
             if n is None:
@@ -1619,21 +1690,21 @@ class AcidTable:
             stats["#base_row_id"] = [wm]
             wm += n
             add.append({"path": p, "stats": stats})
-        new_props = dict(props)
+        new_props = dict(snap.props)
         new_props[self._ROWTRACKING_KEY] = {"next": wm}
         return self._try_commit(
-            base + 1 if base >= 0 else 0,
+            snap,
             "rowtracking",
             add,
             [],
-            schema_json
-            if schema_json is not None
+            snap.schema_json
+            if snap.schema_json is not None
             else T.StructType([]).json(),
             props=new_props,
         )
 
     def _stamp_row_ids(
-        self, add: list[dict], props: dict | None, version: int
+        self, add: list[dict], props: dict | None, base: Snapshot
     ) -> tuple[list[dict], dict | None]:
         """Central base-row-id assignment (runs inside _try_commit so
         EVERY write path — append, merge, DSv2, COPY INTO, streaming —
@@ -1641,10 +1712,11 @@ class AcidTable:
         ``#base_row_id`` and the watermark advances past them; files
         that carry a materialized ``__row_id`` column (rewrites) just
         push the watermark past their maximum. No-op unless row
-        tracking is enabled."""
-        post = props
-        if post is None:
-            post = self._resolve_state(version - 1)[3] if version > 0 else {}
+        tracking is enabled. The watermark comes from ``props`` when
+        the commit carries them, else from ``base`` — the commit's
+        actual predecessor (the rebase base, not the verb's first
+        snapshot)."""
+        post = base.props if props is None else props
         rt = post.get(self._ROWTRACKING_KEY)
         if not rt or not add:
             return add, props
@@ -1684,26 +1756,27 @@ class AcidTable:
             props = post
         return out, props
 
-    def _row_tracking_on(self, props: dict | None = None) -> bool:
-        return self._ROWTRACKING_KEY in (
-            props if props is not None else self.properties()
-        )
+    def _row_tracking_on(self, snap: Snapshot) -> bool:
+        return self._ROWTRACKING_KEY in snap.props
 
-    def _default_write_mode(self, verb_key: str | None = None) -> str:
-        """Resolve a verb's default physical strategy from table
-        properties — Delta's ``enableDeletionVectors`` switch: when
-        set, DELETE / UPDATE / MERGE / SCD2 default to merge-on-read
-        (the verbs' explicit ``mode=`` argument still wins, and a
-        verb-specific key like ``merge.mode`` wins over the blanket
-        switch)."""
-        props = self.properties()
-        if verb_key:
-            specific = props.get(verb_key)
-            if specific:
-                return specific
-        if str(props.get("enableDeletionVectors")).lower() == "true":
-            return "merge_on_read"
-        return "copy_on_write"
+    def _default_write_mode(
+        self, snap: Snapshot, verb: str, mode: str | None
+    ) -> str:
+        """A verb's validated physical strategy: the explicit ``mode``
+        argument, else the table properties at ``snap`` — a
+        verb-specific key like ``merge.mode``, then Delta's blanket
+        ``enableDeletionVectors`` switch (when set, DELETE / UPDATE /
+        MERGE / SCD2 default to merge-on-read)."""
+        props = snap.props
+        if mode is None:
+            mode = props.get(f"{verb}.mode") or (
+                "merge_on_read"
+                if str(props.get("enableDeletionVectors")).lower() == "true"
+                else "copy_on_write"
+            )
+        if mode not in ("copy_on_write", "merge_on_read"):
+            raise ValueError(f"unknown {verb} mode {mode!r}")
+        return mode
 
     def _reject_reserved_row_id(self, df: DataFrame) -> None:
         """``__row_id`` is engine-assigned: a user batch carrying it
@@ -1716,26 +1789,38 @@ class AcidTable:
                 "tracking — the engine assigns it"
             )
 
-    def _read_for_rewrite(
-        self, touched, schema_json, dvs, base: int | None
-    ) -> DataFrame:
-        """The rewrite-path read: DV-masked rows removed and — when
-        row tracking is on — every surviving row's CURRENT id
-        materialized into the hidden ``__row_id`` physical column, so
-        the files a rewrite stages preserve ids instead of re-minting
-        them. Identical to ``_apply_dvs(_read_files(...))`` when
-        tracking is off."""
-        df = self._read_files(touched, schema_json)
-        state = self._resolve_state(base)
-        if not self._row_tracking_on(state[3]):
-            return self._apply_dvs(df, touched, dvs)
+    def _read_for_rewrite(self, snap: Snapshot, touched) -> DataFrame:
+        """The rewrite-path read of ``touched`` files at ``snap``:
+        DV-masked rows removed and — when row tracking is on — every
+        surviving row's CURRENT id materialized into the hidden
+        ``__row_id`` physical column, so the files a rewrite stages
+        preserve ids instead of re-minting them. Identical to
+        ``_apply_dvs(_read_files(...))`` when tracking is off."""
+        df = self._read_files(touched, snap.schema_json)
+        if not self._row_tracking_on(snap):
+            return self._apply_dvs(df, touched, snap.dvs)
         df = self._row_id_coords(df)
-        df = self._apply_dvs(df, touched, dvs)
-        df = self._attach_row_ids(df, touched, state[0])
+        df = self._apply_dvs(df, touched, snap.dvs)
+        df = self._attach_row_ids(df, touched, snap.files)
         cols = [
             c for c in df.columns if c not in ("_row_id", self._ROW_ID_COL)
         ]
         return df.select(*cols, F.col("_row_id").alias(self._ROW_ID_COL))
+
+    def _with_row_id_field(self, schema_json: str, rows: DataFrame) -> str:
+        """``schema_json`` plus the hidden ``__row_id`` field when the
+        rewrite ``rows`` materialized row ids: the committed schema
+        must carry the column or reads lose the ids."""
+        d = json.loads(schema_json)
+        if self._ROW_ID_COL not in rows.columns or any(
+            f["name"] == self._ROW_ID_COL for f in d["fields"]
+        ):
+            return schema_json
+        d["fields"].append(
+            {"name": self._ROW_ID_COL, "type": "long", "nullable": True,
+             "metadata": {}}
+        )
+        return json.dumps(d)
 
     def _assign_fresh_row_ids(self, df: DataFrame, props: dict) -> DataFrame:
         """Fill NULL ``__row_id`` (rows a merge INSERTS) with fresh ids
@@ -1822,22 +1907,22 @@ class AcidTable:
         column must already exist (its current max seeds the
         watermark, floored at ``start``); subsequent appends must
         OMIT the column (ALWAYS, not BY DEFAULT)."""
-        view = self._logical_view()
+        snap = self._state()
+        view = self._logical_view(snap)
         if name not in view.values():
             raise ValueError(f"no column {name!r} (have {sorted(view.values())})")
-        if self._GENERATED_PREFIX + name in self.properties():
+        if self._GENERATED_PREFIX + name in snap.props:
             raise ValueError(f"{name!r} is already a generated column")
         phys = next(p for p, l in view.items() if l == name)
-        live, _, _, _, _ = self._resolve_state(None)
         cur_max = None
-        for stats in live.values():
+        for stats in snap.files.values():
             rng = stats.get(phys)
             if rng is None:
                 cur_max = None
                 break  # a live file lacks stats: fall back to a scan
             cur_max = rng[1] if cur_max is None else max(cur_max, rng[1])
-        if cur_max is None and live:
-            row = self.snapshot().agg(F.max(name).alias("m")).first()
+        if cur_max is None and snap.files:
+            row = self._snapshot_df(snap).agg(F.max(name).alias("m")).first()
             cur_max = row["m"]
         nxt = int(start)
         if cur_max is not None:
@@ -1848,7 +1933,7 @@ class AcidTable:
         return self.set_properties({self._IDENTITY_PREFIX + name: None})
 
     def _append_with_identity(
-        self, df, identity, *, txn, partition_by, max_retries
+        self, df, identity, snap: Snapshot, *, txn, partition_by, max_retries
     ) -> int:
         """Append path for tables with identity columns: assignment
         uses a single ``monotonically_increasing_id`` pass (unique,
@@ -1870,19 +1955,18 @@ class AcidTable:
                 raise ValueError(
                     f"identity column {c!r} is GENERATED ALWAYS — omit it"
                 )
-        df = self._apply_generated(df)
-        self._enforce_constraints(df)
-        colmap = self._colmap()
-        phys_part = self._phys_partition_by(partition_by, colmap)
+        df = self._apply_generated(df, snap)
+        self._enforce_constraints(df, snap.props)
+        colmap = snap.colmap
+        phys_part = self._phys_partition_by(partition_by, snap)
         phys_of = {c: self._phys_names([c], colmap)[0] for c in identity}
         staged: tuple[list[dict], str, dict[str, int]] | None = None
-        for _ in range(max_retries):
-            base = self.latest_version()
-            props = self.properties(base)
-            if txn is not None:
-                last = self.last_txn_batch(txn[0], as_of=base)
-                if last is not None and txn[1] <= last:
-                    return base  # orphaned staging is vacuum-swept
+        for attempt in range(max_retries):
+            if attempt:
+                snap = self._state()
+            props = snap.props
+            if snap.holds(txn):
+                return snap.version  # orphaned staging is vacuum-swept
             nxt = {
                 c: int(props[self._IDENTITY_PREFIX + c]["next"])
                 for c in identity
@@ -1948,36 +2032,32 @@ class AcidTable:
                     new_props[self._IDENTITY_PREFIX + c] = {"next": int(top) + 1}
             try:
                 v = self._try_commit(
-                    base + 1,
+                    snap,
                     "append",
                     add,
                     [],
-                    self._evolve_schema(schema, base),
+                    self._evolve_schema(schema, snap),
                     txn,
                     props=new_props,
                 )
             except CommitConflict:
                 continue  # rebase the STAGED files on the next pass
-            if (
-                self.auto_compact_files
-                and len(self._resolve(v)[0]) > self.auto_compact_files
-            ):
-                try:  # same best-effort policy as the plain append path
-                    return self._auto_optimize()
-                except Exception:
-                    pass  # the append COMMITTED; compaction just defers
-            return v
+            return self._auto_compact_append(snap, add, v)
         raise CommitConflict(f"append lost {max_retries} commit races")
 
     def _apply_generated(
-        self, df: DataFrame, *, check_df: DataFrame | None = None
+        self,
+        df: DataFrame,
+        snap: Snapshot,
+        *,
+        check_df: DataFrame | None = None,
     ) -> DataFrame:
         """Compute missing generated columns; validate supplied ones.
         Zero plan overhead when the table declares none. ``check_df``
         restricts the validation to a subset of ``df`` (merge_apply
         validates only surviving upserts — delete rows never land, so
         their generated values don't matter)."""
-        for key, expr in self.properties().items():
+        for key, expr in snap.props.items():
             if not key.startswith(self._GENERATED_PREFIX):
                 continue
             col = key[len(self._GENERATED_PREFIX):]
@@ -1989,8 +2069,7 @@ class AcidTable:
                 )
         return df
 
-    def _check_generated(self, df: DataFrame, props: dict | None = None) -> None:
-        props = self.properties() if props is None else props
+    def _check_generated(self, df: DataFrame, props: dict) -> None:
         for key, expr in props.items():
             if not key.startswith(self._GENERATED_PREFIX):
                 continue
@@ -2008,10 +2087,7 @@ class AcidTable:
                     f" {bad[0].asDict()!r}"
                 )
 
-    def _enforce_constraints(
-        self, df: DataFrame, props: dict | None = None
-    ) -> None:
-        props = self.properties() if props is None else props
+    def _enforce_constraints(self, df: DataFrame, props: dict) -> None:
         for key, expr in props.items():
             if not key.startswith(self._CONSTRAINT_PREFIX):
                 continue
@@ -2043,62 +2119,68 @@ class AcidTable:
         concurrent replay that slips in between surfaces as a
         CommitConflict at base+1 and forces a re-check — two
         concurrent replays of the same batch can never both land."""
-        if txn is not None:  # cheap pre-stage short-circuit
-            last = self.last_txn_batch(txn[0])
-            if last is not None and txn[1] <= last:
-                return self.latest_version()
+        snap = self._state()
+        if snap.holds(txn):  # cheap pre-stage short-circuit
+            return snap.version
         self._reject_reserved_row_id(df)
-        df = self._apply_defaults(df)
+        df = self._apply_defaults(df, snap)
         identity = sorted(
             k[len(self._IDENTITY_PREFIX):]
-            for k in self.properties()
+            for k in snap.props
             if k.startswith(self._IDENTITY_PREFIX)
         )
         if identity:
             return self._append_with_identity(
                 df,
                 identity,
+                snap,
                 txn=txn,
                 partition_by=partition_by,
                 max_retries=max_retries,
             )
-        df = self._apply_generated(df)
-        self._enforce_constraints(df)
-        colmap = self._colmap()
+        df = self._apply_generated(df, snap)
+        self._enforce_constraints(df, snap.props)
         add, schema = self._stage_actions(
-            self._physicalize(df, colmap),
-            partition_by=self._phys_partition_by(partition_by, colmap),
+            self._physicalize(df, snap.colmap),
+            partition_by=self._phys_partition_by(partition_by, snap),
         )
-        for _ in range(max_retries):
-            base = self.latest_version()
-            if txn is not None:
-                last = self.last_txn_batch(txn[0], as_of=base)
-                if last is not None and txn[1] <= last:
-                    return base
+        for attempt in range(max_retries):
+            if attempt:
+                snap = self._state()
+                if snap.holds(txn):
+                    return snap.version
             try:
                 v = self._try_commit(
-                    base + 1,
+                    snap,
                     "append",
                     add,
                     [],
-                    self._evolve_schema(schema, base),
+                    self._evolve_schema(schema, snap),
                     txn,
                 )
             except CommitConflict:
                 continue
-            if (
-                self.auto_compact_files
-                and len(self._resolve(v)[0]) > self.auto_compact_files
-            ):
-                try:  # best-effort: ANY auto-compact failure only defers
-                    # compaction — the append itself already committed, so
-                    # surfacing an error here would report a successful
-                    # write as failed (and a retry would duplicate data)
-                    return self._auto_optimize()
-                except Exception:
-                    pass
-            return v
+            return self._auto_compact_append(snap, add, v)
         raise CommitConflict(f"append lost {max_retries} commit races")
+
+    def _auto_compact_append(
+        self, base: Snapshot, add: list[dict], v: int
+    ) -> int:
+        """The append paths' autoCompact follow-up: the committed live
+        count is ``base``'s plus the fresh files, no log read needed.
+        Best-effort: ANY auto-compact failure only defers compaction —
+        the append itself already committed, so surfacing an error
+        here would report a successful write as failed (and a retry
+        would duplicate data)."""
+        if (
+            self.auto_compact_files
+            and len(base.files) + len(add) > self.auto_compact_files
+        ):
+            try:
+                return self._auto_optimize()
+            except Exception:
+                pass
+        return v
 
     def _auto_optimize(self) -> int:
         """The autoCompact follow-up commit: plain bin-packing — or,
@@ -2129,7 +2211,7 @@ class AcidTable:
                 out.append(p)
         return sorted(out)
 
-    def _auto_maintain(self, v: int, props_hint: dict | None = None) -> int:
+    def _auto_maintain(self, snap: Snapshot, v: int) -> int:
         """Post-commit layout policy, best-effort (the data commit
         already landed; any failure here only defers maintenance):
         first the writer-side file-count autoCompact, then the
@@ -2143,25 +2225,27 @@ class AcidTable:
         coords-join mask) stays bounded by the ratio instead of
         accumulating until a human runs REORG ... APPLY (PURGE).
 
-        ``props_hint`` (the verb's already-resolved commit-base
-        properties) lets the no-policy fast path skip the post-commit
-        log resolution entirely — the check must not tax every verb
-        on tables that never opted in. (A property commit landing
-        between base and v is caught on the NEXT write — the policy
-        is amortized maintenance, not a synchronous invariant.)"""
+        ``snap`` is the verb's snapshot: with no policy on this handle
+        or at ``snap``, the check reads no log at all — it must not tax
+        every verb on tables that never opted in. (A property commit
+        landing between ``snap`` and ``v`` is caught on the NEXT write
+        — the policy is amortized maintenance, not a synchronous
+        invariant.)"""
+        if not self.auto_compact_files and not snap.props.get(
+            self._DV_RATIO_KEY
+        ):
+            return v
         try:
+            post = self._state(v)
             if (
                 self.auto_compact_files
-                and len(self._resolve(v)[0]) > self.auto_compact_files
+                and len(post.files) > self.auto_compact_files
             ):
                 return self._auto_optimize()
-            if props_hint is not None and not props_hint.get(
-                self._DV_RATIO_KEY
+            r = post.props.get(self._DV_RATIO_KEY)
+            if r and post.dvs and self._dv_debt_files(
+                post.files, post.dvs, float(r)
             ):
-                return v  # no debt policy at the commit base
-            live, _, _, props, dvs = self._resolve_state(v)
-            r = props.get(self._DV_RATIO_KEY)
-            if r and dvs and self._dv_debt_files(live, dvs, float(r)):
                 return self.reorg_purge(min_dv_ratio=float(r))
         except Exception:
             pass
@@ -2191,19 +2275,21 @@ class AcidTable:
         """Atomic full-table replace (remove every live file + add the
         new set in one commit)."""
         self._reject_reserved_row_id(df)
-        df = self._apply_defaults(df)
-        df = self._apply_generated(df)
-        self._enforce_constraints(df)
-        colmap = self._colmap()
+        snap = self._state()
+        df = self._apply_defaults(df, snap)
+        df = self._apply_generated(df, snap)
+        self._enforce_constraints(df, snap.props)
         add, schema = self._stage_actions(
-            self._physicalize(df, colmap),
-            partition_by=self._phys_partition_by(partition_by, colmap),
+            self._physicalize(df, snap.colmap),
+            partition_by=self._phys_partition_by(partition_by, snap),
         )
-        for _ in range(max_retries):
-            base = self.latest_version()
-            live, _ = self._resolve(base if base >= 0 else None)
+        for attempt in range(max_retries):
+            if attempt:
+                snap = self._state()
             try:
-                return self._try_commit(base + 1, "overwrite", add, live, schema)
+                return self._try_commit(
+                    snap, "overwrite", add, sorted(snap.files), schema
+                )
             except CommitConflict:
                 continue
         raise CommitConflict(f"overwrite lost {max_retries} commit races")
@@ -2240,10 +2326,11 @@ class AcidTable:
                 "(use overwrite() to replace the whole table)"
             )
         self._reject_reserved_row_id(df)
-        df = self._apply_defaults(df)
+        snap = self._state()
+        df = self._apply_defaults(df, snap)
         identity = sorted(
             k[len(self._IDENTITY_PREFIX):]
-            for k in self.properties()
+            for k in snap.props
             if k.startswith(self._IDENTITY_PREFIX)
         )
         for c in identity:
@@ -2257,8 +2344,8 @@ class AcidTable:
                     "not supported: replaced rows are re-minted fresh ids, "
                     "so no incoming row could satisfy the predicate"
                 )
-        df = self._apply_generated(df)
-        self._enforce_constraints(df)
+        df = self._apply_generated(df, snap)
+        self._enforce_constraints(df, snap.props)
         # replaceWhere contract: new rows must match the predicate
         logical_pred = _filters_to_predicate(filters)
         bad = df.filter(~logical_pred | logical_pred.isNull()).limit(1).collect()
@@ -2267,24 +2354,25 @@ class AcidTable:
                 f"replaceWhere violation: incoming row {bad[0].asDict()!r} "
                 f"does not satisfy {filters!r}"
             )
-        colmap = self._colmap()
+        colmap = snap.colmap
         phys_filters = self._phys_filters(filters, colmap)
         pred = _filters_to_predicate(phys_filters)
         if not identity:  # stage once; retries only re-read the log
             add_new, schema = self._stage_actions(
                 self._physicalize(df, colmap),
-                partition_by=self._phys_partition_by(partition_by, colmap),
+                partition_by=self._phys_partition_by(partition_by, snap),
             )
-        for _ in range(max_retries):
-            base = self.latest_version()
+        for attempt in range(max_retries):
+            if attempt:
+                snap = self._state()
             new_props = None
             if identity:
                 # identity assignment depends on the watermark at
-                # ``base``, so staging happens per attempt (a lost
+                # ``snap``, so staging happens per attempt (a lost
                 # race orphans the staging — vacuum sweeps it) and the
                 # advanced watermark commits WITH the data, exactly
                 # like _append_with_identity.
-                props = self.properties(base) if base >= 0 else self.properties()
+                props = snap.props
                 out = df.withColumn("__mono", F.monotonically_increasing_id())
                 for c in identity:
                     nxt = props[self._IDENTITY_PREFIX + c]["next"]
@@ -2294,7 +2382,7 @@ class AcidTable:
                 out = out.drop("__mono")
                 add_new, schema = self._stage_actions(
                     self._physicalize(out, colmap),
-                    partition_by=self._phys_partition_by(partition_by, colmap),
+                    partition_by=self._phys_partition_by(partition_by, snap),
                 )
                 new_props = dict(props)
                 phys_of = {
@@ -2319,39 +2407,25 @@ class AcidTable:
                         new_props[self._IDENTITY_PREFIX + c] = {
                             "next": int(top) + 1
                         }
-            if base < 0:  # first commit: nothing to replace
+            if snap.version < 0:  # first commit: nothing to replace
                 try:
                     return self._try_commit(
-                        0, "overwrite", add_new, [], schema, props=new_props
+                        snap, "overwrite", add_new, [], schema, props=new_props
                     )
                 except CommitConflict:
                     continue
-            touched, _, schema_json = self._pruned_live(phys_filters, base)
-            dvs = self._resolve_state(base)[4]
+            touched = self._pruned_live(snap, phys_filters)
             add = list(add_new)
-            commit_schema = self._evolve_schema(schema, base)
+            commit_schema = self._evolve_schema(schema, snap)
             if touched:
-                remainder = self._read_for_rewrite(
-                    touched, schema_json, dvs, base
-                ).filter(~pred | pred.isNull())
+                remainder = self._read_for_rewrite(snap, touched).filter(
+                    ~pred | pred.isNull()
+                )
                 add_rem, rem_schema = self._stage_actions(remainder)
                 add = add_rem + add
-                if self._ROW_ID_COL in remainder.columns:
-                    # the remainder rewrite materialized row ids: the
-                    # committed schema must carry the hidden column
-                    d = json.loads(commit_schema)
-                    if not any(
-                        f["name"] == self._ROW_ID_COL for f in d["fields"]
-                    ):
-                        d["fields"].append(
-                            {
-                                "name": self._ROW_ID_COL,
-                                "type": "long",
-                                "nullable": True,
-                                "metadata": {},
-                            }
-                        )
-                        commit_schema = json.dumps(d)
+                commit_schema = self._with_row_id_field(
+                    commit_schema, remainder
+                )
             if new_props is None:
                 # non-identity path: rebase-eligible like delete (the
                 # replaced region is the read+write set; under
@@ -2360,7 +2434,7 @@ class AcidTable:
                 # append — commutes). Identity backfills carry a
                 # watermark props snapshot and must re-plan instead.
                 v = self._commit_or_rebase(
-                    base, "overwrite", add, touched, commit_schema,
+                    snap, "overwrite", add, touched, commit_schema,
                     read_filters=phys_filters,
                 )
                 if v is not None:
@@ -2368,7 +2442,7 @@ class AcidTable:
                 continue
             try:
                 return self._try_commit(
-                    base + 1,
+                    snap,
                     "overwrite",
                     add,
                     touched,
@@ -2411,9 +2485,8 @@ class AcidTable:
         import fnmatch
         import hashlib
 
-        if any(
-            k.startswith(self._IDENTITY_PREFIX) for k in self.properties()
-        ):
+        snap = self._state()
+        if any(k.startswith(self._IDENTITY_PREFIX) for k in snap.props):
             raise ValueError(
                 "COPY INTO an identity-column table is not supported — "
                 "use append(), which assigns identity values"
@@ -2429,15 +2502,13 @@ class AcidTable:
             "copyinto."
             + hashlib.md5(os.path.abspath(src).encode()).hexdigest()[:12]
         )
-        for _ in range(max_retries):
-            base = self.latest_version()
-            _, _, _, props, _ = self._resolve_state(
-                base if base >= 0 else None
-            )
-            loaded = set(props.get(key) or [])
+        for attempt in range(max_retries):
+            if attempt:
+                snap = self._state()
+            loaded = set(snap.props.get(key) or [])
             new = [n for n in names if n not in loaded]
             if not new:
-                return base, 0
+                return snap.version, 0
             reader = self.spark.read.format(fileformat).options(
                 **(options or {})
             )
@@ -2445,13 +2516,10 @@ class AcidTable:
             # table's LOGICAL schema when one exists — types line up
             # with the target instead of being re-inferred per batch
             # (Delta COPY INTO's behavior); parquet self-describes
+            colmap = snap.colmap
             if fileformat in ("csv", "json", "text"):
-                _, schema_json, _, _, _ = self._resolve_state(
-                    base if base >= 0 else None
-                )
-                if schema_json is not None:
-                    colmap = self._colmap()
-                    phys = T.StructType.fromJson(json.loads(schema_json))
+                if snap.schema_json is not None:
+                    phys = T.StructType.fromJson(json.loads(snap.schema_json))
                     logical = T.StructType(
                         [
                             T.StructField(
@@ -2468,24 +2536,23 @@ class AcidTable:
             # frame lacks — same contract as append. (A schema-forced
             # csv/json read pads a missing field as NULL rather than
             # dropping the column, and NULL-supplied is not absent.)
-            df = self._apply_defaults(df)
-            df = self._apply_generated(df)
-            self._enforce_constraints(df)
-            colmap = self._colmap()
+            df = self._apply_defaults(df, snap)
+            df = self._apply_generated(df, snap)
+            self._enforce_constraints(df, snap.props)
             add, schema = self._stage_actions(
                 self._physicalize(df, colmap),
-                partition_by=self._phys_partition_by(None, colmap),
+                partition_by=self._phys_partition_by(None, snap),
             )
-            newprops = dict(props)
+            newprops = dict(snap.props)
             newprops[key] = sorted(loaded | set(new))
             try:
                 return (
                     self._try_commit(
-                        base + 1,
+                        snap,
                         "copyinto",
                         add,
                         [],
-                        self._evolve_schema(schema, base),
+                        self._evolve_schema(schema, snap),
                         props=newprops,
                     ),
                     len(new),
@@ -2509,7 +2576,7 @@ class AcidTable:
             return True
         return b.typeName() in cls._WIDEN.get(a.typeName(), set())
 
-    def _evolve_schema(self, staged_json: str, base: int) -> str:
+    def _evolve_schema(self, staged_json: str, base: Snapshot) -> str:
         """Append-path schema evolution: the commit's schema is the
         field-wise WIDENING of the committed schema with the staged
         batch's. An append may add columns (additive evolution) and
@@ -2517,11 +2584,9 @@ class AcidTable:
         never NARROW or DROP the committed schema — without this, a
         batch written before an add_columns/widen_column landed would
         silently revert the evolution for every later reader (the
-        latest commit's schema wins in _resolve_state). Incompatible
+        latest commit's schema wins in a snapshot). Incompatible
         same-name types (string vs int) are rejected by name."""
-        if base < 0:
-            return staged_json
-        _, cur_json, _, _, _ = self._resolve_state(base)
+        cur_json = base.schema_json
         if cur_json is None or cur_json == staged_json:
             return staged_json
         cur = T.StructType.fromJson(json.loads(cur_json))
@@ -2563,26 +2628,20 @@ class AcidTable:
         semantics as ``append``/``overwrite``; data files are never
         rewritten on a lost race."""
         for _ in range(max_retries):
-            base = self.latest_version()
-            if txn is not None:
-                last = self.last_txn_batch(txn[0], as_of=base)
-                if last is not None and txn[1] <= last:
-                    return base
-            remove: list[str] = []
-            if overwrite:
-                live, _ = self._resolve(base if base >= 0 else None)
-                remove = live
+            snap = self._state()
+            if snap.holds(txn):
+                return snap.version
             try:
                 return self._try_commit(
-                    base + 1,
+                    snap,
                     "overwrite" if overwrite else "append",
                     add,
-                    remove,
+                    sorted(snap.files) if overwrite else [],
                     # an overwrite REPLACES the schema; an append may
                     # only widen it (see _evolve_schema)
                     schema_json
                     if overwrite
-                    else self._evolve_schema(schema_json, base),
+                    else self._evolve_schema(schema_json, snap),
                     txn,
                 )
             except CommitConflict:
@@ -2646,8 +2705,14 @@ class AcidTable:
         persisted it, else the file's manifest base + row position.
         The hidden ``__row_id`` physical column itself never surfaces
         on either path."""
-        files, schema = self._resolve(as_of)
-        colmap = self._colmap(as_of)
+        return self._snapshot_df(self._state(as_of), with_row_ids=with_row_ids)
+
+    def _snapshot_df(
+        self, snap: Snapshot, *, with_row_ids: bool = False
+    ) -> DataFrame:
+        """``snapshot()`` of an already-resolved Snapshot."""
+        files, schema = sorted(snap.files), snap.schema_json
+        colmap = snap.colmap
         if not files:
             if schema is None:
                 raise ValueError(f"table {self.path} has no commits")
@@ -2665,19 +2730,18 @@ class AcidTable:
         # committed-schema scan: additive evolution (older files read
         # missing columns as typed nulls) AND type widening resolve in
         # the parquet reader itself — see _read_files
-        state = self._resolve_state(as_of)
         df = self._read_files(files, schema)
         if with_row_ids:
-            if not self._row_tracking_on(state[3]):
+            if not self._row_tracking_on(snap):
                 raise ValueError(
                     "row tracking is not enabled (set_row_tracking())"
                 )
             # coords come off the scan relation BEFORE the DV anti-join
             # hides _metadata; the base join happens after the mask
             df = self._row_id_coords(df)
-        df = self._apply_dvs(df, files, state[4])
+        df = self._apply_dvs(df, files, snap.dvs)
         if with_row_ids:
-            df = self._attach_row_ids(df, files, state[0])
+            df = self._attach_row_ids(df, files, snap.files)
         df = self._logicalize(
             df, colmap, keep=("_row_id",) if with_row_ids else ()
         )
@@ -2891,15 +2955,14 @@ class AcidTable:
         )
         return out.join(F.broadcast(tomb), ["__fp", "__ri"], "left_anti")
 
-    def _pruned_live(
-        self, filters, as_of: int | None = None
-    ) -> tuple[list[str], int, str | None]:
-        """(surviving file paths, total live count, schema) — the
-        planning half of ``scan``, separated so tests (and callers that
-        only want the file count) can observe pruning directly."""
-        live, schema = self._resolve_actions(as_of)
-        kept = sorted(p for p, st in live.items() if _file_may_match(st, filters))
-        return kept, len(live), schema
+    @staticmethod
+    def _pruned_live(snap: Snapshot, filters) -> list[str]:
+        """The live files of ``snap`` whose stats may match the
+        physical ``filters``, sorted — the planning half of ``scan``,
+        separated so tests can observe pruning directly."""
+        return sorted(
+            p for p, st in snap.files.items() if _file_may_match(st, filters)
+        )
 
     def scan(self, filters=(), as_of: int | None = None) -> DataFrame:
         """Manifest-pruned snapshot read — Iceberg's planning step.
@@ -2919,10 +2982,11 @@ class AcidTable:
         time) an equality filter on the cluster column prunes to that
         partition's files — at 100 TB the difference between a
         one-file point read and a full-manifest scan."""
-        colmap = self._colmap(as_of)
+        snap = self._state(as_of)
+        colmap, schema = snap.colmap, snap.schema_json
         filters = self._phys_filters(filters, colmap)
         pred = _filters_to_predicate(filters)  # validates ops up front
-        kept, _, schema = self._pruned_live(filters, as_of)
+        kept = self._pruned_live(snap, filters)
         if not kept:
             if schema is None:
                 raise ValueError(f"table {self.path} has no commits")
@@ -2932,11 +2996,7 @@ class AcidTable:
                 ),
                 colmap,
             ).drop(self._ROW_ID_COL)
-        df = self._apply_dvs(
-            self._read_files(kept, schema),
-            kept,
-            self._resolve_state(as_of)[4],
-        )
+        df = self._apply_dvs(self._read_files(kept, schema), kept, snap.dvs)
         out = self._logicalize(df.filter(pred) if filters else df, colmap)
         return out.drop(self._ROW_ID_COL)
 
@@ -2948,15 +3008,14 @@ class AcidTable:
         scale it is O(manifest), where a predicate delete would
         pointlessly rewrite nothing into nothing."""
         for _ in range(max_retries):
-            base = self.latest_version()
-            if base < 0:
+            snap = self._state()
+            if snap.version < 0:
                 raise ValueError(f"table {self.path} has no commits")
-            live, schema_json, _, _, _ = self._resolve_state(base)
-            if not live:
-                return base  # already empty: no commit
+            if not snap.files:
+                return snap.version  # already empty: no commit
             try:
                 return self._try_commit(
-                    base + 1, "delete", [], sorted(live), schema_json, None
+                    snap, "delete", [], sorted(snap.files), snap.schema_json
                 )
             except CommitConflict:
                 continue
@@ -2990,46 +3049,41 @@ class AcidTable:
         blanket ``enableDeletionVectors`` table property."""
         if not filters:
             raise ValueError("delete() requires at least one filter")
-        if mode is None:
-            mode = self._default_write_mode("delete.mode")
-        if mode not in ("copy_on_write", "merge_on_read"):
-            raise ValueError(f"unknown delete mode {mode!r}")
-        filters = self._phys_filters(filters)
-        pred = _filters_to_predicate(filters)
         for _ in range(max_retries):
-            base = self.latest_version()
-            if base < 0:
+            snap = self._state()
+            verb_mode = self._default_write_mode(snap, "delete", mode)
+            if snap.version < 0:
                 raise ValueError(f"table {self.path} has no commits")
-            touched, _, schema_json = self._pruned_live(filters, base)
+            phys_filters = self._phys_filters(filters, snap.colmap)
+            pred = _filters_to_predicate(phys_filters)
+            touched = self._pruned_live(snap, phys_filters)
             if not touched:
-                return base  # provably nothing to delete: no commit
-            live, _, _, props, dvs = self._resolve_state(base)
-            raw = self._read_files(touched, schema_json)
-            if mode == "merge_on_read":
+                return snap.version  # provably nothing to delete: no commit
+            if verb_mode == "merge_on_read":
+                raw = self._read_files(touched, snap.schema_json)
                 hits = (
-                    self._with_dv_coords(raw, touched, dvs)
+                    self._with_dv_coords(raw, touched, snap.dvs)
                     .filter(pred)
                     .select("__fp", "__ri")
                 )
                 entries = self._dv_entries_from(
-                    hits, touched, dvs,
-                    row_bound=self._touched_row_bound(live, touched),
+                    hits, touched, snap.dvs,
+                    row_bound=self._touched_row_bound(snap.files, touched),
                 )
                 if not entries:
-                    return base  # stats false-positive: nothing matched
+                    return snap.version  # stats false-positive: no match
                 v = self._commit_or_rebase(
-                    base, "delete", [], [], schema_json,
-                    dv=entries, read_filters=filters,
+                    snap, "delete", [], [], snap.schema_json,
+                    dv=entries, read_filters=phys_filters,
                 )
                 if v is not None:
-                    return self._auto_maintain(v, props_hint=props)
+                    return self._auto_maintain(snap, v)
                 continue  # true overlap: re-plan
-            remaining = self._read_for_rewrite(
-                touched, schema_json, dvs, base
-            ).filter(~pred)
+            remaining = self._read_for_rewrite(snap, touched).filter(~pred)
             add, schema = self._stage_actions(remaining)
             v = self._commit_or_rebase(
-                base, "delete", add, touched, schema, read_filters=filters
+                snap, "delete", add, touched, schema,
+                read_filters=phys_filters,
             )
             if v is not None:
                 return v
@@ -3073,31 +3127,25 @@ class AcidTable:
         before anything is committed."""
         if not assignments:
             raise ValueError("update() requires at least one assignment")
-        if mode is None:
-            mode = self._default_write_mode("update.mode")
-        if mode not in ("copy_on_write", "merge_on_read"):
-            raise ValueError(f"unknown update mode {mode!r}")
         # row-level predicate + assignments run in LOGICAL column space;
-        # manifest pruning runs on physical stats keys
+        # manifest pruning runs on physical stats keys — against the
+        # column map of the snapshot each attempt commits on
         pred = _filters_to_predicate(filters)
-        colmap = self._colmap()
-        phys_filters = self._phys_filters(filters, colmap)
         for _ in range(max_retries):
-            base = self.latest_version()
-            if base < 0:
+            snap = self._state()
+            verb_mode = self._default_write_mode(snap, "update", mode)
+            if snap.version < 0:
                 raise ValueError(f"table {self.path} has no commits")
-            touched, _, schema_json = self._pruned_live(phys_filters, base)
+            colmap = snap.colmap
+            phys_filters = self._phys_filters(filters, colmap)
+            touched = self._pruned_live(snap, phys_filters)
             if not touched:
-                return base  # provably nothing to update: no commit
-            live, _, _, props, dvs = self._resolve_state(base)
-            raw = self._read_files(touched, schema_json)
+                return snap.version  # provably nothing to update: no commit
             # rewrite read: row ids (when tracked) materialize into the
             # hidden column and flow through assignment untouched —
-            # Delta semantics, UPDATE preserves row identity. (raw
-            # stays the bare scan: the MOR branch needs _metadata.)
+            # Delta semantics, UPDATE preserves row identity.
             masked = self._logicalize(
-                self._read_for_rewrite(touched, schema_json, dvs, base),
-                colmap,
+                self._read_for_rewrite(snap, touched), colmap
             )
             if self._ROW_ID_COL in assignments:
                 raise ValueError(
@@ -3120,10 +3168,12 @@ class AcidTable:
                     for c in masked.columns
                 ]
             )
-            if mode == "merge_on_read":
+            if verb_mode == "merge_on_read":
+                # the bare scan: coordinates need the _metadata column
+                raw = self._read_files(touched, snap.schema_json)
                 hits = (
                     self._logicalize(
-                        self._with_dv_coords(raw, touched, dvs),
+                        self._with_dv_coords(raw, touched, snap.dvs),
                         colmap,
                         keep=("__fp", "__ri"),
                     )
@@ -3131,27 +3181,27 @@ class AcidTable:
                     .select("__fp", "__ri")
                 )
                 entries = self._dv_entries_from(
-                    hits, touched, dvs,
-                    row_bound=self._touched_row_bound(live, touched),
+                    hits, touched, snap.dvs,
+                    row_bound=self._touched_row_bound(snap.files, touched),
                 )
                 if not entries:
-                    return base  # stats false-positive: nothing matched
-                self._enforce_constraints(updated_rows)
-                self._check_generated(updated_rows)
+                    return snap.version  # stats false-positive: no match
+                self._enforce_constraints(updated_rows, snap.props)
+                self._check_generated(updated_rows, snap.props)
                 add, schema = self._stage_actions(
                     self._physicalize(updated_rows, colmap)
                 )
                 v = self._commit_or_rebase(
-                    base, "update", add, [], schema,
+                    snap, "update", add, [], schema,
                     dv=entries, read_filters=phys_filters,
                 )
                 if v is not None:
-                    return self._auto_maintain(v, props_hint=props)
+                    return self._auto_maintain(snap, v)
                 continue  # true overlap: re-plan
             if masked.filter(pred).limit(1).first() is None:
-                return base  # stats false-positive: nothing matched
-            self._enforce_constraints(updated_rows)
-            self._check_generated(updated_rows)
+                return snap.version  # stats false-positive: nothing matched
+            self._enforce_constraints(updated_rows, snap.props)
+            self._check_generated(updated_rows, snap.props)
             rewritten = masked.select(
                 *[
                     F.when(pred, new_value(c)).otherwise(F.col(c)).alias(c)
@@ -3164,7 +3214,7 @@ class AcidTable:
                 self._physicalize(rewritten, colmap)
             )
             v = self._commit_or_rebase(
-                base, "update", add, touched, schema,
+                snap, "update", add, touched, schema,
                 read_filters=phys_filters,
             )
             if v is not None:
@@ -3228,12 +3278,11 @@ class AcidTable:
         ``with_row_ids``."""
         from data_lake_demo_spark.streaming import acid_source as src
 
-        until = self.latest_version() if until_version is None else until_version
-        live_new, schema_new, _, props_new, dv_new = self._resolve_state(until)
-        live_old, schema_old, _, _, dv_old = self._resolve_state(since_version)
-        if (with_row_ids or as_images) and not self._row_tracking_on(
-            props_new
-        ):
+        new = self._state(until_version)
+        old = self._state(since_version)
+        live_new, schema_new, dv_new = new.files, new.schema_json, new.dvs
+        live_old, schema_old, dv_old = old.files, old.schema_json, old.dvs
+        if (with_row_ids or as_images) and not self._row_tracking_on(new):
             raise ValueError(
                 "row tracking is not enabled (set_row_tracking())"
                 + (" — as_images pairs on _row_id" if as_images else "")
@@ -3265,12 +3314,12 @@ class AcidTable:
             parts = src._diff_partitions(
                 self.path, (added, dv_new, live_new),
                 (removed, dv_old, live_old),
-                until, 0.0, "", with_row_ids or as_images,
+                new.version, 0.0, "", with_row_ids or as_images,
             )
             out = src._change_frame(
                 self.spark, parts, fields, with_row_ids, as_images
             )
-            return self._logicalize(out, keep=keep)
+            return self._logicalize(out, new.colmap, keep=keep)
         label, paths, dvs, side_schema, live = (
             ("insert", added, dv_new, schema_json, live_new)
             if added
@@ -3296,7 +3345,7 @@ class AcidTable:
             *(["_row_id"] if with_row_ids else []),
             F.lit(label).alias("_change_type"),
         )
-        return self._logicalize(out, keep=keep)
+        return self._logicalize(out, new.colmap, keep=keep)
 
     def restore(self, version: int, *, max_retries: int = 5) -> int:
         """RESTORE TABLE TO VERSION AS OF — roll the live set back to
@@ -3313,9 +3362,9 @@ class AcidTable:
         properties — so a column rename/drop (colmap), constraint, or
         identity watermark added after ``version`` rolls back with the
         rows it described."""
-        target_live, target_schema, _, target_props, target_dvs = (
-            self._resolve_state(version)
-        )
+        target = self._state(version)
+        target_live, target_schema = target.files, target.schema_json
+        target_dvs = target.dvs
         if target_schema is None:
             raise ValueError(f"version {version} has no schema to restore")
         add = [{"path": p, "stats": s} for p, s in sorted(target_live.items())]
@@ -3331,14 +3380,13 @@ class AcidTable:
             for p in sorted(target_live)
         ]
         for _ in range(max_retries):
-            base = self.latest_version()
-            live, _ = self._resolve(base)
-            remove = [p for p in live if p not in target_live]
-            props_out = dict(target_props)
+            snap = self._state()
+            remove = sorted(p for p in snap.files if p not in target_live)
+            props_out = dict(target.props)
             # row-id watermark NEVER rolls back: restoring the target's
             # (lower) watermark would let later writes re-mint ids a
             # CDC consumer already observed between target and restore
-            cur_rt = self.properties(base).get(self._ROWTRACKING_KEY)
+            cur_rt = snap.props.get(self._ROWTRACKING_KEY)
             tgt_rt = props_out.get(self._ROWTRACKING_KEY)
             if cur_rt and (
                 tgt_rt is None or int(cur_rt["next"]) > int(tgt_rt["next"])
@@ -3346,7 +3394,7 @@ class AcidTable:
                 props_out[self._ROWTRACKING_KEY] = dict(cur_rt)
             try:
                 return self._try_commit(
-                    base + 1, "restore", add, remove, target_schema,
+                    snap, "restore", add, remove, target_schema,
                     dv=dv_entries, props=props_out,
                 )
             except CommitConflict:
@@ -3365,25 +3413,20 @@ class AcidTable:
     # map logical -> physical); every hook is a no-op when the table
     # has no mapping, so unmapped tables pay zero overhead.
 
-    def _colmap(self, as_of: int | None = None) -> dict[str, str]:
-        """physical -> logical name map ("" marks a dropped column)."""
-        return dict(self.properties(as_of).get("colmap") or {})
-
-    def _logical_view(self, as_of: int | None = None) -> dict[str, str]:
+    def _logical_view(self, snap: Snapshot) -> dict[str, str]:
         """physical -> logical for the NON-dropped columns at
-        ``as_of`` (identity when unmapped). Physical columns are the
+        ``snap`` (identity when unmapped). Physical columns are the
         committed schema's fields UNIONED with every live file's
         stats-derived columns — the commit schema is the LAST write's
         shape, but additive evolution means an earlier wide file's
         columns are still readable (mergeSchema) and must stay
         renameable/droppable."""
-        live, schema, _, props, _ = self._resolve_state(as_of)
-        if schema is None:
+        if snap.schema_json is None:
             raise ValueError(f"table {self.path} has no commits")
-        colmap = dict(props.get("colmap") or {})
-        phys = [f["name"] for f in json.loads(schema)["fields"]]
+        colmap = snap.colmap
+        phys = [f["name"] for f in json.loads(snap.schema_json)["fields"]]
         seen = set(phys)
-        for stats in live.values():
+        for stats in snap.files.values():
             for k in stats:
                 name = k[len("#null:"):] if k.startswith("#null:") else k
                 if name.startswith("#") or name in seen:
@@ -3397,12 +3440,12 @@ class AcidTable:
                 out[p] = lg
         return out
 
+    @staticmethod
     def _logicalize(
-        self, df: DataFrame, colmap: dict | None = None, keep: Sequence[str] = ()
+        df: DataFrame, colmap: dict, keep: Sequence[str] = ()
     ) -> DataFrame:
         """Physical frame -> logical frame: rename mapped columns,
         hide dropped ones, pass ``keep`` columns through untouched."""
-        colmap = self._colmap() if colmap is None else colmap
         if not colmap:
             return df
         cols = []
@@ -3416,14 +3459,14 @@ class AcidTable:
             cols.append(F.col(c).alias(lg))
         return df.select(*cols)
 
-    def _physicalize(self, df: DataFrame, colmap: dict | None = None) -> DataFrame:
+    @staticmethod
+    def _physicalize(df: DataFrame, colmap: dict) -> DataFrame:
         """Logical frame -> physical frame for staging. Rejects a
         column whose logical name collides with a physical name that
         maps elsewhere (including dropped names): without stable
         column IDs, reusing such a name would silently bind new data
         to an old column — the same restriction Delta places on
         re-adding a mapped/dropped column's original name."""
-        colmap = self._colmap() if colmap is None else colmap
         if not colmap:
             return df
         rev = {lg: ph for ph, lg in colmap.items() if lg}
@@ -3436,33 +3479,33 @@ class AcidTable:
                 )
         return df.select(*[F.col(c).alias(rev.get(c, c)) for c in df.columns])
 
-    def _phys_filters(self, filters, colmap: dict | None = None):
-        colmap = self._colmap() if colmap is None else colmap
+    @staticmethod
+    def _phys_filters(filters, colmap: dict):
         if not colmap or not filters:
             return filters
         rev = {lg: ph for ph, lg in colmap.items() if lg}
         return [(rev.get(c, c), op, v) for c, op, v in filters]
 
-    def _phys_names(self, names: Sequence[str], colmap: dict | None = None):
-        colmap = self._colmap() if colmap is None else colmap
+    @staticmethod
+    def _phys_names(names: Sequence[str], colmap: dict):
         if not colmap:
             return list(names)
         rev = {lg: ph for ph, lg in colmap.items() if lg}
         return [rev.get(n, n) for n in names]
 
     def _phys_partition_by(
-        self, partition_by: Sequence[str] | None, colmap: dict | None = None
+        self, partition_by: Sequence[str] | None, snap: Snapshot
     ):
         """Translate logical column names inside partition specs
-        (plain names and transform arguments) to physical names.
-        ``None`` falls back to the table's DECLARED spec (the
-        ``partition_spec`` property CREATE TABLE ... PARTITIONED BY
-        stores) — pass ``[]`` to write unpartitioned explicitly."""
+        (plain names and transform arguments) to physical names at
+        ``snap``. ``None`` falls back to the table's DECLARED spec
+        (the ``partition_spec`` property CREATE TABLE ... PARTITIONED
+        BY stores) — pass ``[]`` to write unpartitioned explicitly."""
         if partition_by is None:
-            partition_by = self.properties().get("partition_spec")
+            partition_by = snap.props.get("partition_spec")
         if partition_by is None:
             return None
-        colmap = self._colmap() if colmap is None else colmap
+        colmap = snap.colmap
         if not colmap:
             return partition_by
         rev = {lg: ph for ph, lg in colmap.items() if lg}
@@ -3480,12 +3523,12 @@ class AcidTable:
                 out.append(f"{fn}({rev.get(arg, arg)})")
         return out
 
-    def _guard_mapped_name_in_exprs(self, name: str) -> None:
+    def _guard_mapped_name_in_exprs(self, name: str, props: dict) -> None:
         """Refuse to remap a column referenced by a CHECK constraint or
         generated-column expression (enforcement would silently stop
         matching rows — Delta blocks this the same way)."""
         word = re.compile(rf"\b{re.escape(name)}\b")
-        for key, expr in self.properties().items():
+        for key, expr in props.items():
             if key.startswith(self._CONSTRAINT_PREFIX) or key.startswith(
                 self._GENERATED_PREFIX
             ):
@@ -3494,7 +3537,7 @@ class AcidTable:
                         f"column {name!r} is referenced by {key!r} ({expr});"
                         " drop that constraint/generated column first"
                     )
-        if self._GENERATED_PREFIX + name in self.properties():
+        if self._GENERATED_PREFIX + name in props:
             raise ValueError(
                 f"column {name!r} is a generated column; drop the"
                 " generation expression first"
@@ -3506,13 +3549,14 @@ class AcidTable:
         Time travel shows the name each version had."""
         if not re.match(r"^[A-Za-z_][A-Za-z0-9_]*$", new):
             raise ValueError(f"invalid column name {new!r}")
-        view = self._logical_view()
+        snap = self._state()
+        view = self._logical_view(snap)
         if old not in view.values():
             raise ValueError(f"no column {old!r} (have {sorted(view.values())})")
         if new in view.values():
             raise ValueError(f"column {new!r} already exists")
-        self._guard_mapped_name_in_exprs(old)
-        colmap = self._colmap()
+        self._guard_mapped_name_in_exprs(old, snap.props)
+        colmap = snap.colmap
         if new in colmap and colmap[new] != new:
             raise ValueError(
                 f"name {new!r} is reserved by a renamed/dropped physical column"
@@ -3526,7 +3570,7 @@ class AcidTable:
         # them up against the current schema): migrate the key in the
         # SAME commit or the rename silently sheds identity semantics
         ik = self._IDENTITY_PREFIX + old
-        cur = self.properties()
+        cur = snap.props
         if ik in cur:
             updates[ik] = None
             updates[self._IDENTITY_PREFIX + new] = cur[ik]
@@ -3547,27 +3591,28 @@ class AcidTable:
         existing files (hidden by every reader) until a rewrite
         (compact / merge / CoW update) naturally ages it out. The name
         becomes reserved — re-adding it would rebind old data."""
-        view = self._logical_view()
+        snap = self._state()
+        view = self._logical_view(snap)
         if name not in view.values():
             raise ValueError(f"no column {name!r} (have {sorted(view.values())})")
         if len(view) == 1:
             raise ValueError("cannot drop the only column")
-        self._guard_mapped_name_in_exprs(name)
+        self._guard_mapped_name_in_exprs(name, snap.props)
         # Delta blocks dropping a clustering column outright (the key
         # would dangle and every later OPTIMIZE / auto-compact would
         # fail AFTER its data commit already succeeded)
-        if name in (self.properties().get(self._CLUSTERING_KEY) or []):
+        if name in (snap.props.get(self._CLUSTERING_KEY) or []):
             raise ValueError(
                 f"column {name!r} is a clustering column; run "
                 "set_clustering / ALTER TABLE ... CLUSTER BY without it first"
             )
-        colmap = self._colmap()
+        colmap = snap.colmap
         phys = next(p for p, l in view.items() if l == name)
         colmap[phys] = ""
         updates: dict = {"colmap": colmap}
         # dropping an identity column retires its watermark in the
         # same commit (a stale key would break every later append)
-        if self._IDENTITY_PREFIX + name in self.properties():
+        if self._IDENTITY_PREFIX + name in snap.props:
             updates[self._IDENTITY_PREFIX + name] = None
         return self.set_properties(updates)
 
@@ -3591,28 +3636,25 @@ class AcidTable:
             ", ".join(f"{n} {t}" for n, t in columns.items())
         )
         for _ in range(max_retries):
-            base = self.latest_version()
-            _, schema, _, _, _ = self._resolve_state(
-                base if base >= 0 else None
-            )
-            if schema is None:
+            snap = self._state()
+            if snap.schema_json is None:
                 raise ValueError(
                     f"table {self.path} has no commits (append a first "
                     "snapshot before evolving the schema)"
                 )
-            view = self._logical_view(base)
+            view = self._logical_view(snap)
             taken = set(view.values()) | set(view.keys())
             clash = [n for n in columns if n in taken]
             if clash:
                 raise ValueError(f"columns already exist: {clash}")
-            cur = T.StructType.fromJson(json.loads(schema))
+            cur = T.StructType.fromJson(json.loads(snap.schema_json))
             widened = T.StructType(
                 cur.fields
                 + [f for f in added.fields if f.name not in cur.names]
             )
             try:
                 return self._try_commit(
-                    base + 1, "add_columns", [], [], widened.json()
+                    snap, "add_columns", [], [], widened.json()
                 )
             except CommitConflict:
                 continue
@@ -3647,23 +3689,20 @@ class AcidTable:
         need a rewrite, not metadata. Time travel is honored: versions
         before the widening read (and type) as they were committed."""
         target = T.StructType.fromDDL(f"x {new_type}").fields[0].dataType
-        view = self._logical_view()
-        if name not in view.values():
-            raise ValueError(f"no column {name!r} (have {sorted(view.values())})")
-        phys = next(p for p, l in view.items() if l == name)
         for _ in range(max_retries):
-            base = self.latest_version()
-            _, schema, _, props, _ = self._resolve_state(
-                base if base >= 0 else None
-            )
-            if schema is None:
-                raise ValueError(f"table {self.path} has no commits")
-            cur = T.StructType.fromJson(json.loads(schema))
+            snap = self._state()
+            view = self._logical_view(snap)
+            if name not in view.values():
+                raise ValueError(
+                    f"no column {name!r} (have {sorted(view.values())})"
+                )
+            phys = next(p for p, l in view.items() if l == name)
+            cur = T.StructType.fromJson(json.loads(snap.schema_json))
             old = next((f.dataType for f in cur.fields if f.name == phys), None)
             if old is None:
                 raise ValueError(f"no physical column {phys!r} in schema")
             if old == target:
-                return base  # idempotent
+                return snap.version  # idempotent
             ok = target.typeName() in self._WIDEN.get(old.typeName(), set())
             if (
                 isinstance(old, T.DecimalType)
@@ -3696,7 +3735,7 @@ class AcidTable:
             # would crash (or mistype) on mixed int/long files. Stamp
             # the reader feature so old engine builds fail fast by name
             # instead (the Delta table-features contract).
-            newprops = dict(props)
+            newprops = dict(snap.props)
             proto = dict(newprops.get(self._PROTOCOL_KEY) or {})
             proto["reader_features"] = sorted(
                 set(proto.get("reader_features") or []) | {"typeWidening"}
@@ -3704,7 +3743,7 @@ class AcidTable:
             newprops[self._PROTOCOL_KEY] = proto
             try:
                 return self._try_commit(
-                    base + 1,
+                    snap,
                     "widen_column",
                     [],
                     [],
@@ -3724,9 +3763,9 @@ class AcidTable:
         stats JSON. Built from the log plus driver-side ``stat()``
         calls — no data file is opened, so it stays cheap at any table
         size (cost scales with file COUNT, like any planner pass)."""
-        live, _, _, _, dvs = self._resolve_state(as_of)
+        snap = self._state(as_of)
         rows = []
-        for p, stats in sorted(live.items()):
+        for p, stats in sorted(snap.files.items()):
             n = stats.get("#rows")
             try:
                 size = os.path.getsize(os.path.join(self.path, p))
@@ -3737,7 +3776,7 @@ class AcidTable:
                     p,
                     n[0] if n else None,
                     size,
-                    _dv_count(dvs.get(p)),
+                    _dv_count(snap.dvs.get(p)),
                     json.dumps(stats),
                 )
             )
@@ -3760,9 +3799,9 @@ class AcidTable:
         ``bucket(n, col)`` transforms are hash-valued and can never be
         recovered from value bounds — their component is always NULL.
         Log + stat metadata only; zero data reads."""
-        spec = self.properties(as_of).get("partition_spec") or []
-        colmap = self._colmap(as_of)
-        rev = {lg: ph for ph, lg in colmap.items() if lg}
+        snap = self._state(as_of)
+        spec = snap.props.get("partition_spec") or []
+        rev = {lg: ph for ph, lg in snap.colmap.items() if lg}
 
         def part_value(stats: dict, one: str):
             m = self._TRANSFORM_RE.match(one)
@@ -3793,9 +3832,8 @@ class AcidTable:
             lo, hi = apply(rng[0]), apply(rng[1])
             return str(lo) if lo == hi else None
 
-        live, _, _, _, dvs = self._resolve_state(as_of)
         agg: dict[tuple, list] = {}
-        for p, stats in sorted(live.items()):
+        for p, stats in sorted(snap.files.items()):
             key = tuple(part_value(stats, s) for s in spec)
             row = agg.setdefault(key, [0, 0, 0, 0])
             row[0] += 1
@@ -3805,7 +3843,7 @@ class AcidTable:
                 row[2] += os.path.getsize(os.path.join(self.path, p))
             except OSError:
                 pass
-            row[3] += _dv_count(dvs.get(p))
+            row[3] += _dv_count(snap.dvs.get(p))
         rows = [
             (
                 json.dumps(dict(zip([str(s) for s in spec], key))),
@@ -3873,14 +3911,15 @@ class AcidTable:
         """DESCRIBE DETAIL: one metadata-only summary dict (file and
         row counts, total bytes, DV state, schema column names,
         properties, ref counts)."""
-        live, schema, _, props, dvs = self._resolve_state(as_of)
+        snap = self._state(as_of)
+        schema, props = snap.schema_json, snap.props
         size = 0
-        for p in live:
+        for p in snap.files:
             try:
                 size += os.path.getsize(os.path.join(self.path, p))
             except OSError:
                 pass
-        colmap = dict(props.get("colmap") or {})
+        colmap = snap.colmap
         cols = [
             colmap.get(f["name"], f["name"])
             for f in json.loads(schema)["fields"]
@@ -3888,15 +3927,15 @@ class AcidTable:
         cols = [c for c in cols if c != ""]
         return {
             "location": self.path,
-            "num_files": len(live),
+            "num_files": len(snap.files),
             "size_bytes": size,
             "num_rows": self.row_count(as_of),
-            "num_deletion_vectors": len(dvs),
+            "num_deletion_vectors": len(snap.dvs),
             "columns": cols,
             "clustering_columns": list(props.get(self._CLUSTERING_KEY) or []),
             "isolation_level": props.get("isolationLevel")
             or "write_serializable",
-            "properties": props,
+            "properties": dict(props),
             "num_tags": len(self.tags()),
             "num_branches": len(self.branches()),
             "latest_version": self.latest_version(),
@@ -3978,17 +4017,16 @@ class AcidTable:
         rule stands — don't vacuum main while such a branch sits
         unpublished longer than ``grace_seconds``."""
         self._check_ref_name(name)
-        base = self.latest_version()
-        if base < 0:
+        snap = self._state()
+        if snap.version < 0:
             raise ValueError(f"table {self.path} has no commits to branch")
         try:
             self.log.put_if_absent(
                 f"branch-{name}.ref",
-                json.dumps({"base": base, "ts": time.time()}).encode(),
+                json.dumps({"base": snap.version, "ts": time.time()}).encode(),
             )
         except FileExistsError:
             raise ValueError(f"branch {name!r} already exists") from None
-        live, schema, _, props, dvs = self._resolve_state(base)
         br = AcidTable(
             self.spark,
             self.path,
@@ -3998,15 +4036,15 @@ class AcidTable:
             bloom_bits=self.bloom_bits,
         )
         br._try_commit(
-            0,
+            _NO_COMMITS,
             "branch",
-            [{"path": p, "stats": s} for p, s in sorted(live.items())],
+            [{"path": p, "stats": s} for p, s in sorted(snap.files.items())],
             [],
-            schema,
-            props=props,
+            snap.schema_json,
+            props=dict(snap.props),
             dv=[
-                {"path": p, "del": dvs[p], "n": _dv_count(dvs[p])}
-                for p in sorted(dvs)
+                {"path": p, "del": v, "n": _dv_count(v)}
+                for p, v in sorted(snap.dvs.items())
             ],
         )
         return br
@@ -4115,8 +4153,19 @@ class AcidTable:
         silently interleave audited state with unaudited writes."""
         base = self._branch_base(name)
         br = self.branch(name, log_store=log_store)
-        live_b, schema_b, _, props_b, dvs_b = br._resolve_state(None)
-        live_base, _, _, props_base, dvs_base = self._resolve_state(base)
+        b_snap = br._state()
+        live_b, schema_b, props_b, dvs_b = (
+            b_snap.files, b_snap.schema_json, b_snap.props, b_snap.dvs
+        )
+        main = self._state()
+        if main.version != base:
+            raise CommitConflict(
+                f"publish of branch {name!r} requires fast-forward: main is"
+                f" at v{main.version}, branch based on v{base} — "
+                "rebase_branch() it onto the new head (or re-branch and "
+                "replay)"
+            )
+        live_base, props_base, dvs_base = main.files, main.props, main.dvs
         adds = [
             {"path": p, "stats": s}
             for p, s in sorted(live_b.items())
@@ -4132,15 +4181,8 @@ class AcidTable:
                     {"path": p, "del": new,
                      "n": _dv_count(new)}
                 )
-        cur = self.latest_version()
-        if cur != base:
-            raise CommitConflict(
-                f"publish of branch {name!r} requires fast-forward: main is"
-                f" at v{cur}, branch based on v{base} — rebase_branch() it"
-                " onto the new head (or re-branch and replay)"
-            )
         return self._try_commit(
-            base + 1,
+            main,
             "publish",
             adds,
             removes,
@@ -4178,15 +4220,23 @@ class AcidTable:
         rebases of the same branch race on the ref slot's
         put-if-absent — exactly one wins."""
         old_base = self._branch_base(name)
-        head = self.latest_version()
+        main = self._state()
+        head = main.version
         if head == old_base:
             return old_base  # already based on head
         br = self.branch(name, log_store=log_store)
-        live_b, schema_b, _, props_b, dvs_b = br._resolve_state(None)
-        live_base, schema_base, _, props_base, dvs_base = self._resolve_state(
-            old_base
+        b_snap = br._state()
+        base_snap = self._state(old_base)
+        live_b, schema_b, props_b, dvs_b = (
+            b_snap.files, b_snap.schema_json, b_snap.props, b_snap.dvs
         )
-        live_m, schema_m, _, props_m, dvs_m = self._resolve_state(head)
+        live_base, schema_base, props_base, dvs_base = (
+            base_snap.files, base_snap.schema_json, base_snap.props,
+            base_snap.dvs,
+        )
+        live_m, schema_m, props_m, dvs_m = (
+            main.files, main.schema_json, main.props, main.dvs
+        )
 
         adds = {p: s for p, s in live_b.items() if p not in live_base}
         removes = {p for p in live_base if p not in live_b}
@@ -4266,7 +4316,7 @@ class AcidTable:
             if target_dvs.get(p, "") != (dvs_b.get(p, "") if p in live_b else "")
         ]
         br._try_commit(
-            br.latest_version() + 1,
+            b_snap,
             "rebase",
             commit_adds,
             commit_removes,
@@ -4316,16 +4366,14 @@ class AcidTable:
                 f"branch {name!r} has no commit v{version}"
             )
         c = br._read_commit(version)
-        parent_dvs = (
-            br._resolve_state(version - 1)[4] if version > 0 else {}
-        )
-        parent_schema = (
-            br._resolve_state(version - 1)[1] if version > 0 else None
-        )
+        parent = br._state(version - 1)
+        parent_dvs, parent_schema = parent.dvs, parent.schema_json
         touched = set(c.remove) | {e["path"] for e in c.dv or ()}
         for _ in range(max_retries):
-            head = self.latest_version()
-            live_m, schema_m, _, _, dvs_m = self._resolve_state(head)
+            main = self._state()
+            head, live_m, schema_m, dvs_m = (
+                main.version, main.files, main.schema_json, main.dvs
+            )
             conflicts = []
             for p in sorted(touched):
                 if p not in live_m:
@@ -4354,7 +4402,7 @@ class AcidTable:
             )
             try:
                 return self._try_commit(
-                    head + 1,
+                    main,
                     "cherrypick",
                     c.add,
                     c.remove,
@@ -4405,18 +4453,18 @@ class AcidTable:
 
     def _touched_files(
         self,
-        live: dict[str, dict],
+        snap: Snapshot,
         updates: DataFrame,
         keys: Sequence[str],
         ranges=None,
         null_safe: bool = False,
     ) -> list[str]:
-        """Manifest-level pruning: a live file can be SKIPPED by the
-        merge when its footer [min, max] range on ANY merge-key column
-        is disjoint from the update batch's range for that column — it
-        provably contains no matchable row. Files without stats for a
-        key column are conservatively touched. One tiny driver agg on
-        the update side; no data file is opened.
+        """Manifest-level pruning: a live file of ``snap`` can be
+        SKIPPED by the merge when its footer [min, max] range on ANY
+        merge-key column is disjoint from the update batch's range for
+        that column — it provably contains no matchable row. Files
+        without stats for a key column are conservatively touched. One
+        tiny driver agg on the update side; no data file is opened.
 
         ``null_safe=True``: a NULL batch key matches NULL keys, so on
         that key only files whose null counts are 0 can be pruned.
@@ -4429,6 +4477,7 @@ class AcidTable:
         keyed on hash-like columns (digests, uuids) prune at all —
         their [min, max] ranges are uniformly wide and the range tier
         never fires."""
+        live = snap.files
         row = ranges if ranges is not None else self._batch_key_ranges(
             updates, keys
         )
@@ -4542,45 +4591,37 @@ class AcidTable:
         INTO), falling back to copy_on_write."""
         from data_lake_demo_spark.operators.upsert import merge_upsert
 
-        if mode is None:
-            mode = self._default_write_mode("merge.mode")
-        if mode not in ("copy_on_write", "merge_on_read"):
-            raise ValueError(f"unknown merge mode {mode!r}")
         self._reject_reserved_row_id(updates)
-        updates = self._apply_generated(updates)
-        self._enforce_constraints(updates)
-        colmap = self._colmap()
-        updates = self._physicalize(updates, colmap)
-        keys = self._phys_names(keys, colmap)
-        partition_by = self._phys_partition_by(partition_by, colmap)
-        dropped = [p for p, l in colmap.items() if l == ""]
+        logical_keys = list(keys)
         for _ in range(max_retries):
-            base = self.latest_version()
-            if txn is not None:
-                # watermark as-of the commit base: a replay landing
-                # after this read makes our base+1 commit conflict,
-                # which re-enters the check (no TOCTOU window)
-                last = self.last_txn_batch(txn[0], as_of=base)
-                if last is not None and txn[1] <= last:
-                    return base
-            live, schema_json, _, props, dvs = self._resolve_state(base)
-            rt_on = self._row_tracking_on(props)
+            snap = self._state()
+            verb_mode = self._default_write_mode(snap, "merge", mode)
+            # watermark as-of the commit base: a replay landing after
+            # this read makes our commit conflict, which re-enters the
+            # check (no TOCTOU window)
+            if snap.holds(txn):
+                return snap.version
+            # write rules and column names resolve against the
+            # snapshot this attempt commits on
+            colmap = snap.colmap
+            ups = self._apply_generated(updates, snap)
+            self._enforce_constraints(ups, snap.props)
+            ups = self._physicalize(ups, colmap)
+            keys = self._phys_names(logical_keys, colmap)
+            phys_part = self._phys_partition_by(partition_by, snap)
             if dedupe_order is None:
                 # ranges + the unique-source-key check in ONE job
                 # (r12: each was its own small sequential Spark job)
-                ranges = self._batch_key_ranges_checked(
-                    updates, keys, "update"
-                )
+                ranges = self._batch_key_ranges_checked(ups, keys, "update")
             else:
-                ranges = self._batch_key_ranges(updates, keys)
-            touched = self._touched_files(live, updates, keys, ranges=ranges)
-            if mode == "merge_on_read":
+                ranges = self._batch_key_ranges(ups, keys)
+            touched = self._touched_files(snap, ups, keys, ranges=ranges)
+            if verb_mode == "merge_on_read":
                 v = self._merge_mor_attempt(
-                    base, updates, keys, touched, schema_json, dvs, props,
+                    snap, ups, keys, touched,
                     dedupe_order=dedupe_order, txn=txn,
-                    partition_by=partition_by, auto_evolve=auto_evolve,
-                    ranges=ranges, live=live,
-                    unique_keys=dedupe_order is None,
+                    partition_by=phys_part, auto_evolve=auto_evolve,
+                    ranges=ranges,
                 )
                 if v is not None:
                     return v
@@ -4591,22 +4632,23 @@ class AcidTable:
                 # predates some files) must up-cast/pad at scan time or
                 # the rewrite narrows the table back and strands wider
                 # live files (unreadable snapshot)
-                target = self._read_for_rewrite(touched, schema_json, dvs, base)
-            elif schema_json is not None:
+                target = self._read_for_rewrite(snap, touched)
+            elif snap.schema_json is not None:
                 target = self.spark.createDataFrame(
-                    [], T.StructType.fromJson(json.loads(schema_json))
+                    [], T.StructType.fromJson(json.loads(snap.schema_json))
                 )
             else:
                 raise ValueError(f"table {self.path} has no commits")
+            dropped = [p for p, l in colmap.items() if l == ""]
             if dropped:  # the rewrite materializes column drops
                 target = target.drop(*dropped)
-            ups = updates
+            rt_on = self._row_tracking_on(snap)
             if rt_on:
                 if self._ROW_ID_COL not in target.columns:
                     target = target.withColumn(
                         self._ROW_ID_COL, F.lit(None).cast("long")
                     )
-                ups = self._inherit_row_ids(updates, target, keys)
+                ups = self._inherit_row_ids(ups, target, keys)
             merged = merge_upsert(
                 target,
                 ups,
@@ -4618,45 +4660,47 @@ class AcidTable:
                 unique_keys=dedupe_order is None,
             )
             if rt_on:
-                merged = self._assign_fresh_row_ids(merged, props)
-            add, schema = self._stage_actions(merged, partition_by=partition_by)
+                merged = self._assign_fresh_row_ids(merged, snap.props)
+            add, schema = self._stage_actions(merged, partition_by=phys_part)
             # rebase-eligible: a winner is disjoint only if it neither
             # touched our files NOR appended rows whose merge-key
             # ranges may intersect the batch's (check_adds=True — a
             # matching append would have changed the matched/
             # not-matched split, under every isolation level)
-            key_filters = [
-                (k, "between", (ranges[f"__lo_{k}"], ranges[f"__hi_{k}"]))
-                for k in keys
-                if ranges[f"__lo_{k}"] is not None
-            ]
             v = self._commit_or_rebase(
-                base,
+                snap,
                 "merge",
                 add,
                 touched,
                 # same widening guard as append: a narrow update
                 # batch must not revert add_columns/widen_column
-                self._evolve_schema(schema, base),
+                self._evolve_schema(schema, snap),
                 txn=txn,
-                read_filters=key_filters if len(key_filters) == len(keys)
-                else [],  # a null-range key: treat any add as a match
+                read_filters=self._key_filters(keys, ranges),
                 check_adds=True,
             )
             if v is None:
                 continue
-            return self._auto_maintain(v, props_hint=props)
+            return self._auto_maintain(snap, v)
         raise CommitConflict(f"merge lost {max_retries} commit races")
+
+    @staticmethod
+    def _key_filters(keys: Sequence[str], ranges) -> list:
+        """The batch's merge-key ranges as rebase-time read filters;
+        empty (any winner add is a match) when a key's range is NULL."""
+        key_filters = [
+            (k, "between", (ranges[f"__lo_{k}"], ranges[f"__hi_{k}"]))
+            for k in keys
+            if ranges[f"__lo_{k}"] is not None
+        ]
+        return key_filters if len(key_filters) == len(keys) else []
 
     def _merge_mor_attempt(
         self,
-        base: int,
+        snap: Snapshot,
         updates: DataFrame,
         keys: Sequence[str],
         touched: list[str],
-        schema_json: str | None,
-        dvs: dict[str, str],
-        props: dict,
         *,
         dedupe_order: str | None,
         txn: tuple[str, int] | None,
@@ -4664,10 +4708,8 @@ class AcidTable:
         auto_evolve: bool,
         ranges=None,
         delete_col: str | None = None,
-        unique_keys: bool = False,
-        live: dict | None = None,
     ) -> int | None:
-        """One merge-on-read MERGE attempt against ``base``: the
+        """One merge-on-read MERGE attempt against ``snap``: the
         matched rows' (file, row-index) coordinates become deletion
         vectors (executor-encoded, sidecar-spilled like any MOR
         delete) and the deduped batch stages as new files — commit is
@@ -4680,29 +4722,25 @@ class AcidTable:
         rows — a retraction is a pure mask, an unmatched delete a
         no-op. ``ranges=None`` skips key-range rebase eligibility:
         any winner add forces a re-plan (merge_apply's conservative
-        contract). Returns the committed version, or None to
-        re-plan."""
-        from data_lake_demo_spark.operators.upsert import (
-            _assert_unique_keys,
-            _latest_per_key,
-        )
+        contract). The batch's keys are unique: callers dedupe by
+        ``dedupe_order`` or prove it in ``_batch_key_ranges_checked``
+        (or take the caller's word, ``merge_apply(unique_keys=True)``).
+        Returns the committed version, or None to re-plan."""
+        from data_lake_demo_spark.operators.upsert import _latest_per_key
 
+        schema_json, dvs = snap.schema_json, snap.dvs
         if schema_json is None:
             raise ValueError(f"table {self.path} has no commits")
         keys = list(keys)
         ups = updates
         if dedupe_order is not None:
             ups = _latest_per_key(ups, keys, dedupe_order)
-        elif not unique_keys:
-            _assert_unique_keys(ups, keys, "update")
-        rt_on = self._row_tracking_on(props)
+        rt_on = self._row_tracking_on(snap)
         dv_entries: list[dict] = []
         target = None
         if touched:
             if rt_on:  # live (dv-masked) rows donate ids to matches
-                target = self._read_for_rewrite(
-                    touched, schema_json, dvs, base
-                )
+                target = self._read_for_rewrite(snap, touched)
             raw = self._read_files(touched, schema_json)
             hits = (
                 self._with_dv_coords(raw, touched, dvs)
@@ -4711,7 +4749,7 @@ class AcidTable:
             )
             dv_entries = self._dv_entries_from(
                 hits, touched, dvs,
-                row_bound=self._touched_row_bound(live, touched),
+                row_bound=self._touched_row_bound(snap.files, touched),
             )
         if delete_col is not None:  # merge_apply: retractions are a
             ups = ups.filter(~F.col(delete_col)).drop(delete_col)  # pure mask
@@ -4723,7 +4761,7 @@ class AcidTable:
         # column lives only in old files, and a physicalized batch can
         # never carry it — aligning against it would NULL-pad forever
         # (auto_evolve) or spuriously raise (strict).
-        colmap_a = dict(props.get("colmap") or {})
+        colmap_a = snap.colmap
         fields = [
             f
             for f in json.loads(schema_json)["fields"]
@@ -4741,33 +4779,25 @@ class AcidTable:
                 out = out.withColumn(
                     self._ROW_ID_COL, F.lit(None).cast("long")
                 )
-            out = self._assign_fresh_row_ids(out, props)
+            out = self._assign_fresh_row_ids(out, snap.props)
         add, schema = self._stage_actions(out, partition_by=partition_by)
         if not add and not dv_entries:
-            return base  # empty batch: provably a no-op, no commit
-        key_filters = []
-        if ranges is not None:
-            key_filters = [
-                (k, "between", (ranges[f"__lo_{k}"], ranges[f"__hi_{k}"]))
-                for k in keys
-                if ranges[f"__lo_{k}"] is not None
-            ]
-            if len(key_filters) != len(keys):
-                key_filters = []  # null-range key: any add is a match
+            return snap.version  # empty batch: provably a no-op, no commit
         v = self._commit_or_rebase(
-            base,
+            snap,
             "merge",
             add,
             [],
-            self._evolve_schema(schema, base),
+            self._evolve_schema(schema, snap),
             txn=txn,
             dv=dv_entries,
-            read_filters=key_filters,
+            read_filters=[] if ranges is None
+            else self._key_filters(keys, ranges),
             check_adds=True,
         )
         if v is None:
             return None
-        return self._auto_maintain(v, props_hint=props)
+        return self._auto_maintain(snap, v)
 
     def merge_apply(
         self,
@@ -4811,82 +4841,74 @@ class AcidTable:
         pruning; the commit is copy-on-write; checks run on what lands."""
         from data_lake_demo_spark.operators.upsert import merge_apply
 
-        if mode is None:
-            mode = self._default_write_mode("merge.mode")
-        if mode not in ("copy_on_write", "merge_on_read"):
-            raise ValueError(f"unknown merge mode {mode!r}")
         self._reject_reserved_row_id(updates)
-        if fold is None:
-            # delete rows never land; only surviving upserts are validated
-            updates = self._apply_generated(
-                updates, check_df=updates.filter(~F.col(delete_col))
-            )
-            self._enforce_constraints(updates.filter(~F.col(delete_col)))
-        colmap = self._colmap()
-        delta = updates
-        updates = self._physicalize(updates, colmap)
-        keys = self._phys_names(keys, colmap)
-        partition_by = self._phys_partition_by(partition_by, colmap)
-        dropped = [p for p, l in colmap.items() if l == ""]
+        logical_keys = list(keys)
         for _ in range(max_retries):
-            base = self.latest_version()
-            if txn is not None:
-                last = self.last_txn_batch(txn[0], as_of=base)
-                if last is not None and txn[1] <= last:
-                    return base
-            live, schema_json, _, props, dvs = self._resolve_state(base)
-            rt_on = self._row_tracking_on(props)
+            snap = self._state()
+            verb_mode = self._default_write_mode(snap, "merge", mode)
+            if snap.holds(txn):
+                return snap.version
+            colmap = snap.colmap
+            ups = updates
+            if fold is None:
+                # delete rows never land; only surviving upserts are
+                # validated
+                ups = self._apply_generated(
+                    ups, snap, check_df=ups.filter(~F.col(delete_col))
+                )
+                self._enforce_constraints(
+                    ups.filter(~F.col(delete_col)), snap.props
+                )
+            ups = self._physicalize(ups, colmap)
+            keys = self._phys_names(logical_keys, colmap)
+            phys_part = self._phys_partition_by(partition_by, snap)
             if fold is None and dedupe_order is None and not unique_keys:
                 # ranges + the unique-source-key check in ONE job;
                 # _touched_files reuses the ranges instead of re-agg'ing
-                ranges = self._batch_key_ranges_checked(
-                    updates, keys, "update"
-                )
-                unique_keys = True
+                ranges = self._batch_key_ranges_checked(ups, keys, "update")
             else:
-                ranges = self._batch_key_ranges(updates, keys)
+                ranges = self._batch_key_ranges(ups, keys)
             touched = self._touched_files(
-                live, updates, keys, ranges=ranges, null_safe=fold is not None
+                snap, ups, keys, ranges=ranges, null_safe=fold is not None
             )
-            if mode == "merge_on_read" and schema_json and not fold:
+            if verb_mode == "merge_on_read" and snap.schema_json and not fold:
                 v = self._merge_mor_attempt(
-                    base, updates, keys, touched, schema_json, dvs, props,
+                    snap, ups, keys, touched,
                     dedupe_order=dedupe_order, txn=txn,
-                    partition_by=partition_by, auto_evolve=auto_evolve,
-                    delete_col=delete_col, unique_keys=unique_keys,
-                    live=live,
+                    partition_by=phys_part, auto_evolve=auto_evolve,
+                    delete_col=delete_col,
                 )
                 if v is not None:
                     return v
                 continue  # true overlap: re-plan against the new head
             if touched:
-                target = self._read_for_rewrite(touched, schema_json, dvs, base)
-            elif schema_json is not None:
+                target = self._read_for_rewrite(snap, touched)
+            elif snap.schema_json is not None:
                 target = self.spark.createDataFrame(
-                    [], T.StructType.fromJson(json.loads(schema_json))
+                    [], T.StructType.fromJson(json.loads(snap.schema_json))
                 )
             else:  # first commit: surviving upserts seed the table
                 target = self.spark.createDataFrame(
-                    [],
-                    (updates if fold else updates.drop(delete_col)).schema,
+                    [], (ups if fold else ups.drop(delete_col)).schema
                 )
+            dropped = [p for p, l in colmap.items() if l == ""]
             if dropped:  # the rewrite materializes column drops
                 target = target.drop(*dropped)
+            rt_on = self._row_tracking_on(snap)
             if rt_on and self._ROW_ID_COL not in target.columns:
                 target = target.withColumn(
                     self._ROW_ID_COL, F.lit(None).cast("long")
                 )
             if fold is not None:
                 rows = self._logicalize(target.drop(self._ROW_ID_COL), colmap)
-                merged = self._apply_generated(fold(rows, delta))
-                self._enforce_constraints(merged)
+                merged = self._apply_generated(fold(rows, updates), snap)
+                self._enforce_constraints(merged, snap.props)
                 merged = self._physicalize(merged, colmap)
                 if rt_on:  # a folded row keeps its key's row id
                     merged = self._inherit_row_ids(merged, target, keys)
             else:
-                ups = updates
                 if rt_on:
-                    ups = self._inherit_row_ids(updates, target, keys)
+                    ups = self._inherit_row_ids(ups, target, keys)
                 merged = merge_apply(
                     target,
                     ups,
@@ -4894,19 +4916,18 @@ class AcidTable:
                     delete_col,
                     dedupe_order=dedupe_order,
                     allow_missing_columns=auto_evolve,
-                    unique_keys=unique_keys,
                 )
             if rt_on:
-                merged = self._assign_fresh_row_ids(merged, props)
-            add, schema = self._stage_actions(merged, partition_by=partition_by)
+                merged = self._assign_fresh_row_ids(merged, snap.props)
+            add, schema = self._stage_actions(merged, partition_by=phys_part)
             try:
                 return self._try_commit(
-                    base + 1,
+                    snap,
                     "merge",
                     add,
                     touched,
                     # same widening guard as append/merge
-                    self._evolve_schema(schema, base),
+                    self._evolve_schema(schema, snap),
                     txn,
                 )
             except CommitConflict:
@@ -4935,36 +4956,35 @@ class AcidTable:
 
         ``txn=(app, batch_id)`` gives the same exactly-once replay
         contract as ``append``/``merge``."""
-        colmap = self._colmap()
-        keys = self._phys_names(keys, colmap)
-        key_set = self._physicalize(
-            keys_df, colmap
-        ).select(*keys).dropDuplicates(keys)
-        partition_by = self._phys_partition_by(partition_by, colmap)
         for _ in range(max_retries):
-            base = self.latest_version()
-            if txn is not None:
-                last = self.last_txn_batch(txn[0], as_of=base)
-                if last is not None and txn[1] <= last:
-                    return base
-            if base < 0:
+            snap = self._state()
+            if snap.holds(txn):
+                return snap.version
+            if snap.version < 0:
                 raise ValueError(f"table {self.path} has no commits")
-            live, schema_json, _, _, dvs = self._resolve_state(base)
-            touched = self._touched_files(live, key_set, keys)
+            colmap = snap.colmap
+            phys_keys = self._phys_names(keys, colmap)
+            key_set = (
+                self._physicalize(keys_df, colmap)
+                .select(*phys_keys)
+                .dropDuplicates(phys_keys)
+            )
+            touched = self._touched_files(snap, key_set, phys_keys)
             if not touched:
-                return base  # no file can contain a matching key
-            remaining = self._read_for_rewrite(
-                touched, schema_json, dvs, base
-            ).join(key_set, on=keys, how="left_anti")
+                return snap.version  # no file can contain a matching key
+            remaining = self._read_for_rewrite(snap, touched).join(
+                key_set, on=phys_keys, how="left_anti"
+            )
             # join strategy stays Catalyst's call: AQE broadcasts a
             # small tombstone batch and shuffle-joins a huge one —
             # pinning broadcast here would OOM the GDPR-scale case
             add, schema = self._stage_actions(
-                remaining, partition_by=partition_by
+                remaining,
+                partition_by=self._phys_partition_by(partition_by, snap),
             )
             try:
                 return self._try_commit(
-                    base + 1, "merge_delete", add, touched, schema, txn
+                    snap, "merge_delete", add, touched, schema, txn
                 )
             except CommitConflict:
                 continue
@@ -5035,26 +5055,22 @@ class AcidTable:
         for free; closed copies and new versions mint fresh)."""
         from data_lake_demo_spark.operators.upsert import scd2_apply
 
-        if mode is None:
-            mode = self._default_write_mode("scd2.mode")
-        if mode not in ("copy_on_write", "merge_on_read"):
-            raise ValueError(f"unknown scd2 mode {mode!r}")
         for _ in range(max_retries):
-            base = self.latest_version()
-            if base < 0:
+            snap = self._state()
+            verb_mode = self._default_write_mode(snap, "scd2", mode)
+            if snap.version < 0:
                 raise ValueError(f"table {self.path} has no commits")
-            if mode == "merge_on_read":
+            if verb_mode == "merge_on_read":
                 v = self._scd2_mor_attempt(
-                    base, changes, key,
+                    snap, changes, key,
                     effective_col=effective_col, current_col=current_col,
                     end_col=end_col, dedupe_order=dedupe_order,
                 )
                 if v is not None:
                     return v
                 continue  # true overlap: re-plan against the new head
-            live, _ = self._resolve(base)
             new_dim = scd2_apply(
-                self.snapshot(base),
+                self._snapshot_df(snap),
                 changes,
                 key,
                 effective_col=effective_col,
@@ -5062,16 +5078,20 @@ class AcidTable:
                 end_col=end_col,
                 dedupe_order=dedupe_order,
             )
-            add, schema = self._stage_actions(self._physicalize(new_dim))
+            add, schema = self._stage_actions(
+                self._physicalize(new_dim, snap.colmap)
+            )
             try:
-                return self._try_commit(base + 1, "scd2", add, live, schema)
+                return self._try_commit(
+                    snap, "scd2", add, sorted(snap.files), schema
+                )
             except CommitConflict:
                 continue
         raise CommitConflict(f"scd2 lost {max_retries} commit races")
 
     def _scd2_mor_attempt(
         self,
-        base: int,
+        snap: Snapshot,
         changes: DataFrame,
         key: str,
         *,
@@ -5080,7 +5100,7 @@ class AcidTable:
         end_col: str,
         dedupe_order: str | None,
     ) -> int | None:
-        """One merge-on-read SCD2 attempt against ``base``: mask the
+        """One merge-on-read SCD2 attempt against ``snap``: mask the
         matched current rows, stage their closed copies + the new
         current versions, commit add + dv (remove nothing). Mirrors
         operators/upsert.scd2_apply's close-out semantics row for
@@ -5090,10 +5110,10 @@ class AcidTable:
 
         if dedupe_order is not None:
             changes = _latest_per_key(changes, [key], dedupe_order)
-        live, schema_json, _, props, dvs = self._resolve_state(base)
+        schema_json, dvs = snap.schema_json, snap.dvs
         if schema_json is None:
             raise ValueError(f"table {self.path} has no commits")
-        colmap = self._colmap(base)
+        colmap = snap.colmap
         phys_changes = self._physicalize(changes, colmap)
         phys_key = self._phys_names([key], colmap)[0]
         if dedupe_order is not None:
@@ -5105,7 +5125,7 @@ class AcidTable:
                 phys_changes, [phys_key], "change"
             )
         touched = self._touched_files(
-            live, phys_changes, [phys_key], ranges=ranges
+            snap, phys_changes, [phys_key], ranges=ranges
         )
         dv_entries: list[dict] = []
         closing = None
@@ -5126,7 +5146,7 @@ class AcidTable:
             )
             dv_entries = self._dv_entries_from(
                 matched_cur.select("__fp", "__ri"), touched, dvs,
-                row_bound=self._touched_row_bound(live, touched),
+                row_bound=self._touched_row_bound(snap.files, touched),
             )
             closing = (
                 matched_cur.drop("__fp", "__ri")
@@ -5161,20 +5181,20 @@ class AcidTable:
         )
         add, schema = self._stage_actions(self._physicalize(out, colmap))
         if not add and not dv_entries:
-            return base
+            return snap.version
         v = self._commit_or_rebase(
-            base,
+            snap,
             "scd2",
             add,
             [],
-            self._evolve_schema(schema, base),
+            self._evolve_schema(schema, snap),
             dv=dv_entries,
             read_filters=[],  # any winner add may be a changed key
             check_adds=True,
         )
         if v is None:
             return None
-        return self._auto_maintain(v, props_hint=props)
+        return self._auto_maintain(snap, v)
 
     def compact(
         self, *, n_files: int = 16, filters=(), max_retries: int = 5
@@ -5193,47 +5213,28 @@ class AcidTable:
         hot partition, not the table. Scoping is FILE-granular: every
         row of a touched file is preserved (the predicate selects
         files, never rows)."""
-        filters = self._phys_filters(filters)
         for _ in range(max_retries):
-            base = self.latest_version()
-            if base < 0:
+            snap = self._state()
+            if snap.version < 0:
                 raise ValueError(f"table {self.path} has no commits")
-            if filters:
-                touched, _, _ = self._pruned_live(filters, base)
-            else:
-                touched, _ = self._resolve(base)
+            phys_filters = self._phys_filters(filters, snap.colmap)
+            touched = self._pruned_live(snap, phys_filters)
             if not touched:
-                return base  # nothing in scope: no commit
-            _, table_schema, _, _, dvs = self._resolve_state(base)
-            rows = self._read_for_rewrite(touched, table_schema, dvs, base)
+                return snap.version  # nothing in scope: no commit
+            table_schema = snap.schema_json
+            rows = self._read_for_rewrite(snap, touched)
             add, schema = self._stage_actions(
                 rows.repartition(n_files), sized=False
             )
-            commit_schema = table_schema or schema
-            if self._ROW_ID_COL in rows.columns:
-                # the rewrite materialized row ids: the committed
-                # schema must carry the hidden column or reads lose
-                # them (caught by the row-tracking property test on
-                # compact-as-first-rewrite)
-                d = json.loads(commit_schema)
-                if not any(
-                    f["name"] == self._ROW_ID_COL for f in d["fields"]
-                ):
-                    d["fields"].append(
-                        {
-                            "name": self._ROW_ID_COL,
-                            "type": "long",
-                            "nullable": True,
-                            "metadata": {},
-                        }
-                    )
-                    commit_schema = json.dumps(d)
+            commit_schema = self._with_row_id_field(
+                table_schema or schema, rows
+            )
             # commit the TABLE schema, not the touched subset's —
             # a scoped compact must not narrow columns that only
             # exist in untouched files
             v = self._commit_or_rebase(
-                base, "compact", add, touched, commit_schema,
-                read_filters=filters or None,
+                snap, "compact", add, touched, commit_schema,
+                read_filters=phys_filters or None,
             )
             if v is not None:
                 return v
@@ -5264,23 +5265,21 @@ class AcidTable:
         partition, not the table."""
         from data_lake_demo_spark.operators.zorder import zvalue
 
-        filters = self._phys_filters(filters)
         for _ in range(max_retries):
-            base = self.latest_version()
-            if base < 0:
+            snap = self._state()
+            if snap.version < 0:
                 raise ValueError(f"table {self.path} has no commits")
-            if filters:
-                touched, _, _ = self._pruned_live(filters, base)
-            else:
-                touched, _ = self._resolve(base)
+            colmap = snap.colmap
+            phys_filters = self._phys_filters(filters, colmap)
+            touched = self._pruned_live(snap, phys_filters)
             if not touched:
-                return base  # nothing in scope: no commit
-            _, table_schema, _, props, dvs = self._resolve_state(base)
+                return snap.version  # nothing in scope: no commit
+            table_schema = snap.schema_json
             # rewrite read carries row ids through when tracked (same
             # contract as compact, via _read_for_rewrite)
             src = self._logicalize(
-                self._read_for_rewrite(touched, table_schema, dvs, base),
-                self._colmap(base),
+                self._read_for_rewrite(snap, touched),
+                colmap,
                 keep=(self._ROW_ID_COL,),  # hidden id rides the rewrite
             )
             laid_out = (
@@ -5290,26 +5289,14 @@ class AcidTable:
                 .drop("__z")
             )
             add, schema = self._stage_actions(
-                self._physicalize(laid_out), sized=False
+                self._physicalize(laid_out, colmap), sized=False
             )
-            commit_schema = table_schema or schema
-            if self._ROW_ID_COL in src.columns:
-                d = json.loads(commit_schema)
-                if not any(
-                    f["name"] == self._ROW_ID_COL for f in d["fields"]
-                ):
-                    d["fields"].append(
-                        {
-                            "name": self._ROW_ID_COL,
-                            "type": "long",
-                            "nullable": True,
-                            "metadata": {},
-                        }
-                    )
-                    commit_schema = json.dumps(d)
+            commit_schema = self._with_row_id_field(
+                table_schema or schema, src
+            )
             v = self._commit_or_rebase(
-                base, "optimize_zorder", add, touched, commit_schema,
-                read_filters=filters or None,
+                snap, "optimize_zorder", add, touched, commit_schema,
+                read_filters=phys_filters or None,
             )
             if v is not None:
                 return v
@@ -5335,23 +5322,22 @@ class AcidTable:
         clustering as the replacement for hive-partitioning layout
         decisions you can't take back."""
         cols = list(cols)
-        have = self.snapshot().columns if self.latest_version() >= 0 else []
-        missing = [c for c in cols if have and c not in have]
-        if missing:
-            raise ValueError(f"clustering columns not in table: {missing}")
         for _ in range(5):  # metadata-only: losing a race just re-reads
-            base = self.latest_version()
-            if base < 0:
+            snap = self._state()
+            have = self._snapshot_df(snap).columns if snap.version >= 0 else []
+            missing = [c for c in cols if have and c not in have]
+            if missing:
+                raise ValueError(f"clustering columns not in table: {missing}")
+            if snap.version < 0:
                 raise ValueError(f"table {self.path} has no commits")
-            props = dict(self.properties(base))
+            props = dict(snap.props)
             if cols:
                 props[self._CLUSTERING_KEY] = cols
             else:
                 props.pop(self._CLUSTERING_KEY, None)
-            _, schema_json, _, _, _ = self._resolve_state(base)
             try:
                 return self._try_commit(
-                    base + 1, "set_clustering", [], [], schema_json,
+                    snap, "set_clustering", [], [], snap.schema_json,
                     props=props,
                 )
             except CommitConflict:
@@ -5400,16 +5386,18 @@ class AcidTable:
         into a single layout."""
         from data_lake_demo_spark.operators.zorder import zvalue
 
-        cols = self.clustering_columns()
-        if not cols:
-            raise ValueError(
-                "no clustering columns declared (set_clustering / "
-                "ALTER TABLE t CLUSTER BY)"
-            )
         for _ in range(max_retries):
-            base = self.latest_version()
-            live, table_schema, _, props, dvs = self._resolve_state(base)
-            miss = [c for c in cols if c not in self.snapshot(base).columns]
+            snap = self._state()
+            cols = list(snap.props.get(self._CLUSTERING_KEY) or [])
+            if not cols:
+                raise ValueError(
+                    "no clustering columns declared (set_clustering / "
+                    "ALTER TABLE t CLUSTER BY)"
+                )
+            base, live, table_schema = (
+                snap.version, snap.files, snap.schema_json
+            )
+            miss = [c for c in cols if c not in self._snapshot_df(snap).columns]
             if miss:
                 raise ValueError(f"clustering columns not in table: {miss}")
             fresh = [
@@ -5445,8 +5433,8 @@ class AcidTable:
             touched = sorted(touched)
             # the rewrite read is PHYSICAL (like compact's); clustering
             # columns are declared logical — translate before keying
-            pcols = self._phys_names(cols, self._colmap(base))
-            rows = self._read_for_rewrite(touched, table_schema, dvs, base)
+            pcols = self._phys_names(cols, snap.colmap)
+            rows = self._read_for_rewrite(snap, touched)
             numeric = {
                 f.name
                 for f in rows.schema.fields
@@ -5468,27 +5456,15 @@ class AcidTable:
                 st = dict(a.get("stats") or {})
                 st["#zcube"] = [base + 1]
                 a["stats"] = st
-            commit_schema = table_schema or schema
-            if self._ROW_ID_COL in rows.columns:
-                d = json.loads(commit_schema)
-                if not any(
-                    f["name"] == self._ROW_ID_COL for f in d["fields"]
-                ):
-                    d["fields"].append(
-                        {
-                            "name": self._ROW_ID_COL,
-                            "type": "long",
-                            "nullable": True,
-                            "metadata": {},
-                        }
-                    )
-                    commit_schema = json.dumps(d)
+            commit_schema = self._with_row_id_field(
+                table_schema or schema, rows
+            )
             # note: the #zcube epoch stays base+1 on rebase — epochs
             # only need to be distinct per optimize run, and two runs
             # can share an initial target only by racing each OTHER,
             # which is an overlap (re-plan), never a rebase
             v = self._commit_or_rebase(
-                base, "optimize_cluster", add, touched, commit_schema
+                snap, "optimize_cluster", add, touched, commit_schema
             )
             if v is not None:
                 return v
@@ -5548,7 +5524,7 @@ class AcidTable:
             if rows is not None:
                 stats["#rows"] = [rows]
             add.append({"path": f, "stats": stats})
-        t._try_commit(0, "convert", add, [], schema)
+        t._try_commit(_NO_COMMITS, "convert", add, [], schema)
         return t
 
     def clone_to(
@@ -5573,7 +5549,8 @@ class AcidTable:
         snapshot, not an archival copy. ``shallow=False`` rewrites the
         data into the clone (one distributed copy) and severs the
         dependency."""
-        live, schema, _, props, dvs = self._resolve_state(as_of)
+        snap = self._state(as_of)
+        schema, props, dvs = snap.schema_json, dict(snap.props), snap.dvs
         if schema is None:
             raise ValueError(f"table {self.path} has no commits to clone")
         clone = AcidTable(
@@ -5587,15 +5564,17 @@ class AcidTable:
         if clone.latest_version() >= 0:
             raise ValueError(f"target {target_path} already has commits")
         if not shallow:
-            src = self.snapshot(as_of)  # logical view
-            clone._try_commit(0, "clone", [], [], schema, props=props or None)
+            src = self._snapshot_df(snap)  # logical view
+            clone._try_commit(
+                _NO_COMMITS, "clone", [], [], schema, props=props or None
+            )
             # deep clone materializes through the normal write path so
             # colmap/constraints resolve against the cloned props
             clone.overwrite(src)
             return clone
         add = [
             {"path": os.path.abspath(os.path.join(self.path, p)), "stats": s}
-            for p, s in sorted(live.items())
+            for p, s in sorted(snap.files.items())
         ]
         dv_entries = [
             {
@@ -5608,7 +5587,8 @@ class AcidTable:
             for p in sorted(dvs)
         ]
         clone._try_commit(
-            0, "clone", add, [], schema, props=props or None, dv=dv_entries
+            _NO_COMMITS, "clone", add, [], schema, props=props or None,
+            dv=dv_entries,
         )
         return clone
 
@@ -5625,13 +5605,12 @@ class AcidTable:
         a dropped file retire with it. Returns the dropped paths;
         ``dry_run`` lists without committing."""
         for _ in range(max_retries):
-            base = self.latest_version()
-            if base < 0:
+            snap = self._state()
+            if snap.version < 0:
                 raise ValueError(f"table {self.path} has no commits")
-            live, schema_json, _, _, _ = self._resolve_state(base)
             missing = sorted(
                 p
-                for p in live
+                for p in snap.files
                 if not os.path.isfile(
                     p if os.path.isabs(p) else os.path.join(self.path, p)
                 )
@@ -5639,7 +5618,7 @@ class AcidTable:
             if not missing or dry_run:
                 return missing
             try:
-                self._try_commit(base + 1, "fsck", [], missing, schema_json)
+                self._try_commit(snap, "fsck", [], missing, snap.schema_json)
                 return missing
             except CommitConflict:
                 continue
@@ -5671,16 +5650,18 @@ class AcidTable:
         provable no-op (no commit) — the property that makes the
         auto-hook idempotent."""
         for _ in range(max_retries):
-            base = self.latest_version()
-            if base < 0:
+            snap = self._state()
+            if snap.version < 0:
                 raise ValueError(f"table {self.path} has no commits")
-            live, schema_json, _, props, dvs = self._resolve_state(base)
+            live, schema_json, props, dvs = (
+                snap.files, snap.schema_json, snap.props, snap.dvs
+            )
             if min_dv_ratio is not None:
                 dropped: list[str] = []
                 touched = self._dv_debt_files(live, dvs, float(min_dv_ratio))
                 new_props = None
             else:
-                colmap = dict(props.get("colmap") or {})
+                colmap = snap.colmap
                 dropped = [p for p, l in colmap.items() if l == ""]
 
                 def needs(p, stats):
@@ -5706,10 +5687,10 @@ class AcidTable:
                     else:
                         new_props.pop("colmap", None)
             if not touched and new_props is None:
-                return base  # nothing soft-deleted: no commit
+                return snap.version  # nothing soft-deleted: no commit
             add = []
             if touched:
-                rows = self._read_for_rewrite(touched, schema_json, dvs, base)
+                rows = self._read_for_rewrite(snap, touched)
                 if dropped:
                     rows = rows.drop(*dropped)
                 add, _ = self._stage_actions(
@@ -5721,25 +5702,12 @@ class AcidTable:
                 for f in json.loads(schema_json)["fields"]
                 if f["name"] not in dropped
             ]
-            if (
-                touched
-                and self._row_tracking_on(props)
-                and not any(f["name"] == self._ROW_ID_COL for f in fields)
-            ):
-                # the purge rewrite materialized row ids: the committed
-                # schema must carry the hidden column or reads lose them
-                fields.append(
-                    {
-                        "name": self._ROW_ID_COL,
-                        "type": "long",
-                        "nullable": True,
-                        "metadata": {},
-                    }
-                )
             schema_out = json.dumps({"type": "struct", "fields": fields})
+            if touched:
+                schema_out = self._with_row_id_field(schema_out, rows)
             try:
                 return self._try_commit(
-                    base + 1, "purge", add, touched, schema_out,
+                    snap, "purge", add, touched, schema_out,
                     props=new_props,
                 )
             except CommitConflict:
@@ -5785,7 +5753,11 @@ class AcidTable:
         - both: the more conservative wins (the union of the two
           retained windows) — adding a bound can only retain MORE,
           never silently shorten the other window."""
-        latest = self.latest_version()
+        # one read of the log: a commit landing while vacuum runs is
+        # neither retained nor "ever committed", so its fresh files
+        # fall under the grace gate below
+        log = self.history()
+        latest = len(log) - 1
         if retain_versions is None and retain_hours is None:
             retain_versions = 10
         horizon = (
@@ -5796,30 +5768,37 @@ class AcidTable:
         if retain_hours is not None:
             cutoff = time.time() - retain_hours * 3600.0
             th = latest  # latest always survives
-            for c in self.history():
+            for c in log:
                 if c.ts >= cutoff:
                     th = min(th, c.version)
             horizon = min(horizon, th)
-        # files (and DV sidecars) referenced by ANY retained snapshot
+        # files (and DV sidecars) referenced by ANY retained snapshot,
+        # and every path the log has EVER committed (added then removed
+        # ⇒ provably superseded; absence ⇒ possibly in-flight)
         referenced: set[str] = set()
         referenced_dv: set[str] = set()
-        for v in range(horizon, latest + 1):
-            state = self._resolve_state(v)
-            referenced |= set(state[0])
-            for val in state[4].values():
-                rel_sc = _dv_sidecar_rel(val)
-                if rel_sc:
-                    referenced_dv.add(rel_sc)
-        # every path the log has EVER committed (added then removed ⇒
-        # provably superseded; absence ⇒ possibly in-flight)
         ever_committed: set[str] = set()
         ever_dv: set[str] = set()
-        for c in self.history():
-            ever_committed |= {a["path"] for a in c.add}
-            for e in c.dv or ():
-                rel_sc = _dv_sidecar_rel(e.get("del"))
-                if rel_sc:
-                    ever_dv.add(rel_sc)
+
+        def fold(commits: list[Commit], first_retained: int) -> Snapshot:
+            state = _NO_COMMITS.advance(commits[:first_retained])
+            for c in commits[first_retained:]:
+                state = state.advance([c])
+                referenced.update(state.files)
+                referenced_dv.update(
+                    filter(None, map(_dv_sidecar_rel, state.dvs.values()))
+                )
+            for c in commits:
+                ever_committed.update(a["path"] for a in c.add)
+                ever_dv.update(
+                    filter(
+                        None,
+                        (_dv_sidecar_rel(e.get("del")) for e in c.dv or ()),
+                    )
+                )
+            return state
+
+        self._check_protocol(fold(log, horizon).props)
         # unpublished WAP branches share the data directory but commit
         # to their OWN logs — without folding those logs in, vacuum
         # would classify a branch's data files and DV sidecars as
@@ -5834,21 +5813,7 @@ class AcidTable:
             if not os.path.isdir(bdir):
                 continue  # non-default branch log backend
             try:
-                bt = self.branch(bname)
-                b_latest = bt.latest_version()
-                for v in range(0, b_latest + 1):
-                    st = bt._resolve_state(v)
-                    referenced |= set(st[0])
-                    for val in st[4].values():
-                        rel_sc = _dv_sidecar_rel(val)
-                        if rel_sc:
-                            referenced_dv.add(rel_sc)
-                for c in bt.history():
-                    ever_committed |= {a["path"] for a in c.add}
-                    for e in c.dv or ():
-                        rel_sc = _dv_sidecar_rel(e.get("del"))
-                        if rel_sc:
-                            ever_dv.add(rel_sc)
+                fold(self.branch(bname).history(), 0)
             except Exception:
                 continue  # a torn/foreign branch dir never widens deletes
         now = time.time()

@@ -217,14 +217,15 @@ def test_ivf_codes_cluster_and_probe_scan_prunes(spark, tmp_path):
     emb = _emb(spark)
     idx = AnnIndex.build(emb, str(tmp_path / "idx"), nlist=16)
 
-    live, _ = idx.codes_table._resolve_actions()
+    live = idx.codes_table._state().files
     spans = [s["cell"] for s in live.values() if "cell" in s]
     assert spans, "cell column missing footer stats"
     # range distribution: files cover narrow CONTIGUOUS cell ranges
     # (one-ish per file at scale; a few adjacent cells at fixture size)
     assert all(hi - lo <= 3 for lo, hi in spans), f"wide cell files: {spans}"
 
-    kept, total, _ = idx.codes_table._pruned_live([("cell", "in", [0, 1])])
+    state = idx.codes_table._state()
+    kept, total = idx.codes_table._pruned_live(state, [("cell", "in", [0, 1])]), len(state.files)
     assert 0 < len(kept) < total, f"no pruning: {len(kept)}/{total}"
 
     queries = emb.filter(F.col("vec_id") < 3)
@@ -293,7 +294,8 @@ def test_ivf_flat_index_lifecycle_and_recall(spark, tmp_path):
     snap = idx.codes_table.snapshot()
     assert set(snap.columns) == {"nid", "cell", "nvec"}
     assert snap.count() == emb.count()
-    kept, total, _ = idx.codes_table._pruned_live([("cell", "in", [0])])
+    state = idx.codes_table._state()
+    kept, total = idx.codes_table._pruned_live(state, [("cell", "in", [0])]), len(state.files)
     assert len(kept) < total
 
     queries = emb.filter(F.col("vec_id") < 5)

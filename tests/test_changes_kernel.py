@@ -36,9 +36,9 @@ def changes_oracle(
     ``a.exceptAll(r)`` / ``r.exceptAll(a)``."""
     import json
 
-    until = t.latest_version() if until_version is None else until_version
-    live_new, schema_new, _, props_new, dv_new = t._resolve_state(until)
-    live_old, schema_old, _, _, dv_old = t._resolve_state(since_version)
+    new, old = t._state(until_version), t._state(since_version)
+    live_new, schema_new, dv_new = new.files, new.schema_json, new.dvs
+    live_old, schema_old, dv_old = old.files, old.schema_json, old.dvs
     emit_rids = with_row_ids
     with_row_ids = with_row_ids or as_images
     keys_new = {(p, dv_new.get(p)) for p in live_new}
@@ -106,7 +106,7 @@ def changes_oracle(
     if with_row_ids and not emit_rids:
         out = out.drop("_row_id")
     keep = ("_change_type", "_row_id") if emit_rids else ("_change_type",)
-    return t._logicalize(out, keep=keep)
+    return t._logicalize(out, t._state().colmap, keep=keep)
 
 
 def _norm(v):

@@ -59,7 +59,7 @@ def test_ddl_statements_route_to_table_verbs(spark, tmp_path):
 
     # maintenance: OPTIMIZE + VACUUM DRY RUN returns paths, deletes nothing
     sql.sql("OPTIMIZE tt")
-    files, _ = t._resolve(None)
+    files = sorted(t._state().files)
     assert len(files) <= 16
     dry = sql.sql("VACUUM tt RETAIN 1 VERSIONS DRY RUN").collect()
     assert len(dry) > 0  # superseded pre-compact files are reported
@@ -821,7 +821,7 @@ def test_create_table_cluster_by(spark, tmp_path):
     )
     t2 = sql.table("cbs")
     assert t2.clustering_columns() == ["k"]
-    stats = t2._resolve_state(None)[0]
+    stats = t2._state().files
     assert stats and all("#zcube" in st for st in stats.values())
     assert t2.snapshot().count() == 500
 
@@ -898,7 +898,7 @@ def test_create_table_clone_sql(spark, tmp_path):
     )
     assert c.snapshot().columns == ["k", "val"]  # colmap cloned
     # zero data files copied: everything the clone references is absolute
-    live = c._resolve_state(None)[0]
+    live = c._state().files
     assert all(os.path.isabs(p) for p in live)
     data_dir = os.path.join(clone_path, "data")
     staged = [
@@ -921,7 +921,7 @@ def test_create_table_clone_sql(spark, tmp_path):
     assert d0.snapshot().count() == 20
     assert d0.snapshot().columns == ["k", "v"]
     # bare CLONE = DEEP: the copy has its own data files
-    live0 = d0._resolve_state(None)[0]
+    live0 = d0._state().files
     assert all(not os.path.isabs(p) for p in live0)
 
     # IF NOT EXISTS no-ops on an existing target; plain CREATE refuses

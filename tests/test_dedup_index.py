@@ -181,7 +181,7 @@ def test_dedup_index_bloom_opt_in(spark, tmp_path):
     idx = IncrementalDedupIndex(spark, base, str(tmp_path / "idx"), bloom=True)
     base.append(docs.repartition(8))
     idx.sync()
-    live, _, _, _, _ = idx.index._resolve_state(None)
+    live = idx.index._state().files
     assert any("#bloom:digest" in st for st in live.values())
     base.append(
         spark.range(400, 410).select(

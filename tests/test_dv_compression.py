@@ -205,7 +205,8 @@ def test_legacy_inline_commit_still_readable_end_to_end(spark, tmp_path):
     t.append(
         spark.createDataFrame([(i,) for i in range(8)], "k long").coalesce(1)
     )
-    live, schema, _, _, _ = t._resolve_state(None)
+    state = t._state()
+    live, schema = state.files, state.schema_json
     (path,) = live
     legacy = base64.b64encode(array.array("q", [0, 3, 5]).tobytes()).decode()
     v = t.latest_version() + 1
@@ -296,7 +297,7 @@ def test_reorg_purge_materializes_sidecar_vectors(spark, tmp_path):
     sidecar or inline — and only those; the sidecar itself becomes
     vacuum-reclaimable once out of retention."""
     t = _parity_table(spark, str(tmp_path / "t"), 200_000, files=2)
-    untouched_before = set(t._resolve(None)[0])
+    untouched_before = set(t._state().files)
     t.delete([("r", "=", 1)], mode="merge_on_read")
     vectored = set(t.deletion_vectors())
     assert vectored  # at least one file masked via a sidecar vector
@@ -306,7 +307,7 @@ def test_reorg_purge_materializes_sidecar_vectors(spark, tmp_path):
     # files that never carried a vector survive the purge by path
     c = t._read_commit(t.latest_version())
     assert set(c.remove) == vectored
-    assert (untouched_before - vectored) <= set(t._resolve(None)[0])
+    assert (untouched_before - vectored) <= set(t._state().files)
     deleted = t.vacuum(retain_versions=1)
     assert any(rel.endswith(".bin") for rel in deleted)
 

@@ -51,7 +51,7 @@ def test_reorg_purge_min_dv_ratio_rewrites_qualifying_files_only(
             [(k, k * 10) for k in range(10)], "k long, v long"
         ).repartitionByRange(2, "k")
     )
-    assert len(t._resolve()[0]) == 2
+    assert len(t._state().files) == 2
     # mask 3 rows of the low-range file, 1 row of the high-range file
     t.delete([("k", "in", (0, 1, 2, 9))], mode="merge_on_read")
     before = dict(t.deletion_vectors())
@@ -81,11 +81,11 @@ def test_reorg_purge_min_dv_ratio_leaves_colmap_alone(spark, tmp_path):
     t.delete([("k", "<", 5)], mode="merge_on_read")
     t.reorg_purge(min_dv_ratio=0.3)
     assert not t.deletion_vectors()  # debt cleared
-    colmap = t._colmap()
+    colmap = t._state().colmap
     assert "" in colmap.values()  # drop entry untouched
     # the full purge still clears it afterwards
     t.reorg_purge()
-    assert "" not in t._colmap().values()
+    assert "" not in t._state().colmap.values()
 
 
 def test_auto_policy_fires_only_at_threshold(spark, tmp_path):

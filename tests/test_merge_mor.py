@@ -301,7 +301,7 @@ def test_mor_merge_apply_retraction_only_is_pure_mask(spark, tmp_path):
     """A batch of pure retractions commits ONLY vectors — zero new
     files, zero rewrites (the cheapest possible CDC apply)."""
     t = _base(spark, str(tmp_path / "t"))
-    n_files_before = len(t._resolve(None)[0])
+    n_files_before = len(t._state().files)
     t.merge_apply(
         spark.createDataFrame(
             [(2, 0, "", True), (6, 0, "", True)],
@@ -314,7 +314,7 @@ def test_mor_merge_apply_retraction_only_is_pure_mask(spark, tmp_path):
     c = t._read_commit(t.latest_version())
     assert c.add == [] and c.remove == []
     assert sum(e["n"] for e in c.dv) == 2
-    assert len(t._resolve(None)[0]) == n_files_before
+    assert len(t._state().files) == n_files_before
     assert sorted(r.k for r in t.snapshot().collect()) == [0, 1, 3, 4, 5, 7]
 
 
@@ -398,7 +398,7 @@ def test_mor_scd2_prunes_to_changed_key_files(spark, tmp_path):
     """Key-range pruning bounds the masked set to files that may hold
     a changed key — an O(changed keys) apply, not O(dimension)."""
     t = _dim(spark, str(tmp_path / "t"))  # key-clustered files
-    n_files = len(t._resolve(None)[0])
+    n_files = len(t._state().files)
     assert n_files > 1
     t.scd2(
         spark.createDataFrame(
@@ -410,7 +410,7 @@ def test_mor_scd2_prunes_to_changed_key_files(spark, tmp_path):
     c = t._read_commit(t.latest_version())
     assert len(c.dv) == 1  # only the file holding k=1 is vectored
     assert c.remove == []  # no dimension file rewritten
-    assert len(t._resolve(None)[0]) == n_files + len(c.add)
+    assert len(t._state().files) == n_files + len(c.add)
 
 
 def test_mor_scd2_second_change_and_history(spark, tmp_path):

@@ -1051,7 +1051,7 @@ def test_acid_batch_datasource_filter_pushdown_prunes_files(spark, tmp_path):
                 [(lo + i, f"v{lo + i}") for i in range(10)], "k long, v string"
             ).coalesce(1)
         )
-    files, _ = t._resolve()
+    files = sorted(t._state().files)
     assert len(files) == 3
 
     # unit tier: the hook itself
@@ -1594,7 +1594,7 @@ def test_acid_dsv2_writer_identity_columns(spark, tmp_path):
     _commit_staged_identity(
         t,
         [{"path": rel, "stats": stats}],
-        t._resolve_state(None)[1],
+        t._state().schema_json,
         {"id": {"phys": "id", "base": stale_base}},
     )
     final = [r.id for r in t.snapshot().collect()]
@@ -2011,18 +2011,16 @@ def test_streaming_curated_merge_into_liquid_clustered_table(spark, tmp_path):
     # LAST merge may leave sub-threshold rewrites unstamped — the
     # Databricks contract is convergence, not instantaneous clustering
     # — and one incremental OPTIMIZE finishes the job.
-    live = table._resolve_state(None)[0]
+    live = table._state().files
     assert len(live) <= 8
     assert any("#zcube" in (st or {}) for st in live.values())
     table.optimize_cluster(n_files=2)
-    live = table._resolve_state(None)[0]
+    live = table._state().files
     assert len(live) <= 3
     assert all("#zcube" in (st or {}) for st in live.values())
 
     # point lookup on the clustering key prunes to a strict subset
-    hit, _, _ = table._pruned_live(
-        [("endpoint", "=", "api-b")], table.latest_version()
-    )
+    hit = table._pruned_live(table._state(), [("endpoint", "=", "api-b")])
     assert 0 < len(hit) < len(live)
     got = table.scan([("endpoint", "=", "api-b")])
     assert got.count() == 12

@@ -133,7 +133,7 @@ def test_merge_skips_files_outside_key_range(spark, tmp_path):
             [(i, f"hi{i}") for i in range(1000, 1010)], "k long, v string"
         )
     )
-    live_before, _ = t._resolve_actions()
+    live_before = t._state().files
     lo_files = set(t.history()[0].add[i]["path"] for i in range(len(t.history()[0].add)))
     assert all(s.get("k") for s in live_before.values()), "footer stats missing"
 
@@ -141,7 +141,7 @@ def test_merge_skips_files_outside_key_range(spark, tmp_path):
         spark.createDataFrame([(1005, "HI"), (1099, "new")], "k long, v string"),
         ["k"],
     )
-    live_after, _ = t._resolve_actions()
+    live_after = t._state().files
     # the low-range files are untouched (same paths still live)
     assert lo_files <= set(live_after)
     # the high-range files were rewritten (removed from the live set)
@@ -158,9 +158,9 @@ def test_commit_conflict_is_put_if_absent(spark, tmp_path):
     """The primitive itself: two writers, one version slot, exactly one
     winner."""
     t = AcidTable(spark, str(tmp_path / "t"))
-    t._try_commit(0, "append", [], [], '{"type":"struct","fields":[]}')
+    t._try_commit(t._state(-1), "append", [], [], '{"type":"struct","fields":[]}')
     with pytest.raises(CommitConflict):
-        t._try_commit(0, "append", [], [], '{"type":"struct","fields":[]}')
+        t._try_commit(t._state(-1), "append", [], [], '{"type":"struct","fields":[]}')
 
 
 def test_scd2_transactional(spark, tmp_path):
@@ -193,7 +193,7 @@ def test_vacuum_deletes_unreferenced_and_orphans(spark, tmp_path):
 
     t = AcidTable(spark, str(tmp_path / "t"))
     t.append(spark.createDataFrame([(1, "a")], "k long, v string"))
-    old_files, _ = t._resolve()
+    old_files = sorted(t._state().files)
     t.overwrite(spark.createDataFrame([(2, "b")], "k long, v string"))
     t._stage(spark.createDataFrame([(3, "orphan")], "k long, v string"))
 
@@ -227,7 +227,7 @@ def test_timestamp_columns_commit_and_merge(spark, tmp_path):
         (2, datetime.datetime(2026, 6, 1, 12), "b"),
     ]
     t.append(spark.createDataFrame(rows, "k long, ts timestamp, v string"))
-    live, _ = t._resolve_actions()
+    live = t._state().files
     assert all("ts" not in s for s in live.values())  # stats dropped
     assert any("k" in s for s in live.values())  # numeric stats kept
     t.merge(
@@ -248,9 +248,9 @@ def test_compact_coalesces_small_files(spark, tmp_path):
         t.append(
             spark.createDataFrame([(i, f"v{i}")], "k long, v string").repartition(2)
         )
-    live_small, _ = t._resolve_actions()
+    live_small = t._state().files
     v = t.compact(n_files=2)
-    live_compact, _ = t._resolve_actions()
+    live_compact = t._state().files
     assert len(live_compact) < len(live_small)
     assert len(live_compact) <= 2
     assert t.history()[v].op == "compact"
@@ -284,9 +284,10 @@ def test_optimize_zorder_improves_merge_pruning(spark, tmp_path):
     t = AcidTable(spark, str(tmp_path / "t"))
     # scattered layout: every file spans nearly the full key range
     t.append(spark.createDataFrame(rows, "a long, b long, payload long").repartition(16))
-    live_scattered, _ = t._resolve_actions()
+    state = t._state()
+    live_scattered = state.files
     touched_before = t._touched_files(
-        live_scattered,
+        state,
         spark.createDataFrame([(5000, 5000, 0)], "a long, b long, payload long"),
         ["a"],
     )
@@ -299,9 +300,10 @@ def test_optimize_zorder_improves_merge_pruning(spark, tmp_path):
         r[2] for r in rows
     )  # same rows, new layout
 
-    live_z, _ = t._resolve_actions()
+    state = t._state()
+    live_z = state.files
     touched_after = t._touched_files(
-        live_z,
+        state,
         spark.createDataFrame([(5000, 5000, 0)], "a long, b long, payload long"),
         ["a"],
     )
@@ -411,7 +413,7 @@ def test_in_memory_log_store_backend(spark, tmp_path):
     assert [c.op for c in t.history()] == ["append", "append", "overwrite"]
     # put-if-absent conflict on the fake
     with pytest.raises(CommitConflict):
-        t._try_commit(0, "append", [], [], '{"type":"struct","fields":[]}')
+        t._try_commit(t._state(-1), "append", [], [], '{"type":"struct","fields":[]}')
     # txn watermark round-trips through the fake too
     t.append(spark.createDataFrame([(3, "c")], "k long, v string"), txn=("app", 5))
     assert t.last_txn_batch("app") == 5
@@ -432,7 +434,8 @@ def test_checkpoint_bounds_log_replay(spark, tmp_path):
     schema = '{"type":"struct","fields":[]}'
     for v in range(35):
         t._try_commit(
-            v, "append", [{"path": f"data/x/{v}.parquet", "stats": {}}],
+            t._state(v - 1),
+            "append", [{"path": f"data/x/{v}.parquet", "stats": {}}],
             [f"data/x/{v - 1}.parquet"] if v % 5 == 0 and v else [],
             schema, txn=("w", v),
         )
@@ -441,7 +444,8 @@ def test_checkpoint_bounds_log_replay(spark, tmp_path):
     }
 
     store.reads = 0
-    live, sch, txns, *_ = t._resolve_state()
+    state = t._state()
+    live, txns = state.files, state.txns
     # newest checkpoint is v29 → 1 checkpoint read + commits 30..34
     assert store.reads <= 1 + (34 - 29) + 1
     assert txns == {"w": 34}
@@ -454,7 +458,8 @@ def test_checkpoint_bounds_log_replay(spark, tmp_path):
             expect[a["path"]] = a.get("stats", {})
     assert live == expect
     # time travel BEFORE the first checkpoint still resolves
-    live5, _, txns5, *_ = t._resolve_state(as_of=5)
+    state5 = t._state(as_of=5)
+    live5, txns5 = state5.files, state5.txns
     assert set(live5) == {f"data/x/{v}.parquet" for v in range(6)} - {
         "data/x/4.parquet"
     }
@@ -508,15 +513,15 @@ def test_txn_watermark_is_evaluated_as_of_commit_base(spark, tmp_path):
 
     df = spark.createDataFrame([(1, "batch7")], "k long, v string")
     add, schema = t._stage_actions(df)
-    base = t.latest_version()
-    assert t.last_txn_batch("app", as_of=base) is None  # check passes...
+    base = t._state()
+    assert t.last_txn_batch("app", as_of=base.version) is None  # check passes...
 
     # ...then a concurrent replay of batch 7 wins the slot first
     t.append(spark.createDataFrame([(1, "batch7")], "k long, v string"), txn=("app", 7))
 
     # our staged commit at the stale base now conflicts (not lands)
     with pytest.raises(CommitConflict):
-        t._try_commit(base + 1, "append", add, [], schema, txn=("app", 7))
+        t._try_commit(base, "append", add, [], schema, txn=("app", 7))
     # and the public path resolves the race to a no-op
     v = t.latest_version()
     t.append(df, txn=("app", 7))
@@ -537,8 +542,27 @@ def test_vacuum_spares_in_flight_staging(spark, tmp_path):
     add, schema = t._stage_actions(df)
     t.vacuum(retain_versions=10)  # default grace: must NOT delete
     assert all(os.path.exists(os.path.join(t.path, a["path"])) for a in add)
-    t._try_commit(t.latest_version() + 1, "append", add, [], schema)
+    t._try_commit(t._state(), "append", add, [], schema)
     assert _rows(t.snapshot()) == [(1, "a"), (2, "inflight")]
+
+
+def test_vacuum_keeps_files_of_a_commit_landing_mid_run(spark, tmp_path):
+    """A commit that lands while vacuum reads the log must not lose its
+    files: vacuum judges every file against ONE read of the log, never
+    a retained set from one head and a committed set from a later one."""
+    path = str(tmp_path / "t")
+    t = AcidTable(spark, path)
+    t.append(spark.createDataFrame([(1, "a")], "k long, v string"))
+    other = AcidTable(spark, path)
+    read_log = t.history
+
+    def history_with_a_racing_append():
+        other.append(spark.createDataFrame([(2, "b")], "k long, v string"))
+        return read_log()
+
+    t.history = history_with_a_racing_append
+    t.vacuum(retain_versions=1)
+    assert _rows(other.snapshot()) == [(1, "a"), (2, "b")]
 
 
 def test_scan_prunes_files_and_matches_snapshot_filter(spark, tmp_path):
@@ -553,7 +577,8 @@ def test_scan_prunes_files_and_matches_snapshot_filter(spark, tmp_path):
         partition_by=["date"],
     )
     filters = [("date", "=", "d2")]
-    kept, total, _ = t._pruned_live(filters)
+    state = t._state()
+    kept, total = t._pruned_live(state, filters), len(state.files)
     assert 0 < len(kept) < total, f"no pruning: {len(kept)}/{total}"
     got = _rows(t.scan(filters))
     want = _rows(t.snapshot().filter("date = 'd2'"))
@@ -571,7 +596,8 @@ def test_scan_range_and_in_filters(spark, tmp_path):
         )
     )
     # range filter disjoint from the second append: its files pruned
-    kept, total, _ = t._pruned_live([("k", "<=", 50)])
+    state = t._state()
+    kept, total = t._pruned_live(state, [("k", "<=", 50)]), len(state.files)
     assert len(kept) < total
     assert _rows(t.scan([("k", "between", (3, 5))])) == [
         (i, f"a{i}") for i in range(3, 6)
@@ -607,11 +633,11 @@ def test_delete_rewrites_only_matchable_files(spark, tmp_path):
             [(i, f"hi{i}") for i in range(1000, 1010)], "k long, v string"
         )
     )
-    live_before, _ = t._resolve_actions()
+    live_before = t._state().files
     hi_files = {a["path"] for a in t.history()[1].add}
     v = t.delete([("k", "<", 5)])
     assert v == 2 and t.history()[-1].op == "delete"
-    live_after, _ = t._resolve_actions()
+    live_after = t._state().files
     assert hi_files <= set(live_after), "unmatched files were rewritten"
     assert _rows(t.snapshot()) == [(i, f"lo{i}") for i in range(5, 10)] + [
         (i, f"hi{i}") for i in range(1000, 1010)
@@ -658,7 +684,7 @@ def test_partitioned_append_clusters_files(spark, tmp_path):
         spark.createDataFrame(rows, "part string, k long"),
         partition_by=["part"],
     )
-    live, _ = t._resolve_actions()
+    live = t._state().files
     spans = [s["part"] for s in live.values() if "part" in s]
     assert spans, "cluster column missing footer stats"
     assert all(lo == hi for lo, hi in spans), f"multi-value files: {spans}"
@@ -682,12 +708,13 @@ def test_date_partitioned_merge_and_scan_prune(spark, tmp_path):
         spark.createDataFrame(rows, "endpoint string, date date, page long, v string"),
         partition_by=["endpoint", "date"],
     )
-    live, _ = t._resolve_actions()
+    live = t._state().files
     assert any("date" in s for s in live.values()), "date stats missing"
 
     # read-side: equality on the date prunes to that date's files
     filters = [("endpoint", "=", "users"), ("date", "=", datetime.date(2024, 1, 2))]
-    kept, total, _ = t._pruned_live(filters)
+    state = t._state()
+    kept, total = t._pruned_live(state, filters), len(state.files)
     assert 0 < len(kept) < total
     assert {r.v for r in t.scan(filters).collect()} == {
         f"v-users-2-{p}" for p in range(4)
@@ -707,7 +734,7 @@ def test_date_partitioned_merge_and_scan_prune(spark, tmp_path):
         ["endpoint", "date", "page"],
         partition_by=["endpoint", "date"],
     )
-    live_after, _ = t._resolve_actions()
+    live_after = t._state().files
     assert untouched <= set(live_after), "merge rewrote provably-unmatchable files"
     assert ("users", datetime.date(2024, 1, 1), 0, "UPDATED") in {
         tuple(r) for r in t.snapshot().collect()
@@ -780,7 +807,7 @@ def test_merge_delete_anti_join_with_file_skipping(spark, tmp_path):
     tombs = spark.createDataFrame([(2,), (7,), (2,)], "k long")  # dup tombstone ok
     v = t.merge_delete(tombs, ["k"], txn=("cdc", 1))
     assert v == 2 and t.history()[-1].op == "merge_delete"
-    live_after, _ = t._resolve_actions()
+    live_after = t._state().files
     assert hi_files <= set(live_after), "disjoint files were rewritten"
     assert _rows(t.snapshot()) == [
         (i, f"lo{i}") for i in range(10) if i not in (2, 7)
@@ -829,9 +856,9 @@ def test_hidden_partition_transforms_cluster_and_prune(spark, tmp_path):
     assert snap.columns == ["k", "d", "v"]  # hidden key never lands
     assert snap.count() == 600
 
-    kept, total, _ = t._pruned_live(
-        [("d", ">=", datetime.date(2024, 5, 1))]
-    )
+    state = t._state()
+    kept = t._pruned_live(state, [("d", ">=", datetime.date(2024, 5, 1))])
+    total = len(state.files)
     assert total >= 6
     assert len(kept) < total  # months 1-4 provably pruned
     got = t.scan([("d", ">=", datetime.date(2024, 5, 1))]).count()
@@ -852,7 +879,8 @@ def test_hidden_partition_transforms_cluster_and_prune(spark, tmp_path):
         spark.createDataFrame(rows, "k long, d date, v string"),
         partition_by=["truncate(100, k)"],
     )
-    kept_c, total_c, _ = c._pruned_live([("k", ">=", 500)])
+    state = c._state()
+    kept_c, total_c = c._pruned_live(state, [("k", ">=", 500)]), len(state.files)
     assert len(kept_c) < total_c
     assert c.scan([("k", ">=", 500)]).count() == 100
 
@@ -882,10 +910,11 @@ def test_null_count_stats_prune_is_null_filters(spark, tmp_path):
         ).coalesce(1)
     )
 
-    kept_null, total, _ = t._pruned_live([("v", "is_null", None)])
+    state = t._state()
+    kept_null, total = t._pruned_live(state, [("v", "is_null", None)]), len(state.files)
     assert total == 3
     assert len(kept_null) == 2  # the no-null file is out
-    kept_nn, _, _ = t._pruned_live([("v", "is_not_null", None)])
+    kept_nn = t._pruned_live(t._state(), [("v", "is_not_null", None)])
     assert len(kept_nn) == 2  # the all-null file is out
 
     assert t.scan([("v", "is_null", None)]).count() == 11
@@ -929,11 +958,12 @@ def test_prefix_predicate_prunes_string_ranges(spark, tmp_path):
                 "k long, v string",
             ).coalesce(1)
         )
-    kept, total, _ = t._pruned_live([("v", "starts_with", "man")])
+    state = t._state()
+    kept, total = t._pruned_live(state, [("v", "starts_with", "man")]), len(state.files)
     assert total == 3 and len(kept) == 1
     assert t.scan([("v", "starts_with", "man")]).count() == 10
     # boundary: a prefix below every range prunes everything
-    kept0, _, _ = t._pruned_live([("v", "starts_with", "aaa")])
+    kept0 = t._pruned_live(t._state(), [("v", "starts_with", "aaa")])
     assert kept0 == []
 
     rdr = _AcidBatchReader({"path": str(tmp_path / "t")}, ["k", "v"])
@@ -951,15 +981,16 @@ def test_bloom_index_prunes_interleaved_keys(spark, tmp_path):
     t.append(spark.createDataFrame(evens, "k long, v string").coalesce(1))
     t.append(spark.createDataFrame(odds, "k long, v string").coalesce(1))
     # ranges overlap completely: range pruning alone keeps both files
-    kept_range, total, _ = t._pruned_live([("k", "between", (100, 101))])
+    state = t._state()
+    kept_range, total = t._pruned_live(state, [("k", "between", (100, 101))]), len(state.files)
     assert total == 2 and len(kept_range) == 2
     # the bloom proves absence per file for equality probes
-    kept_even, _, _ = t._pruned_live([("k", "=", 100)])
-    kept_odd, _, _ = t._pruned_live([("k", "=", 101)])
+    kept_even = t._pruned_live(t._state(), [("k", "=", 100)])
+    kept_odd = t._pruned_live(t._state(), [("k", "=", 101)])
     assert len(kept_even) == 1 and len(kept_odd) == 1
     assert kept_even != kept_odd
     # IN probes prune when NO member can be in the file
-    kept_in, _, _ = t._pruned_live([("k", "in", [100, 102])])
+    kept_in = t._pruned_live(t._state(), [("k", "in", [100, 102])])
     assert len(kept_in) == 1
 
 
@@ -975,7 +1006,7 @@ def test_bloom_index_never_false_negative(spark, tmp_path):
         assert t.scan([("k", "=", k)]).count() == 1
         assert [r["k"] for r in t.scan([("s", "=", s)]).collect()] == [k]
     # an absent key prunes everything (deterministic hash family)
-    kept, _, _ = t._pruned_live([("k", "=", 10_000_019)])
+    kept = t._pruned_live(t._state(), [("k", "=", 10_000_019)])
     assert kept == []
 
 
@@ -988,7 +1019,7 @@ def test_bloom_entries_ride_manifest_for_plain_readers(spark, tmp_path):
                               "k long, v string").coalesce(1)
     )
     r = AcidTable(spark, str(tmp_path / "t"))
-    kept, _, _ = r._pruned_live([("k", "=", 51)])
+    kept = r._pruned_live(r._state(), [("k", "=", 51)])
     assert kept == []  # odd key: bloom-proven absent
     assert r.scan([("k", "=", 50)]).count() == 1
 
@@ -1071,9 +1102,9 @@ def _dv_table(spark, tmp_path):
 
 def test_mor_delete_masks_without_rewriting(spark, tmp_path):
     t = _dv_table(spark, tmp_path)
-    files_before, _ = t._resolve()
+    files_before = sorted(t._state().files)
     t.delete([("k", "<", 3)], mode="merge_on_read")
-    files_after, _ = t._resolve()
+    files_after = sorted(t._state().files)
     assert files_after == files_before  # zero write amplification
     assert sorted(r.k for r in t.snapshot().collect()) == list(range(3, 10))
     assert t.scan([("k", "<", 5)]).count() == 2  # 3, 4
@@ -1161,10 +1192,10 @@ def test_compact_where_scopes_the_rewrite(spark, tmp_path):
                     [(d, p * 10 + i) for i in range(5)], "day string, n long"
                 ).coalesce(1)
             )
-    before, _ = t._resolve()
+    before = sorted(t._state().files)
     assert len(before) == 6
     t.compact(n_files=1, filters=[("day", "=", "2024-01-02")])
-    after, _ = t._resolve()
+    after = sorted(t._state().files)
     day1_files = [f for f in before if f in after]
     assert len(day1_files) == 3  # day-1 files untouched, by path
     assert len(after) == 4  # 3 carried + 1 compacted
@@ -1200,9 +1231,9 @@ def test_update_cow_scopes_rewrite_and_sees_old_values(spark, tmp_path):
             [(i, i * 10) for i in range(100, 110)], "k long, v long"
         ).coalesce(1)
     )
-    live0 = set(t._resolve(None)[0])
+    live0 = set(t._state().files)
     t.update({"v": "v + k"}, [("k", ">=", 100)])
-    live1 = set(t._resolve(None)[0])
+    live1 = set(t._state().files)
     # the low-range file provably can't match: carried over by path
     assert len(live0 & live1) == 1
     got = {r["k"]: r["v"] for r in t.snapshot().collect()}
@@ -1434,9 +1465,9 @@ def test_column_mapping_rename_is_metadata_only(spark, tmp_path):
         spark.createDataFrame([(i, i * 10) for i in range(5)], "k long, v long")
         .coalesce(1)
     )
-    live0 = set(t._resolve(None)[0])
+    live0 = set(t._state().files)
     t.rename_column("v", "val")
-    assert set(t._resolve(None)[0]) == live0  # no data rewrite
+    assert set(t._state().files) == live0  # no data rewrite
     assert t.snapshot().columns == ["k", "val"]
     assert t.snapshot(as_of=0).columns == ["k", "v"]  # per-version names
     # writes in logical names stay physically consistent with old files
@@ -1446,7 +1477,11 @@ def test_column_mapping_rename_is_metadata_only(spark, tmp_path):
     got = {r["k"]: r["val"] for r in t.snapshot().collect()}
     assert got[0] == 0 and got[100] == 1000
     # manifest pruning works through the mapping (stats are physical)
-    kept, total, _ = t._pruned_live(t._phys_filters([("val", ">=", 1000)]))
+    state = t._state()
+    kept = t._pruned_live(
+        state, t._phys_filters([("val", ">=", 1000)], state.colmap)
+    )
+    total = len(state.files)
     assert (len(kept), total) == (1, 2)
     assert t.scan([("val", ">=", 1000)]).count() == 1
     # verbs take logical names
@@ -1521,7 +1556,7 @@ def test_reorg_purge_materializes_dvs_and_dropped_columns(spark, tmp_path):
     t.delete([("k", "=", 1)], mode="merge_on_read")
     v = t.reorg_purge()
     assert t.deletion_vectors() == {}
-    assert t._colmap() == {}  # drop entry cleared: name released
+    assert t._state().colmap == {}  # drop entry cleared: name released
     for r in t.files().collect():
         assert "tag" not in json.loads(r["stats"])
     got = {r["k"]: r["v"] for r in t.snapshot().collect()}
@@ -1540,7 +1575,7 @@ def test_auto_compact_keeps_file_count_bounded(spark, tmp_path):
     t = AcidTable(spark, str(tmp_path / "t"), auto_compact_files=2)
     for i in range(5):
         t.append(spark.createDataFrame([(i,)], "k long").coalesce(1))
-    files, _ = t._resolve(None)
+    files = sorted(t._state().files)
     assert len(files) <= 2  # compaction kept pace with the appends
     assert sorted(r["k"] for r in t.snapshot().collect()) == [0, 1, 2, 3, 4]
     # readers of old versions still resolve (compactions are commits)
@@ -1550,7 +1585,7 @@ def test_auto_compact_keeps_file_count_bounded(spark, tmp_path):
     t.set_identity_column("id", start=1)
     for i in range(4):
         t.append(spark.createDataFrame([(10 + i,)], "k long").coalesce(1))
-    files, _ = t._resolve(None)
+    files = sorted(t._state().files)
     assert len(files) <= 2
     ids = [r["id"] for r in t.snapshot().collect() if r["id"] is not None]
     assert len(ids) == len(set(ids))  # compaction preserved assignments
@@ -1696,7 +1731,8 @@ def test_protocol_feature_flags(spark, tmp_path):
 
     # a FUTURE writer feature (written by a newer engine): reads fine,
     # writes refuse
-    _, schema, _, props, _ = t._resolve_state(None)
+    state = t._state()
+    schema, props = state.schema_json, state.props
     v = t.latest_version() + 1
     future = dict(props)
     future["protocol"] = {
@@ -1871,10 +1907,10 @@ def test_add_columns_metadata_only_evolution(spark, tmp_path):
     column mapping composes (rename the added column)."""
     t = AcidTable(spark, str(tmp_path / "t"))
     t.append(spark.createDataFrame([(1, "a"), (2, "b")], "k long, s string"))
-    files_before = sorted(t._resolve(None)[0])
+    files_before = sorted(t._state().files)
     v = t.add_columns({"score": "double", "tags": "array<string>"})
     # metadata-only: same data files
-    assert sorted(t._resolve(None)[0]) == files_before
+    assert sorted(t._state().files) == files_before
     got = t.snapshot().orderBy("k").collect()
     assert [r.score for r in got] == [None, None]
     assert [r.tags for r in got] == [None, None]
@@ -2294,7 +2330,8 @@ def test_merge_bloom_pruning_on_hash_keys(spark, tmp_path):
         F.col("id").alias("v"),
     ).repartition(8)
     t.append(base)
-    live_before, _, _, _, _ = t._resolve_state(None)
+    state = t._state()
+    live_before = state.files
     assert len(live_before) >= 4
     # batch of 3 keys: bloom tier should prune most files
     batch = spark.createDataFrame(
@@ -2303,7 +2340,7 @@ def test_merge_bloom_pruning_on_hash_keys(spark, tmp_path):
         F.md5(F.col("id").cast("string")).alias("digest"),
         (F.col("id") + 100000).alias("v"),
     )
-    touched = t._touched_files(live_before, batch, ["digest"])
+    touched = t._touched_files(state, batch, ["digest"])
     assert 0 < len(touched) < len(live_before)
     t.merge(batch, ["digest"])
     got = {r.digest: r.v for r in t.snapshot().collect()}
@@ -2433,7 +2470,7 @@ def test_bloom_skips_unsafe_types_build_and_probe(spark, tmp_path):
             "flag boolean, price double, name string",
         )
     )
-    live, _, _, _, _ = t._resolve_state(None)
+    live = t._state().files
     stats = next(iter(live.values()))
     # unsafe columns carry no bloom entry; the string column does
     assert "#bloom:flag" not in stats and "#bloom:price" not in stats
@@ -2529,7 +2566,7 @@ def test_overwrite_where_replaces_predicate_range(spark, tmp_path):
             [(3, "d2", 30), (4, "d2", 40)], "k int, day string, v int"
         )
     )
-    live_before, _, _, _, _ = t._resolve_state(None)
+    live_before = t._state().files
     v_before = t.latest_version()
     # recompute day 1
     t.overwrite_where(
@@ -2540,7 +2577,7 @@ def test_overwrite_where_replaces_predicate_range(spark, tmp_path):
     )
     got = {r.k: r.v for r in t.snapshot().collect()}
     assert got == {1: 11, 5: 50, 3: 30, 4: 40}
-    live_after, _, _, _, _ = t._resolve_state(None)
+    live_after = t._state().files
     # the d2 file carried over untouched (same path, no rewrite)
     d2_files = [p for p, st in live_before.items() if st.get("day", ["", ""])[0] == "d2"]
     assert d2_files and all(p in live_after for p in d2_files)
@@ -2878,8 +2915,8 @@ def test_liquid_clustering_lifecycle(spark, tmp_path):
     before = sorted(
         tuple(r) for r in t.snapshot(with_row_ids=True).collect()
     )
-    n_before = len(t._resolve(None)[0])
-    hit_before, _, _ = t._pruned_live([("k", "=", 5)], t.latest_version())
+    n_before = len(t._state().files)
+    hit_before = t._pruned_live(t._state(), [("k", "=", 5)])
 
     t.set_clustering(["k"])
     assert t.clustering_columns() == ["k"]
@@ -2890,7 +2927,7 @@ def test_liquid_clustering_lifecycle(spark, tmp_path):
     after = sorted(tuple(r) for r in t.snapshot(with_row_ids=True).collect())
     assert after == before  # rows AND ids preserved
     assert t.changes(v_pre).count() == 0  # pure layout
-    hit_after, _, _ = t._pruned_live([("k", "=", 5)], t.latest_version())
+    hit_after = t._pruned_live(t._state(), [("k", "=", 5)])
     assert len(hit_after) < len(hit_before)
     assert len(hit_after) <= 2
 
@@ -2898,18 +2935,18 @@ def test_liquid_clustering_lifecycle(spark, tmp_path):
     assert t.optimize_cluster() == v1
 
     # incremental: a fresh append reclusters ONLY the new files
-    live0 = set(t._resolve(None)[0])
+    live0 = set(t._state().files)
     t.append(
         spark.range(500).select(
             (F.col("id") % 3000).alias("k"), F.col("id").alias("v")
         )
     )
-    fresh = set(t._resolve(None)[0]) - live0
+    fresh = set(t._state().files) - live0
     t.optimize_cluster(n_files=4)
-    live1 = set(t._resolve(None)[0])
+    live1 = set(t._state().files)
     assert live0 <= live1  # stable zcubes never rewritten
     assert not (fresh & live1)  # the unclustered files were formed up
-    stats = t._resolve_state(t.latest_version())[0]
+    stats = t._state(t.latest_version()).files
     assert all("#zcube" in st for st in stats.values())
 
     # the key can change without rewriting history (the liquid pitch)
@@ -2937,7 +2974,7 @@ def test_liquid_clustering_sql_surface(spark, tmp_path):
     sql.sql("ALTER TABLE ct CLUSTER BY (a, s)")  # string key: fallback
     assert t.clustering_columns() == ["a", "s"]
     sql.sql("OPTIMIZE ct")
-    stats = t._resolve_state(t.latest_version())[0]
+    stats = t._state(t.latest_version()).files
     assert stats and all("#zcube" in st for st in stats.values())
     with pytest.raises(ValueError, match="liquid clustering"):
         sql.sql("OPTIMIZE ct ZORDER BY (a)")
@@ -2973,8 +3010,8 @@ def test_optimize_full_recluster(spark, tmp_path):
     sql.sql("OPTIMIZE fc FULL")
     assert t.latest_version() > v1
     assert sorted(tuple(r) for r in t.snapshot().collect()) == before
-    hit, _, _ = t._pruned_live([("b", "=", 7)], t.latest_version())
-    assert len(hit) < len(t._resolve(None)[0])  # narrow on the NEW key
+    hit = t._pruned_live(t._state(), [("b", "=", 7)])
+    assert len(hit) < len(t._state().files)  # narrow on the NEW key
     with pytest.raises(ValueError, match="requires liquid clustering"):
         sql.sql("ALTER TABLE fc CLUSTER BY NONE")
         sql.sql("OPTIMIZE fc FULL")
@@ -2996,7 +3033,7 @@ def test_auto_compact_clusters_on_clustered_table(spark, tmp_path):
                 ((F.col("id") * 13 + s) % 100).alias("k")
             )
         )
-    stats = t._resolve_state(t.latest_version())[0]
+    stats = t._state(t.latest_version()).files
     assert all("#zcube" in st for st in stats.values())
     epochs = {st["#zcube"][0] for st in stats.values()}
     assert len(epochs) <= 2  # binary-counter merging bounds epochs
@@ -3013,13 +3050,13 @@ def test_optimize_cluster_merges_small_zcubes(spark, tmp_path):
     t.append(spark.range(4000).select((F.col("id") % 991).alias("k")))
     t.set_clustering(["k"])
     t.optimize_cluster(n_files=4)
-    big = {p for p, st in t._resolve_state(None)[0].items()}
+    big = {p for p, st in t._state().files.items()}
     for s in range(4):  # small batches: merge each other, never 'big'
         t.append(
             spark.range(100).select(((F.col("id") + s) % 991).alias("k"))
         )
         t.optimize_cluster(n_files=4)
-    stats = t._resolve_state(None)[0]
+    stats = t._state().files
     assert big <= set(stats)  # the large zcube was never rewritten
     epochs = {st["#zcube"][0] for st in stats.values()}
     assert len(epochs) <= 3  # 4000-cube + O(log 4) small epochs
@@ -3065,7 +3102,7 @@ def test_concurrent_append_and_optimize_cluster(spark, tmp_path):
     assert t.snapshot().count() == 500 + 3 * 200
     # one final pass leaves everything stamped and nothing lost
     t.optimize_cluster(n_files=4)
-    stats = t._resolve_state(None)[0]
+    stats = t._state().files
     assert all("#zcube" in st for st in stats.values())
     assert t.snapshot().count() == 1100
 
@@ -3082,14 +3119,14 @@ def test_long_string_stats_truncate_but_still_prune(spark, tmp_path):
     t.append(spark.createDataFrame(mk("https://alpha.example/", 50), "url string, n int").coalesce(1))
     t.append(spark.createDataFrame(mk("https://zeta.example/", 50), "url string, n int").coalesce(1))
 
-    stats = t._resolve_state(None)[0]
+    stats = t._state().files
     assert len(stats) == 2
     for st_ in stats.values():
         lo, hi = st_["url"]
         assert len(lo) <= 32 and len(hi) <= 32  # truncated, not dropped
 
     probe = "https://zeta.example/0007" + "x" * 60
-    hit, _, _ = t._pruned_live([("url", "=", probe)], t.latest_version())
+    hit = t._pruned_live(t._state(), [("url", "=", probe)])
     assert len(hit) == 1  # the alpha file is provably unmatched
     got = t.scan([("url", "=", probe)]).collect()
     assert len(got) == 1 and got[0].n == 7
@@ -3132,7 +3169,7 @@ def test_convert_from_parquet_in_place(spark, tmp_path):
     assert t.latest_version() == 0
     assert t.snapshot().count() == 100
     assert t.row_count() == 100  # metadata-only count from footer stats
-    hit, _, _ = t._pruned_live([("k", "<", 10)], 0)
+    hit = t._pruned_live(t._state(0), [("k", "<", 10)])
     assert len(hit) == 1  # the 50-99 file is provably unmatched
 
     # full verb set from here on
@@ -3198,7 +3235,7 @@ def test_surrogate_boundary_stats_survive_files_readback(spark, tmp_path):
         ).coalesce(1)
     )
 
-    stats = t._resolve_state(None)[0]
+    stats = t._state().files
     bounds = [st["url"] for st in stats.values() if "url" in st]
     assert any(hi == "a" * 31 + "" for _, hi in bounds)
     for _, hi in bounds:
@@ -3207,9 +3244,7 @@ def test_surrogate_boundary_stats_survive_files_readback(spark, tmp_path):
     rows = t.files().collect()  # re-encodes stats through Spark/Arrow
     assert len(rows) == 2
     # pruning: an equality probe above the bumped bound skips the file
-    hit, _, _ = t._pruned_live(
-        [("url", "=", "m" * 60)], t.latest_version()
-    )
+    hit = t._pruned_live(t._state(), [("url", "=", "m" * 60)])
     assert len(hit) == 1
     got = t.scan([("url", "=", long_vals[0][0])]).collect()
     assert len(got) == 20
@@ -3235,7 +3270,7 @@ def test_rename_clustering_column_migrates_key(spark, tmp_path):
             spark.createDataFrame([(1000 + i, 0)], "key long, v long")
         )
     assert t.snapshot().count() == 103
-    stats = t._resolve_state(None)[0]
+    stats = t._state().files
     assert all("#zcube" in st for st in stats.values())
 
 
@@ -3295,7 +3330,7 @@ def test_convert_recursive_subdirectories(spark, tmp_path):
     t = AcidTable.convert_from_parquet(spark, src)
     assert t.snapshot().count() == 90
     assert set(range(90)) == {r.k for r in t.snapshot().collect()}
-    live = t._resolve_state(None)[0]
+    live = t._state().files
     assert any(p.startswith("shard_a" + os.sep) for p in live)
     assert any(p.startswith(os.path.join("shard_a", "nested")) for p in live)
     assert not any("_staging" in p for p in live)
@@ -3319,7 +3354,7 @@ def test_vacuum_reclaims_superseded_adopted_files(spark, tmp_path):
     src = str(tmp_path / "plain")
     spark.range(50).selectExpr("id AS k").coalesce(1).write.parquet(src)
     t = AcidTable.convert_from_parquet(spark, src)
-    adopted = [p for p in t._resolve_state(None)[0]]
+    adopted = [p for p in t._state().files]
     assert adopted and all(not p.startswith("data") for p in adopted)
 
     # a fresh converted table with no staged writes vacuums cleanly
@@ -3497,11 +3532,11 @@ def test_conflict_matrix_cluster_rebases_over_append(spark, tmp_path):
     t.optimize_cluster(n_files=2)
     assert n["n"] == 1  # rebased
     assert t.snapshot().count() == 101
-    live = t._resolve_state(None)[0]
+    live = t._state().files
     unstamped = [p for p, st in live.items() if "#zcube" not in (st or {})]
     assert len(unstamped) == 1  # exactly the winner's file awaits the next run
     t.optimize_cluster(n_files=2)
-    live = t._resolve_state(None)[0]
+    live = t._state().files
     assert all("#zcube" in st for st in live.values())
     assert t.snapshot().count() == 101
 
@@ -3795,10 +3830,10 @@ def test_scoped_zorder_where(spark, tmp_path):
         (r.day, r.a): r._row_id
         for r in t.snapshot(with_row_ids=True).collect()
     }
-    before = set(t._resolve_state(None)[0])
+    before = set(t._state().files)
 
     t.optimize_zorder(["a", "b"], n_files=2, filters=[("day", "=", 2)])
-    live = t._resolve_state(None)[0]
+    live = t._state().files
     # day=1's file untouched, day=2's file replaced
     day1 = [p for p in before if p in live]
     assert len(day1) == 1
@@ -3835,7 +3870,7 @@ def test_fsck_repair_drops_missing_files(spark, tmp_path):
     t = AcidTable(spark, str(tmp_path / "t"))
     t.append(spark.range(0, 50).selectExpr("id AS k").coalesce(1))
     t.append(spark.range(50, 100).selectExpr("id AS k").coalesce(1))
-    live = sorted(t._resolve_state(None)[0])
+    live = sorted(t._state().files)
     victim = next(p for p in live if True)
     os.remove(os.path.join(str(tmp_path / "t"), victim))
 
@@ -3957,7 +3992,7 @@ def test_conflict_layer_threaded_mixed_verbs(spark, tmp_path):
     assert got == expect
     # convergence: one final pass leaves everything clustered
     t.optimize_cluster(n_files=4)
-    live = t._resolve_state(None)[0]
+    live = t._state().files
     assert all("#zcube" in st for st in live.values())
 
 
@@ -3973,8 +4008,8 @@ def test_vacuum_protects_unpublished_branch_files(spark, tmp_path):
     br = t.create_branch("wap")
     br.append(spark.createDataFrame([(2, "b")], "k long, v string"))
     br.delete([("k", "=", 1)], mode="merge_on_read")  # branch DV state
-    branch_files, _ = br._resolve()
-    branch_only = [f for f in branch_files if f not in t._resolve()[0]]
+    branch_files = sorted(br._state().files)
+    branch_only = [f for f in branch_files if f not in t._state().files]
     assert branch_only
 
     # grace window elapsed: pre-fix these were "never committed" and
@@ -4020,3 +4055,75 @@ def test_size_output_keeps_only_a_root_chain_repartition(spark, tmp_path):
     filtered = spark.range(100).repartition(4).filter("id > 3")
     out = t._size_output(filtered)
     assert out is not filtered and out.rdd.getNumPartitions() == 1
+
+
+# ---- one snapshot per attempt: a re-plan sees the base it commits on ---
+
+
+def _renamed_under(spark, path, old, new):
+    """A table (k, v, x) and a handle whose first commit attempt loses
+    to a rename of ``old`` to ``new`` from a second handle."""
+    t = AcidTable(spark, path)
+    t.append(
+        spark.createDataFrame(
+            [(i, i * 10, 0) for i in range(6)], "k long, v long, x long"
+        )
+    )
+    other = AcidTable(spark, path)
+    _inject_winner_once(t, lambda: other.rename_column(old, new))
+    return t
+
+
+@pytest.mark.parametrize("verb", ["update", "merge"])
+def test_replan_after_concurrent_rename_rejects_the_old_name(
+    spark, tmp_path, verb
+):
+    """A verb naming a column that a concurrent rename took away must
+    fail on re-plan, exactly as it would run after the rename — not
+    commit against the column map it read before the race."""
+    path = str(tmp_path / "t")
+    if verb == "update":
+        t = _renamed_under(spark, path, "v", "w")
+        with pytest.raises(ValueError):
+            t.update({"v": "v + 1"}, [("k", "<", 3)])
+    else:
+        t = _renamed_under(spark, path, "k", "kk")
+        with pytest.raises(ValueError):
+            t.merge(
+                spark.createDataFrame(
+                    [(1, -1, 1), (99, 99, 1)], "k long, v long, x long"
+                ),
+                ["k"],
+            )
+    assert [c.op for c in t.history()] == ["append", "setprops"]
+    assert _rows(t.snapshot()) == [(i, i * 10, 0) for i in range(6)]
+
+
+@pytest.mark.parametrize("verb", ["update", "delete"])
+def test_replan_after_concurrent_rename_of_another_column_commits(
+    spark, tmp_path, verb
+):
+    """A verb that does not touch the renamed column re-plans against
+    the new base and commits; its rows keep the new name."""
+    t = _renamed_under(spark, str(tmp_path / "t"), "v", "w")
+    if verb == "update":
+        t.update({"x": "x + 1"}, [("k", "<", 3)])
+        want = [(i, i * 10, int(i < 3)) for i in range(6)]
+    else:
+        t.delete([("k", "=", 1)])
+        want = [(i, i * 10, 0) for i in range(6) if i != 1]
+    assert [c.op for c in t.history()] == ["append", "setprops", verb]
+    assert t.snapshot().columns == ["k", "w", "x"]
+    assert _rows(t.snapshot()) == want
+
+
+@pytest.mark.parametrize("mode", ["copy_on_write", "merge_on_read"])
+def test_merge_apply_duplicate_source_keys_raise(spark, tmp_path, mode):
+    t = AcidTable(spark, str(tmp_path / "t"))
+    t.append(spark.createDataFrame([(1, "a"), (2, "b")], "k long, v string"))
+    dup = spark.createDataFrame(
+        [(1, "x", False), (1, "y", True)], "k long, v string, gone boolean"
+    )
+    with pytest.raises(ValueError, match="merge key"):
+        t.merge_apply(dup, ["k"], "gone", mode=mode)
+    assert t.latest_version() == 0
