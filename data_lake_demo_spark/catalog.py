@@ -198,7 +198,8 @@ class AcidCatalog:
 
     Dogfooding the table format gives the catalog every ACID property
     for free: registrations are atomic MERGEs (concurrent writers
-    race on the commit log, not on a file), drops are transactional
+    race on the commit log, not on a file; the first registration's
+    MERGE seeds version 0), drops are transactional
     ``merge_delete`` tombstones, and because the catalog is itself
     time-travelable you can attach the SQL surface *as it existed at
     any catalog version* — the lakehouse-catalog shape (Delta/Iceberg
@@ -224,11 +225,6 @@ class AcidCatalog:
     def register(self, name: str, path: str, comment: str = "") -> None:
         """Upsert one mapping (last registration wins, atomically)."""
         row = self.spark.createDataFrame([(name, path, comment)], self.SCHEMA)
-        if self.store.latest_version() < 0:
-            # bootstrap an EMPTY version 0 so MERGE has a target; racing
-            # creators at worst land extra empty commits (rows only ever
-            # enter through the merge, so no duplicate mappings)
-            self.store.append(self.spark.createDataFrame([], self.SCHEMA))
         self.store.merge(row, ["table_name"])
 
     def drop(self, name: str) -> None:

@@ -513,10 +513,10 @@ class AcidSql:
 
     # ---- INSERT --------------------------------------------------------
 
-    def _auto_cols(self, t) -> set[str]:
+    @staticmethod
+    def _auto_cols(t, props: dict) -> set[str]:
         """Columns the engine assigns (identity) or computes when
         omitted (generated) — INSERT may leave them out."""
-        props = t.properties()
         out = set()
         for k in props:
             if k.startswith(t._IDENTITY_PREFIX):
@@ -530,12 +530,14 @@ class AcidSql:
         positional when no column list is given (full width, or full
         width minus the engine-assigned columns), by-name with one
         (unnamed target columns land NULL, Spark-SQL style); every
-        landed column is cast to the declared type."""
+        landed column is cast to the declared type. Schema, auto
+        columns and defaults come from ONE resolved snapshot."""
         from pyspark.sql import functions as F
 
-        target = t.snapshot().schema
+        snap = t._state()
+        target = t._snapshot_df(snap).schema
         tnames = [f.name for f in target]
-        auto = self._auto_cols(t)
+        auto = self._auto_cols(t, snap.props)
         if cols is None:
             writable = [n for n in tnames if n not in auto]
             if len(df.columns) == len(tnames):
@@ -563,7 +565,7 @@ class AcidSql:
         by_name = {f.name: f for f in target}
         defaulted = {
             k[len(t._DEFAULT_PREFIX):]
-            for k in t.properties()
+            for k in snap.props
             if k.startswith(t._DEFAULT_PREFIX)
         }
         out = []

@@ -1,11 +1,13 @@
-"""MERGE-style upsert and SCD2 history as pure dataframe rewrites.
+"""MERGE and SCD2 history as pure dataframe rewrites.
 
 No Delta/Iceberg jars in this image, so MERGE INTO is emulated with
 the classic anti-join + union rewrite (the same logical plan a
-format's MERGE produces). The transactional half lives in
-``data_lake_demo_spark.tableformat.AcidTable.merge``, which runs this
-rewrite under a commit log: snapshot-isolated read, copy-on-write
-staging, atomic remove+add commit, optimistic retry on conflict. The
+format's MERGE produces): :func:`merge_apply` is the one rewrite, for
+upserts and for batches that also carry deletes. The transactional
+half lives in ``data_lake_demo_spark.tableformat.AcidTable.merge_apply``
+(``AcidTable.merge`` is its no-delete call), which runs this rewrite
+under a commit log: snapshot-isolated read, copy-on-write staging,
+atomic remove+add commit, rebase or re-plan on conflict. The
 reference's idempotent-write guard (worker.py:214-221) is the
 degenerate case (insert-if-absent on the natural key).
 
@@ -48,24 +50,30 @@ def _assert_unique_keys(df: DataFrame, keys: Sequence[str], what: str) -> None:
         )
 
 
-def merge_upsert(
+def merge_apply(
     target: DataFrame,
     updates: DataFrame,
     keys: Sequence[str],
+    delete_col: str | None = None,
     *,
     dedupe_order: str | None = None,
     allow_missing_columns: bool = False,
-    unique_keys: bool = False,
 ) -> DataFrame:
-    """UPSERT (\"when matched update, when not matched insert\"):
-    updated rows replace matched target rows; unmatched target rows
-    pass through. Returns the merged DataFrame (caller writes it).
+    """The SQL MERGE shape in one rewrite: updated rows replace matched
+    target rows (WHEN MATCHED THEN UPDATE), unmatched update rows
+    insert (WHEN NOT MATCHED THEN INSERT), unmatched target rows pass
+    through. Returns the merged DataFrame (caller writes it).
 
-    ``updates`` must be unique per key (checked, like SQL MERGE's
-    multiple-match error) unless ``dedupe_order`` names a column whose
-    per-key maximum picks the winning row, or ``unique_keys=True``
-    asserts the caller already proved uniqueness (AcidTable.merge
-    folds the check into its key-ranges job — one Spark job, not two).
+    ``delete_col`` names a boolean column: rows with it true DELETE
+    their matched target rows (WHEN MATCHED AND <delete_col> THEN
+    DELETE) and never land; a delete row matching nothing is a no-op,
+    like MERGE. ``delete_col=None`` is the plain upsert. One shuffle:
+    the anti-join of the target against the batch keys, then a union.
+
+    ``updates`` must be unique per key unless ``dedupe_order`` names a
+    column whose per-key maximum picks the winning row; the caller
+    proves it (AcidTable.merge_apply folds the multiple-match check
+    into its key-ranges job).
 
     ``allow_missing_columns=True`` is the schema-auto-evolution shape
     (Delta's ``merge.schema.autoMerge``): a NEW source column widens
@@ -76,42 +84,11 @@ def merge_upsert(
     keys = list(keys)
     if dedupe_order is not None:
         updates = _latest_per_key(updates, keys, dedupe_order)
-    elif not unique_keys:
-        _assert_unique_keys(updates, keys, "update")
     untouched = target.join(updates.select(*keys).distinct(), keys, "left_anti")
+    if delete_col is not None:
+        updates = updates.filter(~F.col(delete_col)).drop(delete_col)
     return untouched.unionByName(
         updates, allowMissingColumns=allow_missing_columns
-    )
-
-
-def merge_apply(
-    target: DataFrame,
-    updates: DataFrame,
-    keys: Sequence[str],
-    delete_col: str,
-    *,
-    dedupe_order: str | None = None,
-    allow_missing_columns: bool = False,
-) -> DataFrame:
-    """The full SQL MERGE shape in one rewrite: rows of ``updates``
-    with ``delete_col`` true DELETE their matched target rows (WHEN
-    MATCHED THEN DELETE); the rest upsert (update matched / insert
-    unmatched). A delete row matching nothing is a no-op, like MERGE.
-    Same one-shuffle anti-join + union plan as :func:`merge_upsert`;
-    the ``delete_col`` never lands in the output.
-    ``allow_missing_columns`` as in :func:`merge_upsert`.
-
-    ``updates`` must be unique per key unless ``dedupe_order`` picks
-    the winner per key: the caller proves it (AcidTable.merge_apply
-    folds the multiple-match check into its key-ranges job).
-    """
-    keys = list(keys)
-    if dedupe_order is not None:
-        updates = _latest_per_key(updates, keys, dedupe_order)
-    untouched = target.join(updates.select(*keys).distinct(), keys, "left_anti")
-    survivors = updates.filter(~F.col(delete_col)).drop(delete_col)
-    return untouched.unionByName(
-        survivors, allowMissingColumns=allow_missing_columns
     )
 
 

@@ -2214,7 +2214,7 @@ def orders_merge_mor_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     commit. The final snapshot reduces to a per-status quantized
     aggregate (batch rows carry status '~') and value-hashes against
     SQL replaying the anti-join + union. Certifies
-    tableformat._merge_mor_attempt under the driver hash. Semantics
+    tableformat._merge_mor_stage under the driver hash. Semantics
     follow Delta's DV-based (low-shuffle) merge."""
     import shutil
     import tempfile

@@ -38,11 +38,13 @@ protocol those formats use, reduced to its essentials:
   the race it reads the winner commits once, checks each against the
   props its own predecessor carried, and advances the old base by
   them — the new base costs one listing and no replay.
-- **MERGE is copy-on-write.** ``merge`` rewrites the table through
-  operators/upsert.merge_upsert (the anti-join + union plan a
-  format's MERGE INTO lowers to) into NEW files and commits
-  ``remove`` of the old set + ``add`` of the new set in ONE log
-  entry — readers see the old or the new table, never a mix.
+- **One MERGE.** ``merge_apply`` holds the only MERGE loop
+  (``merge`` is its call without a delete column). Copy-on-write, it
+  rewrites the touched files through operators/upsert.merge_apply
+  (the anti-join + union plan a format's MERGE INTO lowers to) into
+  NEW files and commits ``remove`` of the old set + ``add`` of the
+  new set in ONE log entry — readers see the old or the new table,
+  never a mix; merge-on-read masks matches with deletion vectors.
 
 At 100 TB: the log holds per-commit ``add``/``remove`` ACTIONS (not
 full listings) with per-file footer [min, max] stats (the Iceberg
@@ -4546,148 +4548,34 @@ class AcidTable:
         auto_evolve: bool = False,
         max_retries: int = 5,
     ) -> int:
-        """MERGE INTO (upsert) with snapshot-isolated copy-on-write and
-        manifest-level file skipping: only live files whose footer
-        min/max ranges can contain a merge key are read and rewritten
-        (operators/upsert.merge_upsert); provably-unmatchable files
-        stay untouched in the new snapshot. The commit removes the
-        touched set + adds the rewrite atomically. A commit conflict
-        re-reads the NEW snapshot and re-runs the merge — classic
-        optimistic concurrency, so concurrent merges serialize instead
-        of silently dropping one writer's rows.
-
-        At 100 TB this pruning is what makes point-ish MERGE usable:
-        an update batch touching one day's key range rewrites that
-        day's files, not the table.
-
-        ``txn=(app, batch_id)`` makes the merge idempotent per batch id
-        (same watermark contract as ``append``) — the streaming CDC
-        shape: ``foreach_batch_merge_sink`` upserts each micro-batch
-        and a post-failure replay is a no-op instead of a second
-        rewrite.
-
-        ``auto_evolve=True`` is Delta's ``WITH SCHEMA EVOLUTION`` /
-        ``merge.schema.autoMerge``: a batch carrying NEW columns
-        widens the table schema in the SAME commit (untouched rows
-        read the new column as NULL), and a batch missing committed
-        columns fills NULL on its rows — full-row replace semantics.
-        Without it, a column-set mismatch raises instead of silently
-        evolving.
-
-        ``mode="merge_on_read"`` is Delta's DV-based (low-shuffle)
-        MERGE: matched target rows are MASKED by deletion vectors — no
-        touched file is rewritten — and the (deduped) batch lands
-        whole as new files, in ONE commit. Write amplification drops
-        from O(touched files) to O(batch + compressed vector bytes):
-        on a 100 TB table a CDC trickle that matches one row per file
-        stops rewriting those files wholesale. Same logical result,
-        same CDF net diff (a row replaced by an identical copy still
-        cancels), same conflict rules; read cost accumulates in the
-        vectors until compaction materializes them — the identical
-        trade ``delete(mode="merge_on_read")`` makes. ``mode=None``
-        (default) resolves the ``merge.mode`` TABLE property first
-        (``ALTER TABLE t SET TBLPROPERTIES('merge.mode' =
-        'merge_on_read')`` flips every writer, including SQL MERGE
-        INTO), falling back to copy_on_write."""
-        from data_lake_demo_spark.operators.upsert import merge_upsert
-
-        self._reject_reserved_row_id(updates)
-        logical_keys = list(keys)
-        for _ in range(max_retries):
-            snap = self._state()
-            verb_mode = self._default_write_mode(snap, "merge", mode)
-            # watermark as-of the commit base: a replay landing after
-            # this read makes our commit conflict, which re-enters the
-            # check (no TOCTOU window)
-            if snap.holds(txn):
-                return snap.version
-            # write rules and column names resolve against the
-            # snapshot this attempt commits on
-            colmap = snap.colmap
-            ups = self._apply_generated(updates, snap)
-            self._enforce_constraints(ups, snap.props)
-            ups = self._physicalize(ups, colmap)
-            keys = self._phys_names(logical_keys, colmap)
-            phys_part = self._phys_partition_by(partition_by, snap)
-            if dedupe_order is None:
-                # ranges + the unique-source-key check in ONE job
-                # (r12: each was its own small sequential Spark job)
-                ranges = self._batch_key_ranges_checked(ups, keys, "update")
-            else:
-                ranges = self._batch_key_ranges(ups, keys)
-            touched = self._touched_files(snap, ups, keys, ranges=ranges)
-            if verb_mode == "merge_on_read":
-                v = self._merge_mor_attempt(
-                    snap, ups, keys, touched,
-                    dedupe_order=dedupe_order, txn=txn,
-                    partition_by=phys_part, auto_evolve=auto_evolve,
-                    ranges=ranges,
-                )
-                if v is not None:
-                    return v
-                continue  # true overlap: re-plan against the new head
-            if touched:
-                # committed-schema read, NOT bare spark.read.parquet:
-                # heterogeneous touched footers (a widen/add_columns that
-                # predates some files) must up-cast/pad at scan time or
-                # the rewrite narrows the table back and strands wider
-                # live files (unreadable snapshot)
-                target = self._read_for_rewrite(snap, touched)
-            elif snap.schema_json is not None:
-                target = self.spark.createDataFrame(
-                    [], T.StructType.fromJson(json.loads(snap.schema_json))
-                )
-            else:
-                raise ValueError(f"table {self.path} has no commits")
-            dropped = [p for p, l in colmap.items() if l == ""]
-            if dropped:  # the rewrite materializes column drops
-                target = target.drop(*dropped)
-            rt_on = self._row_tracking_on(snap)
-            if rt_on:
-                if self._ROW_ID_COL not in target.columns:
-                    target = target.withColumn(
-                        self._ROW_ID_COL, F.lit(None).cast("long")
-                    )
-                ups = self._inherit_row_ids(ups, target, keys)
-            merged = merge_upsert(
-                target,
-                ups,
-                keys,
-                dedupe_order=dedupe_order,
-                allow_missing_columns=auto_evolve,
-                # dedupe_order None ⇒ uniqueness already proven by the
-                # combined ranges job above — don't re-run the check
-                unique_keys=dedupe_order is None,
-            )
-            if rt_on:
-                merged = self._assign_fresh_row_ids(merged, snap.props)
-            add, schema = self._stage_actions(merged, partition_by=phys_part)
-            # rebase-eligible: a winner is disjoint only if it neither
-            # touched our files NOR appended rows whose merge-key
-            # ranges may intersect the batch's (check_adds=True — a
-            # matching append would have changed the matched/
-            # not-matched split, under every isolation level)
-            v = self._commit_or_rebase(
-                snap,
-                "merge",
-                add,
-                touched,
-                # same widening guard as append: a narrow update
-                # batch must not revert add_columns/widen_column
-                self._evolve_schema(schema, snap),
-                txn=txn,
-                read_filters=self._key_filters(keys, ranges),
-                check_adds=True,
-            )
-            if v is None:
-                continue
-            return self._auto_maintain(snap, v)
-        raise CommitConflict(f"merge lost {max_retries} commit races")
+        """MERGE INTO (upsert): WHEN MATCHED THEN UPDATE / WHEN NOT
+        MATCHED THEN INSERT. This is ``merge_apply`` with no delete
+        column — the same plan, Spark jobs, retry loop and commit
+        rule; see there for modes, ``txn``, ``auto_evolve``, seeding
+        and the rebase rule. A separate method so tracing and callers
+        can tell a plain upsert from a batch that carries deletes."""
+        return self.merge_apply(
+            updates,
+            keys,
+            None,
+            mode=mode,
+            dedupe_order=dedupe_order,
+            txn=txn,
+            partition_by=partition_by,
+            auto_evolve=auto_evolve,
+            max_retries=max_retries,
+        )
 
     @staticmethod
-    def _key_filters(keys: Sequence[str], ranges) -> list:
+    def _key_filters(
+        keys: Sequence[str], ranges, null_safe: bool = False
+    ) -> list:
         """The batch's merge-key ranges as rebase-time read filters;
-        empty (any winner add is a match) when a key's range is NULL."""
+        empty (any winner add may match) when a key's range is NULL,
+        and under ``null_safe`` when the batch holds a NULL key — a
+        winner file's [min, max] says nothing about its NULL keys."""
+        if null_safe and any(ranges[f"__null_{k}"] for k in keys):
+            return []
         key_filters = [
             (k, "between", (ranges[f"__lo_{k}"], ranges[f"__hi_{k}"]))
             for k in keys
@@ -4695,7 +4583,7 @@ class AcidTable:
         ]
         return key_filters if len(key_filters) == len(keys) else []
 
-    def _merge_mor_attempt(
+    def _merge_mor_stage(
         self,
         snap: Snapshot,
         updates: DataFrame,
@@ -4703,34 +4591,28 @@ class AcidTable:
         touched: list[str],
         *,
         dedupe_order: str | None,
-        txn: tuple[str, int] | None,
         partition_by,
         auto_evolve: bool,
-        ranges=None,
-        delete_col: str | None = None,
-    ) -> int | None:
-        """One merge-on-read MERGE attempt against ``snap``: the
-        matched rows' (file, row-index) coordinates become deletion
-        vectors (executor-encoded, sidecar-spilled like any MOR
-        delete) and the deduped batch stages as new files — commit is
-        add + dv, remove NOTHING. Row tracking: matched update rows
-        inherit the masked rows' ids (an update preserves identity),
-        true inserts mint fresh ones — so the CDF's delete+insert pair
-        shares its ``_row_id`` exactly like the copy-on-write plan.
-        ``delete_col`` (the merge_apply shape) masks matched rows for
+        delete_col: str | None,
+    ) -> tuple[list[dict], str, list[dict]]:
+        """Stage one merge-on-read MERGE against ``snap`` (a table
+        with commits): the matched rows' (file, row-index) coordinates
+        become deletion vectors (executor-encoded, sidecar-spilled
+        like any MOR delete) and the deduped batch stages as new files
+        — the commit is add + dv, remove NOTHING. Row tracking:
+        matched update rows inherit the masked rows' ids (an update
+        preserves identity), true inserts mint fresh ones — so the
+        CDF's delete+insert pair shares its ``_row_id`` exactly like
+        the copy-on-write plan. ``delete_col`` masks matched rows for
         EVERY batch key but stages only the surviving (non-delete)
         rows — a retraction is a pure mask, an unmatched delete a
-        no-op. ``ranges=None`` skips key-range rebase eligibility:
-        any winner add forces a re-plan (merge_apply's conservative
-        contract). The batch's keys are unique: callers dedupe by
+        no-op. The batch's keys are unique: callers dedupe by
         ``dedupe_order`` or prove it in ``_batch_key_ranges_checked``
         (or take the caller's word, ``merge_apply(unique_keys=True)``).
-        Returns the committed version, or None to re-plan."""
+        Returns (add, schema, dv)."""
         from data_lake_demo_spark.operators.upsert import _latest_per_key
 
         schema_json, dvs = snap.schema_json, snap.dvs
-        if schema_json is None:
-            raise ValueError(f"table {self.path} has no commits")
         keys = list(keys)
         ups = updates
         if dedupe_order is not None:
@@ -4751,8 +4633,8 @@ class AcidTable:
                 hits, touched, dvs,
                 row_bound=self._touched_row_bound(snap.files, touched),
             )
-        if delete_col is not None:  # merge_apply: retractions are a
-            ups = ups.filter(~F.col(delete_col)).drop(delete_col)  # pure mask
+        if delete_col is not None:  # retractions are a pure mask
+            ups = ups.filter(~F.col(delete_col)).drop(delete_col)
         # committed-schema alignment — the same unionByName contract
         # as the copy-on-write plan: batch-missing columns pad NULL,
         # new columns widen only under auto_evolve, else raise.
@@ -4781,29 +4663,13 @@ class AcidTable:
                 )
             out = self._assign_fresh_row_ids(out, snap.props)
         add, schema = self._stage_actions(out, partition_by=partition_by)
-        if not add and not dv_entries:
-            return snap.version  # empty batch: provably a no-op, no commit
-        v = self._commit_or_rebase(
-            snap,
-            "merge",
-            add,
-            [],
-            self._evolve_schema(schema, snap),
-            txn=txn,
-            dv=dv_entries,
-            read_filters=[] if ranges is None
-            else self._key_filters(keys, ranges),
-            check_adds=True,
-        )
-        if v is None:
-            return None
-        return self._auto_maintain(snap, v)
+        return add, schema, dv_entries
 
     def merge_apply(
         self,
         updates: DataFrame,
         keys: Sequence[str],
-        delete_col: str | None,
+        delete_col: str | None = None,
         *,
         mode: str | None = None,
         dedupe_order: str | None = None,
@@ -4814,31 +4680,71 @@ class AcidTable:
         fold: Callable[[DataFrame, DataFrame], DataFrame] | None = None,
         max_retries: int = 5,
     ) -> int:
-        """Full MERGE (WHEN MATCHED AND <delete_col> THEN DELETE /
-        WHEN MATCHED THEN UPDATE / WHEN NOT MATCHED THEN INSERT) as
-        ONE atomic copy-on-write commit — the CDC-apply and
-        incremental-view-maintenance shape, where a single batch
-        carries both upserts and retractions and applying them in two
-        commits would expose a half-applied snapshot.
+        """SQL MERGE as ONE atomic commit: WHEN MATCHED AND
+        <delete_col> THEN DELETE / WHEN MATCHED THEN UPDATE / WHEN NOT
+        MATCHED THEN INSERT. ``delete_col=None`` is the plain upsert
+        (``merge``); with it, one batch carries both upserts and
+        retractions — the CDC-apply and view-maintenance shape, where
+        two commits would expose a half-applied snapshot. A delete
+        row matching nothing is a no-op; delete rows never land, so
+        generated columns and constraints check only the survivors.
+        The batch must be unique per key (checked in the key-ranges
+        job, like SQL MERGE's multiple-match error) unless
+        ``dedupe_order`` keeps the latest row per key or
+        ``unique_keys=True`` takes the caller's word.
 
-        Same manifest-level file skipping, optimistic retry, and
-        ``txn`` exactly-once watermark as ``merge``. On a table with
-        no commits yet, deletes are no-ops and the surviving upserts
-        become the first snapshot.
+        Copy-on-write (the default): manifest-level file skipping —
+        only live files whose footer min/max ranges (and blooms) may
+        hold a batch key are read and rewritten through
+        operators/upsert.merge_apply (anti-join + union);
+        provably-unmatchable files stay untouched. The commit removes
+        the touched set and adds the rewrite atomically. At 100 TB this
+        pruning is what makes point-ish MERGE usable: a batch touching
+        one day's key range rewrites that day's files, not the table.
 
-        ``mode="merge_on_read"`` (or the ``merge.mode`` table
-        property) applies the batch WITHOUT rewriting any touched
-        file: every matched row masks via a deletion vector (a
-        retraction is a pure mask) and only the surviving upserts
-        land as new files — the cheapest possible CDC apply on a
-        wide table. Falls back to copy-on-write for the seeding
-        commit of an empty table.
+        ``mode="merge_on_read"`` is Delta's DV-based (low-shuffle)
+        MERGE: matched target rows are MASKED by deletion vectors (a
+        retraction is a pure mask) — no touched file is rewritten —
+        and the surviving batch rows land as new files. Write
+        amplification drops from O(touched files) to O(batch +
+        compressed vector bytes); read cost accumulates in the vectors
+        until compaction materializes them. Same logical result and
+        CDF net diff. ``mode=None`` resolves the ``merge.mode`` TABLE
+        property first (``ALTER TABLE t SET TBLPROPERTIES('merge.mode'
+        = 'merge_on_read')`` flips every writer, SQL MERGE INTO
+        included), falling back to copy_on_write.
 
-        ``fold(rows, updates) -> rows that land`` replaces the anti-join
-        + union for a delta ``updates`` keyed like the table (``delete_col``
-        may be None); ``rows`` are the touched files' logical rows (empty,
-        shaped like ``updates``, on a new table). NULL keys match when
-        pruning; the commit is copy-on-write; checks run on what lands."""
+        ``txn=(app, batch_id)`` makes the MERGE idempotent per batch id
+        (the ``append`` watermark contract): ``foreach_batch_merge_sink``
+        upserts each micro-batch and a post-failure replay is a no-op.
+
+        ``auto_evolve=True`` is Delta's ``WITH SCHEMA EVOLUTION``: a
+        batch carrying NEW columns widens the table schema in the SAME
+        commit (untouched rows read NULL), and a batch missing
+        committed columns fills NULL on its rows — full-row replace.
+        Without it, a column-set mismatch raises.
+
+        ``fold(rows, updates) -> rows that land`` replaces the
+        anti-join + union for a delta keyed like the table
+        (``delete_col`` may be None); ``rows`` are the touched files'
+        logical rows (empty, shaped like ``updates``, on a new table).
+        NULL keys match null-safely, the commit is copy-on-write, and
+        checks run on what lands.
+
+        On a table with no commits, the surviving rows (``fold``'s
+        output) seed version 0, in either mode.
+
+        Concurrency: each attempt plans against one snapshot. On a
+        lost race the staged commit REBASES onto the winners (no
+        second data job) when no winner removed or masked a file this
+        MERGE read, changed table metadata, or added a file whose
+        merge-key stats may intersect the batch's key ranges — such an
+        append would have changed the matched/not-matched split, so it
+        conflicts under every isolation level. A batch with a NULL key
+        under ``fold`` treats every winner add as a possible match.
+        Otherwise the attempt re-plans against the new head, up to
+        ``max_retries`` times. A committed MERGE then runs the table's
+        auto-maintenance policy."""
         from data_lake_demo_spark.operators.upsert import merge_apply
 
         self._reject_reserved_row_id(updates)
@@ -4846,13 +4752,20 @@ class AcidTable:
         for _ in range(max_retries):
             snap = self._state()
             verb_mode = self._default_write_mode(snap, "merge", mode)
+            # watermark as-of the commit base: a replay landing after
+            # this read makes our commit conflict, which re-enters the
+            # check (no TOCTOU window)
             if snap.holds(txn):
                 return snap.version
+            # write rules and column names resolve against the
+            # snapshot this attempt commits on
             colmap = snap.colmap
             ups = updates
-            if fold is None:
-                # delete rows never land; only surviving upserts are
-                # validated
+            if fold is None and delete_col is None:
+                ups = self._apply_generated(ups, snap)
+                self._enforce_constraints(ups, snap.props)
+            elif fold is None:
+                # delete rows never land: checks see only the survivors
                 ups = self._apply_generated(
                     ups, snap, check_df=ups.filter(~F.col(delete_col))
                 )
@@ -4868,71 +4781,87 @@ class AcidTable:
                 ranges = self._batch_key_ranges_checked(ups, keys, "update")
             else:
                 ranges = self._batch_key_ranges(ups, keys)
+            null_safe = fold is not None
             touched = self._touched_files(
-                snap, ups, keys, ranges=ranges, null_safe=fold is not None
+                snap, ups, keys, ranges=ranges, null_safe=null_safe
             )
             if verb_mode == "merge_on_read" and snap.schema_json and not fold:
-                v = self._merge_mor_attempt(
+                add, schema, dv = self._merge_mor_stage(
                     snap, ups, keys, touched,
-                    dedupe_order=dedupe_order, txn=txn,
-                    partition_by=phys_part, auto_evolve=auto_evolve,
-                    delete_col=delete_col,
+                    dedupe_order=dedupe_order, partition_by=phys_part,
+                    auto_evolve=auto_evolve, delete_col=delete_col,
                 )
-                if v is not None:
-                    return v
-                continue  # true overlap: re-plan against the new head
-            if touched:
-                target = self._read_for_rewrite(snap, touched)
-            elif snap.schema_json is not None:
-                target = self.spark.createDataFrame(
-                    [], T.StructType.fromJson(json.loads(snap.schema_json))
-                )
-            else:  # first commit: surviving upserts seed the table
-                target = self.spark.createDataFrame(
-                    [], (ups if fold else ups.drop(delete_col)).schema
-                )
-            dropped = [p for p, l in colmap.items() if l == ""]
-            if dropped:  # the rewrite materializes column drops
-                target = target.drop(*dropped)
-            rt_on = self._row_tracking_on(snap)
-            if rt_on and self._ROW_ID_COL not in target.columns:
-                target = target.withColumn(
-                    self._ROW_ID_COL, F.lit(None).cast("long")
-                )
-            if fold is not None:
-                rows = self._logicalize(target.drop(self._ROW_ID_COL), colmap)
-                merged = self._apply_generated(fold(rows, updates), snap)
-                self._enforce_constraints(merged, snap.props)
-                merged = self._physicalize(merged, colmap)
-                if rt_on:  # a folded row keeps its key's row id
-                    merged = self._inherit_row_ids(merged, target, keys)
+                if not add and not dv:
+                    return snap.version  # empty batch: provably a no-op
+                remove = []  # matches are masked, no file is rewritten
             else:
+                remove, dv = touched, None
+                if touched:
+                    # committed-schema read, NOT bare spark.read.parquet:
+                    # heterogeneous touched footers (a widen/add_columns
+                    # that predates some files) must up-cast/pad at scan
+                    # time or the rewrite narrows the table back and
+                    # strands wider live files (unreadable snapshot)
+                    target = self._read_for_rewrite(snap, touched)
+                elif snap.schema_json is not None:
+                    target = self.spark.createDataFrame(
+                        [],
+                        T.StructType.fromJson(json.loads(snap.schema_json)),
+                    )
+                else:  # first commit: the surviving rows seed the table
+                    seed = ups
+                    if delete_col is not None and fold is None:
+                        seed = ups.drop(delete_col)
+                    target = self.spark.createDataFrame([], seed.schema)
+                dropped = [p for p, l in colmap.items() if l == ""]
+                if dropped:  # the rewrite materializes column drops
+                    target = target.drop(*dropped)
+                rt_on = self._row_tracking_on(snap)
+                if rt_on and self._ROW_ID_COL not in target.columns:
+                    target = target.withColumn(
+                        self._ROW_ID_COL, F.lit(None).cast("long")
+                    )
+                if fold is not None:
+                    rows = self._logicalize(
+                        target.drop(self._ROW_ID_COL), colmap
+                    )
+                    merged = self._apply_generated(fold(rows, updates), snap)
+                    self._enforce_constraints(merged, snap.props)
+                    merged = self._physicalize(merged, colmap)
+                    if rt_on:  # a folded row keeps its key's row id
+                        merged = self._inherit_row_ids(merged, target, keys)
+                else:
+                    if rt_on:
+                        ups = self._inherit_row_ids(ups, target, keys)
+                    merged = merge_apply(
+                        target,
+                        ups,
+                        keys,
+                        delete_col,
+                        dedupe_order=dedupe_order,
+                        allow_missing_columns=auto_evolve,
+                    )
                 if rt_on:
-                    ups = self._inherit_row_ids(ups, target, keys)
-                merged = merge_apply(
-                    target,
-                    ups,
-                    keys,
-                    delete_col,
-                    dedupe_order=dedupe_order,
-                    allow_missing_columns=auto_evolve,
+                    merged = self._assign_fresh_row_ids(merged, snap.props)
+                add, schema = self._stage_actions(
+                    merged, partition_by=phys_part
                 )
-            if rt_on:
-                merged = self._assign_fresh_row_ids(merged, snap.props)
-            add, schema = self._stage_actions(merged, partition_by=phys_part)
-            try:
-                return self._try_commit(
-                    snap,
-                    "merge",
-                    add,
-                    touched,
-                    # same widening guard as append/merge
-                    self._evolve_schema(schema, snap),
-                    txn,
-                )
-            except CommitConflict:
-                continue
-        raise CommitConflict(f"merge_apply lost {max_retries} commit races")
+            v = self._commit_or_rebase(
+                snap,
+                "merge",
+                add,
+                remove,
+                # same widening guard as append: a narrow batch must
+                # not revert add_columns/widen_column
+                self._evolve_schema(schema, snap),
+                txn=txn,
+                dv=dv,
+                read_filters=self._key_filters(keys, ranges, null_safe),
+                check_adds=True,
+            )
+            if v is not None:
+                return self._auto_maintain(snap, v)
+        raise CommitConflict(f"merge lost {max_retries} commit races")
 
     def merge_delete(
         self,

@@ -120,3 +120,25 @@ def test_verb_log_requests_stay_within_one_snapshot(spark, tmp_path, k, mode):
     lists, reads, k_now = _measure(t, t.snapshot)
     assert lists <= 1, ("snapshot", lists)
     assert reads <= k_now + 1, ("snapshot", reads, k_now)
+
+
+def test_insert_values_resolves_its_table_once(spark, tmp_path):
+    """``INSERT INTO ... VALUES`` reads the target's schema, identity/
+    generated columns and defaults off one snapshot: the statement's
+    listing plus ``append``'s own, never one per lookup."""
+    from data_lake_demo_spark.ddl import AcidSql
+
+    path = str(tmp_path / "t")
+    t = _table(
+        spark, path, 3, [(i, i * 10) for i in range(6)], "k long, v long"
+    )
+    sql = AcidSql(spark, {"t": path})
+    sql._handles[path] = t
+    before = t.latest_version()
+    lists, reads, k_now = _measure(
+        t, lambda: sql.sql("INSERT INTO t VALUES (500, 5)")
+    )
+    assert t.latest_version() == before + 1
+    assert lists <= 2, ("insert", lists)
+    assert reads <= 2 * (k_now + 1), ("insert", reads, k_now)
+    assert t.snapshot().filter("k = 500").first().v == 5

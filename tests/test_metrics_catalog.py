@@ -244,6 +244,33 @@ def test_acid_catalog_durable_mapping_and_time_travel(spark, tmp_path):
         cat2.attach("zone_b")
 
 
+@pytest.mark.parametrize("other", ["zone_a", "zone_b"])
+def test_acid_catalog_racing_first_registrations(spark, tmp_path, other):
+    """Two sessions register into a catalog with no commits at once:
+    the first MERGE seeds version 0, the loser rebases (another name)
+    or re-plans (the same name), and each name lands exactly one row."""
+    from data_lake_demo_spark.catalog import AcidCatalog
+
+    root = str(tmp_path)
+    cat, rival = AcidCatalog(spark, root), AcidCatalog(spark, root)
+    real = cat.store._try_commit
+    fired = []
+
+    def lose_first_race(*a, **k):
+        if not fired:
+            fired.append(1)
+            rival.register(other, f"{root}/rival")
+        return real(*a, **k)
+
+    cat.store._try_commit = lose_first_race
+    cat.register("zone_a", f"{root}/mine")
+    got = sorted((r.table_name, r.path) for r in cat.entries().collect())
+    want = {"zone_a": f"{root}/mine"}
+    if other != "zone_a":
+        want[other] = f"{root}/rival"
+    assert got == sorted(want.items())
+
+
 def test_schema_evolution_deprecate_on_delete(spark, tmp_path):
     """D4, delete half (reference stack.py:189-192 DEPRECATE_IN_
     DATABASE): a column that disappears upstream stays queryable as

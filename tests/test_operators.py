@@ -260,7 +260,7 @@ def test_dialect_reference_smoke_query_runs(spark):
 
 
 def test_merge_upsert(spark):
-    from data_lake_demo_spark.operators.upsert import merge_upsert
+    from data_lake_demo_spark.operators.upsert import merge_apply
 
     target = spark.createDataFrame(
         [(1, "a", 10.0), (2, "b", 20.0), (3, "c", 30.0)], "k long, v string, x double"
@@ -268,24 +268,29 @@ def test_merge_upsert(spark):
     updates = spark.createDataFrame(
         [(2, "B", 99.0), (4, "d", 40.0)], "k long, v string, x double"
     )
-    got = {r.k: (r.v, r.x) for r in merge_upsert(target, updates, ["k"]).collect()}
+    got = {
+        r.k: (r.v, r.x)
+        for r in merge_apply(target, updates, ["k"], None).collect()
+    }
     assert got == {1: ("a", 10.0), 2: ("B", 99.0), 3: ("c", 30.0), 4: ("d", 40.0)}
 
 
 def test_merge_upsert_duplicate_keys_guarded(spark):
-    # SQL MERGE fails on multiple source matches; so do we — unless a
-    # dedupe order resolves the winner deterministically
-    import pytest as _pytest
-
-    from data_lake_demo_spark.operators.upsert import merge_upsert
+    # a dedupe order resolves duplicate source keys deterministically;
+    # without one, AcidTable.merge/merge_apply raise like SQL MERGE
+    # (tests/test_tableformat.py::test_merge_apply_duplicate_source_keys_raise)
+    from data_lake_demo_spark.operators.upsert import merge_apply
 
     target = spark.createDataFrame([(1, "a", 1.0)], "k long, v string, x double")
     dup_updates = spark.createDataFrame(
         [(1, "new", 5.0), (1, "newer", 9.0)], "k long, v string, x double"
     )
-    with _pytest.raises(ValueError, match="merge key"):
-        merge_upsert(target, dup_updates, ["k"])
-    got = {r.k: r.v for r in merge_upsert(target, dup_updates, ["k"], dedupe_order="x").collect()}
+    got = {
+        r.k: r.v
+        for r in merge_apply(
+            target, dup_updates, ["k"], None, dedupe_order="x"
+        ).collect()
+    }
     assert got == {1: "newer"}  # max(x) wins
 
 

@@ -3628,10 +3628,27 @@ def test_conflict_rebase_row_tracking_ids_stay_stable(spark, tmp_path):
     assert len(ids) == len(set(ids)) == 11  # winner's row got a fresh id
 
 
-def test_conflict_matrix_merge_rebases_over_disjoint_append(spark, tmp_path):
+def _merge_via(verb, t, spark, rows, **kw):
+    """Upsert ``rows`` (k, v) through ``verb``: ``merge`` as is, or
+    ``merge_apply`` with one extra delete row for key 7."""
+    if verb == "merge":
+        batch = spark.createDataFrame(rows, "k long, v long")
+        return t.merge(batch, ["k"], **kw)
+    batch = spark.createDataFrame(
+        [(k, v, False) for k, v in rows] + [(7, 0, True)],
+        "k long, v long, gone boolean",
+    )
+    return t.merge_apply(batch, ["k"], "gone", **kw)
+
+
+@pytest.mark.parametrize("verb", ["merge", "merge_apply"])
+def test_conflict_matrix_merge_rebases_over_disjoint_append(
+    spark, tmp_path, verb
+):
     """MERGE racing a blind INSERT whose keys CANNOT match the batch
     (manifest stats prove disjoint key ranges): the merge rebases —
-    no second data job — and both land."""
+    no second data job — and both land. A batch with deletes follows
+    the same rule."""
     path = str(tmp_path / "t")
     t = AcidTable(spark, path)
     t.append(
@@ -3642,17 +3659,18 @@ def test_conflict_matrix_merge_rebases_over_disjoint_append(spark, tmp_path):
     _inject_winner_once(
         t, lambda: w.append(spark.createDataFrame([(900, 0)], "k long, v long"))
     )
-    t.merge(
-        spark.createDataFrame([(5, 555), (101, 101)], "k long, v long"),
-        ["k"],
-    )
+    _merge_via(verb, t, spark, [(5, 555), (101, 101)])
     assert n["n"] == 1  # rebased
     rows = {r.k: r.v for r in t.snapshot().collect()}
     assert rows[5] == 555 and rows[101] == 101 and rows[900] == 0
-    assert len(rows) == 102
+    assert (7 in rows) == (verb == "merge")
+    assert len(rows) == (102 if verb == "merge" else 101)
 
 
-def test_conflict_matrix_merge_replans_over_matching_append(spark, tmp_path):
+@pytest.mark.parametrize("verb", ["merge", "merge_apply"])
+def test_conflict_matrix_merge_replans_over_matching_append(
+    spark, tmp_path, verb
+):
     """MERGE racing an INSERT whose key range MAY match the batch: a
     true conflict under every isolation level (the insert would have
     changed the matched/not-matched split — rebasing would insert a
@@ -3668,16 +3686,15 @@ def test_conflict_matrix_merge_replans_over_matching_append(spark, tmp_path):
     _inject_winner_once(
         t, lambda: w.append(spark.createDataFrame([(150, 0)], "k long, v long"))
     )
-    t.merge(
-        spark.createDataFrame([(150, 999)], "k long, v long"), ["k"]
-    )
+    _merge_via(verb, t, spark, [(150, 999)])
     assert n["n"] == 2  # re-planned
     got = t.snapshot().filter("k = 150").collect()
     assert len(got) == 1 and got[0].v == 999  # updated, never duplicated
-    assert t.snapshot().count() == 101
+    assert t.snapshot().count() == (101 if verb == "merge" else 100)
 
 
-def test_conflict_merge_txn_replay_rechecked_on_rebase(spark, tmp_path):
+@pytest.mark.parametrize("verb", ["merge", "merge_apply"])
+def test_conflict_merge_txn_replay_rechecked_on_rebase(spark, tmp_path, verb):
     """A concurrent replay of the SAME (app, batch_id) landing mid-race
     turns the loser into an idempotent no-op: the rebase path re-checks
     the txn watermark against the new base instead of double-applying
@@ -3688,13 +3705,64 @@ def test_conflict_merge_txn_replay_rechecked_on_rebase(spark, tmp_path):
         spark.range(10).selectExpr("id AS k", "id AS v").coalesce(1)
     )
     w = AcidTable(spark, path)
-    batch = spark.createDataFrame([(3, 300)], "k long, v long")
-    _inject_winner_once(t, lambda: w.merge(batch, ["k"], txn=("app", 7)))
-    t.merge(batch, ["k"], txn=("app", 7))
+    _inject_winner_once(
+        t, lambda: _merge_via(verb, w, spark, [(3, 300)], txn=("app", 7))
+    )
+    _merge_via(verb, t, spark, [(3, 300)], txn=("app", 7))
     feed = t.changes(0).collect()
     assert sum(1 for r in feed if r._change_type == "insert" and r.k == 3) == 1
     assert t.snapshot().filter("k = 3").first().v == 300
-    assert t.snapshot().count() == 10
+    assert t.snapshot().count() == (10 if verb == "merge" else 9)
+
+
+def test_conflict_fold_with_null_key_replans_over_null_key_append(
+    spark, tmp_path
+):
+    """A ``fold`` batch holding a NULL key matches NULL keys, which a
+    winner file's [min, max] cannot rule out: a winner appending a
+    NULL-key row (its non-NULL keys disjoint from the batch's) forces
+    a re-plan, and the table equals the serial order."""
+    path = str(tmp_path / "t")
+    schema = "g long, n long"
+    t = AcidTable(spark, path)
+    t.append(
+        spark.createDataFrame([(1, 10), (2, 20), (None, 5)], schema)
+        .coalesce(1)
+    )
+    w = AcidTable(spark, path)
+    n = _count_staging(t)
+    _inject_winner_once(
+        t,
+        lambda: w.append(
+            spark.createDataFrame([(None, 100), (1000, 7)], schema)
+            .coalesce(1)
+        ),
+    )
+
+    def fold(rows, delta):
+        return rows.unionByName(delta).groupBy("g").agg(F.sum("n").alias("n"))
+
+    t.merge_apply(
+        spark.createDataFrame([(1, 1), (None, 1)], schema),
+        ["g"],
+        None,
+        fold=fold,
+    )
+    assert n["n"] == 2  # re-planned
+    assert sorted(
+        ((r.g is None, r.g, r.n) for r in t.snapshot().collect())
+    ) == [(False, 1, 11), (False, 2, 20), (False, 1000, 7), (True, None, 106)]
+
+
+@pytest.mark.parametrize("mode", ["copy_on_write", "merge_on_read"])
+def test_merge_seeds_a_table_with_no_commits(spark, tmp_path, mode):
+    """``merge`` on a table with no commits lands version 0 holding the
+    batch, in either mode (the seed is a copy-on-write commit)."""
+    t = AcidTable(spark, str(tmp_path / "t"))
+    batch = spark.createDataFrame([(1, "a"), (2, "b")], "k long, v string")
+    assert t.merge(batch, ["k"], mode=mode) == 0
+    assert [c.op for c in t.history()] == ["merge"]
+    assert _rows(t.snapshot()) == [(1, "a"), (2, "b")]
 
 
 def test_conflict_matrix_replace_where_rebases_over_append(spark, tmp_path):
@@ -4117,13 +4185,29 @@ def test_replan_after_concurrent_rename_of_another_column_commits(
     assert _rows(t.snapshot()) == want
 
 
-@pytest.mark.parametrize("mode", ["copy_on_write", "merge_on_read"])
-def test_merge_apply_duplicate_source_keys_raise(spark, tmp_path, mode):
+@pytest.mark.parametrize(
+    "verb,mode",
+    [
+        ("merge_apply", "copy_on_write"),
+        ("merge_apply", "merge_on_read"),
+        ("merge", "copy_on_write"),
+        ("merge", "merge_on_read"),
+    ],
+    # the merge_apply cases keep their original ids
+    ids=["copy_on_write", "merge_on_read", "merge-copy_on_write",
+         "merge-merge_on_read"],
+)
+def test_merge_apply_duplicate_source_keys_raise(spark, tmp_path, verb, mode):
+    """SQL MERGE raises when several source rows match one key; so
+    does each MERGE verb, before it stages anything."""
     t = AcidTable(spark, str(tmp_path / "t"))
     t.append(spark.createDataFrame([(1, "a"), (2, "b")], "k long, v string"))
     dup = spark.createDataFrame(
         [(1, "x", False), (1, "y", True)], "k long, v string, gone boolean"
     )
     with pytest.raises(ValueError, match="merge key"):
-        t.merge_apply(dup, ["k"], "gone", mode=mode)
+        if verb == "merge":
+            t.merge(dup.drop("gone"), ["k"], mode=mode)
+        else:
+            t.merge_apply(dup, ["k"], "gone", mode=mode)
     assert t.latest_version() == 0
