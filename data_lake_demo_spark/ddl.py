@@ -513,18 +513,6 @@ class AcidSql:
 
     # ---- INSERT --------------------------------------------------------
 
-    @staticmethod
-    def _auto_cols(t, props: dict) -> set[str]:
-        """Columns the engine assigns (identity) or computes when
-        omitted (generated) — INSERT may leave them out."""
-        out = set()
-        for k in props:
-            if k.startswith(t._IDENTITY_PREFIX):
-                out.add(k[len(t._IDENTITY_PREFIX):])
-            elif k.startswith(t._GENERATED_PREFIX):
-                out.add(k[len(t._GENERATED_PREFIX):])
-        return out
-
     def _align_for_write(self, t, df: DataFrame, cols) -> DataFrame:
         """Map an INSERT source onto the target's logical schema:
         positional when no column list is given (full width, or full
@@ -537,7 +525,9 @@ class AcidSql:
         snap = t._state()
         target = t._snapshot_df(snap).schema
         tnames = [f.name for f in target]
-        auto = self._auto_cols(t, snap.props)
+        # identity columns are assigned, generated ones computed when
+        # omitted: INSERT may leave them out
+        auto = set(snap.rules.identity) | set(snap.rules.generated)
         if cols is None:
             writable = [n for n in tnames if n not in auto]
             if len(df.columns) == len(tnames):
@@ -563,11 +553,7 @@ class AcidSql:
             *[F.col(c).alias(n) for c, n in zip(df.columns, cols)]
         )
         by_name = {f.name: f for f in target}
-        defaulted = {
-            k[len(t._DEFAULT_PREFIX):]
-            for k in snap.props
-            if k.startswith(t._DEFAULT_PREFIX)
-        }
+        defaulted = snap.rules.defaults
         out = []
         for n in tnames:
             if n in cols:
@@ -952,11 +938,7 @@ class AcidSql:
                 f"INSERT must assign every merge key (missing {missing_keys})"
             )
         assign = dict(zip(cols, vals))
-        defaults = {
-            k[len(t._DEFAULT_PREFIX):]: v
-            for k, v in t.properties().items()
-            if k.startswith(t._DEFAULT_PREFIX)
-        }
+        defaults = t._state().rules.defaults
 
         def cell(c):
             if c in assign:

@@ -128,7 +128,7 @@ from pyspark.sql.datasource import (
     WriterCommitMessage,
 )
 
-from data_lake_demo_spark.tableformat import CommitConflict, _dv_abs, _rel_by_abs
+from data_lake_demo_spark.tableformat import _dv_abs, _rel_by_abs
 
 _CHANGE_OPS = {"merge", "merge_delete", "delete", "overwrite", "scd2",
                "compact", "optimize_zorder", "optimize_cluster", "restore"}
@@ -1193,13 +1193,13 @@ def _stage_write(
     columns so staged files always carry physical names.
 
     ``identity`` ({physical id column: watermark base}) makes this
-    task assign identity values as ``base + (taskId << 33) + row`` —
-    disjoint across tasks with zero coordination (the
-    monotonically_increasing_id partitioning trick), unique-with-gaps
-    exactly as the identity contract allows. The driver's commit
-    advances the watermark past the staged maximum, and shifts these
-    values if a concurrent identity writer won the watermark race
-    (_commit_staged_identity)."""
+    task assign identity values as ``base + (partitionId << 33) +
+    row`` — the monotonically_increasing_id formula the driver-side
+    insert path stamps with, disjoint across tasks with zero
+    coordination, unique-with-gaps exactly as the identity contract
+    allows. The driver's commit (AcidTable._commit_insert) advances
+    the watermark past the staged maximum, and shifts these values if
+    a concurrent identity writer moved the watermark first."""
     import uuid
 
     import pyarrow as pa
@@ -1266,21 +1266,6 @@ def _stage_write(
     return _StagedFiles([os.path.join("data", stage_id, name)])
 
 
-def _staged_actions(table, messages) -> list[dict]:
-    rels = [r for m in messages if m is not None for r in m.rels]
-    actions = []
-    for rel in sorted(rels):
-        rows, stats = table._file_meta(rel)
-        if rows == 0:
-            continue
-        if rows is not None:
-            # manifest record count (same stamp as _stage_actions):
-            # keeps metadata-only row_count() exact for DSv2 writes
-            stats["#rows"] = [rows]
-        actions.append({"path": rel, "stats": stats})
-    return actions
-
-
 def _drop_staged(table_path: str, messages) -> None:
     for m in messages or []:
         for rel in getattr(m, "rels", []) or []:
@@ -1290,7 +1275,7 @@ def _drop_staged(table_path: str, messages) -> None:
                 pass  # abort cleanup is best-effort; vacuum catches the rest
 
 
-def _enforce_write_rules(t, actions) -> None:
+def _enforce_write_rules(root: str, rules, colmap: dict, actions) -> None:
     """Driver-side enforcement of CHECK constraints and generated
     columns for the DSv2 write path (closing the gap the Python-API
     verbs never had): staged files are probed BEFORE the commit
@@ -1302,21 +1287,14 @@ def _enforce_write_rules(t, actions) -> None:
     (comparisons, arithmetic, CASE — the shapes CHECK clauses are
     made of). Omitted generated columns are rejected (the staged
     parquet already exists, so compute-if-omitted isn't possible on
-    this path — supply the column, or write via AcidTable.append)."""
-    snap = t._state()
-    props = snap.props
-    cons = {
-        k: v for k, v in props.items() if k.startswith(t._CONSTRAINT_PREFIX)
-    }
-    gens = {
-        k: v for k, v in props.items() if k.startswith(t._GENERATED_PREFIX)
-    }
+    this path — supply the column, or write via AcidTable.append).
+    ``rules`` and ``colmap`` come from the writer's snapshot."""
+    cons, gens = rules.constraints, rules.generated
     if (not cons and not gens) or not actions:
         return
     import duckdb
 
-    colmap = snap.colmap
-    paths = [os.path.join(t.path, a["path"]) for a in actions]
+    paths = [os.path.join(root, a["path"]) for a in actions]
     files_sql = "read_parquet([{}], union_by_name=true)".format(
         ",".join("'" + p.replace("'", "''") + "'" for p in paths)
     )
@@ -1336,18 +1314,17 @@ def _enforce_write_rules(t, actions) -> None:
             sel.append(f'"{c}" AS "{lg}"')
             logical_cols.append(lg)
         view = f"(SELECT {', '.join(sel)} FROM {files_sql})"
-        for key, expr in cons.items():
+        for name, expr in cons.items():
             bad = con.execute(
                 f"SELECT 1 FROM {view} WHERE NOT ({expr})"
                 f" OR (({expr}) IS NULL) LIMIT 1"
             ).fetchall()
             if bad:
                 raise ValueError(
-                    f"CHECK constraint {key[len(t._CONSTRAINT_PREFIX):]!r}"
+                    f"CHECK constraint {name!r}"
                     f" ({expr}) violated by the written batch"
                 )
-        for key, expr in gens.items():
-            col = key[len(t._GENERATED_PREFIX):]
+        for col, expr in gens.items():
             if col not in logical_cols:
                 raise ValueError(
                     f"generated column {col!r} must be supplied when"
@@ -1366,15 +1343,11 @@ def _enforce_write_rules(t, actions) -> None:
         con.close()
 
 
-def _writer_physical(options, schema: T.StructType) -> tuple[str, dict | None]:
+def _writer_physical(colmap: dict, schema: T.StructType) -> tuple[str, dict | None]:
     """(physical schema json, logical->physical rename map or None)
     for a write into a possibly column-mapped table. Rejects writing
     a column whose name is reserved by a renamed/dropped physical
     column — same restriction as AcidTable._physicalize."""
-    try:
-        colmap = _table(options)._state().colmap
-    except Exception:
-        colmap = {}
     if any(f.name == "__row_id" for f in schema.fields):
         raise ValueError(
             "column name '__row_id' is reserved for row tracking — "
@@ -1417,7 +1390,7 @@ _DUCK_TYPES = {
 
 
 def _writer_defaults(
-    t, schema: T.StructType, schema_json: str
+    t, snap, schema: T.StructType, schema_json: str
 ) -> tuple[dict, str]:
     """({physical col: 1-row pyarrow array holding the default}, schema
     json including those columns) for DSv2 writes that OMIT a column
@@ -1427,14 +1400,10 @@ def _writer_defaults(
     SparkSession exists on this path, same constraint as
     _enforce_write_rules), cast to the column's committed type, and
     each task replicates the constant into its staged batches."""
-    snap = t._state()
-    defaults = {
-        k[len(t._DEFAULT_PREFIX):]: v
-        for k, v in snap.props.items()
-        if k.startswith(t._DEFAULT_PREFIX)
-    }
     missing = {
-        c: e for c, e in defaults.items() if c not in schema.fieldNames()
+        c: e
+        for c, e in snap.rules.defaults.items()
+        if c not in schema.fieldNames()
     }
     if not missing:
         return {}, schema_json
@@ -1480,131 +1449,58 @@ def _writer_defaults(
     return out, json.dumps(d)
 
 
-def _writer_identity(
-    t, schema: T.StructType, schema_json: str, overwrite: bool
-) -> tuple[dict, str]:
-    """({logical id col: {"phys", "base"}}, schema json including the
-    id columns) for a write into an identity table. GENERATED ALWAYS:
-    a frame supplying the column is rejected, matching
-    AcidTable._append_with_identity."""
-    snap = t._state()
-    props = snap.props
-    idcols = sorted(
-        k[len(t._IDENTITY_PREFIX):]
-        for k in props
-        if k.startswith(t._IDENTITY_PREFIX)
-    )
-    if not idcols:
-        return {}, schema_json
-    if overwrite:
-        raise ValueError(
-            "acidtable DSv2 overwrite into an identity table is not "
-            "supported (the watermark semantics of a full replace are "
-            "ambiguous); use mode('append') or the AcidTable API"
-        )
-    for c in idcols:
-        if c in schema.fieldNames():
-            raise ValueError(
-                f"identity column {c!r} is GENERATED ALWAYS — omit it"
-            )
-    colmap = snap.colmap
-    identity = {
-        c: {
-            "phys": t._phys_names([c], colmap)[0],
-            "base": int(props[t._IDENTITY_PREFIX + c]["next"]),
-        }
-        for c in idcols
-    }
-    d = json.loads(schema_json)
-    d["fields"].extend(
-        {
-            "name": v["phys"],
-            "type": "long",
-            "nullable": False,
-            "metadata": {},
-        }
-        for _, v in sorted(identity.items())
-    )
-    return identity, json.dumps(d)
+class _WritePlan:
+    """What a DSv2 write derives from ONE snapshot, resolved when the
+    writer is built: the physical schema and rename map, the identity
+    watermarks executors stamp from (``ids``: physical column ->
+    watermark), the DEFAULT constants for omitted columns, and the
+    rules the commit checks — the identity base and the defaults can
+    never come from different versions. GENERATED ALWAYS: a frame
+    supplying an identity column is rejected, as on every insert."""
 
-
-def _commit_staged_identity(
-    t,
-    actions: list[dict],
-    schema_json: str,
-    identity: dict,
-    *,
-    txn=None,
-    max_retries: int = 10,
-) -> int:
-    """Driver half of an identity DSv2 write: advance the watermark
-    past the staged maximum IN the data commit (the same
-    single-commit guarantee as _append_with_identity, so concurrent
-    writers can never double-allocate). If another identity writer
-    advanced the watermark after our executors assigned from it, the
-    staged values could collide with the winner's — detected by
-    comparing the watermark we assigned from against the current one,
-    and repaired by SHIFTING the staged id columns with a local
-    columnar pass (pure arithmetic, only this write's files) before
-    retrying. The common uncontended path never rewrites anything."""
-    import pyarrow.compute as pc
-    import pyarrow.parquet as pq
-
-    bases = {c: dict(v) for c, v in identity.items()}
-    for _ in range(max_retries):
+    def __init__(self, options, schema: T.StructType):
+        t = _table(options)
         snap = t._state()
-        props = snap.props
-        if snap.holds(txn):
-            return snap.version
-        shifts = {}
-        for c, v in bases.items():
-            cur = int(props[t._IDENTITY_PREFIX + c]["next"])
-            if cur != v["base"]:
-                shifts[v["phys"]] = cur - v["base"]
-                v["base"] = cur
-        if shifts:
-            for a in actions:
-                full = os.path.join(t.path, a["path"])
-                tbl = pq.read_table(full)
-                for phys, delta in shifts.items():
-                    tbl = tbl.set_column(
-                        tbl.column_names.index(phys),
-                        phys,
-                        pc.add(tbl.column(phys), delta),
-                    )
-                pq.write_table(tbl, full)
-                n_rows, a["stats"] = t._file_meta(a["path"])
-                if n_rows is not None:
-                    a["stats"]["#rows"] = [n_rows]
-        new_props = dict(props)
-        for c, v in bases.items():
-            top = None
-            for a in actions:
-                rng = a["stats"].get(v["phys"])
-                if rng is None:
-                    top = None
-                    break
-                top = rng[1] if top is None else max(top, rng[1])
-            if top is None and actions:  # stats missing: direct scan
-                top = max(
-                    pc.max(
-                        pq.read_table(
-                            os.path.join(t.path, a["path"]),
-                            columns=[v["phys"]],
-                        ).column(v["phys"])
-                    ).as_py()
-                    for a in actions
+        self.rules, self.colmap = snap.rules, snap.colmap
+        schema_json, self.rev = _writer_physical(self.colmap, schema)
+        for c in self.rules.identity:
+            if c in schema.fieldNames():
+                raise ValueError(
+                    f"identity column {c!r} is GENERATED ALWAYS — omit it"
                 )
-            if top is not None:
-                new_props[t._IDENTITY_PREFIX + c] = {"next": int(top) + 1}
-        try:
-            return t._try_commit(
-                snap, "append", actions, [], schema_json, txn,
-                props=new_props,
-            )
-        except CommitConflict:
-            continue
-    raise CommitConflict(f"identity append lost {max_retries} commit races")
+        self.ids = {
+            t._phys_names([c], self.colmap)[0]: nxt
+            for c, nxt in self.rules.identity.items()
+        }
+        d = json.loads(schema_json)
+        d["fields"].extend(
+            {"name": ph, "type": "long", "nullable": False, "metadata": {}}
+            for ph in sorted(self.ids)
+        )
+        self.defaults, self.schema_json = _writer_defaults(
+            t, snap, schema, json.dumps(d)
+        )
+
+    def stage(self, iterator, path: str, stage_id: str):
+        return _stage_write(
+            iterator, path, stage_id, self.rev, self.ids or None,
+            self.defaults or None,
+        )
+
+    def commit(self, options, messages, overwrite: bool, txn=None) -> None:
+        """Check the staged files against the plan's rules, then land
+        them through the table's one insert commit (which shifts the
+        stamped ids if the watermark moved meanwhile)."""
+        t = _table(options)
+        actions = t._manifest_entries(
+            sorted(r for m in messages if m is not None for r in m.rels)
+        )
+        _enforce_write_rules(t.path, self.rules, self.colmap, actions)
+        t._commit_insert(
+            None, "overwrite" if overwrite else "append", actions,
+            self.schema_json, self.rules.identity, overwrite=overwrite,
+            txn=txn,
+        )
 
 
 class _AcidBatchWriter(DataSourceArrowWriter):
@@ -1628,39 +1524,14 @@ class _AcidBatchWriter(DataSourceArrowWriter):
             raise ValueError(
                 "acidtable writer requires .option('path', ...) or save(path)"
             )
-        self._schema_json, self._rev = _writer_physical(options, schema)
-        self._identity, self._schema_json = _writer_identity(
-            _table(options), schema, self._schema_json, overwrite
-        )
-        self._defaults, self._schema_json = _writer_defaults(
-            _table(options), schema, self._schema_json
-        )
+        self._plan = _WritePlan(options, schema)
         self._stage_id = uuid.uuid4().hex
 
     def write(self, iterator):
-        return _stage_write(
-            iterator,
-            self._path,
-            self._stage_id,
-            self._rev,
-            {v["phys"]: v["base"] for v in self._identity.values()} or None,
-            self._defaults or None,
-        )
+        return self._plan.stage(iterator, self._path, self._stage_id)
 
     def commit(self, messages):
-        t = _table(self._options)
-        actions = _staged_actions(t, messages)
-        _enforce_write_rules(t, actions)
-        if self._identity:
-            _commit_staged_identity(
-                t, actions, self._schema_json, self._identity
-            )
-            return
-        t.commit_staged(
-            actions,
-            self._schema_json,
-            overwrite=self._overwrite,
-        )
+        self._plan.commit(self._options, messages, self._overwrite)
 
     def abort(self, messages):
         _drop_staged(self._path, messages)
@@ -1693,13 +1564,7 @@ class _AcidStreamWriter(DataSourceStreamArrowWriter):
                 ".option('branch', ...) — txn watermarks do not carry "
                 "through publish_branch; stream into the main table"
             )
-        self._schema_json, self._rev = _writer_physical(options, schema)
-        self._identity, self._schema_json = _writer_identity(
-            _table(options), schema, self._schema_json, overwrite
-        )
-        self._defaults, self._schema_json = _writer_defaults(
-            _table(options), schema, self._schema_json
-        )
+        self._plan = _WritePlan(options, schema)
         self._app = options.get("txnappid") or f"acidtable-stream:{self._path}"
 
     def write(self, iterator):
@@ -1707,33 +1572,15 @@ class _AcidStreamWriter(DataSourceStreamArrowWriter):
 
         # one stage dir per task attempt; commit-message paths are what
         # tie the files to the batch, not the directory name
-        return _stage_write(
-            iterator,
-            self._path,
-            uuid.uuid4().hex,
-            self._rev,
-            {v["phys"]: v["base"] for v in self._identity.values()} or None,
-            self._defaults or None,
-        )
+        return self._plan.stage(iterator, self._path, uuid.uuid4().hex)
 
     def commit(self, messages, batchId: int) -> None:
         # overwrite=True arrives for COMPLETE output mode, whose every
         # micro-batch emits the full result — each batch must REPLACE
         # the table (append would duplicate); the txn watermark still
         # deduplicates a replayed batch either way.
-        t = _table(self._options)
-        actions = _staged_actions(t, messages)
-        _enforce_write_rules(t, actions)
-        if self._identity:
-            _commit_staged_identity(
-                t, actions, self._schema_json, self._identity,
-                txn=(self._app, int(batchId)),
-            )
-            return
-        t.commit_staged(
-            actions,
-            self._schema_json,
-            overwrite=self._overwrite,
+        self._plan.commit(
+            self._options, messages, self._overwrite,
             txn=(self._app, int(batchId)),
         )
 

@@ -89,6 +89,7 @@ import time
 import uuid
 from collections.abc import Callable, Sequence
 from dataclasses import dataclass
+from functools import cached_property
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -122,6 +123,52 @@ class Commit:
     dv: list[dict] | None = None
 
 
+# table-property prefixes of the write rules; ``WriteRules.of`` is
+# the only place that parses them
+_IDENTITY_PREFIX = "identity."
+_GENERATED_PREFIX = "generated."
+_DEFAULT_PREFIX = "default."
+_CONSTRAINT_PREFIX = "constraint."
+_RULE_KINDS = (
+    (_IDENTITY_PREFIX, "identity"),
+    (_GENERATED_PREFIX, "generated"),
+    (_DEFAULT_PREFIX, "defaults"),
+    (_CONSTRAINT_PREFIX, "constraints"),
+)
+
+
+@dataclass(frozen=True)
+class WriteRules:
+    """The write rules a table's properties declare, keyed by logical
+    column (or constraint) name: ``identity`` maps each GENERATED
+    ALWAYS AS IDENTITY column to its watermark (the next free id),
+    ``generated``, ``defaults`` and ``constraints`` map to their SQL
+    expressions."""
+
+    identity: dict[str, int]
+    generated: dict[str, str]
+    defaults: dict[str, str]
+    constraints: dict[str, str]
+
+    @staticmethod
+    def kind(key: str) -> tuple[str, str] | None:
+        """(rule kind, name) of a property key, None for any other."""
+        for prefix, kind in _RULE_KINDS:
+            if key.startswith(prefix):
+                return kind, key[len(prefix):]
+        return None
+
+    @classmethod
+    def of(cls, props: dict) -> "WriteRules":
+        out: dict[str, dict] = {kind: {} for _, kind in _RULE_KINDS}
+        for k, v in props.items():
+            hit = cls.kind(k)
+            if hit is not None:
+                kind, name = hit
+                out[kind][name] = int(v["next"]) if kind == "identity" else v
+        return cls(**out)
+
+
 @dataclass(frozen=True)
 class Snapshot:
     """One resolved table version: what a verb attempt reads and
@@ -145,6 +192,11 @@ class Snapshot:
     def colmap(self) -> dict[str, str]:
         """physical -> logical name map ("" marks a dropped column)."""
         return dict(self.props.get("colmap") or {})
+
+    @cached_property
+    def rules(self) -> WriteRules:
+        """The write rules declared at this version (decoded once)."""
+        return WriteRules.of(self.props)
 
     def holds(self, txn: tuple[str, int] | None) -> bool:
         """Has ``txn`` = (app, batch_id) already landed at this version
@@ -433,6 +485,22 @@ def _uri_path(uri: str) -> str:
     from urllib.parse import unquote, urlparse
 
     return unquote(urlparse(uri).path)
+
+
+def _file_uri(path: str) -> str:
+    """An absolute local path spelled as Spark's ``_metadata.file_path``
+    reports it (Hadoop ``Path.toUri``): characters illegal in a URI
+    path are %-escaped, printable non-ASCII characters stay."""
+    from urllib.parse import quote
+
+    safe = "/!$&'()*+,;=:@-._~"
+    if path.isascii():
+        return "file:" + quote(path, safe=safe)
+    return "file:" + "".join(
+        c if ord(c) > 127 and c.isprintable() and not c.isspace()
+        else quote(c, safe=safe)
+        for c in path
+    )
 
 
 def _commit_name(version: int) -> str:
@@ -877,15 +945,16 @@ class AcidTable:
                 needed_r.add("compressedDeletionVectors")
         if post.get("colmap"):
             needed_r.add("columnMapping")
+        rule_features = {
+            "identity": "identityColumns",
+            "generated": "generatedColumns",
+            "constraints": "checkConstraints",
+            "defaults": "allowColumnDefaults",
+        }
         for k in post:
-            if k.startswith(self._IDENTITY_PREFIX):
-                needed_w.add("identityColumns")
-            elif k.startswith(self._GENERATED_PREFIX):
-                needed_w.add("generatedColumns")
-            elif k.startswith(self._CONSTRAINT_PREFIX):
-                needed_w.add("checkConstraints")
-            elif k.startswith(self._DEFAULT_PREFIX):
-                needed_w.add("allowColumnDefaults")
+            hit = WriteRules.kind(k)
+            if hit is not None:
+                needed_w.add(rule_features[hit[0]])
             elif k == self._ROWTRACKING_KEY:
                 needed_w.add("rowTracking")
             elif k == self._CLUSTERING_KEY:
@@ -1081,12 +1150,10 @@ class AcidTable:
         _try_commit re-derives ours against the ACTUAL predecessor on
         rebase) and identity ``next`` counters (a racing identity
         append moves them; a rewrite neither reads nor mints ids)."""
-        skip = (self._ROWTRACKING_KEY, self._PROTOCOL_KEY)
-        return {
-            k: v
-            for k, v in (props or {}).items()
-            if k not in skip and not k.startswith(self._IDENTITY_PREFIX)
-        }
+        props = props or {}
+        skip = {self._ROWTRACKING_KEY, self._PROTOCOL_KEY}
+        skip.update(_IDENTITY_PREFIX + c for c in WriteRules.of(props).identity)
+        return {k: v for k, v in props.items() if k not in skip}
 
     def _commit_conflicts_logically(
         self,
@@ -1435,21 +1502,27 @@ class AcidTable:
             # (compact/Z-order/cluster/reorg) pass sized=False
             df = self._size_output(df)
         files, schema = self._stage(df)
-        actions = []
-        for f in files:
-            rows, stats = self._file_meta(f)
-            if rows == 0:
-                continue
-            if rows is not None:
-                # manifest row count (Iceberg record_count): powers
-                # metadata-only COUNT(*) via row_count()
-                stats["#rows"] = [rows]
-            actions.append({"path": f, "stats": stats})
+        actions = self._manifest_entries(files)
         if self.bloom_cols and actions:
             blooms = self._bloom_stats([a["path"] for a in actions])
             for a in actions:
                 a["stats"].update(blooms.get(a["path"], {}))
         return actions, schema
+
+    def _manifest_entries(self, rel_files: Sequence[str]) -> list[dict]:
+        """Manifest add entries for staged files: footer stats plus the
+        ``#rows`` record count (Iceberg record_count — powers
+        metadata-only COUNT(*) via row_count()). Zero-row files are
+        dropped: they carry no rows and no stats."""
+        out = []
+        for f in rel_files:
+            rows, stats = self._file_meta(f)
+            if rows == 0:
+                continue
+            if rows is not None:
+                stats["#rows"] = [rows]
+            out.append({"path": f, "stats": stats})
+        return out
 
     def _bloom_stats(self, rel_files: list[str]) -> dict[str, dict[str, list]]:
         """Per-file bloom bitsets for ``self.bloom_cols``, built
@@ -1523,8 +1596,6 @@ class AcidTable:
                 ]
         return out
 
-    _CONSTRAINT_PREFIX = "constraint."
-
     def set_properties(self, updates: dict, *, max_retries: int = 5) -> int:
         """Metadata-only commit updating table properties (a None
         value deletes its key). Properties snapshot-resolve like any
@@ -1560,15 +1631,11 @@ class AcidTable:
         The DSv2 writers validate too (probing staged files before the
         commit references them — acid_source._enforce_write_rules);
         only a bare ``commit_staged`` call bypasses enforcement."""
-        self._enforce_constraints(
-            self.snapshot(), {self._CONSTRAINT_PREFIX + name: expr}
-        )
-        return self.set_properties({self._CONSTRAINT_PREFIX + name: expr})
+        self._enforce_constraints(self.snapshot(), {name: expr})
+        return self.set_properties({_CONSTRAINT_PREFIX + name: expr})
 
     def drop_check_constraint(self, name: str) -> int:
-        return self.set_properties({self._CONSTRAINT_PREFIX + name: None})
-
-    _GENERATED_PREFIX = "generated."
+        return self.set_properties({_CONSTRAINT_PREFIX + name: None})
 
     def set_generated_column(self, name: str, expr: str) -> int:
         """Delta's ``GENERATED ALWAYS AS (expr)``: the column's value
@@ -1588,13 +1655,11 @@ class AcidTable:
                     f"generated column {name!r} must exist before it can"
                     " be declared on a non-empty table"
                 )
-            self._check_generated(rows, {self._GENERATED_PREFIX + name: expr})
-        return self.set_properties({self._GENERATED_PREFIX + name: expr})
+            self._check_generated(rows, {name: expr})
+        return self.set_properties({_GENERATED_PREFIX + name: expr})
 
     def drop_generated_column(self, name: str) -> int:
-        return self.set_properties({self._GENERATED_PREFIX + name: None})
-
-    _DEFAULT_PREFIX = "default."
+        return self.set_properties({_GENERATED_PREFIX + name: None})
 
     def set_column_default(self, name: str, expr: str) -> int:
         """SQL column DEFAULT (Delta's ``allowColumnDefaults``): a
@@ -1622,20 +1687,17 @@ class AcidTable:
             )
         # fail now, not at the next write, if the expression is bad
         self.spark.sql(f"SELECT {expr}").limit(0).collect()
-        return self.set_properties({self._DEFAULT_PREFIX + name: expr})
+        return self.set_properties({_DEFAULT_PREFIX + name: expr})
 
     def drop_column_default(self, name: str) -> int:
-        return self.set_properties({self._DEFAULT_PREFIX + name: None})
+        return self.set_properties({_DEFAULT_PREFIX + name: None})
 
     def _apply_defaults(self, df: DataFrame, snap: Snapshot) -> DataFrame:
         """Materialize declared defaults for columns the batch omits
         (zero overhead when the table declares none)."""
-        defaults = {
-            k[len(self._DEFAULT_PREFIX):]: v
-            for k, v in snap.props.items()
-            if k.startswith(self._DEFAULT_PREFIX)
+        missing = {
+            c: e for c, e in snap.rules.defaults.items() if c not in df.columns
         }
-        missing = {c: e for c, e in defaults.items() if c not in df.columns}
         if not missing:
             return df
         colmap = snap.colmap
@@ -1896,24 +1958,24 @@ class AcidTable:
             "__rt_fn", "__rt_ri", "__rt_base"
         )
 
-    _IDENTITY_PREFIX = "identity."
-
     def set_identity_column(self, name: str, *, start: int = 1) -> int:
         """Delta's ``GENERATED ALWAYS AS IDENTITY``: the column is
         assigned by the table, monotonically unique across commits,
         with gaps allowed (the standard identity contract). The high
-        watermark rides the table properties and every identity-
-        assigning append advances it IN ITS OWN COMMIT, so concurrent
-        writers can never double-allocate — a loser of the commit
-        race restages with the fresh watermark. Retrofit rule: the
+        watermark rides the table properties and every insert verb
+        (append, overwrite, replaceWhere, COPY INTO, the DSv2 writers)
+        advances it IN ITS OWN COMMIT, so concurrent writers can never
+        double-allocate — a loser of the commit race shifts its staged
+        ids onto the winner's watermark (``_commit_insert``). An
+        overwrite never resets the watermark. Retrofit rule: the
         column must already exist (its current max seeds the
-        watermark, floored at ``start``); subsequent appends must
-        OMIT the column (ALWAYS, not BY DEFAULT)."""
+        watermark, floored at ``start``); inserts must OMIT the column
+        and ``update`` may not assign it (ALWAYS, not BY DEFAULT)."""
         snap = self._state()
         view = self._logical_view(snap)
         if name not in view.values():
             raise ValueError(f"no column {name!r} (have {sorted(view.values())})")
-        if self._GENERATED_PREFIX + name in snap.props:
+        if name in snap.rules.generated:
             raise ValueError(f"{name!r} is already a generated column")
         phys = next(p for p, l in view.items() if l == name)
         cur_max = None
@@ -1929,123 +1991,206 @@ class AcidTable:
         nxt = int(start)
         if cur_max is not None:
             nxt = max(nxt, int(cur_max) + 1)
-        return self.set_properties({self._IDENTITY_PREFIX + name: {"next": nxt}})
+        return self.set_properties({_IDENTITY_PREFIX + name: {"next": nxt}})
 
     def drop_identity_column(self, name: str) -> int:
-        return self.set_properties({self._IDENTITY_PREFIX + name: None})
+        return self.set_properties({_IDENTITY_PREFIX + name: None})
 
-    def _append_with_identity(
-        self, df, identity, snap: Snapshot, *, txn, partition_by, max_retries
-    ) -> int:
-        """Append path for tables with identity columns: assignment
-        uses a single ``monotonically_increasing_id`` pass (unique,
-        gap-tolerant), the new watermark is read from the STAGED
-        files' own footer stats (so the committed watermark provably
-        covers every written id), and a lost commit race REBASES the
-        staged files instead of re-running the data job: when no
-        winner advanced our identity watermark the staged files commit
-        unchanged at the new version; when one did (a concurrent
-        identity append), only the id columns are re-stamped by a
-        constant shift — one read-shift-rewrite of the already-
-        materialized batch, never a re-execution of the (arbitrarily
-        expensive) upstream plan. Row-tracking ids already rebase for
-        free because they are manifest-only (#base_row_id, re-stamped
-        centrally in _try_commit); this extends the same economy to
-        the one id that lives IN the data files."""
-        for c in identity:
+    def _insert_frame(self, df: DataFrame, snap: Snapshot) -> DataFrame:
+        """The one rule sequence for caller rows an insert verb lands
+        (``append``, ``overwrite``, ``overwrite_where``, ``copy_into``):
+        the physical frame to stage, checked against the attempt's
+        snapshot ``snap``. In order:
+
+        1. reject ``__row_id`` (engine-assigned);
+        2. materialize DEFAULTs for omitted columns;
+        3. reject a supplied identity column (GENERATED ALWAYS);
+        4. stamp identity values as ``watermark +
+           monotonically_increasing_id()`` — unique, with gaps;
+        5. compute omitted generated columns, validate supplied ones;
+        6. enforce CHECK constraints (on the stamped rows);
+        7. map logical to physical column names.
+
+        The ids are stamped from ``snap.rules.identity``; hand that map
+        to ``_commit_insert``, which shifts them if the watermark moves
+        before the commit lands."""
+        self._reject_reserved_row_id(df)
+        rules = snap.rules
+        df = self._apply_defaults(df, snap)
+        for c in rules.identity:
             if c in df.columns:
                 raise ValueError(
                     f"identity column {c!r} is GENERATED ALWAYS — omit it"
                 )
+        if rules.identity:
+            df = df.withColumn("__mono", F.monotonically_increasing_id())
+            for c, nxt in sorted(rules.identity.items()):
+                df = df.withColumn(c, (F.lit(nxt) + F.col("__mono")).cast("long"))
+            df = df.drop("__mono")
         df = self._apply_generated(df, snap)
-        self._enforce_constraints(df, snap.props)
-        colmap = snap.colmap
-        phys_part = self._phys_partition_by(partition_by, snap)
-        phys_of = {c: self._phys_names([c], colmap)[0] for c in identity}
-        staged: tuple[list[dict], str, dict[str, int]] | None = None
+        self._enforce_constraints(df, rules.constraints)
+        return self._physicalize(df, snap.colmap)
+
+    def _commit_insert(
+        self,
+        snap: Snapshot | None,
+        op: str,
+        add: list[dict],
+        schema_json: str,
+        stamped: dict[str, int],
+        *,
+        overwrite: bool = False,
+        txn: tuple[str, int] | None = None,
+        props: dict | None = None,
+        rewrite: tuple[list[dict], list[str], object] | None = None,
+        max_retries: int = 10,
+    ) -> int | None:
+        """The one commit for staged inserted rows. ``add`` holds the
+        files this write staged; their identity values were stamped
+        from the watermarks ``stamped`` ({logical column: watermark};
+        empty when no ids were stamped). Each attempt:
+
+        1. resolves the head (the first attempt commits on ``snap``
+           when given) and returns early if ``txn`` already landed;
+        2. if the head's watermark differs from the stamp, shifts only
+           this write's id columns by the difference (``_shift_ids``) —
+           the caller's plan never re-runs. A rewound watermark
+           (a RESTORE won the race) shifts down: every live id at the
+           head is below its watermark, so the shifted range is free;
+        3. advances the watermark past the staged ids
+           (``_watermark_props``) — never backwards, so an overwrite
+           never resets it — and applies ``props`` (COPY INTO's ledger);
+        4. commits with ``_try_commit``: an append widens the schema,
+           an ``overwrite`` removes every live file at the head and
+           commits ``schema_json`` as is.
+
+        A commit that moves the watermark never rebases: the
+        conflict check ignores identity keys, so a rebase would
+        overwrite a winner's watermark. ``props`` (a ledger decided at
+        ``snap``) makes a lost race return None: the caller re-plans.
+
+        ``rewrite=(carry, touched, read_filters)`` is replaceWhere's
+        commit: it also adds ``carry`` (the touched files' surviving
+        rows, ids kept) and removes ``touched``. Without stamped ids it
+        rebases over disjoint winners (``_commit_or_rebase``); with
+        them a lost race returns None and the caller re-plans its
+        remainder — the staged ``add`` is shifted, never re-staged."""
+        if rewrite is not None and not stamped:
+            carry, touched, read_filters = rewrite
+            return self._commit_or_rebase(
+                snap, op, carry + add, touched, schema_json, txn=txn,
+                read_filters=read_filters,
+            )
         for attempt in range(max_retries):
-            if attempt:
-                snap = self._state()
-            props = snap.props
-            if snap.holds(txn):
-                return snap.version  # orphaned staging is vacuum-swept
-            nxt = {
-                c: int(props[self._IDENTITY_PREFIX + c]["next"])
-                for c in identity
-            }
-            if staged is None:
-                out = df.withColumn(
-                    "__mono", F.monotonically_increasing_id()
-                )
-                for c in identity:
-                    out = out.withColumn(
-                        c, (F.lit(nxt[c]) + F.col("__mono")).cast("long")
-                    )
-                out = out.drop("__mono")
-                add, schema = self._stage_actions(
-                    self._physicalize(out, colmap), partition_by=phys_part
-                )
-                staged = (add, schema, nxt)
-            elif any(nxt[c] < staged[2][c] for c in identity):
-                # the watermark moved BACKWARDS past our stamp (a
-                # restore of an older snapshot raced us): the constant
-                # shift is unsound against a rewound id space — fall
-                # back to a full re-stage against the fresh state
-                staged = None
-                continue
-            elif any(nxt[c] > staged[2][c] for c in identity):
-                # a winner minted ids past ours: re-stamp ONLY the id
-                # columns of the staged files (constant shift keeps
-                # uniqueness and the gap-tolerant contract)
-                prev_add, schema, prev_nxt = staged
-                out = self.spark.read.parquet(
-                    *[
-                        os.path.join(self.path, a["path"])
-                        for a in prev_add
-                    ]
-                )
-                for c in identity:
-                    shift = nxt[c] - prev_nxt[c]
-                    if shift:
-                        out = out.withColumn(
-                            phys_of[c],
-                            (F.col(phys_of[c]) + F.lit(shift)).cast("long"),
-                        )
-                add, schema = self._stage_actions(
-                    out, partition_by=phys_part
-                )
-                staged = (add, schema, nxt)
-            else:
-                add, schema, _ = staged  # watermark untouched: reuse
-            new_props = dict(props)
-            for c in identity:
-                top = None
-                for a in add:
-                    rng = a["stats"].get(phys_of[c])
-                    if rng is None:
-                        top = None
-                        break
-                    top = rng[1] if top is None else max(top, rng[1])
-                if top is None and add:  # stats missing: read staged max
-                    top = self.spark.read.parquet(
-                        *[os.path.join(self.path, a["path"]) for a in add]
-                    ).agg(F.max(phys_of[c]).alias("m")).first()["m"]
-                if top is not None:
-                    new_props[self._IDENTITY_PREFIX + c] = {"next": int(top) + 1}
+            if attempt and (rewrite is not None or props is not None):
+                return None
+            head = snap if attempt == 0 and snap is not None else self._state()
+            if head.holds(txn):
+                return head.version
+            add, stamped = self._shift_ids(add, stamped, head)
+            carry, remove = rewrite[:2] if rewrite is not None else (
+                [], sorted(head.files) if overwrite else []
+            )
             try:
-                v = self._try_commit(
-                    snap,
-                    "append",
-                    add,
-                    [],
-                    self._evolve_schema(schema, snap),
+                return self._try_commit(
+                    head,
+                    op,
+                    carry + add,
+                    remove,
+                    # an overwrite REPLACES the schema; an append may
+                    # only widen it (see _evolve_schema)
+                    schema_json
+                    if overwrite
+                    else self._evolve_schema(schema_json, head),
                     txn,
-                    props=new_props,
+                    props=self._watermark_props(head, add, props),
                 )
             except CommitConflict:
-                continue  # rebase the STAGED files on the next pass
-            return self._auto_compact_append(snap, add, v)
-        raise CommitConflict(f"append lost {max_retries} commit races")
+                continue
+        raise CommitConflict(f"{op} lost {max_retries} commit races")
+
+    def _shift_ids(
+        self, add: list[dict], stamped: dict[str, int], head: Snapshot
+    ) -> tuple[list[dict], dict[str, int]]:
+        """(``add`` with its identity values moved onto ``head``'s
+        watermarks, the new stamp). Values stamped from watermark ``w``
+        shift by ``head - w``: one pyarrow pass per staged file,
+        streamed by row group, written under a fresh staged name and
+        re-stat'd; bloom stats of the other columns carry over. Files
+        the head already agrees with are returned unchanged."""
+        ids = head.rules.identity
+        gone = set(stamped) - set(ids)
+        if gone:
+            raise ValueError(
+                f"identity column(s) {sorted(gone)} were dropped or "
+                "renamed while this write was in flight"
+            )
+        shifts = {
+            self._phys_names([c], head.colmap)[0]: ids[c] - base
+            for c, base in stamped.items()
+            if ids[c] != base
+        }
+        if not shifts or not add:
+            return add, {c: ids[c] for c in stamped}
+        import pyarrow.compute as pc
+        import pyarrow.parquet as pq
+
+        stage = os.path.join(_DATA, uuid.uuid4().hex)
+        os.makedirs(os.path.join(self.path, stage))
+        out = []
+        for a in add:
+            src = pq.ParquetFile(
+                os.path.join(self.path, a["path"]),
+                coerce_int96_timestamp_unit="us",
+            )
+            rel = os.path.join(stage, os.path.basename(a["path"]))
+            with pq.ParquetWriter(
+                os.path.join(self.path, rel), src.schema_arrow
+            ) as w:
+                for i in range(src.num_row_groups):
+                    rg = src.read_row_group(i)
+                    for phys, delta in shifts.items():
+                        j = rg.schema.get_field_index(phys)
+                        rg = rg.set_column(
+                            j, rg.field(j), pc.add(rg.column(j), delta)
+                        )
+                    w.write_table(rg)
+            (entry,) = self._manifest_entries([rel])
+            entry["stats"].update(
+                (k, v)
+                for k, v in a["stats"].items()
+                if k.startswith("#bloom:") and k[len("#bloom:"):] not in shifts
+            )
+            out.append(entry)
+        return out, {c: ids[c] for c in stamped}
+
+    def _watermark_props(
+        self, head: Snapshot, add: list[dict], props: dict | None = None
+    ) -> dict | None:
+        """The commit's properties: ``head``'s, plus ``props``, with
+        each identity watermark advanced past the ids ``add`` carries
+        — their max from the staged stats, or from the footer column
+        when a file has no stats for it. A watermark never moves
+        backwards. None when nothing changes (the commit carries the
+        head's properties forward)."""
+        new = dict(props or {})
+        for c, nxt in head.rules.identity.items():
+            phys = self._phys_names([c], head.colmap)[0]
+            top = None
+            for a in add:
+                hi = (a["stats"].get(phys) or [None, None])[1]
+                if hi is None:  # no footer stats: read the column
+                    import pyarrow.compute as pc
+                    import pyarrow.parquet as pq
+
+                    f = pq.ParquetFile(os.path.join(self.path, a["path"]))
+                    if phys in f.schema_arrow.names:
+                        hi = pc.max(f.read(columns=[phys]).column(0)).as_py()
+                if hi is not None:
+                    top = hi if top is None else max(top, hi)
+            if top is not None and int(top) + 1 > nxt:
+                new[_IDENTITY_PREFIX + c] = {"next": int(top) + 1}
+        return {**head.props, **new} if new else None
 
     def _apply_generated(
         self,
@@ -2059,23 +2204,19 @@ class AcidTable:
         restricts the validation to a subset of ``df`` (merge_apply
         validates only surviving upserts — delete rows never land, so
         their generated values don't matter)."""
-        for key, expr in snap.props.items():
-            if not key.startswith(self._GENERATED_PREFIX):
-                continue
-            col = key[len(self._GENERATED_PREFIX):]
+        for col, expr in snap.rules.generated.items():
             if col not in df.columns:
                 df = df.withColumn(col, F.expr(expr))
             else:
                 self._check_generated(
-                    df if check_df is None else check_df, {key: expr}
+                    df if check_df is None else check_df, {col: expr}
                 )
         return df
 
-    def _check_generated(self, df: DataFrame, props: dict) -> None:
-        for key, expr in props.items():
-            if not key.startswith(self._GENERATED_PREFIX):
-                continue
-            col = key[len(self._GENERATED_PREFIX):]
+    def _check_generated(self, df: DataFrame, generated: dict) -> None:
+        """Probe supplied generated columns ({column: expression})
+        against their expressions, one ``limit(1)`` job each."""
+        for col, expr in generated.items():
             if col not in df.columns:
                 continue
             bad = (
@@ -2089,15 +2230,15 @@ class AcidTable:
                     f" {bad[0].asDict()!r}"
                 )
 
-    def _enforce_constraints(self, df: DataFrame, props: dict) -> None:
-        for key, expr in props.items():
-            if not key.startswith(self._CONSTRAINT_PREFIX):
-                continue
+    def _enforce_constraints(self, df: DataFrame, constraints: dict) -> None:
+        """Reject ``df`` if any row fails or NULLs a CHECK constraint
+        ({name: expression}), one ``limit(1)`` job each."""
+        for name, expr in constraints.items():
             cond = F.expr(expr)
             bad = df.filter(~cond | cond.isNull()).limit(1).collect()
             if bad:
                 raise ValueError(
-                    f"CHECK constraint {key[len(self._CONSTRAINT_PREFIX):]!r}"
+                    f"CHECK constraint {name!r}"
                     f" ({expr}) violated by e.g. {bad[0].asDict()!r}"
                 )
 
@@ -2111,7 +2252,11 @@ class AcidTable:
     ) -> int:
         """Transactional append. Data files are written ONCE; only the
         (cheap) commit is retried on conflict — appends commute, so a
-        lost race needs no re-read.
+        lost race needs no re-read of the data. The rows pass the one
+        rule sequence (``_insert_frame``) and land through the one
+        insert commit (``_commit_insert``): on an identity table a
+        lost race to another identity writer shifts the staged ids,
+        it never re-runs the caller's plan.
 
         ``txn=(app, batch_id)`` makes the append IDEMPOTENT per
         (app, batch_id) — the Delta txnAppId/txnVersion contract that
@@ -2124,60 +2269,34 @@ class AcidTable:
         snap = self._state()
         if snap.holds(txn):  # cheap pre-stage short-circuit
             return snap.version
-        self._reject_reserved_row_id(df)
-        df = self._apply_defaults(df, snap)
-        identity = sorted(
-            k[len(self._IDENTITY_PREFIX):]
-            for k in snap.props
-            if k.startswith(self._IDENTITY_PREFIX)
-        )
-        if identity:
-            return self._append_with_identity(
-                df,
-                identity,
-                snap,
-                txn=txn,
-                partition_by=partition_by,
-                max_retries=max_retries,
-            )
-        df = self._apply_generated(df, snap)
-        self._enforce_constraints(df, snap.props)
         add, schema = self._stage_actions(
-            self._physicalize(df, snap.colmap),
+            self._insert_frame(df, snap),
             partition_by=self._phys_partition_by(partition_by, snap),
         )
-        for attempt in range(max_retries):
-            if attempt:
-                snap = self._state()
-                if snap.holds(txn):
-                    return snap.version
-            try:
-                v = self._try_commit(
-                    snap,
-                    "append",
-                    add,
-                    [],
-                    self._evolve_schema(schema, snap),
-                    txn,
-                )
-            except CommitConflict:
-                continue
-            return self._auto_compact_append(snap, add, v)
-        raise CommitConflict(f"append lost {max_retries} commit races")
+        v = self._commit_insert(
+            snap, "append", add, schema, snap.rules.identity, txn=txn,
+            max_retries=max_retries,
+        )
+        return self._auto_compact_append(snap, add, v)
 
     def _auto_compact_append(
         self, base: Snapshot, add: list[dict], v: int
     ) -> int:
-        """The append paths' autoCompact follow-up: the committed live
-        count is ``base``'s plus the fresh files, no log read needed.
-        Best-effort: ANY auto-compact failure only defers compaction —
-        the append itself already committed, so surfacing an error
-        here would report a successful write as failed (and a retry
-        would duplicate data)."""
-        if (
-            self.auto_compact_files
-            and len(base.files) + len(add) > self.auto_compact_files
-        ):
+        """The append paths' autoCompact follow-up: when the commit
+        landed right after ``base`` the live count is ``base``'s plus
+        the fresh files, no log read needed. Best-effort: ANY
+        auto-compact failure only defers compaction — the append
+        itself already committed, so surfacing an error here would
+        report a successful write as failed (and a retry would
+        duplicate data)."""
+        if not self.auto_compact_files:
+            return v
+        live = (
+            len(base.files) + len(add)
+            if v == base.version + 1
+            else len(self._state(v).files)
+        )
+        if live > self.auto_compact_files:
             try:
                 return self._auto_optimize()
             except Exception:
@@ -2275,26 +2394,18 @@ class AcidTable:
         max_retries: int = 10,
     ) -> int:
         """Atomic full-table replace (remove every live file + add the
-        new set in one commit)."""
-        self._reject_reserved_row_id(df)
+        new set in one commit). The rows pass the same rule sequence
+        and commit as ``append``: identity values are assigned above
+        the watermark, which an overwrite never resets."""
         snap = self._state()
-        df = self._apply_defaults(df, snap)
-        df = self._apply_generated(df, snap)
-        self._enforce_constraints(df, snap.props)
         add, schema = self._stage_actions(
-            self._physicalize(df, snap.colmap),
+            self._insert_frame(df, snap),
             partition_by=self._phys_partition_by(partition_by, snap),
         )
-        for attempt in range(max_retries):
-            if attempt:
-                snap = self._state()
-            try:
-                return self._try_commit(
-                    snap, "overwrite", add, sorted(snap.files), schema
-                )
-            except CommitConflict:
-                continue
-        raise CommitConflict(f"overwrite lost {max_retries} commit races")
+        return self._commit_insert(
+            snap, "overwrite", add, schema, snap.rules.identity,
+            overwrite=True, max_retries=max_retries,
+        )
 
     def overwrite_where(
         self,
@@ -2317,7 +2428,12 @@ class AcidTable:
         itself satisfy the predicate (otherwise the "replace" would
         smuggle rows into ranges it didn't clear — rejected, like
         Delta's replaceWhere validation). Empty filters are rejected;
-        use ``overwrite`` for a full-table replace.
+        use ``overwrite`` for a full-table replace. A predicate on an
+        identity column is rejected too: the new rows get fresh ids.
+
+        The new rows pass the one rule sequence and are staged once;
+        a lost race re-plans only the remainder rewrite (see
+        ``_commit_insert``'s ``rewrite``).
 
         At 100 TB this is what nightly backfills should use: cost is
         O(replaced range) — manifest pruning bounds the rewrite to
@@ -2327,132 +2443,53 @@ class AcidTable:
                 "overwrite_where requires at least one filter "
                 "(use overwrite() to replace the whole table)"
             )
-        self._reject_reserved_row_id(df)
         snap = self._state()
-        df = self._apply_defaults(df, snap)
-        identity = sorted(
-            k[len(self._IDENTITY_PREFIX):]
-            for k in snap.props
-            if k.startswith(self._IDENTITY_PREFIX)
-        )
-        for c in identity:
-            if c in df.columns:
-                raise ValueError(
-                    f"identity column {c!r} is GENERATED ALWAYS — omit it"
-                )
+        for c in snap.rules.identity:
             if any(f[0] == c for f in filters):
                 raise ValueError(
                     f"replaceWhere predicate on identity column {c!r} is "
                     "not supported: replaced rows are re-minted fresh ids, "
                     "so no incoming row could satisfy the predicate"
                 )
-        df = self._apply_generated(df, snap)
-        self._enforce_constraints(df, snap.props)
+        rows = self._insert_frame(df, snap)
         # replaceWhere contract: new rows must match the predicate
-        logical_pred = _filters_to_predicate(filters)
-        bad = df.filter(~logical_pred | logical_pred.isNull()).limit(1).collect()
-        if bad:
-            raise ValueError(
-                f"replaceWhere violation: incoming row {bad[0].asDict()!r} "
-                f"does not satisfy {filters!r}"
-            )
         colmap = snap.colmap
         phys_filters = self._phys_filters(filters, colmap)
         pred = _filters_to_predicate(phys_filters)
-        if not identity:  # stage once; retries only re-read the log
-            add_new, schema = self._stage_actions(
-                self._physicalize(df, colmap),
-                partition_by=self._phys_partition_by(partition_by, snap),
+        bad = rows.filter(~pred | pred.isNull()).limit(1).collect()
+        if bad:
+            row = {colmap.get(k, k): v for k, v in bad[0].asDict().items()}
+            raise ValueError(
+                f"replaceWhere violation: incoming row {row!r} "
+                f"does not satisfy {filters!r}"
             )
+        add_new, schema = self._stage_actions(
+            rows, partition_by=self._phys_partition_by(partition_by, snap)
+        )
+        stamped = snap.rules.identity
         for attempt in range(max_retries):
             if attempt:
                 snap = self._state()
-            new_props = None
-            if identity:
-                # identity assignment depends on the watermark at
-                # ``snap``, so staging happens per attempt (a lost
-                # race orphans the staging — vacuum sweeps it) and the
-                # advanced watermark commits WITH the data, exactly
-                # like _append_with_identity.
-                props = snap.props
-                out = df.withColumn("__mono", F.monotonically_increasing_id())
-                for c in identity:
-                    nxt = props[self._IDENTITY_PREFIX + c]["next"]
-                    out = out.withColumn(
-                        c, (F.lit(int(nxt)) + F.col("__mono")).cast("long")
-                    )
-                out = out.drop("__mono")
-                add_new, schema = self._stage_actions(
-                    self._physicalize(out, colmap),
-                    partition_by=self._phys_partition_by(partition_by, snap),
-                )
-                new_props = dict(props)
-                phys_of = {
-                    c: self._phys_names([c], colmap)[0] for c in identity
-                }
-                for c in identity:
-                    top = None
-                    for a in add_new:
-                        rng = a["stats"].get(phys_of[c])
-                        if rng is None:
-                            top = None
-                            break
-                        top = rng[1] if top is None else max(top, rng[1])
-                    if top is None and add_new:  # stats missing: read staged
-                        top = self.spark.read.parquet(
-                            *[
-                                os.path.join(self.path, a["path"])
-                                for a in add_new
-                            ]
-                        ).agg(F.max(phys_of[c]).alias("m")).first()["m"]
-                    if top is not None:
-                        new_props[self._IDENTITY_PREFIX + c] = {
-                            "next": int(top) + 1
-                        }
-            if snap.version < 0:  # first commit: nothing to replace
-                try:
-                    return self._try_commit(
-                        snap, "overwrite", add_new, [], schema, props=new_props
-                    )
-                except CommitConflict:
-                    continue
             touched = self._pruned_live(snap, phys_filters)
-            add = list(add_new)
+            add_rem: list[dict] = []
             commit_schema = self._evolve_schema(schema, snap)
             if touched:
                 remainder = self._read_for_rewrite(snap, touched).filter(
                     ~pred | pred.isNull()
                 )
-                add_rem, rem_schema = self._stage_actions(remainder)
-                add = add_rem + add
+                add_rem, _ = self._stage_actions(remainder)
                 commit_schema = self._with_row_id_field(
                     commit_schema, remainder
                 )
-            if new_props is None:
-                # non-identity path: rebase-eligible like delete (the
-                # replaced region is the read+write set; under
-                # write_serializable a blind append elsewhere — or
-                # even into the region, serial order replace-then-
-                # append — commutes). Identity backfills carry a
-                # watermark props snapshot and must re-plan instead.
-                v = self._commit_or_rebase(
-                    snap, "overwrite", add, touched, commit_schema,
-                    read_filters=phys_filters,
-                )
-                if v is not None:
-                    return v
-                continue
-            try:
-                return self._try_commit(
-                    snap,
-                    "overwrite",
-                    add,
-                    touched,
-                    commit_schema,
-                    props=new_props,
-                )
-            except CommitConflict:
-                continue
+            # under write_serializable a blind append elsewhere — or
+            # even into the region, serial order replace-then-append —
+            # commutes with the replace
+            v = self._commit_insert(
+                snap, "overwrite", add_new, commit_schema, stamped,
+                rewrite=(add_rem, touched, phys_filters),
+            )
+            if v is not None:
+                return v
         raise CommitConflict(f"overwrite_where lost {max_retries} commit races")
 
     def copy_into(
@@ -2480,19 +2517,14 @@ class AcidTable:
         at millions of entries you would bucket it, which is exactly
         the txn-ledger design the streaming sink already uses).
 
-        Identity tables are rejected (use ``append``, which assigns);
-        generated columns and CHECK constraints are enforced like any
-        append. Schema may widen additively (mergeSchema semantics).
+        The loaded rows pass the same rule sequence as ``append``
+        (defaults, identity values, generated columns, CHECK
+        constraints). Schema may widen additively (mergeSchema
+        semantics).
         """
         import fnmatch
         import hashlib
 
-        snap = self._state()
-        if any(k.startswith(self._IDENTITY_PREFIX) for k in snap.props):
-            raise ValueError(
-                "COPY INTO an identity-column table is not supported — "
-                "use append(), which assigns identity values"
-            )
         names = sorted(
             n
             for n in os.listdir(src)
@@ -2504,9 +2536,8 @@ class AcidTable:
             "copyinto."
             + hashlib.md5(os.path.abspath(src).encode()).hexdigest()[:12]
         )
-        for attempt in range(max_retries):
-            if attempt:
-                snap = self._state()
+        for _ in range(max_retries):
+            snap = self._state()
             loaded = set(snap.props.get(key) or [])
             new = [n for n in names if n not in loaded]
             if not new:
@@ -2529,38 +2560,27 @@ class AcidTable:
                             )
                             for f in phys.fields
                             if colmap.get(f.name, f.name) != ""
+                            and colmap.get(f.name, f.name)
+                            not in snap.rules.identity
                         ]
                     )
                     reader = reader.schema(logical)
             df = reader.load([os.path.join(src, n) for n in new])
-            self._reject_reserved_row_id(df)
             # declared DEFAULTs materialize for columns the loaded
             # frame lacks — same contract as append. (A schema-forced
             # csv/json read pads a missing field as NULL rather than
             # dropping the column, and NULL-supplied is not absent.)
-            df = self._apply_defaults(df, snap)
-            df = self._apply_generated(df, snap)
-            self._enforce_constraints(df, snap.props)
             add, schema = self._stage_actions(
-                self._physicalize(df, colmap),
+                self._insert_frame(df, snap),
                 partition_by=self._phys_partition_by(None, snap),
             )
-            newprops = dict(snap.props)
-            newprops[key] = sorted(loaded | set(new))
-            try:
-                return (
-                    self._try_commit(
-                        snap,
-                        "copyinto",
-                        add,
-                        [],
-                        self._evolve_schema(schema, snap),
-                        props=newprops,
-                    ),
-                    len(new),
-                )
-            except CommitConflict:
-                continue
+            # the ledger is decided at ``snap``: a lost race re-plans
+            v = self._commit_insert(
+                snap, "copyinto", add, schema, snap.rules.identity,
+                props={key: sorted(loaded | set(new))},
+            )
+            if v is not None:
+                return v, len(new)
         raise CommitConflict(f"copy_into lost {max_retries} commit races")
 
     @classmethod
@@ -2624,31 +2644,16 @@ class AcidTable:
         max_retries: int = 10,
     ) -> int:
         """Commit already-staged file actions (the driver half of a
-        distributed write whose data files were produced elsewhere —
-        the DSv2 ``acidtable`` writer's executors stage parquet
-        directly, then hand the driver this commit). Same retry/txn
-        semantics as ``append``/``overwrite``; data files are never
-        rewritten on a lost race."""
-        for _ in range(max_retries):
-            snap = self._state()
-            if snap.holds(txn):
-                return snap.version
-            try:
-                return self._try_commit(
-                    snap,
-                    "overwrite" if overwrite else "append",
-                    add,
-                    sorted(snap.files) if overwrite else [],
-                    # an overwrite REPLACES the schema; an append may
-                    # only widen it (see _evolve_schema)
-                    schema_json
-                    if overwrite
-                    else self._evolve_schema(schema_json, snap),
-                    txn,
-                )
-            except CommitConflict:
-                continue
-        raise CommitConflict(f"staged commit lost {max_retries} races")
+        distributed write whose data files were produced elsewhere).
+        Same retry/txn semantics as ``append``/``overwrite`` through
+        the same insert commit (``_commit_insert``); data files are
+        never rewritten on a lost race. No write rule is applied: the
+        caller staged the rows as they must land. On an identity
+        table the watermark advances past any ids the files carry."""
+        return self._commit_insert(
+            None, "overwrite" if overwrite else "append", add, schema_json,
+            {}, overwrite=overwrite, txn=txn, max_retries=max_retries,
+        )
 
     def version_at_timestamp(self, ts: float) -> int:
         """Latest version committed at-or-before ``ts`` (epoch
@@ -2843,7 +2848,7 @@ class AcidTable:
         canonical)."""
         by_abs = _rel_by_abs(self.path, touched)
         exrefs = {
-            "file:" + ab: _dv_abs(dvs[p], self.path)
+            _file_uri(ab): _dv_abs(dvs[p], self.path)
             for ab, p in by_abs.items()
             if dvs.get(p)
         }
@@ -2935,8 +2940,7 @@ class AcidTable:
             refs = self.spark.createDataFrame(
                 [
                     (
-                        "file:"
-                        + os.path.abspath(os.path.join(self.path, p)),
+                        _file_uri(os.path.abspath(os.path.join(self.path, p))),
                         _dv_abs(v, self.path),
                     )
                     for p, v in relevant
@@ -2949,7 +2953,7 @@ class AcidTable:
         for p, v in relevant:
             idx = _unpack_dv(v, self.path)
             if idx:
-                fp = "file:" + os.path.abspath(os.path.join(self.path, p))
+                fp = _file_uri(os.path.abspath(os.path.join(self.path, p)))
                 frames.append(pd.DataFrame({"__fp": fp, "__ri": idx}))
         tomb = self.spark.createDataFrame(
             pd.concat(frames, ignore_index=True),
@@ -3154,6 +3158,12 @@ class AcidTable:
                     f"column {self._ROW_ID_COL!r} is engine-assigned "
                     "(row tracking) and cannot be updated"
                 )
+            ids = sorted(set(assignments) & set(snap.rules.identity))
+            if ids:
+                raise ValueError(
+                    f"identity column {ids[0]!r} is GENERATED ALWAYS — it "
+                    "cannot be updated"
+                )
             unknown = set(assignments) - set(masked.columns)
             if unknown:
                 raise ValueError(
@@ -3188,8 +3198,8 @@ class AcidTable:
                 )
                 if not entries:
                     return snap.version  # stats false-positive: no match
-                self._enforce_constraints(updated_rows, snap.props)
-                self._check_generated(updated_rows, snap.props)
+                self._enforce_constraints(updated_rows, snap.rules.constraints)
+                self._check_generated(updated_rows, snap.rules.generated)
                 add, schema = self._stage_actions(
                     self._physicalize(updated_rows, colmap)
                 )
@@ -3202,8 +3212,8 @@ class AcidTable:
                 continue  # true overlap: re-plan
             if masked.filter(pred).limit(1).first() is None:
                 return snap.version  # stats false-positive: nothing matched
-            self._enforce_constraints(updated_rows, snap.props)
-            self._check_generated(updated_rows, snap.props)
+            self._enforce_constraints(updated_rows, snap.rules.constraints)
+            self._check_generated(updated_rows, snap.rules.generated)
             rewritten = masked.select(
                 *[
                     F.when(pred, new_value(c)).otherwise(F.col(c)).alias(c)
@@ -3525,21 +3535,23 @@ class AcidTable:
                 out.append(f"{fn}({rev.get(arg, arg)})")
         return out
 
-    def _guard_mapped_name_in_exprs(self, name: str, props: dict) -> None:
+    def _guard_mapped_name_in_exprs(self, name: str, rules: WriteRules) -> None:
         """Refuse to remap a column referenced by a CHECK constraint or
         generated-column expression (enforcement would silently stop
         matching rows — Delta blocks this the same way)."""
         word = re.compile(rf"\b{re.escape(name)}\b")
-        for key, expr in props.items():
-            if key.startswith(self._CONSTRAINT_PREFIX) or key.startswith(
-                self._GENERATED_PREFIX
-            ):
+        for prefix, exprs in (
+            (_CONSTRAINT_PREFIX, rules.constraints),
+            (_GENERATED_PREFIX, rules.generated),
+        ):
+            for key, expr in exprs.items():
                 if isinstance(expr, str) and word.search(expr):
                     raise ValueError(
-                        f"column {name!r} is referenced by {key!r} ({expr});"
-                        " drop that constraint/generated column first"
+                        f"column {name!r} is referenced by {prefix + key!r}"
+                        f" ({expr}); drop that constraint/generated column"
+                        " first"
                     )
-        if self._GENERATED_PREFIX + name in props:
+        if name in rules.generated:
             raise ValueError(
                 f"column {name!r} is a generated column; drop the"
                 " generation expression first"
@@ -3557,7 +3569,7 @@ class AcidTable:
             raise ValueError(f"no column {old!r} (have {sorted(view.values())})")
         if new in view.values():
             raise ValueError(f"column {new!r} already exists")
-        self._guard_mapped_name_in_exprs(old, snap.props)
+        self._guard_mapped_name_in_exprs(old, snap.rules)
         colmap = snap.colmap
         if new in colmap and colmap[new] != new:
             raise ValueError(
@@ -3571,11 +3583,11 @@ class AcidTable:
         # identity watermarks are keyed by LOGICAL name (writers look
         # them up against the current schema): migrate the key in the
         # SAME commit or the rename silently sheds identity semantics
-        ik = self._IDENTITY_PREFIX + old
+        ik = _IDENTITY_PREFIX + old
         cur = snap.props
         if ik in cur:
             updates[ik] = None
-            updates[self._IDENTITY_PREFIX + new] = cur[ik]
+            updates[_IDENTITY_PREFIX + new] = cur[ik]
         # liquid-clustering keys are also LOGICAL names (set_clustering
         # validates against the logical view; optimize_cluster resolves
         # them at run time): migrate in the SAME commit, or the next
@@ -3599,7 +3611,7 @@ class AcidTable:
             raise ValueError(f"no column {name!r} (have {sorted(view.values())})")
         if len(view) == 1:
             raise ValueError("cannot drop the only column")
-        self._guard_mapped_name_in_exprs(name, snap.props)
+        self._guard_mapped_name_in_exprs(name, snap.rules)
         # Delta blocks dropping a clustering column outright (the key
         # would dangle and every later OPTIMIZE / auto-compact would
         # fail AFTER its data commit already succeeded)
@@ -3614,8 +3626,8 @@ class AcidTable:
         updates: dict = {"colmap": colmap}
         # dropping an identity column retires its watermark in the
         # same commit (a stale key would break every later append)
-        if self._IDENTITY_PREFIX + name in snap.props:
-            updates[self._IDENTITY_PREFIX + name] = None
+        if _IDENTITY_PREFIX + name in snap.props:
+            updates[_IDENTITY_PREFIX + name] = None
         return self.set_properties(updates)
 
     def add_columns(
@@ -4763,14 +4775,14 @@ class AcidTable:
             ups = updates
             if fold is None and delete_col is None:
                 ups = self._apply_generated(ups, snap)
-                self._enforce_constraints(ups, snap.props)
+                self._enforce_constraints(ups, snap.rules.constraints)
             elif fold is None:
                 # delete rows never land: checks see only the survivors
                 ups = self._apply_generated(
                     ups, snap, check_df=ups.filter(~F.col(delete_col))
                 )
                 self._enforce_constraints(
-                    ups.filter(~F.col(delete_col)), snap.props
+                    ups.filter(~F.col(delete_col)), snap.rules.constraints
                 )
             ups = self._physicalize(ups, colmap)
             keys = self._phys_names(logical_keys, colmap)
@@ -4826,7 +4838,7 @@ class AcidTable:
                         target.drop(self._ROW_ID_COL), colmap
                     )
                     merged = self._apply_generated(fold(rows, updates), snap)
-                    self._enforce_constraints(merged, snap.props)
+                    self._enforce_constraints(merged, snap.rules.constraints)
                     merged = self._physicalize(merged, colmap)
                     if rt_on:  # a folded row keeps its key's row id
                         merged = self._inherit_row_ids(merged, target, keys)
@@ -5497,9 +5509,14 @@ class AcidTable:
             clone._try_commit(
                 _NO_COMMITS, "clone", [], [], schema, props=props or None
             )
-            # deep clone materializes through the normal write path so
-            # colmap/constraints resolve against the cloned props
-            clone.overwrite(src)
+            # the copy keeps every row as it is, identity values
+            # included: staged and committed directly, like a compaction
+            base = clone._state()
+            add, staged = clone._stage_actions(
+                clone._physicalize(src, base.colmap),
+                partition_by=clone._phys_partition_by(None, base),
+            )
+            clone._try_commit(base, "overwrite", add, [], staged)
             return clone
         add = [
             {"path": os.path.abspath(os.path.join(self.path, p)), "stats": s}

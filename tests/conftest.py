@@ -86,7 +86,7 @@ _SLOW_TESTS = frozenset({
     "test_http_fetch_success_retry_and_quarantine",
     "test_identity_append_rebases_over_compact_zero_cost",
     "test_identity_append_rebases_over_identity_append",
-    "test_identity_append_restaged_after_watermark_rewind",
+    "test_identity_append_shifted_after_watermark_rewind",
     "test_identity_append_txn_replay_rechecked_on_rebase",
     "test_identity_column_assignment_watermark_and_races",
     "test_identity_fuzz_races_keep_ids_unique",

@@ -361,3 +361,19 @@ def test_dv_entries_map_suffix_colliding_files(spark, tmp_path, driver_side):
         hits, touched, {}, row_bound=10 if driver_side else None
     )
     assert [e["path"] for e in entries] == ["x/a.parquet"]
+
+
+@pytest.mark.parametrize("driver_side", [True, False])
+def test_mor_delete_under_path_needing_uri_escapes(
+    spark, tmp_path, driver_side, monkeypatch
+):
+    """A table under a path Spark reports %-escaped (a space, a
+    literal ``%``): a merge-on-read delete maps its hits on both encode
+    paths, and reads mask exactly the deleted rows."""
+    if not driver_side:
+        monkeypatch.setattr(AcidTable, "_DV_ENCODE_DRIVER_MAX_ROWS", 0)
+    t = AcidTable(spark, str(tmp_path / "with space %20" / "t"))
+    t.append(spark.createDataFrame([(i,) for i in range(10)], "k long"))
+    t.delete([("k", "<", 3)], mode="merge_on_read")
+    assert t.row_count() == 7
+    assert sorted(r.k for r in t.snapshot().collect()) == list(range(3, 10))

@@ -1,16 +1,19 @@
 """Identity-bearing appends rebase on commit conflict instead of
-re-running the data job (AcidTable._append_with_identity).
+re-running the data job (AcidTable._commit_insert, the one insert
+commit).
 
 Pre-r10, a lost commit race by an identity append re-executed the
 caller's whole upstream plan (staging from scratch against the
 winner's watermark). Now the staged files rebase: a winner that left
 the identity watermark alone (compact, delete, metadata) costs ZERO
 extra work — the staged files commit unchanged at the new version;
-a winner that minted ids past ours (concurrent identity append)
-costs one constant-shift re-stamp of the already-materialized staged
-batch, never a re-execution of the upstream plan. A winner that
-REWOUND the watermark (restore) falls back to the full re-stage —
-the only sound answer against a rewound id space.
+a winner that moved the watermark costs one constant-shift re-stamp
+of the already-materialized staged batch (AcidTable._shift_ids),
+never a re-execution of the upstream plan. That holds both when the
+winner minted ids past ours (concurrent identity append: shift up)
+and when it REWOUND the watermark (restore: shift down — every live
+id at the restored head is below its watermark, so the shifted range
+is free).
 """
 
 from __future__ import annotations
@@ -133,11 +136,11 @@ def test_identity_append_rebases_over_compact_zero_cost(spark, tmp_path):
     assert t.properties()["identity.id"]["next"] == 104
 
 
-def test_identity_append_restaged_after_watermark_rewind(spark, tmp_path):
+def test_identity_append_shifted_after_watermark_rewind(spark, tmp_path):
     """RESTORE rolls the identity watermark back (unlike row-tracking,
-    which has an explicit no-rollback carve-out) — the constant shift
-    would re-mint ids below already-staged ones, so the loser falls
-    back to a full re-stage against the restored state."""
+    which has an explicit no-rollback carve-out) — the staged ids
+    shift DOWN onto the restored watermark: the plan runs once, and
+    the ids land exactly where a re-stage would have put them."""
     path = str(tmp_path / "t")
     t = _identity_table(spark, path, start=100)
     v_before = t.latest_version()
@@ -146,7 +149,7 @@ def test_identity_append_restaged_after_watermark_rewind(spark, tmp_path):
     df, marker = _tracked_df(spark, tmp_path, ["l1", "l2"])
     _inject_winner_once(t, lambda: w.restore(v_before))
     t.append(df)
-    assert _runs(marker) == 2  # rewind forces the full re-stage
+    assert _runs(marker) == 1  # the rewind shifts; the plan never re-runs
     got = {r["s"]: r["id"] for r in t.snapshot().collect()}
     # a/b were restored away; the batch re-minted from the rewound mark
     assert set(got) == {"seed1", "seed2", "l1", "l2"}
@@ -258,3 +261,209 @@ def test_identity_fuzz_races_keep_ids_unique(spark, tmp_path, seed):
         nxt = t.properties()["identity.id"]["next"]
         assert nxt > max(ids), (step, race)  # watermark monotone cover
         restorable.append(t.latest_version())
+
+
+# ---- the one insert path: every verb that lands rows assigns ids ----
+
+
+def _ids_by_s(t):
+    return {r["s"]: r["id"] for r in t.snapshot().collect()}
+
+
+def test_overwrite_identity_table_assigns_ids(spark, tmp_path):
+    """``overwrite`` runs the same rules as append: a supplied id is
+    rejected (GENERATED ALWAYS); omitted ids are assigned at or above
+    the watermark, the column stays in the schema, and the watermark
+    advances (an overwrite never resets it)."""
+    t = _identity_table(spark, str(tmp_path / "t"), start=100)
+    with pytest.raises(ValueError, match="GENERATED ALWAYS"):
+        t.overwrite(spark.createDataFrame([(7, "x")], "id long, s string"))
+    t.overwrite(
+        spark.createDataFrame([("o1",), ("o2",), ("o3",)], "s string")
+    )
+    assert "id" in t.snapshot().columns
+    got = _ids_by_s(t)
+    assert set(got) == {"o1", "o2", "o3"}
+    ids = list(got.values())
+    assert len(set(ids)) == 3 and min(ids) >= 100
+    assert t.properties()["identity.id"]["next"] == max(ids) + 1
+    # an empty overwrite leaves the watermark where it was
+    wm = t.properties()["identity.id"]["next"]
+    t.overwrite(spark.createDataFrame([], "s string"))
+    assert t.properties()["identity.id"]["next"] == wm
+
+
+def test_sql_insert_overwrite_then_insert_keeps_identity(spark, tmp_path):
+    """SQL ``INSERT OVERWRITE`` then ``INSERT INTO`` on an identity
+    table: every row carries a unique, non-NULL id."""
+    from data_lake_demo_spark.ddl import AcidSql
+
+    p = str(tmp_path / "idt")
+    t = AcidTable(spark, p)
+    t.append(spark.createDataFrame([(1, "a")], "id long, s string"))
+    t.set_identity_column("id", start=100)
+    sql = AcidSql(spark, {"idt": p})
+    sql.sql("INSERT OVERWRITE idt VALUES ('b'), ('c')")
+    sql.sql("INSERT INTO idt VALUES ('d')")
+    got = _ids_by_s(AcidTable(spark, p))
+    assert set(got) == {"b", "c", "d"}
+    assert None not in got.values()
+    assert len(set(got.values())) == 3 and min(got.values()) >= 100
+
+
+def test_copy_into_identity_table_assigns_ids(spark, tmp_path):
+    """COPY INTO an identity table assigns ids like any insert and
+    advances the watermark in the load's commit."""
+    import glob
+    import shutil
+
+    src = tmp_path / "landing"
+    src.mkdir()
+    stage = str(tmp_path / "stage")
+    spark.createDataFrame([("c1",), ("c2",)], "s string").coalesce(
+        1
+    ).write.parquet(stage)
+    shutil.copy(glob.glob(f"{stage}/part-*.parquet")[0], str(src / "a.parquet"))
+    t = _identity_table(spark, str(tmp_path / "t"), start=100)
+    _, n = t.copy_into(str(src))
+    assert n == 1
+    got = _ids_by_s(t)
+    assert {got["c1"], got["c2"]} == {100, 101}
+    assert t.properties()["identity.id"]["next"] == 102
+
+
+def test_dsv2_overwrite_identity_table_assigns_ids(spark, tmp_path):
+    """``mode("overwrite")`` through the DSv2 writer into an identity
+    table assigns ids from the watermark (it used to be rejected) and
+    never resets the watermark."""
+    from data_lake_demo_spark.streaming.acid_source import register
+
+    register(spark)
+    p = str(tmp_path / "t")
+    t = _identity_table(spark, p, start=100)
+    spark.createDataFrame([("d1",), ("d2",)], "s string").coalesce(
+        1
+    ).write.format("acidtable").mode("overwrite").option("path", p).save()
+    got = _ids_by_s(t)
+    assert set(got) == {"d1", "d2"}
+    assert {got["d1"], got["d2"]} == {100, 101}
+    assert t.properties()["identity.id"]["next"] == 102
+
+
+def test_identity_replace_where_race_stages_once(spark, tmp_path):
+    """An identity replaceWhere that loses its commit race to an
+    identity append stages its rows once: the commit shifts the
+    staged ids past the winner's instead of re-running the write."""
+    path = str(tmp_path / "t")
+    t = AcidTable(spark, path)
+    t.append(
+        spark.createDataFrame(
+            [(1, "d1", "seed")], "id long, day string, s string"
+        ).coalesce(1)
+    )
+    t.set_identity_column("id", start=100)
+    w = AcidTable(spark, path)
+    n = _count_staging(t)
+    _inject_winner_once(
+        t,
+        lambda: w.append(
+            spark.createDataFrame(
+                [("d9", "w1"), ("d9", "w2")], "day string, s string"
+            ).coalesce(1)
+        ),
+    )
+    t.overwrite_where(
+        spark.createDataFrame(
+            [("d2", "r1"), ("d2", "r2")], "day string, s string"
+        ).coalesce(1),
+        [("day", "=", "d2")],
+    )
+    assert n["n"] == 1
+    got = _ids_by_s(t)
+    assert set(got) == {"seed", "w1", "w2", "r1", "r2"}
+    assert {got["w1"], got["w2"]} == {100, 101}
+    assert {got["r1"], got["r2"]} == {102, 103}
+    assert t.properties()["identity.id"]["next"] == 104
+
+
+def test_update_rejects_identity_column(spark, tmp_path):
+    """UPDATE may not assign an identity column (GENERATED ALWAYS),
+    through the API or SQL; nothing commits."""
+    from data_lake_demo_spark.ddl import AcidSql
+
+    p = str(tmp_path / "t")
+    t = _identity_table(spark, p, start=100)
+    v = t.latest_version()
+    with pytest.raises(ValueError, match="GENERATED ALWAYS"):
+        t.update({"id": "7"})
+    with pytest.raises(ValueError, match="GENERATED ALWAYS"):
+        AcidSql(spark, {"t": p}).sql("UPDATE t SET id = 7 WHERE s = 'seed1'")
+    assert t.latest_version() == v
+    assert sorted(_ids_by_s(t).values()) == [-2, -1]
+    assert t.properties()["identity.id"]["next"] == 100
+
+
+def test_deep_clone_keeps_identity_values_and_watermark(spark, tmp_path):
+    """A deep clone copies rows with their ids and the watermark; the
+    clone's next append continues above the watermark."""
+    src = _identity_table(spark, str(tmp_path / "src"), start=100)
+    src.append(spark.createDataFrame([("a",)], "s string"))
+    clone = src.clone_to(str(tmp_path / "clone"), shallow=False)
+    assert _ids_by_s(clone) == _ids_by_s(src)
+    wm = src.properties()["identity.id"]["next"]
+    assert clone.properties()["identity.id"]["next"] == wm
+    clone.append(spark.createDataFrame([("b",)], "s string"))
+    got = _ids_by_s(clone)
+    assert got["b"] >= wm
+    assert len(set(got.values())) == len(got)
+
+
+def test_identity_shift_keeps_nested_and_typed_columns(spark, tmp_path):
+    """The shift rewrites only the id column: an identity append whose
+    batch carries timestamp, decimal, array, map and struct columns
+    loses a race to an identity append, and its rows read back
+    exactly as written with the ids shifted."""
+    import datetime as dt
+    from decimal import Decimal
+
+    schema = (
+        "s string, ts timestamp, amt decimal(10,2), tags array<string>, "
+        "attrs map<string,int>, pt struct<x:int,y:string>"
+    )
+    path = str(tmp_path / "t")
+    t = AcidTable(spark, path)
+    t.append(
+        spark.createDataFrame(
+            [(-1, "seed", None, None, None, None, None)],
+            "id long, " + schema,
+        ).coalesce(1)
+    )
+    t.set_identity_column("id", start=100)
+    rows = [
+        (
+            f"l{i}",
+            dt.datetime(2024, 1, 2, 3, 4, 5, 123456 + i),
+            Decimal(f"{i}.25"),
+            [f"t{i}", None],
+            {"k": i},
+            (i, f"y{i}"),
+        )
+        for i in range(3)
+    ]
+    w = AcidTable(spark, path)
+    _inject_winner_once(
+        t,
+        lambda: w.append(
+            spark.createDataFrame([("w1",), ("w2",)], "s string").coalesce(1)
+        ),
+    )
+    t.append(spark.createDataFrame(rows, schema).coalesce(1))
+    got = {r["s"]: r for r in t.snapshot().collect()}
+    assert {got["w1"]["id"], got["w2"]["id"]} == {100, 101}
+    for i, row in enumerate(rows):
+        r = got[f"l{i}"]
+        assert r["id"] == 102 + i
+        assert (
+            r["ts"], r["amt"], r["tags"], r["attrs"], tuple(r["pt"])
+        ) == row[1:]
+    assert t.properties()["identity.id"]["next"] == 105

@@ -1538,10 +1538,7 @@ def test_acid_dsv2_writer_identity_columns(spark, tmp_path):
     the watermark in the same transaction, supplying the column is
     rejected, and a stale watermark (concurrent identity writer)
     repairs by shifting the staged values before committing."""
-    from data_lake_demo_spark.streaming.acid_source import (
-        _commit_staged_identity,
-        register,
-    )
+    from data_lake_demo_spark.streaming.acid_source import register
     from data_lake_demo_spark.tableformat import AcidTable
 
     register(spark)
@@ -1579,8 +1576,9 @@ def test_acid_dsv2_writer_identity_columns(spark, tmp_path):
     assert len(all_ids) == len(set(all_ids))
 
     # stale-watermark repair: stage a file whose ids were assigned
-    # from an OLD base, then commit with that base — the commit must
-    # shift values up to the current watermark, keeping uniqueness
+    # from an OLD base, then commit it through the one insert commit
+    # with that base — the commit must shift values up to the current
+    # watermark, keeping uniqueness
     stale_base = 100  # watermark has moved well past this by now
     os.makedirs(os.path.join(p, "data", "stale"), exist_ok=True)
     spark.createDataFrame(
@@ -1591,11 +1589,12 @@ def test_acid_dsv2_writer_identity_columns(spark, tmp_path):
     rel = os.path.join("data", "stale", "f.parquet")
     _, stats = t._file_meta(rel)
     before = t.properties()["identity.id"]["next"]
-    _commit_staged_identity(
-        t,
+    t._commit_insert(
+        None,
+        "append",
         [{"path": rel, "stats": stats}],
         t._state().schema_json,
-        {"id": {"phys": "id", "base": stale_base}},
+        {"id": stale_base},
     )
     final = [r.id for r in t.snapshot().collect()]
     assert len(final) == len(set(final))  # shift preserved uniqueness

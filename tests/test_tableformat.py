@@ -2002,12 +2002,6 @@ def test_copy_into_idempotent_bulk_load(spark, tmp_path):
     drop("bad.parquet", [(999, "x")])
     with pytest.raises(ValueError):
         t.copy_into(str(src))
-    # identity tables are rejected with a clear error
-    t2 = AcidTable(spark, str(tmp_path / "t2"))
-    t2.append(spark.createDataFrame([(1, "a")], "id long, v string"))
-    t2.set_identity_column("id")
-    with pytest.raises(ValueError, match="identity"):
-        t2.copy_into(str(src))
 
 
 def test_copy_into_sql_surface(spark, tmp_path):
