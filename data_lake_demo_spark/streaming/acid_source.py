@@ -1170,10 +1170,13 @@ class _AcidStreamReader(DataSourceStreamReader):
 
 
 class _StagedFiles(WriterCommitMessage):
-    """Per-task commit message: the staged files' table-relative paths."""
+    """Per-task commit message: the staged files' table-relative paths
+    and the identity watermarks their ids were stamped from
+    ({logical column: watermark}; see ``_WritePlan.stage``)."""
 
     def __init__(self, rels: list):
         self.rels = rels
+        self.stamped: dict = {}
 
 
 def _stage_write(
@@ -1288,7 +1291,9 @@ def _enforce_write_rules(root: str, rules, colmap: dict, actions) -> None:
     made of). Omitted generated columns are rejected (the staged
     parquet already exists, so compute-if-omitted isn't possible on
     this path — supply the column, or write via AcidTable.append).
-    ``rules`` and ``colmap`` come from the writer's snapshot."""
+    ``rules`` and ``colmap`` come from the snapshot the commit lands
+    on, not from the one the rows were staged against: a constraint
+    added while a stream runs holds for every later micro-batch."""
     cons, gens = rules.constraints, rules.generated
     if (not cons and not gens) or not actions:
         return
@@ -1450,27 +1455,34 @@ def _writer_defaults(
 
 
 class _WritePlan:
-    """What a DSv2 write derives from ONE snapshot, resolved when the
+    """What a DSv2 write stages from ONE snapshot, resolved when the
     writer is built: the physical schema and rename map, the identity
-    watermarks executors stamp from (``ids``: physical column ->
-    watermark), the DEFAULT constants for omitted columns, and the
-    rules the commit checks — the identity base and the defaults can
-    never come from different versions. GENERATED ALWAYS: a frame
-    supplying an identity column is rejected, as on every insert."""
+    watermarks executors stamp from (``stamped``: logical column ->
+    watermark; ``ids``: the same keyed by physical column) and the
+    DEFAULT constants for omitted columns — the identity base and the
+    defaults can never come from different versions. GENERATED
+    ALWAYS: a frame supplying an identity column is rejected, as on
+    every insert. The CHECK and generated-column rules are read at
+    commit time instead (see ``commit``).
+
+    The commit may run on a different ``_WritePlan`` than the staging
+    did: Spark's streaming commit rebuilds the writer for each
+    micro-batch, after its tasks ran, so its own snapshot can be newer
+    than the one the executors stamped from."""
 
     def __init__(self, options, schema: T.StructType):
         t = _table(options)
         snap = t._state()
-        self.rules, self.colmap = snap.rules, snap.colmap
-        schema_json, self.rev = _writer_physical(self.colmap, schema)
-        for c in self.rules.identity:
+        colmap, self.stamped = snap.colmap, snap.rules.identity
+        schema_json, self.rev = _writer_physical(colmap, schema)
+        for c in self.stamped:
             if c in schema.fieldNames():
                 raise ValueError(
                     f"identity column {c!r} is GENERATED ALWAYS — omit it"
                 )
         self.ids = {
-            t._phys_names([c], self.colmap)[0]: nxt
-            for c, nxt in self.rules.identity.items()
+            t._phys_names([c], colmap)[0]: nxt
+            for c, nxt in self.stamped.items()
         }
         d = json.loads(schema_json)
         d["fields"].extend(
@@ -1482,24 +1494,29 @@ class _WritePlan:
         )
 
     def stage(self, iterator, path: str, stage_id: str):
-        return _stage_write(
+        staged = _stage_write(
             iterator, path, stage_id, self.rev, self.ids or None,
             self.defaults or None,
         )
+        staged.stamped = self.stamped  # the commit shifts from this
+        return staged
 
     def commit(self, options, messages, overwrite: bool, txn=None) -> None:
-        """Check the staged files against the plan's rules, then land
-        them through the table's one insert commit (which shifts the
-        stamped ids if the watermark moved meanwhile)."""
+        """Check the staged files against the rules at the head, then
+        land them on that head through the table's insert commit loop,
+        which shifts the ids from the watermarks the messages say they
+        were stamped from (not this plan's) if the watermark moved."""
         t = _table(options)
+        staged = [m for m in messages if m is not None]
         actions = t._manifest_entries(
-            sorted(r for m in messages if m is not None for r in m.rels)
+            sorted(r for m in staged for r in m.rels)
         )
-        _enforce_write_rules(t.path, self.rules, self.colmap, actions)
+        head = t._state()
+        _enforce_write_rules(t.path, head.rules, head.colmap, actions)
         t._commit_insert(
-            None, "overwrite" if overwrite else "append", actions,
-            self.schema_json, self.rules.identity, overwrite=overwrite,
-            txn=txn,
+            head, "overwrite" if overwrite else "append", actions,
+            self.schema_json, next((m.stamped for m in staged if m.rels), {}),
+            overwrite=overwrite, txn=txn,
         )
 
 

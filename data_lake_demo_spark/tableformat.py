@@ -1150,10 +1150,12 @@ class AcidTable:
         _try_commit re-derives ours against the ACTUAL predecessor on
         rebase) and identity ``next`` counters (a racing identity
         append moves them; a rewrite neither reads nor mints ids)."""
-        props = props or {}
         skip = {self._ROWTRACKING_KEY, self._PROTOCOL_KEY}
-        skip.update(_IDENTITY_PREFIX + c for c in WriteRules.of(props).identity)
-        return {k: v for k, v in props.items() if k not in skip}
+        return {
+            k: v
+            for k, v in (props or {}).items()
+            if k not in skip and (WriteRules.kind(k) or ("",))[0] != "identity"
+        }
 
     def _commit_conflicts_logically(
         self,
@@ -2041,17 +2043,17 @@ class AcidTable:
         *,
         overwrite: bool = False,
         txn: tuple[str, int] | None = None,
-        props: dict | None = None,
-        rewrite: tuple[list[dict], list[str], object] | None = None,
         max_retries: int = 10,
-    ) -> int | None:
-        """The one commit for staged inserted rows. ``add`` holds the
-        files this write staged; their identity values were stamped
-        from the watermarks ``stamped`` ({logical column: watermark};
-        empty when no ids were stamped). Each attempt:
+    ) -> tuple[int, Snapshot | None]:
+        """The commit loop for staged inserted rows (``append``,
+        ``overwrite``, ``commit_staged``, the DSv2 writers, a deep
+        clone). ``add`` holds the files this write staged; their
+        identity values were stamped from the watermarks ``stamped``
+        ({logical column: watermark}; empty when no ids were stamped).
+        Each attempt:
 
         1. resolves the head (the first attempt commits on ``snap``
-           when given) and returns early if ``txn`` already landed;
+           when given) and stops if ``txn`` already landed;
         2. if the head's watermark differs from the stamp, shifts only
            this write's id columns by the difference (``_shift_ids``) —
            the caller's plan never re-runs. A rewound watermark
@@ -2059,52 +2061,39 @@ class AcidTable:
            head is below its watermark, so the shifted range is free;
         3. advances the watermark past the staged ids
            (``_watermark_props``) — never backwards, so an overwrite
-           never resets it — and applies ``props`` (COPY INTO's ledger);
+           never resets it;
         4. commits with ``_try_commit``: an append widens the schema,
            an ``overwrite`` removes every live file at the head and
            commits ``schema_json`` as is.
 
         A commit that moves the watermark never rebases: the
         conflict check ignores identity keys, so a rebase would
-        overwrite a winner's watermark. ``props`` (a ledger decided at
-        ``snap``) makes a lost race return None: the caller re-plans.
+        overwrite a winner's watermark. ``copy_into`` and
+        ``overwrite_where`` re-plan on a lost race and run steps 2-4
+        from their own loops.
 
-        ``rewrite=(carry, touched, read_filters)`` is replaceWhere's
-        commit: it also adds ``carry`` (the touched files' surviving
-        rows, ids kept) and removes ``touched``. Without stamped ids it
-        rebases over disjoint winners (``_commit_or_rebase``); with
-        them a lost race returns None and the caller re-plans its
-        remainder — the staged ``add`` is shifted, never re-staged."""
-        if rewrite is not None and not stamped:
-            carry, touched, read_filters = rewrite
-            return self._commit_or_rebase(
-                snap, op, carry + add, touched, schema_json, txn=txn,
-                read_filters=read_filters,
-            )
+        Returns ``(version, base)``: ``base`` is the snapshot the
+        commit landed on, None when ``txn`` had already landed and
+        nothing was committed (``version`` is then the head's)."""
         for attempt in range(max_retries):
-            if attempt and (rewrite is not None or props is not None):
-                return None
             head = snap if attempt == 0 and snap is not None else self._state()
             if head.holds(txn):
-                return head.version
+                return head.version, None
             add, stamped = self._shift_ids(add, stamped, head)
-            carry, remove = rewrite[:2] if rewrite is not None else (
-                [], sorted(head.files) if overwrite else []
-            )
             try:
                 return self._try_commit(
                     head,
                     op,
-                    carry + add,
-                    remove,
+                    add,
+                    sorted(head.files) if overwrite else [],
                     # an overwrite REPLACES the schema; an append may
                     # only widen it (see _evolve_schema)
                     schema_json
                     if overwrite
                     else self._evolve_schema(schema_json, head),
                     txn,
-                    props=self._watermark_props(head, add, props),
-                )
+                    props=self._watermark_props(head, add),
+                ), head
             except CommitConflict:
                 continue
         raise CommitConflict(f"{op} lost {max_retries} commit races")
@@ -2273,30 +2262,25 @@ class AcidTable:
             self._insert_frame(df, snap),
             partition_by=self._phys_partition_by(partition_by, snap),
         )
-        v = self._commit_insert(
+        v, base = self._commit_insert(
             snap, "append", add, schema, snap.rules.identity, txn=txn,
             max_retries=max_retries,
         )
-        return self._auto_compact_append(snap, add, v)
+        return v if base is None else self._auto_compact_append(base, add, v)
 
     def _auto_compact_append(
         self, base: Snapshot, add: list[dict], v: int
     ) -> int:
-        """The append paths' autoCompact follow-up: when the commit
-        landed right after ``base`` the live count is ``base``'s plus
-        the fresh files, no log read needed. Best-effort: ANY
-        auto-compact failure only defers compaction — the append
-        itself already committed, so surfacing an error here would
-        report a successful write as failed (and a retry would
-        duplicate data)."""
-        if not self.auto_compact_files:
-            return v
-        live = (
-            len(base.files) + len(add)
-            if v == base.version + 1
-            else len(self._state(v).files)
-        )
-        if live > self.auto_compact_files:
+        """The append paths' autoCompact follow-up: the committed live
+        count is ``base``'s plus the fresh files, no log read needed.
+        Best-effort: ANY auto-compact failure only defers compaction —
+        the append itself already committed, so surfacing an error
+        here would report a successful write as failed (and a retry
+        would duplicate data)."""
+        if (
+            self.auto_compact_files
+            and len(base.files) + len(add) > self.auto_compact_files
+        ):
             try:
                 return self._auto_optimize()
             except Exception:
@@ -2405,7 +2389,7 @@ class AcidTable:
         return self._commit_insert(
             snap, "overwrite", add, schema, snap.rules.identity,
             overwrite=True, max_retries=max_retries,
-        )
+        )[0]
 
     def overwrite_where(
         self,
@@ -2431,9 +2415,13 @@ class AcidTable:
         use ``overwrite`` for a full-table replace. A predicate on an
         identity column is rejected too: the new rows get fresh ids.
 
-        The new rows pass the one rule sequence and are staged once;
-        a lost race re-plans only the remainder rewrite (see
-        ``_commit_insert``'s ``rewrite``).
+        The new rows pass the one rule sequence and are staged once.
+        Without identity columns the commit rebases over disjoint
+        winners (``_commit_or_rebase`` with the read filters); with
+        them a lost race re-plans only the remainder rewrite and the
+        staged rows are shifted onto the new watermark, never
+        re-staged (a watermark-moving commit never rebases: see
+        ``_commit_insert``).
 
         At 100 TB this is what nightly backfills should use: cost is
         O(replaced range) — manifest pruning bounds the rewrite to
@@ -2481,15 +2469,26 @@ class AcidTable:
                 commit_schema = self._with_row_id_field(
                     commit_schema, remainder
                 )
-            # under write_serializable a blind append elsewhere — or
-            # even into the region, serial order replace-then-append —
-            # commutes with the replace
-            v = self._commit_insert(
-                snap, "overwrite", add_new, commit_schema, stamped,
-                rewrite=(add_rem, touched, phys_filters),
-            )
-            if v is not None:
-                return v
+            if not stamped:
+                # under write_serializable a blind append elsewhere — or
+                # even into the region, serial order replace-then-append
+                # — commutes with the replace
+                v = self._commit_or_rebase(
+                    snap, "overwrite", add_rem + add_new, touched,
+                    commit_schema, read_filters=phys_filters,
+                )
+                if v is not None:
+                    return v
+                continue
+            add_new, stamped = self._shift_ids(add_new, stamped, snap)
+            try:
+                return self._try_commit(
+                    snap, "overwrite", add_rem + add_new, touched,
+                    commit_schema,
+                    props=self._watermark_props(snap, add_new),
+                )
+            except CommitConflict:
+                continue
         raise CommitConflict(f"overwrite_where lost {max_retries} commit races")
 
     def copy_into(
@@ -2575,12 +2574,18 @@ class AcidTable:
                 partition_by=self._phys_partition_by(None, snap),
             )
             # the ledger is decided at ``snap``: a lost race re-plans
-            v = self._commit_insert(
-                snap, "copyinto", add, schema, snap.rules.identity,
-                props={key: sorted(loaded | set(new))},
-            )
-            if v is not None:
-                return v, len(new)
+            # (the ids were stamped at ``snap``, so nothing shifts)
+            try:
+                v = self._try_commit(
+                    snap, "copyinto", add, [],
+                    self._evolve_schema(schema, snap),
+                    props=self._watermark_props(
+                        snap, add, {key: sorted(loaded | set(new))}
+                    ),
+                )
+            except CommitConflict:
+                continue
+            return v, len(new)
         raise CommitConflict(f"copy_into lost {max_retries} commit races")
 
     @classmethod
@@ -2653,7 +2658,7 @@ class AcidTable:
         return self._commit_insert(
             None, "overwrite" if overwrite else "append", add, schema_json,
             {}, overwrite=overwrite, txn=txn, max_retries=max_retries,
-        )
+        )[0]
 
     def version_at_timestamp(self, ts: float) -> int:
         """Latest version committed at-or-before ``ts`` (epoch
@@ -5509,14 +5514,17 @@ class AcidTable:
             clone._try_commit(
                 _NO_COMMITS, "clone", [], [], schema, props=props or None
             )
-            # the copy keeps every row as it is, identity values
-            # included: staged and committed directly, like a compaction
+            # the copy keeps every row as it is, identity values and
+            # watermark included: it skips the rule sequence, like a
+            # compaction, and commits through the insert commit loop
             base = clone._state()
             add, staged = clone._stage_actions(
                 clone._physicalize(src, base.colmap),
                 partition_by=clone._phys_partition_by(None, base),
             )
-            clone._try_commit(base, "overwrite", add, [], staged)
+            clone._commit_insert(
+                base, "overwrite", add, staged, {}, overwrite=True
+            )
             return clone
         add = [
             {"path": os.path.abspath(os.path.join(self.path, p)), "stats": s}

@@ -418,6 +418,58 @@ def test_deep_clone_keeps_identity_values_and_watermark(spark, tmp_path):
     assert len(set(got.values())) == len(got)
 
 
+def test_deep_clone_commits_its_copy_after_a_racing_clone_commit(
+    spark, tmp_path, monkeypatch
+):
+    """A commit that lands on the new clone between its first commit
+    and the copy (here a property change) makes the copy retry on the
+    new head, not fail and leave an empty clone behind."""
+    src = _identity_table(spark, str(tmp_path / "src"), start=100)
+    src.append(spark.createDataFrame([("a",)], "s string"))
+    target = str(tmp_path / "clone")
+    real = AcidTable._stage_actions
+    fired = []
+
+    def staging(self, *a, **k):
+        if self.path == target and not fired:
+            fired.append(1)
+            AcidTable(spark, target).set_properties({"owner": "etl"})
+        return real(self, *a, **k)
+
+    monkeypatch.setattr(AcidTable, "_stage_actions", staging)
+    clone = src.clone_to(target, shallow=False)
+    assert fired
+    assert _ids_by_s(clone) == _ids_by_s(src)
+    props = clone.properties()
+    assert props["owner"] == "etl"
+    assert props["identity.id"] == src.properties()["identity.id"]
+
+
+def test_append_txn_landed_by_racer_skips_auto_compact(spark, tmp_path):
+    """When a racing writer lands the same (app, batch_id) first, the
+    append commits nothing, so it must not run the autoCompact
+    follow-up either."""
+    path = str(tmp_path / "t")
+    t = AcidTable(spark, path, auto_compact_files=2)
+    t.append(spark.createDataFrame([("seed",)], "s string").coalesce(1))
+    w = AcidTable(spark, path)
+    batch = spark.createDataFrame([("x",)], "s string").coalesce(1)
+
+    def racer():
+        w.append(spark.createDataFrame([("o",)], "s string").coalesce(1))
+        w.append(batch, txn=("app", 1))
+
+    _inject_winner_once(t, racer)
+    optimized = []
+    t._auto_optimize = lambda: optimized.append(1)
+    v = t.append(batch, txn=("app", 1))
+    assert not optimized
+    assert v == t.latest_version() == 2
+    assert sorted(r["s"] for r in t.snapshot().collect()) == [
+        "o", "seed", "x"
+    ]
+
+
 def test_identity_shift_keeps_nested_and_typed_columns(spark, tmp_path):
     """The shift rewrites only the id column: an identity append whose
     batch carries timestamp, decimal, array, map and struct columns

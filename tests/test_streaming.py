@@ -1487,6 +1487,128 @@ def test_acid_dsv2_writer_enforces_constraints_and_generated(spark, tmp_path):
     assert t.snapshot().count() == 2
 
 
+def test_acid_dsv2_stream_writer_checks_rules_added_mid_stream(
+    spark, tmp_path
+):
+    """A CHECK constraint added while the stream runs rejects every
+    later micro-batch that violates it, with the table unchanged: the
+    commit checks the rules at the head it lands on."""
+    from data_lake_demo_spark.streaming.acid_source import register
+    from data_lake_demo_spark.tableformat import AcidTable
+
+    register(spark)
+    src, p, ckpt = (
+        str(tmp_path / "src"),
+        str(tmp_path / "t"),
+        str(tmp_path / "ckpt"),
+    )
+    os.makedirs(src)
+
+    def drop(rows):
+        spark.createDataFrame(rows, "k long, v long").coalesce(1).write.mode(
+            "append"
+        ).json(src)
+
+    drop([(1, 5)])
+    q = (
+        spark.readStream.schema("k long, v long")
+        .json(src)
+        .writeStream.format("acidtable")
+        .option("path", p)
+        .option("checkpointLocation", ckpt)
+        .option("txnAppId", "rulesapp")
+        .start()
+    )
+    try:
+        q.processAllAvailable()
+        t = AcidTable(spark, p)
+        t.set_check_constraint("pos", "v >= 0")
+        v = t.latest_version()
+        drop([(2, -5)])
+        with pytest.raises(Exception, match="CHECK constraint"):
+            q.processAllAvailable()
+    finally:
+        q.stop()
+    assert t.latest_version() == v
+    assert [(r.k, r.v) for r in t.snapshot().collect()] == [(1, 5)]
+
+
+def test_acid_dsv2_stream_writer_identity_race_keeps_ids_unique(
+    spark, tmp_path
+):
+    """An identity append that lands while a micro-batch's tasks run:
+    Spark's streaming commit rebuilds the writer after the tasks, so
+    its snapshot already holds the winner's watermark. The commit must
+    shift from the watermark the executors stamped from (carried in
+    the commit messages), or both writers keep the same ids."""
+    import threading
+    import time
+
+    from data_lake_demo_spark.streaming.acid_source import register
+    from data_lake_demo_spark.tableformat import AcidTable
+
+    register(spark)
+    src, p, ckpt = (
+        str(tmp_path / "src"),
+        str(tmp_path / "t"),
+        str(tmp_path / "ckpt"),
+    )
+    started, go = str(tmp_path / "started"), str(tmp_path / "go")
+    os.makedirs(src)
+    t = AcidTable(spark, p)
+    t.append(
+        spark.createDataFrame([(0, "seed")], "id long, s string").coalesce(1)
+    )
+    t.set_identity_column("id", start=100)
+    spark.createDataFrame([("a",), ("b",)], "s string").coalesce(
+        1
+    ).write.mode("append").json(src)
+
+    def gate(it):  # the task holds until the racing append landed
+        open(started, "w").close()
+        for _ in range(600):
+            if os.path.exists(go):
+                break
+            time.sleep(0.1)
+        yield from it
+
+    def racer():
+        for _ in range(1200):
+            if os.path.exists(started):
+                break
+            time.sleep(0.1)
+        try:
+            AcidTable(spark, p).append(
+                spark.createDataFrame(
+                    [("w1",), ("w2",)], "s string"
+                ).coalesce(1)
+            )
+        finally:
+            open(go, "w").close()
+
+    th = threading.Thread(target=racer)
+    th.start()
+    q = (
+        spark.readStream.schema("s string")
+        .json(src)
+        .mapInPandas(gate, "s string")
+        .writeStream.format("acidtable")
+        .option("path", p)
+        .option("checkpointLocation", ckpt)
+        .option("txnAppId", "raceapp")
+        .start()
+    )
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+        th.join()
+    got = {r.s: r.id for r in t.snapshot().collect()}
+    assert {got["w1"], got["w2"]} == {100, 101}  # the winner's ids
+    assert {got["a"], got["b"]} == {102, 103}  # shifted past them
+    assert t.properties()["identity.id"]["next"] == 104
+
+
 def test_acid_stream_starting_timestamp(spark, tmp_path):
     """startingTimestamp begins tailing at the first commit at-or-
     after the timestamp (Delta parity with startingVersion)."""
