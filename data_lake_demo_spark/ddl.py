@@ -40,13 +40,16 @@ Grammar (case-insensitive keywords; one statement per call):
     DELETE FROM t [WHERE conj]        -- no WHERE = truncate (all rows)
     UPDATE t SET a = expr [, b = expr ...] [WHERE conj]
     MERGE [WITH SCHEMA EVOLUTION] INTO t [AS] a
-        USING (<subquery>|view) [AS] b ON a.k = b.k
-        [WHEN MATCHED [AND cond] THEN DELETE]
-        [WHEN MATCHED THEN UPDATE SET *]
-        [WHEN NOT MATCHED [AND cond] THEN INSERT *
-             | INSERT (c1, ...) VALUES (e1, ...)]
-        [WHEN NOT MATCHED BY SOURCE [AND cond] THEN DELETE
-             | UPDATE SET c = expr[, ...]]
+        USING (<subquery>|view) [AS] b ON a.k = b.k [AND a.j = b.j ...]
+        {WHEN MATCHED [AND cond] THEN
+             UPDATE SET * | UPDATE SET c = expr[, ...] | DELETE} ...
+        {WHEN NOT MATCHED [BY TARGET] [AND cond] THEN
+             INSERT * | INSERT (c1, ...) VALUES (e1, ...)} ...
+        {WHEN NOT MATCHED BY SOURCE [AND cond] THEN
+             UPDATE SET c = expr[, ...] | DELETE} ...
+        (Spark's own MERGE grammar and parser; every clause but the
+        last of its kind needs a condition; the first clause whose
+        condition holds decides each row — AcidTable.merge_apply)
     COPY INTO t FROM '/dir' [FILEFORMAT = PARQUET|CSV|JSON|TEXT]
         [PATTERN = '*.ext'] [FORMAT_OPTIONS ('k' = 'v', ...)]
     RESTORE TABLE t TO VERSION AS OF n | TO TIMESTAMP AS OF '<ts>'
@@ -150,29 +153,6 @@ def _parens_enclose_whole(s: str) -> bool:
                 return i == n - 1
         i += 1
     return False
-
-
-def _strip_string_literals(s: str) -> str:
-    """Replace every '...' SQL string literal (with '' escapes) by a
-    space, so identifier scans never match text inside literals."""
-    out, i, n = [], 0, len(s)
-    while i < n:
-        c = s[i]
-        if c == "'":
-            j = i + 1
-            while j < n:
-                if s[j] == "'":
-                    if j + 1 < n and s[j + 1] == "'":
-                        j += 2
-                        continue
-                    break
-                j += 1
-            out.append(" ")
-            i = j + 1
-            continue
-        out.append(c)
-        i += 1
-    return "".join(out)
 
 
 def _split_top(s: str, sep_word: str) -> list[str]:
@@ -626,199 +606,136 @@ class AcidSql:
 
     # ---- MERGE INTO ----------------------------------------------------
 
-    def _merge(self, m) -> DataFrame:
-        """``MERGE INTO t [AS] a USING (<subquery>|view) [AS] b
-        ON a.k = b.k [AND ...] <when-clauses>`` where the supported
-        when-clauses are the full-row Delta CDC shapes:
-
-        * ``WHEN MATCHED THEN UPDATE SET *`` +
-          ``WHEN NOT MATCHED THEN INSERT *``            → upsert
-        * the same plus ``WHEN MATCHED AND <cond> THEN DELETE``
-          (``cond`` over SOURCE columns)                → CDC apply,
-          one atomic commit (merge_apply)
-        * only ``WHEN MATCHED THEN DELETE``             → keyed delete
-        * ``WHEN MATCHED [AND <cond>] THEN UPDATE SET c = expr[, ...]``
-          [+ ``WHEN NOT MATCHED THEN INSERT *``]        → column-level
-          update: expressions (and the optional condition) may
-          reference BOTH aliases (resolved by Spark SQL itself, so
-          ambiguity errors are Spark's); the matched rows are rebuilt
-          full-row (assigned columns from the expressions — gated on
-          the condition when given — the rest carried from the
-          target) and lowered onto ``merge`` — same manifest pruning,
-          same CDF delete+insert pairs as a full-row upsert.
-        * ``WHEN MATCHED THEN UPDATE SET *`` +
-          ``WHEN NOT MATCHED THEN INSERT *`` +
-          ``WHEN NOT MATCHED BY SOURCE [AND <cond>] THEN DELETE``
-          → Delta's mirror-the-source sync: target rows with no
-          source match (optionally narrowed by ``cond`` over TARGET
-          columns) are deleted in the SAME atomic commit as the
-          upserts (merge_apply). Like Delta, the not-matched-by-
-          source half inherently scans the whole target (an anti-join
-          against the source keys) — the rewrite itself stays
-          manifest-pruned.
-        * ``WHEN NOT MATCHED BY SOURCE [AND <cond>] THEN UPDATE SET
-          c = expr[, ...]`` (Delta's soft-expire sync — e.g. ``SET
-          active = false`` for rows that left the source), alone or
-          with ``UPDATE SET * + INSERT *``; expressions and condition
-          over TARGET columns only, one atomic merge commit.
-
-        ``MERGE WITH SCHEMA EVOLUTION INTO ...`` (Delta's clause)
-        widens the table with the source's NEW columns in the same
-        commit (auto_evolve on the table verbs)."""
+    def _merge(self, statement: str) -> DataFrame:
+        """``MERGE [WITH SCHEMA EVOLUTION] INTO t [AS] a USING src [AS]
+        b ON a.k = b.k [AND ...] WHEN ...``, parsed by Spark's own
+        grammar (a ``MergeIntoTable`` plan; malformed statements raise
+        Spark's ParseException) into the ordered clause list that
+        ``AcidTable.merge_apply`` evaluates inside each attempt —
+        Delta's first-match rules, one atomic commit. The ON clause
+        must be an equality on same-named key columns. Two shapes keep
+        their dedicated plans: ``UPDATE SET * + INSERT *`` is
+        ``merge`` (the batch rows land as they are), and a matched
+        DELETE whose condition reads only source columns ahead of
+        ``UPDATE SET * + INSERT *`` is the CDC-apply batch
+        (``merge_apply`` with a delete column) unless the table has
+        identity columns: the condition marks retractions, which never
+        land — an unmatched retraction is a no-op, where Delta would
+        insert it — and the source columns it reads are flags that
+        never evolve into the table."""
         from pyspark.sql import functions as F
 
-        evolve_kw, tref, talias, src, salias, on, whens = m.groups()
-        auto_evolve = evolve_kw is not None
-        t = self.table(tref)
-        keys = []
-        aliases = {a for a in (talias, salias) if a}
-        for p in _split_top(on, "AND"):
-            em = re.fullmatch(
-                rf"\s*(?:({_IDENT})\.)?({_IDENT})\s*=\s*"
-                rf"(?:({_IDENT})\.)?({_IDENT})\s*",
-                p,
-            )
-            if not em or em.group(2) != em.group(4):
+        from data_lake_demo_spark.tableformat import (
+            _UPSERT,
+            MergeClause,
+            MergePlan,
+        )
+
+        jspark = self.spark._jsparkSession
+        plan = jspark.sessionState().sqlParser().parsePlan(statement)
+
+        def seq(s):
+            return [s.apply(i) for i in range(s.length())]
+
+        def attrs(e):  # name parts of every column an expression reads
+            if e.nodeName() == "UnresolvedAttribute":
+                return [seq(e.nameParts())]
+            return [a for c in seq(e.children()) for a in attrs(c)]
+
+        def alias_of(rel, default):
+            if rel.nodeName() == "SubqueryAlias":
+                return rel.alias(), rel.child()
+            if rel.nodeName() == "UnresolvedRelation":
+                return seq(rel.multipartIdentifier())[-1], rel
+            return default, rel
+
+        ta, target = alias_of(plan.targetTable(), None)
+        parts = seq(target.multipartIdentifier())
+        if len(parts) == 2 and parts[0].lower() == "acid":
+            tref = f"acid.`{parts[1]}`"
+        else:
+            tref = ".".join(parts)
+        sa, _ = alias_of(plan.sourceTable(), "__s")
+        if ta == sa:
+            raise ValueError("MERGE aliases must differ")
+        keys, stack = [], [plan.mergeCondition()]
+        while stack:
+            e = stack.pop()
+            if e.nodeName() == "And":
+                stack += [e.right(), e.left()]
+                continue
+            sides = attrs(e) if e.nodeName() == "EqualTo" else []
+            if (
+                len(sides) != 2
+                or e.left().nodeName() != "UnresolvedAttribute"
+                or e.right().nodeName() != "UnresolvedAttribute"
+                or sides[0][-1] != sides[1][-1]
+            ):
                 raise ValueError(
-                    f"unsupported ON predicate {p.strip()!r}: equality on "
+                    f"unsupported ON predicate {e.sql()!r}: equality on "
                     "same-named key columns only (a.k = b.k)"
                 )
-            keys.append(em.group(2))
-        src = src.strip()
-        if src.startswith("("):
-            src_df = self.spark.sql(src[1:-1])
-        else:
-            src_df = self.spark.table(src)
-
-        has_update = has_insert = has_plain_delete = False
-        delete_cond = None
-        set_clause = None
-        set_cond = None
-        nmbs_delete = False
-        nmbs_cond = None
-        nmbs_set = None
-        nmbs_set_cond = None
-        insert_spec = None  # (cols|None for *, vals|None, cond|None)
-        for clause in _split_top(whens, "WHEN"):
-            c = clause.strip()
-            if not c:
-                continue
-            um = re.fullmatch(
-                r"MATCHED(?:\s+AND\s+(.+?))?\s*THEN\s+UPDATE\s+SET\s+(.+)",
-                c,
-                re.I | re.S,
-            )
-            nm = re.fullmatch(
-                r"NOT\s+MATCHED\s+BY\s+SOURCE(?:\s+AND\s+(.+?))?"
-                r"\s*THEN\s+DELETE",
-                c,
-                re.I | re.S,
-            )
-            nmu = re.fullmatch(
-                r"NOT\s+MATCHED\s+BY\s+SOURCE(?:\s+AND\s+(.+?))?"
-                r"\s*THEN\s+UPDATE\s+SET\s+(.+)",
-                c,
-                re.I | re.S,
-            )
-            im = re.fullmatch(
-                r"NOT\s+MATCHED(?:\s+AND\s+(.+?))?\s*THEN\s+INSERT\s*"
-                r"\(([^)]+)\)\s*VALUES\s*\((.+)\)",
-                c,
-                re.I | re.S,
-            )
-            ism = re.fullmatch(
-                r"NOT\s+MATCHED(?:\s+AND\s+(.+?))?\s*THEN\s+INSERT\s+\*",
-                c,
-                re.I,
-            )
-            if um and um.group(2).strip() == "*":
-                if um.group(1) is not None:
-                    raise ValueError(
-                        "a condition on UPDATE SET * is not supported — "
-                        "use column-level SET c = expr with AND <cond>"
-                    )
-                has_update = True
-            elif um:
-                set_cond = um.group(1)
-                set_clause = um.group(2)
-            elif nm:
-                nmbs_delete = True
-                nmbs_cond = nm.group(1)
-            elif nmu:
-                nmbs_set_cond = nmu.group(1)
-                nmbs_set = nmu.group(2)
-            elif im:
-                cols = [
-                    x.strip().strip("`") for x in im.group(2).split(",")
-                ]
-                vals = [x.strip() for x in _split_top(im.group(3), ",")]
-                if len(cols) != len(vals):
-                    raise ValueError(
-                        f"INSERT lists {len(cols)} columns but "
-                        f"{len(vals)} values"
-                    )
-                has_insert = True
-                insert_spec = (cols, vals, im.group(1))
-            elif ism:
-                has_insert = True
-                insert_spec = (None, None, ism.group(1))
-            elif re.fullmatch(r"MATCHED\s+THEN\s+DELETE", c, re.I):
-                has_plain_delete = True
-            else:
-                dm = re.fullmatch(
-                    r"MATCHED\s+AND\s+(.+?)\s+THEN\s+DELETE", c, re.I | re.S
-                )
-                if dm:
-                    delete_cond = dm.group(1)
-                else:
-                    raise ValueError(
-                        f"unsupported MERGE clause 'WHEN {c}' (full-row "
-                        "UPDATE SET * / INSERT * / [AND cond] DELETE only)"
-                    )
-        if delete_cond is not None:
-            if talias and re.search(rf"\b{talias}\.", delete_cond):
-                raise ValueError(
-                    "the DELETE condition may reference source columns "
-                    "only (it is evaluated against the incoming batch)"
-                )
-            for a in aliases:
-                delete_cond = re.sub(rf"\b{a}\.", "", delete_cond)
-        if (
-            has_update
-            and has_insert
-            and delete_cond is not None
-            and not nmbs_delete
-            and nmbs_set is None
+            keys.append(sides[0][-1])
+        clauses = []
+        for when, actions in (
+            ("matched", plan.matchedActions()),
+            ("not_matched", plan.notMatchedActions()),
+            ("not_matched_by_source", plan.notMatchedBySourceActions()),
         ):
-            if insert_spec != (None, None, None):
-                raise ValueError(
-                    "the CDC apply shape (UPDATE SET * + INSERT * + AND "
-                    "cond DELETE) requires plain INSERT *"
-                )
-            # source-only columns (e.g. the CDC flag) feed the DELETE
-            # condition but never land: project down to target columns
-            # — under WITH SCHEMA EVOLUTION, only the columns the
-            # DELETE condition references are flag-like; other new
-            # source columns are exactly what the clause evolves in
-            tcols = set(t.snapshot().columns)
-            # scan identifiers with string literals blanked, so a new
-            # data column whose name merely coincides with a literal
-            # in the condition (op = 'status') still evolves in
-            cond_cols = set(
-                re.findall(rf"\b{_IDENT}\b", _strip_string_literals(delete_cond))
-            )
-            keep = [
-                c
-                for c in src_df.columns
-                if c in tcols
-                or (auto_evolve and c not in cond_cols)
-            ]
-            if auto_evolve:
-                skipped = [
-                    c for c in src_df.columns
-                    if c not in tcols and c in cond_cols
+            for a in seq(actions):
+                kind = a.nodeName()
+                cond = a.condition()
+                cond = cond.get().sql() if cond.isDefined() else None
+                assign = None
+                if kind in ("UpdateAction", "InsertAction"):
+                    assign = {}
+                    for x in seq(a.assignments()):
+                        *qual, col = seq(x.key().nameParts())
+                        if qual and qual != [ta]:
+                            raise ValueError(
+                                f"SET assigns target columns: {x.key().sql()}"
+                                f" does not name the target alias {ta!r}"
+                            )
+                        if col in assign:
+                            raise ValueError(
+                                f"duplicate assignment to column {col!r}"
+                            )
+                        assign[col] = x.value().sql()
+                action = kind[: -len("Action")].replace("Star", "").lower()
+                clauses.append(MergeClause(when, action, cond, assign))
+        src = DataFrame(
+            self.spark._jvm.org.apache.spark.sql.classic.Dataset.ofRows(
+                jspark, plan.sourceTable()
+            ),
+            self.spark,
+        )
+        evolve = bool(plan.withSchemaEvolution())
+        t = self.table(tref)
+        upsert = list(_UPSERT.clauses)
+        if clauses == upsert:
+            return self._version_df(t.merge(src, keys, auto_evolve=evolve))
+        first = clauses[0]
+        if (
+            clauses[1:] == upsert
+            and (first.when, first.action) == ("matched", "delete")
+            and first.cond is not None
+        ):
+            cond = plan.matchedActions().apply(0).condition().get()
+            reads = attrs(cond)
+            snap = t._state()
+            # a delete column cannot carry identity inserts: an identity
+            # table runs the statement as its clause plan
+            if not snap.rules.identity and not any(
+                len(p) > 1 and p[0] == ta for p in reads
+            ):
+                flags = {p[-1] for p in reads}
+                tcols = set(t._logical_view(snap).values())
+                keep = [
+                    c for c in src.columns
+                    if c in tcols or (evolve and c not in flags)
                 ]
-                if skipped:
+                skipped = [c for c in src.columns if c not in tcols and c in flags]
+                if evolve and skipped:
                     import warnings
 
                     warnings.warn(
@@ -826,382 +743,20 @@ class AcidSql:
                         f"{skipped} are referenced by the DELETE condition "
                         "and are treated as CDC flags — they are NOT "
                         "evolved into the table schema",
-                        stacklevel=2,
+                        stacklevel=3,
                     )
-            df = src_df.withColumn("__mrg_del", F.expr(delete_cond)).select(
-                *keep, "__mrg_del"
-            )
-            return self._version_df(
-                t.merge_apply(df, keys, "__mrg_del", auto_evolve=auto_evolve)
-            )
-        plain_star = insert_spec == (None, None, None)
-        if set_clause is not None:
-            if (
-                has_update
-                or has_plain_delete
-                or delete_cond is not None
-                or nmbs_delete
-                or nmbs_set is not None
-            ):
-                raise ValueError(
-                    "column-level UPDATE SET combines only with "
-                    "WHEN NOT MATCHED THEN INSERT"
-                )
-            return self._merge_update_columns(
-                t, src_df, keys, set_clause, talias, salias, insert_spec,
-                cond=set_cond,
-            )
-        if nmbs_set is not None:
-            if nmbs_delete or has_plain_delete or delete_cond is not None:
-                raise ValueError(
-                    "WHEN NOT MATCHED BY SOURCE THEN UPDATE SET does not "
-                    "combine with a DELETE clause"
-                )
-            if has_update != has_insert or (has_insert and not plain_star):
-                raise ValueError(
-                    "WHEN NOT MATCHED BY SOURCE THEN UPDATE SET combines "
-                    "with UPDATE SET * + INSERT * (the mirror-source "
-                    "soft-expire sync) or stands alone"
-                )
-            return self._merge_sync_update(
-                t, src_df, keys, nmbs_set_cond, nmbs_set, talias, salias,
-                with_upsert=has_update, auto_evolve=auto_evolve,
-            )
-        if nmbs_delete:
-            if (
-                not (has_update and has_insert and plain_star)
-                or delete_cond is not None
-            ):
-                raise ValueError(
-                    "WHEN NOT MATCHED BY SOURCE THEN DELETE combines with "
-                    "UPDATE SET * + INSERT * (the mirror-source sync)"
-                )
-            return self._merge_sync(
-                t, src_df, keys, nmbs_cond, talias, salias
-            )
-        if has_update and has_insert and not has_plain_delete:
-            if plain_star:
+                df = src.withColumn("__mrg_del", F.expr(first.cond))
                 return self._version_df(
-                    t.merge(src_df, keys, auto_evolve=auto_evolve)
+                    t.merge_apply(
+                        df.select(*keep, "__mrg_del"), keys, "__mrg_del",
+                        auto_evolve=evolve,
+                    )
                 )
-            # UPDATE SET * + column-level/conditional INSERT: matched
-            # rows replace full-row, unmatched project through the
-            # insert spec — one atomic merge
-            return self._merge_star_with_insert(
-                t, src_df, keys, insert_spec, talias, salias
-            )
-        if has_insert and not (has_update or has_plain_delete):
-            # insert-only merge (Delta's append-new-keys shape)
-            return self._merge_insert_only(
-                t, src_df, keys, insert_spec, talias, salias
-            )
-        if has_plain_delete and not (has_update or has_insert):
-            return self._version_df(
-                t.merge_delete(src_df.select(*keys), keys)
-            )
-        raise ValueError(
-            "unsupported MERGE clause combination: use UPDATE SET * / "
-            "SET c = expr + INSERT [*|(cols) VALUES (...)] "
-            "[+ AND cond DELETE], or DELETE alone"
-        )
-
-    def _merge_insert_frame(self, t, sview, sa, tview, ta, on, keys, spec):
-        """The not-matched insert frame for a MERGE: source rows with
-        no target key match (optionally narrowed by the clause's AND
-        condition — source columns only), projected into the target
-        schema. Explicit ``(cols) VALUES (exprs)`` assignments apply;
-        unlisted columns take their declared DEFAULT, else typed NULL
-        (the Delta rule for column-level INSERT)."""
-        cols, vals, cond = spec
-        tcols = t.snapshot().columns
-        types = dict(t.snapshot().dtypes)
-        for ref in [cond] + (vals or []):
-            if ref and re.search(rf"\b{re.escape(ta)}\.", ref):
-                raise ValueError(
-                    "INSERT values/condition may reference source "
-                    "columns only (there is no matched target row)"
-                )
-        where = f" WHERE ({cond})" if cond else ""
-        if cols is None:  # INSERT * [AND cond]
-            return self.spark.sql(
-                f"SELECT {sa}.* FROM {sview} {sa} LEFT ANTI JOIN "
-                f"{tview} {ta} ON {on}{where}"
-            ).select(*tcols)
-        unknown = [c for c in cols if c not in tcols]
-        if unknown:
-            raise ValueError(f"INSERT targets unknown column(s) {unknown}")
-        if len(set(cols)) != len(cols):
-            raise ValueError("duplicate column in INSERT list")
-        missing_keys = [k for k in keys if k not in cols]
-        if missing_keys:
-            raise ValueError(
-                f"INSERT must assign every merge key (missing {missing_keys})"
-            )
-        assign = dict(zip(cols, vals))
-        defaults = t._state().rules.defaults
-
-        def cell(c):
-            if c in assign:
-                return f"CAST(({assign[c]}) AS {types[c]}) AS `{c}`"
-            if c in defaults:
-                return f"CAST(({defaults[c]}) AS {types[c]}) AS `{c}`"
-            return f"CAST(NULL AS {types[c]}) AS `{c}`"
-
-        proj = ", ".join(cell(c) for c in tcols)
-        return self.spark.sql(
-            f"SELECT {proj} FROM {sview} {sa} LEFT ANTI JOIN "
-            f"{tview} {ta} ON {on}{where}"
-        )
-
-    def _merge_insert_only(
-        self, t, src_df, keys, spec, talias, salias
-    ) -> DataFrame:
-        """Insert-only MERGE (Delta's append-new-keys shape): the
-        not-matched rows land via the full merge verb, so a RACING
-        writer inserting the same key resolves by upsert (the
-        serializable order append-then-merge) instead of duplicating."""
-        ta = talias or "__mrg_t"
-        sa = salias or "__mrg_s"
-        tview, sview = "__merge_ins_target", "__merge_ins_source"
-        t.snapshot().createOrReplaceTempView(tview)
-        src_df.createOrReplaceTempView(sview)
-        try:
-            on = " AND ".join(f"{ta}.`{k}` = {sa}.`{k}`" for k in keys)
-            ins = self._merge_insert_frame(
-                t, sview, sa, tview, ta, on, keys, spec
-            )
-            if ins.limit(1).first() is None:
-                return self._version_df(t.latest_version())  # no commit
-            return self._version_df(t.merge(ins, keys))
-        finally:
-            self.spark.catalog.dropTempView(tview)
-            self.spark.catalog.dropTempView(sview)
-
-    def _merge_star_with_insert(
-        self, t, src_df, keys, spec, talias, salias
-    ) -> DataFrame:
-        """UPDATE SET * + column-level/conditional INSERT: matched
-        source rows replace full-row; not-matched rows project through
-        the insert spec; one atomic merge commit."""
-        ta = talias or "__mrg_t"
-        sa = salias or "__mrg_s"
-        tview, sview = "__merge_si_target", "__merge_si_source"
-        t.snapshot().createOrReplaceTempView(tview)
-        src_df.createOrReplaceTempView(sview)
-        try:
-            tcols = t.snapshot().columns
-            on = " AND ".join(f"{ta}.`{k}` = {sa}.`{k}`" for k in keys)
-            matched = self.spark.sql(
-                f"SELECT {sa}.* FROM {sview} {sa} LEFT SEMI JOIN "
-                f"{tview} {ta} ON {on}"
-            ).select(*tcols)
-            inserts = self._merge_insert_frame(
-                t, sview, sa, tview, ta, on, keys, spec
-            )
-            return self._version_df(
-                t.merge(matched.unionByName(inserts), keys)
-            )
-        finally:
-            self.spark.catalog.dropTempView(tview)
-            self.spark.catalog.dropTempView(sview)
-
-    def _merge_update_columns(
-        self, t, src_df, keys, set_clause, talias, salias, insert_spec,
-        cond=None,
-    ) -> DataFrame:
-        """Lower ``WHEN MATCHED THEN UPDATE SET c = expr[, ...]`` onto
-        the full-row ``merge`` verb: matched target rows are rebuilt
-        (assigned columns from the SET expressions — which Spark SQL
-        resolves against BOTH aliases, so they may mix source and
-        target values — all others carried unchanged), unmatched
-        source rows optionally become inserts, and the combined frame
-        is one atomic ``merge`` commit. At scale the matched-row join
-        column-prunes the target scan and broadcasts a small source
-        (Catalyst), and the rewrite itself stays bounded by merge's
-        manifest-level file skipping on the key ranges."""
-        from pyspark.sql import functions as F  # noqa: F401 (parity w/ callers)
-
-        ta = talias or "__mrg_t"
-        sa = salias or "__mrg_s"
-        if ta == sa:
-            raise ValueError("MERGE aliases must differ")
-        tcols = t.snapshot().columns
-        assigns: dict[str, str] = {}
-        for part in _split_top(set_clause, ","):
-            am = re.fullmatch(
-                rf"\s*(?:({_IDENT})\.)?({_IDENT})\s*=\s*(.+?)\s*", part, re.S
-            )
-            if not am:
-                raise ValueError(f"unsupported SET assignment {part.strip()!r}")
-            qual, col, expr = am.groups()
-            if qual is not None and qual != ta:
-                raise ValueError(
-                    f"SET assigns target columns — {qual}.{col} does not "
-                    f"reference the target alias {ta!r}"
-                )
-            if col not in tcols:
-                raise ValueError(f"unknown target column {col!r} in UPDATE SET")
-            if col in keys:
-                raise ValueError(f"UPDATE SET may not assign merge key {col!r}")
-            if col in assigns:
-                raise ValueError(f"duplicate assignment to column {col!r}")
-            assigns[col] = expr
-        tview, sview = "__merge_upd_target", "__merge_upd_source"
-        t.snapshot().createOrReplaceTempView(tview)
-        src_df.createOrReplaceTempView(sview)
-        try:
-            on = " AND ".join(f"{ta}.`{k}` = {sa}.`{k}`" for k in keys)
-
-            def cell(c):
-                if c not in assigns:
-                    return f"{ta}.`{c}` AS `{c}`"
-                if cond is None:
-                    return f"({assigns[c]}) AS `{c}`"
-                # WHEN MATCHED AND <cond>: rows failing the condition
-                # carry the target value unchanged
-                return (
-                    f"CASE WHEN ({cond}) THEN ({assigns[c]}) "
-                    f"ELSE {ta}.`{c}` END AS `{c}`"
-                )
-
-            proj = ", ".join(cell(c) for c in tcols)
-            updates = self.spark.sql(
-                f"SELECT {proj} FROM {tview} {ta} JOIN {sview} {sa} ON {on}"
-            )
-            if insert_spec is not None:
-                inserts = self._merge_insert_frame(
-                    t, sview, sa, tview, ta, on, keys, insert_spec
-                )
-                updates = updates.unionByName(inserts)
-            # materialize before merge: the merge rewrite re-reads the
-            # target files the temp view also scans, which is safe
-            # (snapshot isolation pins the file set), but the views
-            # must outlive plan execution — hence the finally below
-            # only drops AFTER merge() has committed.
-            return self._version_df(t.merge(updates, keys))
-        finally:
-            self.spark.catalog.dropTempView(tview)
-            self.spark.catalog.dropTempView(sview)
-
-    def _merge_sync(
-        self, t, src_df, keys, cond, talias, salias
-    ) -> DataFrame:
-        """``WHEN MATCHED THEN UPDATE SET * / WHEN NOT MATCHED THEN
-        INSERT * / WHEN NOT MATCHED BY SOURCE [AND cond] THEN DELETE``
-        — Delta's mirror-the-source sync, ONE atomic merge_apply
-        commit: upserts carry the source rows; the deletes are the
-        target keys the source no longer holds (anti-join — like
-        Delta, this half inherently reads the whole target), narrowed
-        by ``cond`` over TARGET columns when given. The rewrite stays
-        bounded by merge_apply's manifest file skipping on the union
-        of upsert+delete keys."""
-        from pyspark.sql import functions as F
-
-        tcols = t.snapshot().columns
-        missing = [c for c in tcols if c not in src_df.columns]
-        if missing:
-            raise ValueError(
-                f"INSERT * requires the source to carry every target "
-                f"column; missing {missing}"
-            )
-        gone = t.snapshot().join(
-            src_df.select(*keys).distinct(), keys, "left_anti"
-        )
-        if cond is not None:
-            if salias and re.search(rf"\b{salias}\.", cond):
-                raise ValueError(
-                    "the NOT MATCHED BY SOURCE condition may reference "
-                    "target columns only (there is no source row)"
-                )
-            if talias:
-                cond = re.sub(rf"\b{talias}\.", "", cond)
-            gone = gone.filter(F.expr(cond))
-        updates = (
-            src_df.select(*tcols)
-            .withColumn("__mrg_del", F.lit(False))
-            .unionByName(gone.withColumn("__mrg_del", F.lit(True)))
-        )
-        return self._version_df(t.merge_apply(updates, keys, "__mrg_del"))
-
-    def _merge_sync_update(
-        self, t, src_df, keys, cond, set_clause, talias, salias,
-        *, with_upsert, auto_evolve=False,
-    ) -> DataFrame:
-        """``WHEN NOT MATCHED BY SOURCE [AND cond] THEN UPDATE SET c =
-        expr[, ...]`` — Delta's soft-expire half of a mirror sync
-        (e.g. ``SET active = false`` on rows that left the source),
-        alone or composed with ``UPDATE SET * + INSERT *``. Lowered as
-        ONE atomic merge commit: the not-matched-by-source target rows
-        (anti-join — like the DELETE variant, this half inherently
-        scans the target) are rebuilt full-row with the assignments
-        applied (expressions over TARGET columns only; each value is
-        cast back to the column's declared type, standard UPDATE
-        semantics) and ride the same upsert batch as the source rows.
-        Works in both copy-on-write and merge-on-read mode via the
-        table's ``merge.mode`` / ``enableDeletionVectors`` properties
-        — the batch goes through the ordinary ``merge`` verb."""
-        from pyspark.sql import functions as F
-
-        tcols = t.snapshot().columns
-        for frag, what in ((cond, "condition"), (set_clause, "assignments")):
-            if frag and salias and re.search(rf"\b{salias}\.", frag):
-                raise ValueError(
-                    f"the NOT MATCHED BY SOURCE {what} may reference "
-                    "target columns only (there is no source row)"
-                )
-        if with_upsert:
-            missing = [c for c in tcols if c not in src_df.columns]
-            if missing:
-                raise ValueError(
-                    f"INSERT * requires the source to carry every target "
-                    f"column; missing {missing}"
-                )
-        gone = t.snapshot().join(
-            src_df.select(*keys).distinct(), keys, "left_anti"
-        )
-        if cond is not None:
-            if talias:
-                cond = re.sub(rf"\b{talias}\.", "", cond)
-            gone = gone.filter(F.expr(cond))
-        if talias:
-            set_clause = re.sub(rf"\b{talias}\.", "", set_clause)
-        assigns = {}
-        for part in _split_top(set_clause, ","):
-            am = re.fullmatch(rf"\s*({_IDENT})\s*=\s*(.+?)\s*", part, re.S)
-            if not am:
-                raise ValueError(
-                    f"unsupported SET assignment {part.strip()!r} "
-                    "(col = expr only)"
-                )
-            assigns[am.group(1)] = am.group(2)
-        unknown = set(assigns) - set(tcols)
-        if unknown:
-            raise ValueError(
-                f"UPDATE SET targets unknown column(s) {sorted(unknown)}"
-            )
-        if set(assigns) & set(keys):
-            raise ValueError(
-                "the NOT MATCHED BY SOURCE UPDATE cannot assign a merge "
-                "key column (it would change the row's merge identity)"
-            )
-        types = {f.name: f.dataType for f in t.snapshot().schema.fields}
-        changed = gone.select(
-            *[
-                F.expr(assigns[c]).cast(types[c]).alias(c)
-                if c in assigns
-                else F.col(c)
-                for c in tcols
-            ]
-        )
-        if with_upsert:
-            src_part = src_df if auto_evolve else src_df.select(*tcols)
-            updates = src_part.unionByName(
-                changed, allowMissingColumns=auto_evolve
-            )
-        else:
-            updates = changed
         return self._version_df(
-            t.merge(updates, keys, auto_evolve=auto_evolve)
+            t.merge_apply(
+                src, keys, plan=MergePlan(tuple(clauses), ta, sa),
+                auto_evolve=evolve,
+            )
         )
 
     # ---- the router ----------------------------------------------------
@@ -1538,16 +1093,8 @@ class AcidSql:
                 self.table(m.group(1)).update(assignments, filters)
             )
 
-        m = re.fullmatch(
-            rf"MERGE\s+(WITH\s+SCHEMA\s+EVOLUTION\s+)?"
-            rf"INTO\s+({_TREF})(?:\s+AS)?(?:\s+({_IDENT}))?"
-            rf"\s+USING\s+(\(.*\)|{_TREF})(?:\s+AS)?(?:\s+({_IDENT}))?"
-            r"\s+ON\s+(.+?)\s+(WHEN\s+.+)",
-            s,
-            re.I | re.S,
-        )
-        if m:
-            return self._merge(m)
+        if re.match(r"MERGE\s", s, re.I):
+            return self._merge(s)
 
         m = re.fullmatch(
             rf"COPY\s+INTO\s+({_TREF})\s+FROM\s+('(?:[^']|'')*')"

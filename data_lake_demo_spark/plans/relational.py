@@ -2003,7 +2003,7 @@ def orders_merge_update_columns(spark: SparkSession, sf_dir: str) -> DataFrame:
     reduced to a per-status quantized aggregate (bounded collect —
     the temp table dies with the query) and value-hashes against SQL
     replaying the merge as LEFT JOIN + anti-union. Certifies the SET-
-    expression lowering (ddl._merge_update_columns), merge's manifest
+    expression clause (AcidTable._merge_plan_stage), merge's manifest
     file-skipping, and CDF-preserving full-row rewrite in one row.
     Grammar follows Delta's MERGE spec (the reference delegates SQL to
     Athena and has no MERGE surface)."""
@@ -2083,7 +2083,7 @@ def orders_merge_insert_columns(spark: SparkSession, sf_dir: str) -> DataFrame:
     column-level-INSERT rule). The final snapshot reduces to a
     per-status quantized aggregate (NULL folded to '~' on both sides)
     and value-hashes against SQL replaying the anti-join + projection.
-    Certifies ddl._merge_insert_only/_merge_insert_frame. Grammar
+    Certifies the MERGE plan's insert clauses. Grammar
     follows Delta's MERGE spec (the reference delegates SQL to Athena
     and has no MERGE surface)."""
     import shutil
@@ -2354,7 +2354,7 @@ def orders_merge_sync_update(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders with doubled totals; stale cheap rows (total < 150000)
     soft-expire with a status stamp. The final (status, active)
     quantized aggregate value-hashes against SQL replaying the three
-    clause outcomes. Certifies ddl._merge_sync_update."""
+    clause outcomes. Certifies the MERGE plan's by-source update."""
     import shutil
     import tempfile
 

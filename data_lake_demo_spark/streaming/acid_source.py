@@ -128,7 +128,11 @@ from pyspark.sql.datasource import (
     WriterCommitMessage,
 )
 
-from data_lake_demo_spark.tableformat import _dv_abs, _rel_by_abs
+from data_lake_demo_spark.tableformat import (
+    _dv_abs,
+    _enforce_write_rules,
+    _rel_by_abs,
+)
 
 _CHANGE_OPS = {"merge", "merge_delete", "delete", "overwrite", "scd2",
                "compact", "optimize_zorder", "optimize_cluster", "restore"}
@@ -1276,76 +1280,6 @@ def _drop_staged(table_path: str, messages) -> None:
                 os.remove(os.path.join(table_path, rel))
             except OSError:
                 pass  # abort cleanup is best-effort; vacuum catches the rest
-
-
-def _enforce_write_rules(root: str, rules, colmap: dict, actions) -> None:
-    """Driver-side enforcement of CHECK constraints and generated
-    columns for the DSv2 write path (closing the gap the Python-API
-    verbs never had): staged files are probed BEFORE the commit
-    references them — a failed probe aborts the write and the
-    orphaned staging is vacuum-swept. The DSv2 commit callback runs
-    in a Python worker with no SparkSession, so the probe evaluates
-    through an embedded SQL engine (DuckDB) over the staged parquet;
-    constraint/generated expressions should therefore stay ANSI
-    (comparisons, arithmetic, CASE — the shapes CHECK clauses are
-    made of). Omitted generated columns are rejected (the staged
-    parquet already exists, so compute-if-omitted isn't possible on
-    this path — supply the column, or write via AcidTable.append).
-    ``rules`` and ``colmap`` come from the snapshot the commit lands
-    on, not from the one the rows were staged against: a constraint
-    added while a stream runs holds for every later micro-batch."""
-    cons, gens = rules.constraints, rules.generated
-    if (not cons and not gens) or not actions:
-        return
-    import duckdb
-
-    paths = [os.path.join(root, a["path"]) for a in actions]
-    files_sql = "read_parquet([{}], union_by_name=true)".format(
-        ",".join("'" + p.replace("'", "''") + "'" for p in paths)
-    )
-    con = duckdb.connect()
-    try:
-        phys_cols = [
-            r[0]
-            for r in con.execute(
-                f"DESCRIBE SELECT * FROM {files_sql}"
-            ).fetchall()
-        ]
-        sel, logical_cols = [], []
-        for c in phys_cols:
-            lg = colmap.get(c, c)
-            if lg == "":
-                continue
-            sel.append(f'"{c}" AS "{lg}"')
-            logical_cols.append(lg)
-        view = f"(SELECT {', '.join(sel)} FROM {files_sql})"
-        for name, expr in cons.items():
-            bad = con.execute(
-                f"SELECT 1 FROM {view} WHERE NOT ({expr})"
-                f" OR (({expr}) IS NULL) LIMIT 1"
-            ).fetchall()
-            if bad:
-                raise ValueError(
-                    f"CHECK constraint {name!r}"
-                    f" ({expr}) violated by the written batch"
-                )
-        for col, expr in gens.items():
-            if col not in logical_cols:
-                raise ValueError(
-                    f"generated column {col!r} must be supplied when"
-                    " writing through the acidtable DSv2 writer"
-                )
-            bad = con.execute(
-                f'SELECT 1 FROM {view} WHERE NOT ("{col}" IS NOT DISTINCT'
-                f" FROM ({expr})) LIMIT 1"
-            ).fetchall()
-            if bad:
-                raise ValueError(
-                    f"generated column {col!r} ({expr}) mismatch in the"
-                    " written batch"
-                )
-    finally:
-        con.close()
 
 
 def _writer_physical(colmap: dict, schema: T.StructType) -> tuple[str, dict | None]:

@@ -39,12 +39,16 @@ protocol those formats use, reduced to its essentials:
   props its own predecessor carried, and advances the old base by
   them — the new base costs one listing and no replay.
 - **One MERGE.** ``merge_apply`` holds the only MERGE loop
-  (``merge`` is its call without a delete column). Copy-on-write, it
-  rewrites the touched files through operators/upsert.merge_apply
-  (the anti-join + union plan a format's MERGE INTO lowers to) into
-  NEW files and commits ``remove`` of the old set + ``add`` of the
-  new set in ONE log entry — readers see the old or the new table,
-  never a mix; merge-on-read masks matches with deletion vectors.
+  (``merge`` is its call without a delete column, ``merge_delete``
+  its call with one matched-DELETE clause). A SQL MERGE's clause
+  list (``MergePlan``) is evaluated inside each attempt against that
+  attempt's snapshot, so a re-plan re-reads the target. Copy-on-write,
+  it rewrites the touched files (through operators/upsert.merge_apply,
+  the anti-join + union plan a format's MERGE INTO lowers to, when
+  the batch rows are the landing rows) into NEW files and commits
+  ``remove`` of the old set + ``add`` of the new set in ONE log entry
+  — readers see the old or the new table, never a mix; merge-on-read
+  masks the rows it acts on with deletion vectors.
 
 At 100 TB: the log holds per-commit ``add``/``remove`` ACTIONS (not
 full listings) with per-file footer [min, max] stats (the Iceberg
@@ -89,7 +93,7 @@ import time
 import uuid
 from collections.abc import Callable, Sequence
 from dataclasses import dataclass
-from functools import cached_property
+from functools import cached_property, reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -233,6 +237,39 @@ class Snapshot:
 
 
 _NO_COMMITS = Snapshot(-1, {}, None, {}, {}, {})
+
+
+@dataclass(frozen=True)
+class MergeClause:
+    """One WHEN clause of a MERGE. ``when`` is ``"matched"``,
+    ``"not_matched"`` or ``"not_matched_by_source"``; ``action`` is
+    ``"update"``, ``"insert"`` or ``"delete"``. ``cond`` and the
+    ``assign`` expressions are SQL text over the plan's target and
+    source aliases; ``assign`` None is ``*`` (every target column the
+    source carries)."""
+
+    when: str
+    action: str
+    cond: str | None = None
+    assign: dict[str, str] | None = None
+
+
+@dataclass(frozen=True)
+class MergePlan:
+    """A MERGE statement's WHEN clauses in statement order, and the
+    aliases their SQL text names the target and the source by."""
+
+    clauses: tuple[MergeClause, ...]
+    target: str = "__t"
+    source: str = "__s"
+
+
+#: ``merge`` on a table whose inserts must pass the write rules
+_UPSERT = MergePlan(
+    (MergeClause("matched", "update"), MergeClause("not_matched", "insert"))
+)
+#: ``merge_delete``: the batch's keys delete their matches
+_KEYED_DELETE = MergePlan((MergeClause("matched", "delete"),))
 
 
 # ---- deletion-vector codec -----------------------------------------------
@@ -723,6 +760,78 @@ def _filters_to_predicate(filters):
         else:
             raise ValueError(f"unsupported filter op {op!r}")
     return pred
+
+
+def _enforce_write_rules(root: str, rules, colmap: dict, actions) -> None:
+    """Driver-side enforcement of CHECK constraints and generated
+    columns on STAGED files (the DSv2 writers, and an insert whose
+    commit lands on a head with other rules than the snapshot its
+    rows were checked against — ``AcidTable._commit_insert``): staged
+    files are probed BEFORE the commit references them — a failed
+    probe aborts the write and the orphaned staging is vacuum-swept.
+    The DSv2 commit callback runs in a Python worker with no
+    SparkSession, so the probe evaluates through an embedded SQL
+    engine (DuckDB) over the staged parquet;
+    constraint/generated expressions should therefore stay ANSI
+    (comparisons, arithmetic, CASE — the shapes CHECK clauses are
+    made of). Omitted generated columns are rejected (the staged
+    parquet already exists, so compute-if-omitted isn't possible on
+    this path — supply the column, or write via AcidTable.append).
+    ``rules`` and ``colmap`` come from the snapshot the commit lands
+    on, not from the one the rows were staged against: a constraint
+    added while a write runs holds for the rows it commits."""
+    cons, gens = rules.constraints, rules.generated
+    if (not cons and not gens) or not actions:
+        return
+    import duckdb
+
+    paths = [os.path.join(root, a["path"]) for a in actions]
+    files_sql = "read_parquet([{}], union_by_name=true)".format(
+        ",".join("'" + p.replace("'", "''") + "'" for p in paths)
+    )
+    con = duckdb.connect()
+    try:
+        phys_cols = [
+            r[0]
+            for r in con.execute(
+                f"DESCRIBE SELECT * FROM {files_sql}"
+            ).fetchall()
+        ]
+        sel, logical_cols = [], []
+        for c in phys_cols:
+            lg = colmap.get(c, c)
+            if lg == "":
+                continue
+            sel.append(f'"{c}" AS "{lg}"')
+            logical_cols.append(lg)
+        view = f"(SELECT {', '.join(sel)} FROM {files_sql})"
+        for name, expr in cons.items():
+            bad = con.execute(
+                f"SELECT 1 FROM {view} WHERE NOT ({expr})"
+                f" OR (({expr}) IS NULL) LIMIT 1"
+            ).fetchall()
+            if bad:
+                raise ValueError(
+                    f"CHECK constraint {name!r}"
+                    f" ({expr}) violated by the written batch"
+                )
+        for col, expr in gens.items():
+            if col not in logical_cols:
+                raise ValueError(
+                    f"generated column {col!r} must be supplied when"
+                    " writing through the acidtable DSv2 writer"
+                )
+            bad = con.execute(
+                f'SELECT 1 FROM {view} WHERE NOT ("{col}" IS NOT DISTINCT'
+                f" FROM ({expr})) LIMIT 1"
+            ).fetchall()
+            if bad:
+                raise ValueError(
+                    f"generated column {col!r} ({expr}) mismatch in the"
+                    " written batch"
+                )
+    finally:
+        con.close()
 
 
 class AcidTable:
@@ -1855,18 +1964,23 @@ class AcidTable:
                 "tracking — the engine assigns it"
             )
 
-    def _read_for_rewrite(self, snap: Snapshot, touched) -> DataFrame:
+    def _read_for_rewrite(
+        self, snap: Snapshot, touched, *, coords: bool = False
+    ) -> DataFrame:
         """The rewrite-path read of ``touched`` files at ``snap``:
         DV-masked rows removed and — when row tracking is on — every
         surviving row's CURRENT id materialized into the hidden
         ``__row_id`` physical column, so the files a rewrite stages
         preserve ids instead of re-minting them. Identical to
-        ``_apply_dvs(_read_files(...))`` when tracking is off."""
+        ``_apply_dvs(_read_files(...))`` when tracking is off.
+        ``coords=True`` keeps each row's ``__fp``/``__ri`` file
+        coordinates (``_with_dv_coords``) for a merge-on-read mask."""
         df = self._read_files(touched, snap.schema_json)
+        mask = self._with_dv_coords if coords else self._apply_dvs
         if not self._row_tracking_on(snap):
-            return self._apply_dvs(df, touched, snap.dvs)
+            return mask(df, touched, snap.dvs)
         df = self._row_id_coords(df)
-        df = self._apply_dvs(df, touched, snap.dvs)
+        df = mask(df, touched, snap.dvs)
         df = self._attach_row_ids(df, touched, snap.files)
         cols = [
             c for c in df.columns if c not in ("_row_id", self._ROW_ID_COL)
@@ -2053,7 +2167,11 @@ class AcidTable:
         Each attempt:
 
         1. resolves the head (the first attempt commits on ``snap``
-           when given) and stops if ``txn`` already landed;
+           when given) and stops if ``txn`` already landed; the rows
+           were checked against ``snap``'s write rules, so a head that
+           declares other CHECK constraints, generated columns or
+           column names re-checks the staged files first
+           (``_recheck_rules``);
         2. if the head's watermark differs from the stamp, shifts only
            this write's id columns by the difference (``_shift_ids``) —
            the caller's plan never re-runs. A rewound watermark
@@ -2079,6 +2197,8 @@ class AcidTable:
             head = snap if attempt == 0 and snap is not None else self._state()
             if head.holds(txn):
                 return head.version, None
+            if snap is not None and head is not snap:
+                self._recheck_rules(snap, head, add)
             add, stamped = self._shift_ids(add, stamped, head)
             try:
                 return self._try_commit(
@@ -2097,6 +2217,19 @@ class AcidTable:
             except CommitConflict:
                 continue
         raise CommitConflict(f"{op} lost {max_retries} commit races")
+
+    def _recheck_rules(
+        self, checked: Snapshot, head: Snapshot, add: list[dict]
+    ) -> None:
+        """Probe the staged ``add`` files against ``head``'s CHECK
+        constraints and generated columns when they, or the column
+        names, differ from those of ``checked`` (the snapshot the rows
+        were checked against). Raises like any rule violation."""
+        def rules(s: Snapshot):
+            return s.rules.constraints, s.rules.generated, s.colmap
+
+        if rules(head) != rules(checked):
+            _enforce_write_rules(self.path, head.rules, head.colmap, add)
 
     def _shift_ids(
         self, add: list[dict], stamped: dict[str, int], head: Snapshot
@@ -2454,10 +2587,11 @@ class AcidTable:
         add_new, schema = self._stage_actions(
             rows, partition_by=self._phys_partition_by(partition_by, snap)
         )
-        stamped = snap.rules.identity
+        stamped, checked = snap.rules.identity, snap
         for attempt in range(max_retries):
             if attempt:
                 snap = self._state()
+                self._recheck_rules(checked, snap, add_new)
             touched = self._pruned_live(snap, phys_filters)
             add_rem: list[dict] = []
             commit_schema = self._evolve_schema(schema, snap)
@@ -2652,12 +2786,15 @@ class AcidTable:
         distributed write whose data files were produced elsewhere).
         Same retry/txn semantics as ``append``/``overwrite`` through
         the same insert commit (``_commit_insert``); data files are
-        never rewritten on a lost race. No write rule is applied: the
-        caller staged the rows as they must land. On an identity
-        table the watermark advances past any ids the files carry."""
+        never rewritten on a lost race. The caller staged the rows as
+        they must land under the table's rules when the call starts;
+        a rule a racing commit adds is probed on the staged files. On
+        an identity table the watermark advances past any ids the
+        files carry."""
         return self._commit_insert(
-            None, "overwrite" if overwrite else "append", add, schema_json,
-            {}, overwrite=overwrite, txn=txn, max_retries=max_retries,
+            self._state(), "overwrite" if overwrite else "append", add,
+            schema_json, {}, overwrite=overwrite, txn=txn,
+            max_retries=max_retries,
         )[0]
 
     def version_at_timestamp(self, ts: float) -> int:
@@ -4688,6 +4825,7 @@ class AcidTable:
         keys: Sequence[str],
         delete_col: str | None = None,
         *,
+        plan: MergePlan | None = None,
         mode: str | None = None,
         dedupe_order: str | None = None,
         txn: tuple[str, int] | None = None,
@@ -4697,9 +4835,10 @@ class AcidTable:
         fold: Callable[[DataFrame, DataFrame], DataFrame] | None = None,
         max_retries: int = 5,
     ) -> int:
-        """SQL MERGE as ONE atomic commit: WHEN MATCHED AND
-        <delete_col> THEN DELETE / WHEN MATCHED THEN UPDATE / WHEN NOT
-        MATCHED THEN INSERT. ``delete_col=None`` is the plain upsert
+        """SQL MERGE as ONE atomic commit. Without ``plan`` the batch
+        rows are the landing rows: WHEN MATCHED AND <delete_col> THEN
+        DELETE / WHEN MATCHED THEN UPDATE SET * / WHEN NOT MATCHED
+        THEN INSERT *. ``delete_col=None`` is the plain upsert
         (``merge``); with it, one batch carries both upserts and
         retractions — the CDC-apply and view-maintenance shape, where
         two commits would expose a half-applied snapshot. A delete
@@ -4710,19 +4849,39 @@ class AcidTable:
         ``dedupe_order`` keeps the latest row per key or
         ``unique_keys=True`` takes the caller's word.
 
+        ``plan`` is a MERGE statement's WHEN clauses (``MergePlan``;
+        SQL MERGE builds it with Spark's own parser), evaluated by
+        each attempt against its own snapshot with Delta's rules: the
+        touched target rows join the batch on the keys, and the first
+        clause whose condition holds decides each row — a matched row
+        is updated or deleted, a batch row without a match inserted, a
+        target row without a batch match (NOT MATCHED BY SOURCE; such
+        a clause widens the touched set to the whole table) updated or
+        deleted. A row no clause takes stays as it is; an unmatched
+        batch row no clause takes is not inserted. Updated rows keep
+        their row ids and pass the generated-column and CHECK rules;
+        inserted rows pass ``_insert_frame`` (DEFAULTs, identity
+        values, generated columns, CHECK). ``*`` assigns the target
+        columns the batch carries (identity columns excepted); under
+        ``auto_evolve`` it also adds the batch's new columns. A plain
+        upsert into a table with identity columns runs as that plan,
+        so matched rows keep their ids and inserted rows get new ones.
+
         Copy-on-write (the default): manifest-level file skipping —
         only live files whose footer min/max ranges (and blooms) may
-        hold a batch key are read and rewritten through
-        operators/upsert.merge_apply (anti-join + union);
+        hold a batch key are read and rewritten (operators/upsert.
+        merge_apply's anti-join + union without a plan; a plan
+        rewrites them only when it has a matched or not-matched-by-
+        source clause, an insert-only plan removes nothing);
         provably-unmatchable files stay untouched. The commit removes
         the touched set and adds the rewrite atomically. At 100 TB this
         pruning is what makes point-ish MERGE usable: a batch touching
         one day's key range rewrites that day's files, not the table.
 
         ``mode="merge_on_read"`` is Delta's DV-based (low-shuffle)
-        MERGE: matched target rows are MASKED by deletion vectors (a
-        retraction is a pure mask) — no touched file is rewritten —
-        and the surviving batch rows land as new files. Write
+        MERGE: the target rows the MERGE acts on are MASKED by
+        deletion vectors (a retraction is a pure mask) — no touched
+        file is rewritten — and the new rows land as new files. Write
         amplification drops from O(touched files) to O(batch +
         compressed vector bytes); read cost accumulates in the vectors
         until compaction materializes them. Same logical result and
@@ -4749,7 +4908,8 @@ class AcidTable:
         checks run on what lands.
 
         On a table with no commits, the surviving rows (``fold``'s
-        output) seed version 0, in either mode.
+        output) seed version 0, in either mode; a ``plan`` needs a
+        table with commits.
 
         Concurrency: each attempt plans against one snapshot. On a
         lost race the staged commit REBASES onto the winners (no
@@ -4758,14 +4918,18 @@ class AcidTable:
         merge-key stats may intersect the batch's key ranges — such an
         append would have changed the matched/not-matched split, so it
         conflicts under every isolation level. A batch with a NULL key
-        under ``fold`` treats every winner add as a possible match.
-        Otherwise the attempt re-plans against the new head, up to
-        ``max_retries`` times. A committed MERGE then runs the table's
-        auto-maintenance policy."""
+        under ``fold``, or a not-matched-by-source clause, treats
+        every winner add as a possible match. Otherwise — and always
+        when the commit assigns identity values, which never rebases
+        (see ``_commit_insert``) — the attempt re-plans against the
+        new head, up to ``max_retries`` times. A committed MERGE then
+        runs the table's auto-maintenance policy."""
         from data_lake_demo_spark.operators.upsert import merge_apply
 
         self._reject_reserved_row_id(updates)
         logical_keys = list(keys)
+        # merge_delete's tombstone batches log under their own op
+        op = "merge_delete" if plan is _KEYED_DELETE else "merge"
         for _ in range(max_retries):
             snap = self._state()
             verb_mode = self._default_write_mode(snap, "merge", mode)
@@ -4774,111 +4938,356 @@ class AcidTable:
             # check (no TOCTOU window)
             if snap.holds(txn):
                 return snap.version
-            # write rules and column names resolve against the
-            # snapshot this attempt commits on
-            colmap = snap.colmap
-            ups = updates
-            if fold is None and delete_col is None:
-                ups = self._apply_generated(ups, snap)
-                self._enforce_constraints(ups, snap.rules.constraints)
-            elif fold is None:
-                # delete rows never land: checks see only the survivors
-                ups = self._apply_generated(
-                    ups, snap, check_df=ups.filter(~F.col(delete_col))
+            attempt_plan = plan
+            if plan is None and snap.rules.identity:
+                if delete_col is not None or fold is not None:
+                    raise ValueError(
+                        "merge_apply with delete_col or fold does not "
+                        "assign identity values; use merge() or SQL MERGE"
+                    )
+                attempt_plan = _UPSERT
+            stamps = False
+            if attempt_plan is not None:
+                staged = self._merge_plan_stage(
+                    snap, updates, logical_keys, attempt_plan,
+                    mor=verb_mode == "merge_on_read",
+                    dedupe_order=dedupe_order, unique_keys=unique_keys,
+                    auto_evolve=auto_evolve, partition_by=partition_by,
                 )
-                self._enforce_constraints(
-                    ups.filter(~F.col(delete_col)), snap.rules.constraints
-                )
-            ups = self._physicalize(ups, colmap)
-            keys = self._phys_names(logical_keys, colmap)
-            phys_part = self._phys_partition_by(partition_by, snap)
-            if fold is None and dedupe_order is None and not unique_keys:
-                # ranges + the unique-source-key check in ONE job;
-                # _touched_files reuses the ranges instead of re-agg'ing
-                ranges = self._batch_key_ranges_checked(ups, keys, "update")
+                if staged is None:
+                    return snap.version  # the plan changes nothing
+                add, remove, schema, dv, read_filters, stamps = staged
             else:
-                ranges = self._batch_key_ranges(ups, keys)
-            null_safe = fold is not None
-            touched = self._touched_files(
-                snap, ups, keys, ranges=ranges, null_safe=null_safe
-            )
-            if verb_mode == "merge_on_read" and snap.schema_json and not fold:
-                add, schema, dv = self._merge_mor_stage(
-                    snap, ups, keys, touched,
-                    dedupe_order=dedupe_order, partition_by=phys_part,
-                    auto_evolve=auto_evolve, delete_col=delete_col,
-                )
-                if not add and not dv:
-                    return snap.version  # empty batch: provably a no-op
-                remove = []  # matches are masked, no file is rewritten
-            else:
-                remove, dv = touched, None
-                if touched:
-                    # committed-schema read, NOT bare spark.read.parquet:
-                    # heterogeneous touched footers (a widen/add_columns
-                    # that predates some files) must up-cast/pad at scan
-                    # time or the rewrite narrows the table back and
-                    # strands wider live files (unreadable snapshot)
-                    target = self._read_for_rewrite(snap, touched)
-                elif snap.schema_json is not None:
-                    target = self.spark.createDataFrame(
-                        [],
-                        T.StructType.fromJson(json.loads(snap.schema_json)),
+                # write rules and column names resolve against the
+                # snapshot this attempt commits on
+                colmap = snap.colmap
+                ups = updates
+                if fold is None and delete_col is None:
+                    ups = self._apply_generated(ups, snap)
+                    self._enforce_constraints(ups, snap.rules.constraints)
+                elif fold is None:
+                    # delete rows never land: checks see only the survivors
+                    ups = self._apply_generated(
+                        ups, snap, check_df=ups.filter(~F.col(delete_col))
                     )
-                else:  # first commit: the surviving rows seed the table
-                    seed = ups
-                    if delete_col is not None and fold is None:
-                        seed = ups.drop(delete_col)
-                    target = self.spark.createDataFrame([], seed.schema)
-                dropped = [p for p, l in colmap.items() if l == ""]
-                if dropped:  # the rewrite materializes column drops
-                    target = target.drop(*dropped)
-                rt_on = self._row_tracking_on(snap)
-                if rt_on and self._ROW_ID_COL not in target.columns:
-                    target = target.withColumn(
-                        self._ROW_ID_COL, F.lit(None).cast("long")
+                    self._enforce_constraints(
+                        ups.filter(~F.col(delete_col)), snap.rules.constraints
                     )
-                if fold is not None:
-                    rows = self._logicalize(
-                        target.drop(self._ROW_ID_COL), colmap
+                ups = self._physicalize(ups, colmap)
+                keys = self._phys_names(logical_keys, colmap)
+                phys_part = self._phys_partition_by(partition_by, snap)
+                if fold is None and dedupe_order is None and not unique_keys:
+                    # ranges + the unique-source-key check in ONE job;
+                    # _touched_files reuses the ranges instead of re-agg'ing
+                    ranges = self._batch_key_ranges_checked(
+                        ups, keys, "update"
                     )
-                    merged = self._apply_generated(fold(rows, updates), snap)
-                    self._enforce_constraints(merged, snap.rules.constraints)
-                    merged = self._physicalize(merged, colmap)
-                    if rt_on:  # a folded row keeps its key's row id
-                        merged = self._inherit_row_ids(merged, target, keys)
                 else:
-                    if rt_on:
-                        ups = self._inherit_row_ids(ups, target, keys)
-                    merged = merge_apply(
-                        target,
-                        ups,
-                        keys,
-                        delete_col,
-                        dedupe_order=dedupe_order,
-                        allow_missing_columns=auto_evolve,
-                    )
-                if rt_on:
-                    merged = self._assign_fresh_row_ids(merged, snap.props)
-                add, schema = self._stage_actions(
-                    merged, partition_by=phys_part
+                    ranges = self._batch_key_ranges(ups, keys)
+                null_safe = fold is not None
+                read_filters = self._key_filters(keys, ranges, null_safe)
+                touched = self._touched_files(
+                    snap, ups, keys, ranges=ranges, null_safe=null_safe
                 )
-            v = self._commit_or_rebase(
-                snap,
-                "merge",
-                add,
-                remove,
-                # same widening guard as append: a narrow batch must
-                # not revert add_columns/widen_column
-                self._evolve_schema(schema, snap),
-                txn=txn,
-                dv=dv,
-                read_filters=self._key_filters(keys, ranges, null_safe),
-                check_adds=True,
-            )
+                if verb_mode == "merge_on_read" and snap.schema_json and not fold:
+                    add, schema, dv = self._merge_mor_stage(
+                        snap, ups, keys, touched,
+                        dedupe_order=dedupe_order, partition_by=phys_part,
+                        auto_evolve=auto_evolve, delete_col=delete_col,
+                    )
+                    if not add and not dv:
+                        return snap.version  # empty batch: provably a no-op
+                    remove = []  # matches are masked, no file is rewritten
+                else:
+                    remove, dv = touched, None
+                    if touched:
+                        # committed-schema read, NOT bare spark.read.parquet:
+                        # heterogeneous touched footers (a widen/add_columns
+                        # that predates some files) must up-cast/pad at scan
+                        # time or the rewrite narrows the table back and
+                        # strands wider live files (unreadable snapshot)
+                        target = self._read_for_rewrite(snap, touched)
+                    elif snap.schema_json is not None:
+                        target = self.spark.createDataFrame(
+                            [],
+                            T.StructType.fromJson(json.loads(snap.schema_json)),
+                        )
+                    else:  # first commit: the surviving rows seed the table
+                        seed = ups
+                        if delete_col is not None and fold is None:
+                            seed = ups.drop(delete_col)
+                        target = self.spark.createDataFrame([], seed.schema)
+                    dropped = [p for p, l in colmap.items() if l == ""]
+                    if dropped:  # the rewrite materializes column drops
+                        target = target.drop(*dropped)
+                    rt_on = self._row_tracking_on(snap)
+                    if rt_on and self._ROW_ID_COL not in target.columns:
+                        target = target.withColumn(
+                            self._ROW_ID_COL, F.lit(None).cast("long")
+                        )
+                    if fold is not None:
+                        rows = self._logicalize(
+                            target.drop(self._ROW_ID_COL), colmap
+                        )
+                        merged = self._apply_generated(fold(rows, updates), snap)
+                        self._enforce_constraints(
+                            merged, snap.rules.constraints
+                        )
+                        merged = self._physicalize(merged, colmap)
+                        if rt_on:  # a folded row keeps its key's row id
+                            merged = self._inherit_row_ids(merged, target, keys)
+                    else:
+                        if rt_on:
+                            ups = self._inherit_row_ids(ups, target, keys)
+                        merged = merge_apply(
+                            target,
+                            ups,
+                            keys,
+                            delete_col,
+                            dedupe_order=dedupe_order,
+                            allow_missing_columns=auto_evolve,
+                        )
+                    if rt_on:
+                        merged = self._assign_fresh_row_ids(merged, snap.props)
+                    add, schema = self._stage_actions(
+                        merged, partition_by=phys_part
+                    )
+            # same widening guard as append: a narrow batch must not
+            # revert add_columns/widen_column
+            schema = self._evolve_schema(schema, snap)
+            if stamps:
+                try:
+                    v = self._try_commit(
+                        snap, op, add, remove, schema, txn,
+                        props=self._watermark_props(snap, add), dv=dv,
+                    )
+                except CommitConflict:
+                    continue
+            else:
+                v = self._commit_or_rebase(
+                    snap, op, add, remove, schema, txn=txn, dv=dv,
+                    read_filters=read_filters, check_adds=True,
+                )
             if v is not None:
                 return self._auto_maintain(snap, v)
-        raise CommitConflict(f"merge lost {max_retries} commit races")
+        raise CommitConflict(f"{op} lost {max_retries} commit races")
+
+    def _merge_plan_stage(
+        self,
+        snap: Snapshot,
+        updates: DataFrame,
+        keys: list[str],
+        plan: MergePlan,
+        *,
+        mor: bool,
+        dedupe_order: str | None,
+        unique_keys: bool,
+        auto_evolve: bool,
+        partition_by,
+    ):
+        """Evaluate ``plan`` against ``snap`` (rules in ``merge_apply``)
+        and stage what lands: ``(add, remove, schema, dv, read
+        filters, stamps)``, None when the plan changes nothing.
+        ``stamps`` is True when inserted rows took identity values."""
+        from pyspark.errors import AnalysisException
+
+        from data_lake_demo_spark.operators.upsert import _latest_per_key
+
+        if snap.schema_json is None:
+            raise ValueError(f"table {self.path} has no commits")
+        rules, colmap = snap.rules, snap.colmap
+        types = {
+            colmap.get(f.name, f.name): f.dataType
+            for f in T.StructType.fromJson(json.loads(snap.schema_json)).fields
+            if f.name != self._ROW_ID_COL and colmap.get(f.name, f.name) != ""
+        }
+        tcols = set(types)
+        src = updates
+        if dedupe_order is not None:
+            src = _latest_per_key(src, keys, dedupe_order)
+        matched, inserts, gone = (
+            [c for c in plan.clauses if c.when == w]
+            for w in ("matched", "not_matched", "not_matched_by_source")
+        )
+        for c in plan.clauses:
+            named = set(c.assign or ())
+            if c.assign is None and c.action != "delete":
+                named = set(src.columns) & tcols  # what * assigns
+            explicit = c.assign is not None
+            for bad, why in (
+                (named - tcols, "is an unknown target column (an unknown "
+                 "column cannot be assigned)"),
+                (named & set(rules.identity), "is an identity column "
+                 "(GENERATED ALWAYS: omit it, it cannot be assigned)"),
+                (named & set(keys) if explicit and c.action == "update"
+                 else set(),
+                 "is a merge key: UPDATE SET may not assign a merge key"),
+                (set(keys) - named if explicit and c.action == "insert"
+                 else set(),
+                 "is not assigned: INSERT must assign every merge key"),
+            ):
+                if bad:
+                    raise ValueError(f"MERGE column {sorted(bad)[0]!r} {why}")
+        if auto_evolve and any(c.assign is None for c in plan.clauses):
+            for c in src.columns:  # * lands the batch's new columns
+                types.setdefault(c, src.schema[c].dataType)
+        cols = list(types)
+
+        def q(*parts):
+            return F.col(".".join(f"`{p}`" for p in parts))
+
+        ta, sa = plan.target, plan.source
+        phys_keys = self._phys_names(keys, colmap)
+        key_batch = src.select(*[q(k).alias(p) for k, p in zip(keys, phys_keys)])
+        if unique_keys:
+            ranges = self._batch_key_ranges(key_batch, phys_keys)
+        else:
+            ranges = self._batch_key_ranges_checked(
+                key_batch, phys_keys, "source"
+            )
+        if gone:  # a not-matched-by-source clause reads every row
+            touched, read_filters = sorted(snap.files), None
+        else:
+            touched = self._touched_files(
+                snap, key_batch, phys_keys, ranges=ranges
+            )
+            read_filters = self._key_filters(phys_keys, ranges)
+        rewrite = not mor and bool(matched or gone)
+        s = src.alias(sa)
+        if touched:
+            tgt = self._read_for_rewrite(snap, touched, coords=mor)
+        else:  # no file can match; an empty target still analyzes the clauses
+            tgt = self.spark.createDataFrame(
+                [], T.StructType.fromJson(json.loads(snap.schema_json))
+            ).withColumns({"__fp": F.lit(None), "__ri": F.lit(None)})
+        tgt = self._logicalize(tgt, colmap).alias(ta)
+        on = [q(ta, k) == q(sa, k) for k in keys]
+        rid = self._ROW_ID_COL
+        hidden = [rid] if rid in tgt.columns else []
+
+        def old(c):  # the target row's value; a new column reads NULL
+            return q(ta, c) if c in tcols else F.lit(None).cast(types[c])
+
+        def value(c, clause, fallback):  # ``c`` as ``clause`` assigns it
+            if clause.assign is None:
+                star = c in src.columns
+                return q(sa, c).cast(types[c]) if star else fallback
+            if c in clause.assign:
+                return F.expr(clause.assign[c]).cast(types[c])
+            return fallback
+
+        def decide(frame, clauses):
+            """``frame`` with ``__act``: the index of the first clause
+            whose condition holds, NULL when none does."""
+            act = F.lit(None).cast("int")
+            for i in reversed(range(len(clauses))):
+                cond = clauses[i].cond
+                hit = F.lit(True) if cond is None else F.expr(cond)
+                act = F.when(hit, i).otherwise(act)
+            return frame.withColumn("__act", act)
+
+        act_col = F.col("__act")
+        updated, kept, hits = [], [], []
+        for frame, clauses, scope in (
+            (tgt.join(s, on, "inner"), matched, None),
+            (tgt.join(s, on, "left_anti"), gone, "target"),
+        ):
+            carry = [old(c).alias(c) for c in cols] + hidden
+            if not clauses:
+                if rewrite:
+                    kept.append(frame.select(*carry))
+                continue
+            try:
+                acted = decide(frame, clauses)
+                ups = [i for i, c in enumerate(clauses) if c.action == "update"]
+                if ups:
+                    row = []
+                    for c in cols:
+                        e = old(c)
+                        for i in ups:
+                            e = F.when(
+                                act_col == i, value(c, clauses[i], old(c))
+                            ).otherwise(e)
+                        row.append(e.alias(c))
+                    updated.append(
+                        acted.filter(act_col.isin(ups)).select(*row, *hidden)
+                    )
+            except AnalysisException as e:
+                if scope is None:
+                    raise
+                raise ValueError(
+                    "WHEN NOT MATCHED BY SOURCE clauses may reference target "
+                    "columns only (there is no source row): "
+                    + str(e).strip().splitlines()[0]
+                ) from e
+            if rewrite and all(c.cond is not None for c in clauses):
+                kept.append(acted.filter(act_col.isNull()).select(*carry))
+            if mor:
+                hits.append(
+                    acted.filter(act_col.isNotNull()).select("__fp", "__ri")
+                )
+        if not touched:
+            updated, kept, hits = [], [], []
+        ins = None
+        if inserts:
+            frame = s.join(tgt, on, "left_anti")
+            named = set()
+            for c in inserts:
+                named |= set(c.assign if c.assign is not None else src.columns)
+            try:
+                acted = decide(frame, inserts)
+                row = []
+                for c in cols:
+                    if c not in named:
+                        continue  # omitted: DEFAULT, identity or generated
+                    dflt = rules.defaults.get(c)
+                    dflt = F.lit(None) if dflt is None else F.expr(dflt)
+                    dflt = dflt.cast(types[c])
+                    e = dflt
+                    for i, clause in enumerate(inserts):
+                        e = F.when(
+                            act_col == i, value(c, clause, dflt)
+                        ).otherwise(e)
+                    row.append(e.alias(c))
+                ins = acted.filter(act_col.isNotNull()).select(*row)
+            except AnalysisException as e:
+                raise ValueError(
+                    "WHEN NOT MATCHED clauses may reference source columns "
+                    "only (there is no target row): "
+                    + str(e).strip().splitlines()[0]
+                ) from e
+            ins = self._insert_frame(ins, snap)
+
+        def union(parts, **kw):
+            return reduce(lambda a, b: a.unionByName(b, **kw), parts)
+
+        if updated:
+            upd = self._apply_generated(union(updated), snap)
+            self._enforce_constraints(upd, rules.constraints)
+            kept.append(upd)
+        frames = [self._physicalize(f, colmap) for f in kept]
+        if ins is not None:
+            frames.append(ins)
+        add, schema = [], snap.schema_json
+        if frames:
+            out = union(frames, allowMissingColumns=True)
+            if self._row_tracking_on(snap):
+                out = self._assign_fresh_row_ids(out, snap.props)
+            add, schema = self._stage_actions(
+                out, partition_by=self._phys_partition_by(partition_by, snap)
+            )
+        dv = None
+        if hits:
+            dv = self._dv_entries_from(
+                union(hits), touched, snap.dvs,
+                row_bound=self._touched_row_bound(snap.files, touched),
+            ) or None
+        remove = touched if rewrite else []
+        if not (add or remove or dv):
+            return None
+        return add, remove, schema, dv, read_filters, bool(
+            rules.identity and ins is not None
+        )
 
     def merge_delete(
         self,
@@ -4890,51 +5299,29 @@ class AcidTable:
         max_retries: int = 5,
     ) -> int:
         """MERGE INTO ... WHEN MATCHED THEN DELETE: remove every row
-        whose key appears in ``keys_df``, as snapshot-isolated
-        copy-on-write with the same manifest-level file skipping as
-        ``merge`` — only files whose footer key ranges overlap the
-        batch are rewritten (left-anti join against the key set);
-        provably-unmatchable files carry over by path. This is the
-        set-valued complement of ``delete`` (which takes literal
+        whose key appears in ``keys_df`` — ``merge_apply`` with that
+        one clause, so the same manifest-level file skipping (only
+        files whose footer key ranges overlap the batch are read),
+        the ``merge.mode`` property (copy-on-write rewrites the
+        touched files through a left-anti join, merge-on-read masks
+        the matches), the rebase rule and auto-maintenance. This is
+        the set-valued complement of ``delete`` (which takes literal
         predicates): the CDC-apply shape for tombstone batches, and
         the GDPR-erasure shape (delete these N million user ids)
         where a literal IN-list can't scale but an anti-join does.
+        Duplicate keys are fine; the commit's op is ``merge_delete``.
 
         ``txn=(app, batch_id)`` gives the same exactly-once replay
         contract as ``append``/``merge``."""
-        for _ in range(max_retries):
-            snap = self._state()
-            if snap.holds(txn):
-                return snap.version
-            if snap.version < 0:
-                raise ValueError(f"table {self.path} has no commits")
-            colmap = snap.colmap
-            phys_keys = self._phys_names(keys, colmap)
-            key_set = (
-                self._physicalize(keys_df, colmap)
-                .select(*phys_keys)
-                .dropDuplicates(phys_keys)
-            )
-            touched = self._touched_files(snap, key_set, phys_keys)
-            if not touched:
-                return snap.version  # no file can contain a matching key
-            remaining = self._read_for_rewrite(snap, touched).join(
-                key_set, on=phys_keys, how="left_anti"
-            )
-            # join strategy stays Catalyst's call: AQE broadcasts a
-            # small tombstone batch and shuffle-joins a huge one —
-            # pinning broadcast here would OOM the GDPR-scale case
-            add, schema = self._stage_actions(
-                remaining,
-                partition_by=self._phys_partition_by(partition_by, snap),
-            )
-            try:
-                return self._try_commit(
-                    snap, "merge_delete", add, touched, schema, txn
-                )
-            except CommitConflict:
-                continue
-        raise CommitConflict(f"merge_delete lost {max_retries} commit races")
+        return self.merge_apply(
+            keys_df.select(*keys).distinct(),
+            keys,
+            plan=_KEYED_DELETE,
+            unique_keys=True,
+            txn=txn,
+            partition_by=partition_by,
+            max_retries=max_retries,
+        )
 
     def foreach_batch_merge_sink(
         self,

@@ -150,8 +150,20 @@ def test_merge_into_statement(spark, tmp_path):
     )
     assert sorted(r.k for r in t.snapshot().collect()) == [3, 4, 5]
 
-    # rejections: column-level SET mixed with DELETE, mismatched ON
-    with pytest.raises(ValueError, match="column-level UPDATE SET"):
+    # column-level SET next to DELETE is a first-match plan: the
+    # conditioned UPDATE takes k=3, the DELETE every other match
+    sql.sql(
+        "MERGE INTO tt USING (SELECT * FROM VALUES (3), (4) AS s(k)) s "
+        "ON tt.k = s.k "
+        "WHEN MATCHED AND s.k = 3 THEN UPDATE SET v = 'z' "
+        "WHEN MATCHED THEN DELETE"
+    )
+    assert {r.k: r.v for r in t.snapshot().collect()} == {3: "z", 5: "e"}
+    # Spark's grammar: only the last MATCHED clause may omit its
+    # condition
+    from pyspark.errors import ParseException
+
+    with pytest.raises(ParseException, match="NON_LAST_MATCHED"):
         sql.sql(
             "MERGE INTO tt USING (SELECT 1 AS k) s ON tt.k = s.k "
             "WHEN MATCHED THEN UPDATE SET v = 'z' "
@@ -1117,8 +1129,9 @@ def test_merge_nmbs_update_conditioned_and_alone(spark, tmp_path):
 
 def test_merge_nmbs_update_error_paths(spark, tmp_path):
     """Source-column references in the BY SOURCE condition or
-    assignments raise (there is no source row); key assignment and
-    DELETE combination raise too."""
+    assignments raise (there is no source row); so do a key
+    assignment and an unknown column. A matched DELETE next to a BY
+    SOURCE UPDATE is a valid first-match plan."""
     import pytest
 
     from data_lake_demo_spark.ddl import AcidSql
@@ -1144,13 +1157,35 @@ def test_merge_nmbs_update_error_paths(spark, tmp_path):
         )
     with pytest.raises(ValueError, match="merge key"):
         sql.sql(head + "WHEN NOT MATCHED BY SOURCE THEN UPDATE SET k = 99")
-    with pytest.raises(ValueError, match="does not combine"):
+    with pytest.raises(ValueError, match="unknown column"):
+        sql.sql(head + "WHEN NOT MATCHED BY SOURCE THEN UPDATE SET zz = 1")
+    # Spark's grammar orders MATCHED before NOT MATCHED clauses
+    from pyspark.errors import ParseException
+
+    with pytest.raises(ParseException):
         sql.sql(
             head + "WHEN MATCHED AND s.v = 'd' THEN DELETE "
             "WHEN NOT MATCHED BY SOURCE THEN UPDATE SET v = 'y'"
         )
-    with pytest.raises(ValueError, match="unknown column"):
-        sql.sql(head + "WHEN NOT MATCHED BY SOURCE THEN UPDATE SET zz = 1")
+    # a matched DELETE combines with a BY SOURCE UPDATE: first match
+    # per row, one commit
+    t.overwrite(
+        spark.createDataFrame([(1, "a"), (2, "b"), (3, "c")], "k int, v string")
+    )
+    spark.createDataFrame(
+        [(1, "d"), (2, "B"), (4, "n")], "k int, v string"
+    ).createOrReplaceTempView("nmbs_mix_src")
+    v_before = t.latest_version()
+    sql.sql(
+        "MERGE INTO t AS tg USING nmbs_mix_src AS s ON tg.k = s.k "
+        "WHEN MATCHED AND s.v = 'd' THEN DELETE "
+        "WHEN MATCHED THEN UPDATE SET * "
+        "WHEN NOT MATCHED THEN INSERT * "
+        "WHEN NOT MATCHED BY SOURCE THEN UPDATE SET v = 'y'"
+    )
+    assert t.latest_version() == v_before + 1
+    got = {r.k: r.v for r in t.snapshot().collect()}
+    assert got == {2: "B", 3: "y", 4: "n"}
 
 
 def test_merge_nmbs_update_mor_mode(spark, tmp_path):

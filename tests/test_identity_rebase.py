@@ -519,3 +519,30 @@ def test_identity_shift_keeps_nested_and_typed_columns(spark, tmp_path):
             r["ts"], r["amt"], r["tags"], r["attrs"], tuple(r["pt"])
         ) == row[1:]
     assert t.properties()["identity.id"]["next"] == 105
+
+
+@pytest.mark.parametrize("verb", ["append", "overwrite", "commit_staged"])
+def test_insert_rechecks_a_check_constraint_added_by_the_winner(
+    spark, tmp_path, verb
+):
+    """An insert whose first commit attempt loses to a commit adding a
+    CHECK constraint re-checks its staged rows at the new head: a row
+    the constraint rejects never lands."""
+    path = str(tmp_path / "t")
+    t = AcidTable(spark, path)
+    t.append(spark.createDataFrame([(1,)], "k int"))
+    w = AcidTable(spark, path)
+    batch = spark.createDataFrame([(500,)], "k int")
+    if verb == "commit_staged":
+        add, schema = t._stage_actions(batch)
+    _inject_winner_once(
+        t, lambda: w.set_check_constraint("small", "k < 100")
+    )
+    with pytest.raises(ValueError, match="CHECK constraint 'small'"):
+        if verb == "append":
+            t.append(batch)
+        elif verb == "overwrite":
+            t.overwrite(batch)
+        else:
+            t.commit_staged(add, schema)
+    assert sorted(r.k for r in t.snapshot().collect()) == [1]

@@ -142,3 +142,51 @@ def test_insert_values_resolves_its_table_once(spark, tmp_path):
     assert lists <= 2, ("insert", lists)
     assert reads <= 2 * (k_now + 1), ("insert", reads, k_now)
     assert t.snapshot().filter("k = 500").first().v == 5
+
+
+_MERGE_CLAUSES = {
+    "upsert": "WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *",
+    "cdc_apply": (
+        "WHEN MATCHED AND s.v < 0 THEN DELETE "
+        "WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *"
+    ),
+    "keyed_delete": "WHEN MATCHED THEN DELETE",
+    "column_update": "WHEN MATCHED THEN UPDATE SET v = tg.v + s.v",
+    "insert_only": "WHEN NOT MATCHED THEN INSERT *",
+    "mirror_sync_delete": (
+        "WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT * "
+        "WHEN NOT MATCHED BY SOURCE AND tg.k > 30 THEN DELETE"
+    ),
+    "by_source_update": (
+        "WHEN NOT MATCHED BY SOURCE AND tg.k > 30 THEN UPDATE SET v = 0"
+    ),
+}
+
+
+@pytest.mark.parametrize("shape", sorted(_MERGE_CLAUSES))
+def test_sql_merge_resolves_its_table_at_most_twice(spark, tmp_path, shape):
+    """A SQL MERGE of any clause shape reads the log like ``INSERT``:
+    at most the statement's own listing plus the verb's, never one
+    per lowering step."""
+    from data_lake_demo_spark.ddl import AcidSql
+
+    path = str(tmp_path / "t")
+    t = _table(
+        spark, path, 3, [(i, i * 10) for i in range(40)], "k long, v long"
+    )
+    sql = AcidSql(spark, {"t": path})
+    sql._handles[path] = t
+    spark.createDataFrame(
+        [(1, -1), (2, 5), (100, 7)], "k long, v long"
+    ).createOrReplaceTempView("budget_src")
+    before = t.latest_version()
+    lists, reads, k_now = _measure(
+        t,
+        lambda: sql.sql(
+            "MERGE INTO t AS tg USING budget_src AS s ON tg.k = s.k "
+            + _MERGE_CLAUSES[shape]
+        ),
+    )
+    assert t.latest_version() == before + 1, shape
+    assert lists <= 2, (shape, lists)
+    assert reads <= 2 * (k_now + 1), (shape, reads, k_now)

@@ -1715,7 +1715,8 @@ def _merge_stmt(draw):
     )
     src = [(k, k * 100 + draw(st.integers(0, 9))) for k in src_keys]
     thr = draw(st.integers(0, 3000))
-    return shape, mor, src, thr
+    racer = draw(st.sampled_from([None, "update", "append"]))
+    return shape, mor, src, thr, racer
 
 
 @settings(
@@ -1733,10 +1734,17 @@ def test_merge_sql_statement_model_fuzz(spark, tmp_path_factory, params):
     — physical strategy must never change the logical result), is
     checked against a plain Python model of Delta's MERGE semantics.
     This is the layer where the r11 dispatch bug lived (BY SOURCE
-    clauses silently swallowed next to AND-cond DELETE)."""
-    from data_lake_demo_spark.ddl import AcidSql
+    clauses silently swallowed next to AND-cond DELETE).
 
-    shape, mor, src, thr = params
+    An optional racer commits from another handle when the MERGE
+    first tries to commit: an UPDATE of ``active`` on a source key, or
+    an append of a source key the table lacks. The result must equal
+    the serial order racer-then-MERGE (a MERGE that commits nothing
+    never meets the racer; it then runs again after it)."""
+    from data_lake_demo_spark.ddl import AcidSql
+    from data_lake_demo_spark.tableformat import AcidTable
+
+    shape, mor, src, thr, racer = params
     path = str(tmp_path_factory.mktemp("mrgfuzz") / "t")
     sql = AcidSql(spark, {"t": path})
     t = sql.table("t")
@@ -1750,6 +1758,23 @@ def test_merge_sql_statement_model_fuzz(spark, tmp_path_factory, params):
         t.set_properties({"merge.mode": "merge_on_read"})
     m = {k: (k * 10, True) for k in range(0, 31, 3)}  # k -> (v, active)
     s = dict(src)
+    race = None
+    w = AcidTable(spark, path)
+    if racer == "update":
+        rk = src[0][0]
+        race = lambda: w.update({"active": "false"}, [("k", "=", rk)])  # noqa: E731
+        if rk in m:
+            m[rk] = (m[rk][0], False)
+    elif racer == "append":
+        fresh = [k for k in s if k not in m]
+        if fresh:
+            rk = fresh[0]
+            race = lambda: w.append(  # noqa: E731
+                spark.createDataFrame(
+                    [(rk, rk * 10 + 5, True)], "k int, v int, active boolean"
+                )
+            )
+            m[rk] = (rk * 10 + 5, True)
     spark.createDataFrame(
         [(k, v, True) for k, v in src], "k int, v int, active boolean"
     ).createOrReplaceTempView("mrg_fuzz_src")
@@ -1841,6 +1866,23 @@ def test_merge_sql_statement_model_fuzz(spark, tmp_path_factory, params):
             if k not in s:
                 m[k] = (m[k][0] + 1, False)
 
-    sql.sql(stmt)
+    fired = {"n": 0}
+    if race is not None:
+        real = t._try_commit
+
+        def racing(base, *a, **k):
+            if not fired["n"]:
+                fired["n"] = 1
+                race()
+            return real(base, *a, **k)
+
+        t._try_commit = racing
+    try:
+        sql.sql(stmt)
+    finally:
+        t._try_commit = AcidTable._try_commit.__get__(t, AcidTable)
+    if race is not None and not fired["n"]:
+        race()
+        sql.sql(stmt)  # the first run committed nothing
     got = {r.k: (r.v, r.active) for r in t.snapshot().collect()}
-    assert got == m, (shape, mor, src, thr, stmt)
+    assert got == m, (shape, mor, src, thr, racer, stmt)
